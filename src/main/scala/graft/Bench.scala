@@ -1,9 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // SPARK_GRAFT_HASH_FAMILY=xx benches the batch sketch entries (HLL,
     // CMS) under the production hash family; default md5 = the oracled
     // family. Bench-only: Verify never sets the session conf, so oracle
@@ -116,19 +115,7 @@ object Bench {
       }
       s
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // root WARN as early as user code can set it — belt to the
-    // log4j2.properties braces (covers a run whose classpath resolution
-    // somehow prefers Spark's bundled defaults)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     spark.conf.set(graft.functions.Hash60.FamilyConfKey, hashFamily)
     // SPARK_GRAFT_SPILL_LOG=1: per-query spill attribution for the
     // memory-pressure scale cell (VERDICT r17 #4) — a task-end listener

@@ -271,8 +271,8 @@ object Tables {
   def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
   /** events.parquet carries TIMESTAMP(NANOS), which Spark only reads with
-    * `spark.sql.legacy.parquet.nanosAsLong=true` (set in every session we
-    * build). Normalize the resulting long back to a microsecond timestamp
+    * `spark.sql.legacy.parquet.nanosAsLong=true` (set by
+    * `GraftSession.local`). Normalize the resulting long back to a microsecond timestamp
     * so downstream operators keep timestamp semantics. Microsecond
     * truncation matches what engines reading the file natively see.
     */

@@ -172,10 +172,6 @@ object KMeans {
       m.map(_.reverse.toArray)
     }
 
-    // test/diagnostic hooks (probe-pool experiments, work accounting)
-    private[graft] def metaModelForDebug: Model = meta
-    private[graft] def membersForDebug: Array[Array[Int]] = members
-
     def assign(p: Array[Float]): (Int, Double) = {
       // top-metaProbe meta-centroids by distance — allocation-free stable
       // selection (strict < on replacement keeps ascending-index order on

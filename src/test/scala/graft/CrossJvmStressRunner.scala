@@ -93,25 +93,15 @@ object CrossJvmStressRunner {
     * debris for the parent's recovery assertions. Never exits normally.
     */
   private def crashAppendMain(indexDir: String, commDir: String): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-xjvm-crash")
-      // the ADVERSARIAL committer config (ADVICE r16 medium): a session
-      // tuned with commit algorithm v2 publishes task commits directly
-      // into the output dir — the purge would have nothing to purge.
-      // Ivf pins v1 per-write (Ivf.CommitterV1Key); the spec's wait for
-      // a task_* dir under _temporary/0 only ever succeeds under v1, so
-      // the kill gate passing WITH this session config proves the pin
-      // overrides the session.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        "2")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the ADVERSARIAL committer config (ADVICE r16 medium): a session
+    // tuned with commit algorithm v2 publishes task commits directly
+    // into the output dir — the purge would have nothing to purge.
+    // Ivf pins v1 per-write (Ivf.CommitterV1Key); the spec's wait for
+    // a task_* dir under _temporary/0 only ever succeeds under v1, so
+    // the kill gate passing WITH this session config proves the pin
+    // overrides the session.
+    val spark = GraftSession.local(2,
+      "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" -> "2")
     val idx = Ivf.load(spark, indexDir)
     // ids 1000000+ — disjoint from anything the parent owns, so ANY
     // of them visible after the kill is a partial-write leak
@@ -141,16 +131,7 @@ object CrossJvmStressRunner {
     */
   private def crashMaintainMain(indexDir: String, commDir: String,
       phase: String): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-xjvm-crash-maintain")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(2)
     val idx = Ivf.load(spark, indexDir)
     CrossJvmStress.signal(commDir, "child_maintaining")
     val between: () => Unit =
@@ -183,16 +164,7 @@ object CrossJvmStressRunner {
   private def streamIngestMain(indexDir: String, feedDir: String,
       commDir: String, resultPath: String,
       staleTtlMs: Long = graft.operators.FsLease.DefaultStaleTtlMs): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-xjvm-stream")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
     try {
       val idx = Ivf.load(spark, indexDir)
       val ckpt = s"$commDir/stream_ckpt"
@@ -262,16 +234,7 @@ object CrossJvmStressRunner {
     val Array(indexDir, probeDir, commDir, resultPath) = args.take(4)
     val unexpected = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     try {
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-xjvm-child")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.local(4)
       val idx = Ivf.load(spark, indexDir)
       // same deterministic corpus as the parent (xxhash64-derived —
       // identical for any partitioning, no shared scratch dir to race)

@@ -21,13 +21,7 @@ object DebugApproxRoute {
     val n = args.headOption.map(_.toLong).getOrElse(100000L)
     val dim = if (args.length > 1) args(1).toInt else 128
     val nq = if (args.length > 2) args(2).toInt else 200
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
 
     val vecPath = VectorFormats.generatedPath(spark, n, dim, 42L)
     val dataDir = new java.io.File(vecPath).getParent

@@ -17,11 +17,7 @@ object DebugAssignKernel {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val dim = if (args.length > 1) args(1).toInt else 128
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
 
     val emb = spark.read.parquet(VectorFormats.generatedPath(spark, n, dim, 42L))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Jobs/stages/tasks census for the contention-sensitive batch-search
   * entries (VERDICT r16 #5): `ivf_search_batch_all` inflated 9.3× in
   * the contended official window while compute-bound entries ran 1.0×,
@@ -15,16 +13,7 @@ import org.apache.spark.sql.SparkSession
 object DebugBatchStages {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-debug-batch-stages")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
 
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val stages = new java.util.concurrent.atomic.AtomicInteger()

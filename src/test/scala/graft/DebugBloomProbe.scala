@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** A/B of the Bloom membership probe forms over a large probe side:
@@ -17,12 +16,7 @@ object DebugBloomProbe {
     val nLong = if (args.length > 0) args(0).toLong else 50000000L
     val nStr = if (args.length > 1) args(1).toLong else 10000000L
     val cpus = if (args.length > 2) args(2).toInt else 16
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(cpus)
 
     // 1M-key filter (the broadcast-friendly build side), 1% fpp; probe
     // side keyed so ~2% of rows are true members

@@ -27,12 +27,7 @@ object DebugBm25Scale {
     val n = if (args.length > 0) args(0).toLong else 200000L
     val nQ = if (args.length > 1) args(1).toInt else 64
     val cpus = if (args.length > 2) args(2).toInt else 16
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "10000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(cpus)
 
     val seed = 42L
     val vocab = 20000L

@@ -25,11 +25,7 @@ object DebugCcScale {
     val n = if (args.length > 0) args(0).toLong else 1000000L
     val chainLen = if (args.length > 1) args(1).toLong else 1000L
     val cpus = if (args.length > 2) args(2).toInt else 16
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(cpus)
 
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val r = f

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling curve for the composed curation pipeline
@@ -28,12 +27,7 @@ object DebugCurationScale {
       if (args.nonEmpty) args(0).split(",").map(_.trim.toLong).toSeq
       else Seq(60000L, 200000L, 600000L)
     val cpus = if (args.length > 1) args(1).toInt else 16
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(cpus)
 
     val stop = array(Seq("the", "a", "of", "and", "to").map(lit): _*)
     def corpusPath(n: Long): String = {

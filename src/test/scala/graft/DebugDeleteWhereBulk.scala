@@ -26,15 +26,11 @@ object DebugDeleteWhereBulk {
     val n = if (args.length > 0) args(0).toLong else 2000000L
     val dim = if (args.length > 1) args(1).toInt else 32
     val cpus = if (args.length > 2) args(2).toInt else 16
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      // small splits so the scan has clearly more input partitions than
-      // the 64-file output bound — the parallelism claim is then
-      // falsifiable, not vacuously true
-      .config("spark.sql.files.maxPartitionBytes", (8L << 20).toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(cpus)
+    // small splits so the scan has clearly more input partitions than
+    // the 64-file output bound — the parallelism claim is then
+    // falsifiable, not vacuously true
+    spark.conf.set("spark.sql.files.maxPartitionBytes", 8L << 20)
 
     val tbl = graft.sources.VectorFormats.generate(spark, n, dim, 7L)
     val dir = s"/tmp/graft_delwhere_${n}_$dim"

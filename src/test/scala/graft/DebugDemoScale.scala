@@ -26,16 +26,9 @@ object DebugDemoScale {
     val n = nums.headOption.map(_.toLong).getOrElse(500000L)
     val dim = if (nums.length > 1) nums(1).toInt else 768
     val nq = if (nums.length > 2) nums(2).toInt else 200
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // D=768 makes intermediate collects (training pool, ground-truth
-      // ranking) 6x the default workload's rows — raise the 1g default
-      .config("spark.driver.maxResultSize", "8g")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // D=768 makes intermediate collects (training pool, ground-truth
+    // ranking) 6x the default workload's rows — raise the 1g default
+    val spark = GraftSession.local(32, "spark.driver.maxResultSize" -> "8g")
 
     val vecPath = VectorFormats.generatedPath(spark, n, dim, 42L)
     val dataDir = new java.io.File(vecPath).getParent

@@ -24,15 +24,7 @@ object DebugDim768 {
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf0.1_d768"
     val n = if (args.length > 2) args(2).toLong else 500000L
     val dim = if (args.length > 3) args(3).toInt else 768
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
 
     // labels follow the testdata's shape (int32, uniform 0..9) so the
     // filtered-search queries keep ~10% selectivity at any N; keyed on

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -28,12 +27,7 @@ object DebugHeavyHitterScale {
     val n = if (args.nonEmpty) args(0).toLong else 50000000L
     val tailKeys = if (args.length > 1) args(1).toLong else 2000000L
     val cpus = if (args.length > 2) args(2).toInt else 16
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
 
     val depth = 4
     val width = 1024

@@ -27,11 +27,7 @@ object DebugLshScale {
     val ns = (if (args.nonEmpty) args(0) else "50000,100000,200000")
       .split(",").map(_.trim.toLong).toSeq
     val cpus = if (args.length > 1) args(1).toInt else 16
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(cpus)
 
     val seed = 42L
     val vocab = 20000L

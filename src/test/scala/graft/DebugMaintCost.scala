@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Ivf
 
@@ -10,10 +9,7 @@ import graft.operators.Ivf
   */
 object DebugMaintCost {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(8)
     val root = java.nio.file.Files.createTempDirectory("graft_maintcost").toString
     val all = graft.sources.VectorFormats.generate(spark, 60000L, 16, 42L)
     val idx = Ivf.build(all.where(col("vec_id") < 20000L),

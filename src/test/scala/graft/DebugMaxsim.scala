@@ -8,14 +8,8 @@ import graft.Tables
 object DebugMaxsim {
   def main(args: Array[String]): Unit = {
     val dir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
     val win = 16
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

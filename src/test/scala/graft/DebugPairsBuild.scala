@@ -9,15 +9,7 @@ package graft
 object DebugPairsBuild {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args.head else "/root/testdata/sf0.1"
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "10000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32)
     val jobs = new java.util.concurrent.atomic.AtomicLong()
     val tasks = new java.util.concurrent.atomic.AtomicLong()
     spark.sparkContext.addSparkListener(

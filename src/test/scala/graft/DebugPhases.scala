@@ -14,16 +14,8 @@ object DebugPhases {
   def main(args: Array[String]): Unit = {
     val dir = args.head
     val reps = args(1).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "10000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
     spark.range(1000000L).selectExpr("sum(id)").collect()
     graft.Tables.names.foreach { t =>
       try graft.Tables.load(spark, dir, t).count()

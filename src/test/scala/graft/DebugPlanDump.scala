@@ -14,16 +14,8 @@ object DebugPlanDump {
     val dir = args(0)
     val outDir = args(1)
     val tag = args(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "10000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
     val names =
       if (args.drop(3).sameElements(Array("ALL")))
         Catalog.all.filter(_._2.bench).keys.toSeq.sorted

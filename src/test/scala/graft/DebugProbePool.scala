@@ -14,11 +14,7 @@ import org.apache.spark.sql.functions.col
   */
 object DebugProbePool {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .master("local[32]").config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32)
     // version-keyed cache: regenerating here (rather than Ivf.load of a
     // possibly stale index) keeps the probed pool in sync with the
     // current generator

@@ -11,14 +11,7 @@ import graft.queries.Catalog
 object DebugReuseCheck {
   def main(args: Array[String]): Unit = {
     val dir = args.head
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32)
     for (name <- args.tail) {
       val df = Catalog.all(name).build(spark, dir)
       df.collect()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** A/B of the annJoin probe-routing forms over a corpus-sized query
@@ -17,12 +16,7 @@ object DebugRouteTopN {
   def main(args: Array[String]): Unit = {
     val nRows = if (args.length > 0) args(0).toLong else 2000000L
     val cpus = if (args.length > 1) args(1).toInt else 16
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(cpus)
 
     def run(k: Int, d: Int, np: Int): Unit = {
       // deterministic centroids (hash-derived), built once driver-side

@@ -37,15 +37,7 @@ object DebugScaleNx {
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf0.5"
     val n = if (args.length > 2) args(2).toInt else 5
     require(n >= 2 && n <= 20, s"N must be in [2, 20], got $n")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     shiftCols.foreach { case (name, keys) =>
       val base = spark.read.parquet(s"$src/$name.parquet")
       val copies = (1 until n).map { i =>

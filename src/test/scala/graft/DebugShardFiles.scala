@@ -17,13 +17,7 @@ object DebugShardFiles {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val dim = if (args.length > 1) args(1).toInt else 32
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     val vecPath = VectorFormats.generatedPath(spark, n, dim, 42L)
     val dataDir = new java.io.File(vecPath).getParent
     val emb = spark.read.parquet(vecPath)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -34,12 +34,7 @@ import graft.operators.{CountMin, Hll}
 object DebugSketchFamilies {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 50000000L
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(16)
 
     // Zipf-ish tokens: u uniform in [0,n) via hashed id; K = n/(u+1)
     // occurs ~n/(K(K+1)) times -> freq ∝ 1/K², vocab ~2√n.

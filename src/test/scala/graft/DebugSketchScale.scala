@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -16,15 +15,10 @@ import graft.operators.{Hll, QuantileSketch}
 object DebugSketchScale {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 50000000L
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      // heap comes from build.sbt javaOptions (SPARK_DRIVER_MEM, 8g
-      // default) — spark.driver.memory is a no-op in an already-forked
-      // local-mode JVM
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // heap comes from build.sbt javaOptions (SPARK_DRIVER_MEM, 8g
+    // default) — spark.driver.memory is a no-op in an already-forked
+    // local-mode JVM
+    val spark = GraftSession.local(16)
 
     val df = spark.range(n).select(
         (col("id") % 8).as("k"),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Ivf
 
@@ -46,12 +45,7 @@ object DebugStreamAppend {
     val maintained = mode == "maintained"
     val async = mode == "async"
     val maxFilesPerShard = if (args.length > 6) args(6).toInt else 4
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(cpus)
 
     val root = java.nio.file.Files
       .createTempDirectory("graft_stream_append").toString

@@ -19,13 +19,9 @@ object DebugStreamScale {
     val n = if (args.length > 0) args(0).toInt else 50000
     val batch = if (args.length > 1) args(1).toInt else 10000
     val cpus = if (args.length > 2) args(2).toInt else 16
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft_stream_scale_ckpt_${System.nanoTime()}")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(cpus)
+    spark.conf.set("spark.sql.streaming.checkpointLocation",
+      s"/tmp/graft_stream_scale_ckpt_${System.nanoTime()}")
     import spark.implicits._
 
     // the DebugLshScale corpus shape, driver-side: 100 tokens from a

@@ -30,11 +30,7 @@ object DebugTombstoneCost {
     val cpus = if (args.length > 2) args(2).toInt else 16
     val reps = if (args.length > 3) args(3).toInt else 15
     val stride = if (args.length > 4) args(4).toLong else 20L
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(cpus)
 
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val r = f

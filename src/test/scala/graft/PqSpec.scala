@@ -53,8 +53,8 @@ class PqSpec extends SparkSpec {
 
   test("quantization reconstruction beats the zero-vector baseline 4x") {
     // random near-unit-norm vectors are the PQ-hostile worst case; the
-    // measured ratio at this config is ~0.10 (DebugPq sweep) — gate at
-    // 0.25 for headroom
+    // measured ratio at this config is ~0.10 (a PQ config sweep on
+    // sf0.001 embeddings) — gate at 0.25 for headroom
     val rows = Pq.encode(emb, "embedding", model)
       .select(col("embedding"), col("pq_code")).collect()
     val (mseSum, normSum) = rows.foldLeft((0.0, 0.0)) { case ((ms, ns), r) =>
@@ -88,7 +88,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("PQ-ADC top-10 recalls most of the exact top-10") {
-    // measured 0.8 at m=8/ksub=256 (DebugPq); gate at 0.6
+    // measured 0.8 at m=8/ksub=256 on sf0.001 embeddings; gate at 0.6
     val query = emb.where(col("vec_id") === 0L)
       .select(col("embedding")).head().getSeq[Float](0).toArray
     val got = Pq.search(Pq.encode(emb, "embedding", model), "vec_id",

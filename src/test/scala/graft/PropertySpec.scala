@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -12,7 +11,7 @@ import graft.operators.{ConnectedComponents, KMeans, Pca}
   * are deterministic (no scalatestplus bridge on the classpath —
   * sampling is driven manually).
   */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends SparkSpec {
 
   private def forAll[A](g: Gen[A], n: Int = 100)(f: A => Unit): Unit =
     Iterator.iterate(Seed(42L))(_.next).take(n)
@@ -85,7 +84,6 @@ class PropertySpec extends AnyFunSuite {
     } yield edges.filter { case (a, b) => a != b }
 
   test("union-find components equal a BFS oracle on random graphs") {
-    val spark = SparkSpecSession.spark // shared session
     import spark.implicits._
     forAll(edgeListGen, n = 15) { edges =>
       if (edges.nonEmpty) {
@@ -280,21 +278,4 @@ class PropertySpec extends AnyFunSuite {
       }
     }
   }
-}
-
-/** One lazily-created shared session for property tests (matches the
-  * SparkSpec config).
-  */
-object SparkSpecSession {
-  lazy val spark: org.apache.spark.sql.SparkSession =
-    org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "10000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
 }
