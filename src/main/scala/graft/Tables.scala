@@ -156,25 +156,20 @@ object Tables {
     * the same files skip the double plan build entirely. Keyed on
     * `inputFiles` (a listing already held by the relation — no job),
     * which is stable for a given (dir, table) and changes when the
-    * underlying files do.
+    * underlying files do. The fingerprint is the parallelism the probe
+    * compared against, so a context restarted at another core count
+    * re-probes instead of serving the old decision.
     */
-  private val spreadMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private val spreadMemo = new DataKeyedMemo[Boolean]()
 
   def spread(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     val files = df.inputFiles
-    def probe: Boolean =
-      df.rdd.getNumPartitions <
-        df.sparkSession.sparkContext.defaultParallelism
-    // every regeneration of a dir writes fresh file names → a fresh
-    // entry whose KEY is the full path list; bound the map instead of
-    // leaking one list per rewrite (the r15/r16 memo-growth class —
-    // losing memos on overflow merely re-pays one probe each)
-    if (spreadMemo.size() > 1024) spreadMemo.clear()
+    val parallelism = df.sparkSession.sparkContext.defaultParallelism
+    def probe: Boolean = df.rdd.getNumPartitions < parallelism
     val need: Boolean =
       if (files.isEmpty) probe // non-file plan: decide per call
-      else spreadMemo.computeIfAbsent(
-        files.sorted.mkString(","), _ => probe)
+      else spreadMemo.get(files.sorted.mkString(","),
+        Some(parallelism.toString))(probe)
     // explicit partition count (= cluster parallelism, never a local
     // constant): a bare repartition(key) is REPARTITION_BY_COL, which
     // AQE's partition coalescing is allowed to shrink by BYTES — and the
@@ -185,83 +180,93 @@ object Tables {
     // explicit count is user-specified partitioning AQE must respect;
     // it derives from defaultParallelism, so the lower-core bench
     // sessions and a real cluster each get their own scale.
-    if (need)
-      df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
+    if (need) df.repartition(parallelism, key)
     else df
   }
 
-  /** Directory-keyed, fingerprint-revalidated memo — THE pattern for
-    * every JVM-lifetime cache derived from a data directory's
-    * contents. Keyed by the DIR (at most one live entry per directory
-    * ever seen), carrying [[dataKey]] in the value and rebuilding when
-    * the fingerprint changes: a mid-JVM regeneration of the same path
-    * can never serve a stale value, and — unlike keying by dataKey
-    * itself — superseded generations are REPLACED, not retained for
-    * the life of the JVM (ADVICE r15: Bm25.vocabCache, then
-    * EventsStreaming.eventsSchemaMemo; this class converts the
-    * remaining ~15 query-layer memos in one shape).
+  private val MemoMaxEntries = 1024
+
+  /** Fingerprint-revalidated memo — THE shape of every JVM-lifetime
+    * cache in the engine. One rule: an entry is replaced when its
+    * fingerprint changes, so a regenerated input can never serve a
+    * stale value and superseded generations are never retained. A
+    * `None` fingerprint (nothing trustworthy to compare) builds without
+    * caching. The map is cleared once it passes [[MemoMaxEntries]]:
+    * keys are catalog- or path-bounded, and an overflow only re-pays
+    * one build per entry.
     *
     * `build` runs inside the map's per-key lock (compute), so
-    * concurrent callers of the same dir build once; builds must not
+    * concurrent callers of the same key build once; builds must not
     * re-enter the same memo (none do — they only read Spark data).
     * Known tradeoff of compute-under-lock (ADVICE r16 low): an
-    * UNRELATED entry hashing to the same ConcurrentHashMap bin blocks
-    * for the duration of a build. Accepted: builds are one-per-JVM
-    * Spark jobs (seconds), entry counts are catalog-bounded (≤ a few
-    * hundred), and the alternative (build outside the lock) re-admits
-    * the duplicate-build race the lock exists to close.
+    * unrelated key hashing to the same bin blocks for the duration of
+    * a build. Accepted: builds are one-per-JVM Spark jobs (seconds),
+    * and building outside the lock re-admits the duplicate-build race
+    * the lock exists to close.
     */
   final class DataKeyedMemo[V] {
     private val m =
       new java.util.concurrent.ConcurrentHashMap[String, (String, V)]()
-    def get(dir: String)(build: => V): V = {
-      val key = dataKey(dir)
-      m.compute(dir, (_, prev) =>
-        if (prev != null && prev._1 == key) prev else (key, build))._2
-    }
-    /** Composite form: one entry per (sub, dir) — e.g. a per-query
-      * oracle cache bounded by catalog size × directories. The map key
-      * length-prefixes `sub` so a '@' inside it can never alias a
-      * different (sub, dir) pair (ADVICE r16 low — latent with current
-      * query-name callers, fatal if one ever carried a path).
+
+    def get(key: String, fingerprint: Option[String])(build: => V): V =
+      fingerprint match {
+        case None => build
+        case Some(fp) =>
+          if (m.size() > MemoMaxEntries) m.clear()
+          m.compute(key, (_, prev) =>
+            if (prev != null && prev._1 == fp) prev else (fp, build))._2
+      }
+
+    /** Keyed by the data DIR, fingerprinted by its [[dataKey]]. */
+    def get(dir: String)(build: => V): V =
+      get(dir, Some(dataKey(dir)))(build)
+
+    /** Composite form: one entry per (sub, dir). The key length-prefixes
+      * `sub` so a '@' inside it can never alias a different (sub, dir)
+      * pair (ADVICE r16 low).
       */
-    def get(dir: String, sub: String)(build: => V): V = {
-      val key = dataKey(dir)
-      m.compute(s"${sub.length}:$sub@$dir", (_, prev) =>
-        if (prev != null && prev._1 == key) prev else (key, build))._2
+    def get(dir: String, sub: String)(build: => V): V =
+      get(s"${sub.length}:$sub@$dir", Some(dataKey(dir)))(build)
+
+    /** Test window: key → fingerprint of every live entry. */
+    private[graft] def snapshot: Map[String, String] = {
+      import scala.jdk.CollectionConverters._
+      m.asScala.map { case (k, v) => k -> v._1 }.toMap
     }
   }
+
+  /** Fingerprint of a local directory's listing: name, length and
+    * nanosecond mtime of every non-hidden file, sorted by name. Every
+    * in-place rewrite of an engine-written dir changes it (fresh part
+    * names, new mtimes). An empty or unreadable listing — a missing
+    * path, or a filesystem the local File API cannot see — is `None`,
+    * which [[DataKeyedMemo]] treats as "build, don't cache".
+    */
+  def listingFingerprint(path: String): Option[String] =
+    try {
+      Option(new java.io.File(path).listFiles())
+        .map(_.filterNot(f =>
+          f.getName.startsWith("_") || f.getName.startsWith(".")))
+        .filter(_.nonEmpty)
+        .map(_.sortBy(_.getName).map { f =>
+          val mt = java.nio.file.Files.getLastModifiedTime(f.toPath)
+            .to(java.util.concurrent.TimeUnit.NANOSECONDS)
+          s"${f.getName}:${f.length}:$mt"
+        }.mkString(","))
+    } catch { case _: java.io.IOException => None }
 
   /** [[load]]'s sibling for ENGINE-WRITTEN artifact dirs (posting
     * tables, signed docs, coded siblings, pooled buckets): the same
-    * lazy-DataFrame metadata memo, but fingerprinted by the artifact
-    * directory's own listing, because rebuilds overwrite these paths
-    * in place. Every overwrite emits fresh UUID part-file names, so
-    * the (name, size, mtime) listing always changes across a rebuild
-    * and a stale plan (whose file index would point at deleted part
-    * files) can never be served. No row is cached — actions still
-    * read the parquet files.
+    * lazy-DataFrame metadata memo, fingerprinted by the artifact
+    * directory's own [[listingFingerprint]], because rebuilds overwrite
+    * these paths in place. No row is cached — actions still read the
+    * parquet files.
     */
-  private val artifactMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
+  private val artifactMemo = new DataKeyedMemo[DataFrame]()
 
-  def loadArtifact(spark: SparkSession, path: String): DataFrame = {
-    val fp = artifactFingerprint(path)
-    if (artifactMemo.size() > 1024) artifactMemo.clear()
-    artifactMemo.compute(s"${System.identityHashCode(spark)}:$path",
-      (_, prev) =>
-        if (prev != null && prev._1 == fp) prev
-        else (fp, spark.read.parquet(path)))._2
-  }
-
-  private def artifactFingerprint(path: String): String = {
-    val fs = new java.io.File(path).listFiles()
-    if (fs == null) "absent"
-    else fs.iterator
-      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .toSeq.sorted.mkString(",")
-  }
+  def loadArtifact(spark: SparkSession, path: String): DataFrame =
+    artifactMemo.get(s"${System.identityHashCode(spark)}:$path",
+      listingFingerprint(path))(spark.read.parquet(path))
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")

@@ -42,62 +42,36 @@ object Bm25 {
     */
   val SeekSelectivityCeiling = 0.10
 
-  // keyed by df-table PATH with the file fingerprint in the VALUE: a
-  // fingerprint-keyed map grew one entry per index rebuild for the life
-  // of the JVM (a streaming-append driver rebuilds per batch — r15
-  // review); replace-on-mismatch bounds it at one entry per index path
-  private val vocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, java.lang.Long)]()
+  // keyed by the df / stats dir with its listing fingerprint in the
+  // value: a streaming-append driver rebuilds per batch (r15 review),
+  // and each rebuild at the same base replaces the entry. An unreadable
+  // listing (non-local filesystem) recomputes instead of caching past
+  // an in-place rebuild — a stale vocabulary size would flip the
+  // seek-vs-scan rule
+  private val vocabMemo = new graft.Tables.DataKeyedMemo[Long]()
+  private val statsMemo =
+    new graft.Tables.DataKeyedMemo[(Long, java.lang.Double)]()
 
   /** Vocabulary size (df-table row count — parquet metadata only, no
-    * data read), cached per (df dir, file fingerprint) so index
-    * rebuilds at the same base invalidate the entry.
+    * data read), cached per df dir and its listing fingerprint.
     */
-  private def vocabSize(spark: SparkSession, index: Index): Long = {
-    // per-file name:length:nanos-mtime, the Tables.dataKey convention —
-    // a null/empty listing (non-local filesystem, or a path the local
-    // File API can't see) maps to None, NOT to a stable degenerate key
-    // that would cache the count past an in-place rebuild
-    val key = try {
-      Option(new java.io.File(index.dfPath).listFiles())
-        .filter(_.nonEmpty)
-        .map(_.sortBy(_.getName).map { f =>
-          val mt = java.nio.file.Files.getLastModifiedTime(f.toPath)
-            .to(java.util.concurrent.TimeUnit.NANOSECONDS)
-          s"${f.getName}:${f.length}:$mt"
-        }.mkString(s"${index.dfPath}@", ",", ""))
-    } catch { case _: Throwable => None }
-    key match {
-      case Some(fp) =>
-        val cached = vocabCache.get(index.dfPath)
-        if (cached != null && cached._1 == fp) cached._2
-        else {
-          val n: java.lang.Long = spark.read.parquet(index.dfPath).count()
-          vocabCache.put(index.dfPath, (fp, n))
-          n
-        }
-      // fingerprint unavailable: a bare path key could outlive an
-      // in-place rebuild and flip the seek-vs-scan rule on stale
-      // data — recount (metadata-only, cheap) instead of caching
-      case None => spark.read.parquet(index.dfPath).count()
+  private def vocabSize(spark: SparkSession, index: Index): Long =
+    vocabMemo.get(index.dfPath,
+        graft.Tables.listingFingerprint(index.dfPath)) {
+      spark.read.parquet(index.dfPath).count()
     }
-  }
 
-  // (N, avgdl) per (stats dir, file fingerprint) — same replace-on-
-  // mismatch device as vocabCache: one entry per index path, rebuilds
-  // at the same base invalidate it
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, (Long, java.lang.Double))]()
-
-  /** The index's 1-row (n_docs, avgdl) stats, read once per (stats dir,
-    * fingerprint) and injected into scoring plans as LITERALS (r19):
-    * the former per-call parquet read + broadcast crossJoin cost one
-    * AQE broadcast-stage job per scoring call for a 1-row table whose
-    * values are fixed at build time. Same longs/doubles the broadcast
-    * carried — the score arithmetic is bitwise unchanged.
+  /** The index's 1-row (n_docs, avgdl) stats, read once per stats dir
+    * and listing fingerprint, and injected into scoring plans as
+    * LITERALS (r19): the former per-call parquet read + broadcast
+    * crossJoin cost one AQE broadcast-stage job per scoring call for a
+    * 1-row table whose values are fixed at build time. Same
+    * longs/doubles the broadcast carried — the score arithmetic is
+    * bitwise unchanged.
     */
-  private def indexStats(spark: SparkSession, index: Index): (Long, java.lang.Double) = {
-    def read(): (Long, java.lang.Double) = {
+  private def indexStats(spark: SparkSession, index: Index): (Long, java.lang.Double) =
+    statsMemo.get(index.statsPath,
+        graft.Tables.listingFingerprint(index.statsPath)) {
       val r = spark.read.parquet(index.statsPath).collect()(0)
       val ai = r.fieldIndex("avgdl")
       // an EMPTY corpus builds a stats row of (0, null) — avgdl is
@@ -107,27 +81,6 @@ object Bm25 {
       (r.getLong(r.fieldIndex("n_docs")),
         if (r.isNullAt(ai)) null else r.getDouble(ai))
     }
-    val key = try {
-      Option(new java.io.File(index.statsPath).listFiles())
-        .filter(_.nonEmpty)
-        .map(_.sortBy(_.getName).map { f =>
-          val mt = java.nio.file.Files.getLastModifiedTime(f.toPath)
-            .to(java.util.concurrent.TimeUnit.NANOSECONDS)
-          s"${f.getName}:${f.length}:$mt"
-        }.mkString(s"${index.statsPath}@", ",", ""))
-    } catch { case _: Throwable => None }
-    key match {
-      case Some(fp) =>
-        val cached = statsCache.get(index.statsPath)
-        if (cached != null && cached._1 == fp) cached._2
-        else {
-          val v = read()
-          statsCache.put(index.statsPath, (fp, v))
-          v
-        }
-      case None => read()
-    }
-  }
 
   /** Handle to a built index: posting table, term dictionary (df), and
     * 1-row corpus stats, all parquet under `base`.

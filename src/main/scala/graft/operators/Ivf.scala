@@ -1402,13 +1402,13 @@ object Ivf {
         unmaterializedTombstones > maxUnmaterializedTombstones
   }
 
-  /** Tombstone-count memo keyed by sidecar listing fingerprint: the
-    * count job reruns only when the sidecar's files actually changed
-    * (delete appends a file; clearTombstones removes the dir), so a
-    * polling ingest loop pays one tiny job per DELETE, not per batch.
+  /** Tombstone-count memo keyed by index path, with the sidecar's
+    * [[tombstoneFp]] as the fingerprint: the count job reruns only when
+    * the sidecar's files actually changed (delete appends a file;
+    * clearTombstones removes the dir), so a polling ingest loop pays
+    * one tiny job per DELETE, not per batch.
     */
-  private val tombCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
+  private val tombCountMemo = new graft.Tables.DataKeyedMemo[Long]()
 
   /** Tombstone id count for the sidecar state fingerprinted by `fp` —
     * memoized per fingerprint, so the count job runs once per sidecar
@@ -1424,17 +1424,10 @@ object Ivf {
   private def tombstoneCountFor(spark: SparkSession, index: Index,
       fp: String): Long =
     if (fp.isEmpty) 0L
-    else {
-      val memo = tombCountMemo.get(index.vectorsPath)
-      if (memo != null && memo._1 == fp) memo._2
-      else {
-        val dir = tombstonesPath(index)
-        val files = fp.split('|').toSeq.map(e => s"$dir/${e.split(':')(0)}")
-        val n = spark.read.schema("__deleted_id LONG")
-          .parquet(files: _*).count()
-        tombCountMemo.put(index.vectorsPath, (fp, n))
-        n
-      }
+    else tombCountMemo.get(index.vectorsPath, Some(fp)) {
+      val dir = tombstonesPath(index)
+      val files = fp.split('|').toSeq.map(e => s"$dir/${e.split(':')(0)}")
+      spark.read.schema("__deleted_id LONG").parquet(files: _*).count()
     }
 
   def maintenanceStats(spark: SparkSession, index: Index): MaintenanceStats = {

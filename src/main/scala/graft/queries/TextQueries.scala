@@ -101,38 +101,25 @@ object TextQueries {
     */
   private val CmsDepth = 4
   private val CmsWidth = 1024
-  // keyed by (dir, family) and holding (data fingerprint, artifact):
-  // a regenerated data version REPLACES its entry instead of adding a
-  // new forever-live one (ADVICE r12 — the old fingerprint-in-key form
-  // grew without bound in a long-lived driver), so the cache is bounded
-  // at #dirs × #families entries of ≤ depth·width cells each
-  private val cmsSketchCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, graft.operators.CountMin.SketchArtifact)]()
-
-  /** Test window into the memo: (dir#family key → data fingerprint) —
-    * SketchSpec gates that a regenerated data version REPLACES its
-    * entry instead of accumulating one per fingerprint forever.
-    */
-  private[graft] def cmsCacheSnapshot: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    cmsSketchCache.asScala.map { case (k, v) => k -> v._1 }.toMap
-  }
+  // keyed by (dir, family) with the data fingerprint in the value: a
+  // regenerated data version REPLACES its entry instead of adding a
+  // new forever-live one (ADVICE r12), so the cache is bounded at
+  // #dirs × #families entries of ≤ depth·width cells each.
+  // `private[graft]` so SketchSpec can read its snapshot
+  private[graft] val cmsSketchMemo =
+    new Tables.DataKeyedMemo[graft.operators.CountMin.SketchArtifact]()
 
   private[graft] def corpusTokenSketch(spark: SparkSession,
-      dir: String): graft.operators.CountMin.SketchArtifact = {
-    val dataKey = Tables.dataKey(dir)
-    cmsSketchCache.compute(
-      s"$dir#${graft.functions.Hash60.family(spark)}", { (_, prev) =>
-        if (prev != null && prev._1 == dataKey) prev
-        else (dataKey, graft.operators.CountMin.collectSketch(
-          // spread: tokenize + 4 md5 digests per token is the heavy map
-          // stage over a one-split local scan (identity at cluster scale)
-          Tables.spread(Tables.documents(spark, dir), col("doc_id"))
-            .select(explode(tokens(col("text"))).as("token")),
-          "token", CmsDepth, CmsWidth,
-          hashFn = graft.functions.Hash60.catalogSalted(spark)))
-      })._2
-  }
+      dir: String): graft.operators.CountMin.SketchArtifact =
+    cmsSketchMemo.get(dir, graft.functions.Hash60.family(spark)) {
+      graft.operators.CountMin.collectSketch(
+        // spread: tokenize + 4 md5 digests per token is the heavy map
+        // stage over a one-split local scan (identity at cluster scale)
+        Tables.spread(Tables.documents(spark, dir), col("doc_id"))
+          .select(explode(tokens(col("text"))).as("token")),
+        "token", CmsDepth, CmsWidth,
+        hashFn = graft.functions.Hash60.catalogSalted(spark))
+    }
 
   def cmsTokenCounts(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.CountMin

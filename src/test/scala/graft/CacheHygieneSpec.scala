@@ -156,5 +156,44 @@ class CacheHygieneSpec extends SparkSpec {
     assert(memo.get(dir, "a") { "subA" } == "subA")
     assert(get() == "build2" && builds == 2,
       "composite entries must not clobber the plain dir entry")
+
+    // loadArtifact: an engine-written dir overwritten in place at the
+    // same path serves the new rows, and a missing path caches nothing
+    import spark.implicits._
+    val art = s"$dir/artifact"
+    def ids(): Seq[Long] =
+      Tables.loadArtifact(spark, art).as[Long].collect().toSeq.sorted
+    intercept[org.apache.spark.sql.AnalysisException](
+      Tables.loadArtifact(spark, art))
+    spark.range(3).write.parquet(art)
+    assert(ids() == Seq(0L, 1L, 2L),
+      "a call on the missing path left an entry behind")
+    spark.range(10, 12).write.mode("overwrite").parquet(art)
+    assert(ids() == Seq(10L, 11L),
+      "an in-place overwrite served the superseded listing")
+  }
+
+  test("no ConcurrentHashMap under src/main outside DataKeyedMemo and " +
+      "Ivf.tombstonePresence: every other cache is a DataKeyedMemo") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val main = Paths.get("src/main")
+    assert(Files.isDirectory(main), s"run from the project root: $main")
+    val allowed = Set(
+      "Tables.scala" -> "ConcurrentHashMap[String, (String, V)]",
+      "Ivf.scala" -> "ConcurrentHashMap[String, TombMemo]")
+    val offenders = Files.walk(main).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val name = p.getFileName.toString
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("ConcurrentHashMap") &&
+              !allowed.exists { case (f, sig) =>
+                f == name && line.contains(sig) } =>
+            s"$p:${i + 1}"
+        }
+      }.toList
+    assert(offenders.isEmpty,
+      s"memoize with Tables.DataKeyedMemo instead: $offenders")
   }
 }

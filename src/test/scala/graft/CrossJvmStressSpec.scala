@@ -9,8 +9,8 @@ import graft.sources.VectorFormats
 /** Cross-PROCESS lifecycle stress (VERDICT r15 next-round #2): every
   * prior lease/lifecycle gate — including StressSpec's composed
   * interleaving — ran its contenders as threads of ONE JVM, where the
-  * striped create-monitor and the shared `tombstonePresence` /
-  * `tombCountMemo` maps soften the race. FsLease's real adversary is a
+  * striped create-monitor and the shared `tombstonePresence` TTL memo
+  * and `tombCountMemo` soften the race. FsLease's real adversary is a
   * second JVM with its own heartbeat daemons and its own memo copies
   * that a foreign delete cannot invalidate. This spec forks that JVM
   * (java -cp <this test classpath> graft.CrossJvmStressRunner) and

@@ -320,8 +320,8 @@ class SketchSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$tmp/documents.parquet"))
     val a = graft.queries.TextQueries.corpusTokenSketch(spark, tmp)
     def entriesFor(d: String): Map[String, String] =
-      graft.queries.TextQueries.cmsCacheSnapshot
-        .filter(_._1.startsWith(s"$d#"))
+      graft.queries.TextQueries.cmsSketchMemo.snapshot
+        .filter(_._1.endsWith(s"@$d"))
     val snap0 = entriesFor(tmp)
     assert(snap0.size == 1, s"expected one memo entry: $snap0")
     // regenerate the data version: same bytes, new mtime → new dataKey
