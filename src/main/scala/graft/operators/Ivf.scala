@@ -1597,22 +1597,42 @@ object Ivf {
   /** Batch ANN: top-k for a whole query set in ONE pruned scan.
     *
     * The reference executes batched queries sequentially per query
-    * (`bindings/python/src/lib.rs:74` for-loop); Spark amortizes instead:
-    * per-query probes are computed on the driver against the broadcast
-    * routing table, the union of probed (query, centroid) pairs becomes a
-    * broadcast join against the vectors dataset (directory-pruned to the
-    * union of shards), and per-query top-k is the bounded-state
-    * [[TopNByKey]] aggregate. One scan of the big table serves every
-    * query — at 100 TB this is the difference between nq scans and one.
+    * (`bindings/python/src/lib.rs:74` for-loop); Spark amortizes instead,
+    * in the shape of Faiss's batch search — each inverted list is
+    * scanned once for every query that probes it:
+    *   - the driver routes each query through the shared router and
+    *     inverts the probes into per-cell query lists (CSR arrays plus
+    *     the query vectors as one `float[]`), shipped in ONE broadcast;
+    *   - the vectors dataset is scanned once, directory-pruned to the
+    *     union of probed shards, tombstones anti-joined and `filter`
+    *     applied inside the scan;
+    *   - the [[ListScan]] kernel decodes each index row into a primitive
+    *     `float[]` once, loops over the queries probing its cell, and
+    *     keeps a bounded best-first buffer per query, so a scan task
+    *     emits at most k rows per query — never a row per probed
+    *     (query, index row) pair;
+    *   - [[TopNByKey]] merges the per-task buffers into the final ranks.
+    * One scan of the big table serves every query — at 100 TB this is
+    * the difference between nq scans and one.
     *
-    * @param queries (query_id: Long, embedding: Array[Float]) pairs;
-    *                must be driver-sized (it is broadcast)
+    * Distances are bitwise those of [[graft.functions.SquaredL2]] (and so
+    * of the DuckDB oracle): `(double) x_i − (double) q_i`, squared,
+    * summed left to right. A NULL or ragged embedding, or a NULL
+    * element, gives a NULL distance, ranked after every number; NaN
+    * ranks after every other number; ties break by smaller id.
+    *
+    * @param queries (query_id: Long, embedding: Array[Float]) pairs with
+    *                distinct ids; must be driver-sized (it is broadcast)
+    * @param filter  optional metadata predicate, with [[search]]'s
+    *                filtered-search contract: it narrows the candidates
+    *                inside the pruned scan (pushed to the reader) BEFORE
+    *                per-query ranking
+    * @return (query_id, rank, external_id, distance), rank 1..k per query
     */
   def searchBatch(spark: SparkSession, index: Index,
       queries: Array[(Long, Array[Float])], k0: Int, nProbe0: Int,
       idCol: String = null, embCol: String = "embedding",
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    import spark.implicits._
     val id = effectiveIdCol(index, idCol)
     val k = math.min(k0, index.config.maxK)
     val nProbe = math.min(nProbe0, index.config.maxNProbe)
@@ -1621,40 +1641,41 @@ object Ivf {
     // same P1 dimension contract as single search — without it a long
     // query reads past the centroid arrays (driver AIOOBE) and a short
     // one routes by prefix distance then NULLs every candidate distance
-    queries.find(_._2.length != index.centroids(0).length).foreach { q =>
+    val dim = index.centroids(0).length
+    queries.find(_._2.length != dim).foreach { q =>
       throw new IllegalArgumentException(
-        s"query ${q._1} has dimension ${q._2.length}, " +
-          s"index has ${index.centroids(0).length}")
+        s"query ${q._1} has dimension ${q._2.length}, index has $dim")
     }
+    requireDistinctQueryIds(queries)
 
     // per-query routing via the shared router — O(√k) per query for
     // large k instead of a full centroid sort (see Index.router)
-    val probePairs = queries.flatMap { case (qid, q) =>
-      index.router.topN(q, nProbe).map(c => (qid, c))
-    }
-    val shards = probePairs.map(p => index.centroidToShard(p._2)).distinct.toSeq
-    val probeDf = probePairs.toSeq.toDF("query_id", "centroid_id")
-    val queryDf = queries.toSeq.map { case (qid, q) => (qid, q.toSeq) }
-      .toDF("query_id", "qe")
-      .select(col("query_id"), col("qe").cast("array<float>").as("qe"))
-
+    val probes = queries.map { case (_, q) => index.router.topN(q, nProbe) }
+    val shards = probes.flatten.map(index.centroidToShard).distinct.toSeq
+    val block = spark.sparkContext.broadcast(
+      ListScan.queryBlock(queries, probes, index.k, dim))
     val pruned = liveRows(spark, index,
       spark.read.parquet(index.vectorsPath)
         .where(col("shard_id").isin(shards: _*)),
       id)
-    // same filtered-search contract as single-query search: the
-    // predicate narrows candidates inside the pruned scan (pushed to
-    // the reader), BEFORE per-query ranking. Per-query top-k is the
-    // bounded-state aggregate, not a window: each map task emits ≤ k
-    // rows per query BEFORE the shuffle, so the exchange carries
-    // ≤ k·P rows per query instead of every probed candidate.
-    val candidates = filter.map(pruned.where).getOrElse(pruned)
-      .join(broadcast(probeDf), Seq("centroid_id"))
-      .join(broadcast(queryDf), Seq("query_id"))
-      .withColumn("distance", graft.functions.Vec.squaredL2(col(embCol), col("qe")))
-    TopNByKey.topN(candidates, Seq("query_id"), col("distance"), col(id), k)
+    val rows = filter.map(pruned.where).getOrElse(pruned)
+      .select(col("centroid_id"), col(id).cast("long"), col(embCol))
+    TopNByKey.topN(ListScan.scan(rows, block, k), Seq("query_id"),
+        col("distance"), col("cand_id"), k)
       .select(col("query_id"), col("rk").as("rank"),
         col("id").as("external_id"), col("ord").as("distance"))
+  }
+
+  /** Batch searches rank per query id, so two queries sharing an id
+    * would merge into one top-k (repeating ids inside it) — rejected.
+    */
+  private[operators] def requireDistinctQueryIds(
+      queries: Array[(Long, Array[Float])]): Unit = {
+    val seen = new java.util.HashSet[Long]()
+    queries.foreach { case (qid, _) =>
+      if (!seen.add(qid)) throw new IllegalArgumentException(
+        s"duplicate query id $qid: batch query ids must be distinct")
+    }
   }
 
   /** Distributed ANN JOIN: top-k nearest indexed vectors for EVERY row

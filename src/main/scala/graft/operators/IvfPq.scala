@@ -158,6 +158,7 @@ object IvfPq {
     val nProbe = math.min(nProbe0, ivf.config.maxNProbe)
     require(k > 0, "k must be > 0")
     require(nProbe > 0, "n_probe must be > 0")
+    Ivf.requireDistinctQueryIds(queries)
     val probeLut = queries.toSeq.flatMap { case (qid, q) =>
       require(q.length == model.dim,
         s"query dim ${q.length} != model dim ${model.dim}")
@@ -243,6 +244,7 @@ object IvfPq {
       throw new IllegalArgumentException(
         s"query ${q._1} has dimension ${q._2.length}, model has ${model.dim}")
     }
+    Ivf.requireDistinctQueryIds(queries)
     val probePairs = queries.flatMap { case (qid, q) =>
       Ivf.probeSelection(ivf, q, nProbe)._1.map(c => (qid, c))
     }

@@ -63,6 +63,19 @@ class IvfPqSpec extends SparkSpec {
     }
   }
 
+  test("batch IVF-PQ paths reject duplicate query ids, naming the id") {
+    val qs = Array((5L, query(1L)), (5L, query(2L)))
+    val raw = intercept[IllegalArgumentException] {
+      IvfPq.searchBatch(spark, idx, model, codes, qs, 10, 20)
+    }
+    assert(raw.getMessage.contains("duplicate query id 5"), raw.getMessage)
+    val residual = intercept[IllegalArgumentException] {
+      IvfPq.searchBatchResidual(spark, idx, resModel, resCodes, qs, 10, 20)
+    }
+    assert(residual.getMessage.contains("duplicate query id 5"),
+      residual.getMessage)
+  }
+
   private lazy val (resModel, resCodes) =
     IndexQueries.residualModelAndCodes(spark, sf0001)
 

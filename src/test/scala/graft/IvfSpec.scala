@@ -176,6 +176,16 @@ class IvfSpec extends SparkSpec {
     assert(batch.nonEmpty)
   }
 
+  test("batch search rejects duplicate query ids, naming the id") {
+    // two queries sharing an id would merge into one top-k that repeats
+    // ids
+    val e = intercept[IllegalArgumentException] {
+      Ivf.searchBatch(spark, index, Array((5L, embAll(1)._2), (5L, embAll(2)._2)),
+        k0 = 5, nProbe0 = 10000)
+    }
+    assert(e.getMessage.contains("duplicate query id 5"), e.getMessage)
+  }
+
   test("distributed ANN join: probe-all equals searchBatch; pruned keeps recall") {
     import spark.implicits._
     val qs = embAll.filter(_._1 < 8L)
