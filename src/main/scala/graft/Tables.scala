@@ -235,32 +235,47 @@ object Tables {
     }
   }
 
-  /** Fingerprint of a local directory's listing: name, length and
-    * nanosecond mtime of every non-hidden file, sorted by name. Every
+  /** Fingerprint of a local directory tree's committed files: relative
+    * path, length and nanosecond mtime of every file, sorted by path,
+    * recursing into subdirectories. Entries whose name starts with `_`
+    * or `.` are skipped at every level, as [[graft.operators.FsList]]
+    * skips them (`_temporary` attempt dirs, `_SUCCESS`, `.crc`). Every
     * in-place rewrite of an engine-written dir changes it (fresh part
-    * names, new mtimes). An empty or unreadable listing — a missing
-    * path, or a filesystem the local File API cannot see — is `None`,
-    * which [[DataKeyedMemo]] treats as "build, don't cache".
+    * names, new mtimes), and so does a file added inside an existing
+    * partition dir (`shard_id=N/`) — directory mtimes play no part. An
+    * entry that vanishes mid-walk is skipped, or makes the listing
+    * unreadable. An empty or unreadable listing — a missing path, or a
+    * filesystem the local File API cannot see — is `None`, which
+    * [[DataKeyedMemo]] treats as "build, don't cache".
     */
   def listingFingerprint(path: String): Option[String] =
     try {
-      Option(new java.io.File(path).listFiles())
-        .map(_.filterNot(f =>
-          f.getName.startsWith("_") || f.getName.startsWith(".")))
-        .filter(_.nonEmpty)
-        .map(_.sortBy(_.getName).map { f =>
-          val mt = java.nio.file.Files.getLastModifiedTime(f.toPath)
-            .to(java.util.concurrent.TimeUnit.NANOSECONDS)
-          s"${f.getName}:${f.length}:$mt"
-        }.mkString(","))
+      val files = scala.collection.mutable.ArrayBuffer.empty[String]
+      def walk(dir: java.io.File, rel: String): Unit =
+        Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
+          .filterNot(f =>
+            f.getName.startsWith("_") || f.getName.startsWith("."))
+          .foreach { f =>
+            val attrs = java.nio.file.Files.readAttributes(f.toPath,
+              classOf[java.nio.file.attribute.BasicFileAttributes])
+            if (attrs.isDirectory) walk(f, s"$rel${f.getName}/")
+            else files += s"$rel${f.getName}:${attrs.size}:" +
+              attrs.lastModifiedTime
+                .to(java.util.concurrent.TimeUnit.NANOSECONDS)
+          }
+      walk(new java.io.File(path), "")
+      if (files.isEmpty) None else Some(files.sorted.mkString(","))
     } catch { case _: java.io.IOException => None }
 
   /** [[load]]'s sibling for ENGINE-WRITTEN artifact dirs (posting
-    * tables, signed docs, coded siblings, pooled buckets): the same
-    * lazy-DataFrame metadata memo, fingerprinted by the artifact
-    * directory's own [[listingFingerprint]], because rebuilds overwrite
-    * these paths in place. No row is cached — actions still read the
-    * parquet files.
+    * tables, signed docs, IVF vectors and their coded siblings, pooled
+    * buckets): the same lazy-DataFrame metadata memo, fingerprinted by
+    * the artifact directory's own recursive [[listingFingerprint]],
+    * because rebuilds, appends and maintenance swaps change these paths
+    * in place. The fingerprint is re-listed on EVERY call — no TTL — so
+    * a caller always plans against the current file set: an append, a
+    * swap, or a retry after a scan that raced one gets a fresh relation.
+    * No row is cached — actions still read the parquet files.
     */
   private val artifactMemo = new DataKeyedMemo[DataFrame]()
 

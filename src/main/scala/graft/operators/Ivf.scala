@@ -470,12 +470,13 @@ object Ivf {
   /** Delete vectors by external id — the faiss `remove_ids` analog, in
     * merge-on-read form: ids append to a tombstone sidecar (one file
     * per delete batch, no touch of the data files) and every search
-    * path — float AND the PQ/SQ8 coded siblings — filters them with a
-    * broadcast anti-join. The tombstone set is id-sized (~8 MB per
-    * million Long ids as parquet; more as broadcast rows), so
-    * compaction cadence bounds how large it may grow. At 100 TB this
-    * is the only viable delete: rewriting shards per delete would be a
-    * full-table write for a row-sized change.
+    * path — float AND the PQ/SQ8 coded siblings — filters them inside
+    * its scan: the sidecar is read once per change into a sorted id
+    * set, broadcast, and probed per row ([[liveRows]]). The tombstone
+    * set is id-sized (~8 MB per million Long ids, as parquet and as the
+    * broadcast `long[]`), so compaction cadence bounds how large it may
+    * grow. At 100 TB this is the only viable delete: rewriting shards
+    * per delete would be a full-table write for a row-sized change.
     *
     * Contract: a tombstone hides the id on every path — including a
     * subsequent `append` of the same id — until the sidecar is
@@ -524,7 +525,7 @@ object Ivf {
     // memo update OUTSIDE the lease is deliberate (VERDICT r14 #3): the
     // memo is a presence-only, TTL-bounded, same-JVM hint — a reader
     // seeing the pre-update value merely rechecks the filesystem within
-    // 30 s, never skips a tombstone that the anti-join would read
+    // 30 s, never skips a tombstone that the scan filter would read
     tombstonePresence.put(index.vectorsPath,
       TombMemo(present = true, System.nanoTime() + memoTtlNanos))
   }
@@ -533,8 +534,9 @@ object Ivf {
     * id set flows into the sidecar without visiting the driver (a
     * delete feed at production cadence is itself a stream; collecting
     * it to a Seq caps it at driver memory). Ids are cast to long and
-    * deduplication is NOT applied — the anti-join is idempotent over
-    * duplicates, and a delete batch is typically already distinct.
+    * deduplication is NOT applied — the scan filter probes the
+    * distinct id set, so duplicates hide nothing extra, and a delete
+    * batch is typically already distinct.
     * Shares [[writeTombstonesBounded]] with [[deleteWhere]] (ADVICE
     * r14: the previous `coalesce(1)` here propagated a single-task
     * partition count up through the caller's whole upstream plan — the
@@ -804,52 +806,67 @@ object Ivf {
 
   /** The probe-pruned scan shared by every single-query search path
     * (float vectors and coded siblings alike): shard directory pruning
-    * + chunked centroid row-group predicates ([[Pushdown]]). Probe-all
+    * + chunked centroid row-group predicates ([[Pushdown]]) over the
+    * dataset's memoized lazy relation ([[graft.Tables.loadArtifact]] —
+    * no per-call file listing or footer schema inference). Probe-all
     * (probes = every centroid) drops the centroid predicate entirely —
     * it is a tautology there, and at corpus-scale k the ⌈k/256⌉ chunk
     * arms would each re-scan what the shard pruning already admits.
     */
   private[operators] def probePrunedScan(spark: SparkSession, path: String,
-      probes: Seq[Int], shards: Seq[Int], k: Int): DataFrame =
-    if (probes.length >= k)
-      spark.read.parquet(path).where(col("shard_id").isin(shards: _*))
+      probes: Seq[Int], shards: Seq[Int], k: Int): DataFrame = {
+    val rel = graft.Tables.loadArtifact(spark, path)
+    if (probes.length >= k) rel.where(col("shard_id").isin(shards: _*))
     else Pushdown.inChunks(spark, probes)(ps =>
-      spark.read.parquet(path)
-        .where(col("shard_id").isin(shards: _*) &&
-          col("centroid_id").isin(ps: _*)))
+      rel.where(col("shard_id").isin(shards: _*) &&
+        col("centroid_id").isin(ps: _*)))
+  }
 
-  /** Live-row filter: anti-join the broadcast tombstone set, if any.
-    * `private[operators]` so the coded sibling datasets (IvfPq, IvfSq)
-    * honor deletes too — a tombstone must hide the id on EVERY search
-    * path, not just the float one.
+  /** Live-row filter: drops every row whose id (cast to bigint) is in
+    * the tombstone set, as a predicate inside the scan — no join, no
+    * exchange, and no job beyond the scan itself. The set is the
+    * sorted distinct ids of exactly the sidecar files [[tombstoneFp]]
+    * lists, read once per fingerprint ([[tombstoneSet]]) and shipped as
+    * one broadcast; a NULL id is never hidden, and NULL or duplicate
+    * tombstone rows hide nothing extra. `private[operators]` so the
+    * coded sibling datasets (IvfPq, IvfSq) honor deletes too — a
+    * tombstone must hide the id on EVERY search path, not just the
+    * float one.
     */
   private[operators] def liveRows(spark: SparkSession, index: Index,
-      df: DataFrame, idCol: String): DataFrame = {
+      df: DataFrame, idCol: String): DataFrame =
+    if (!tombstonesPresent(spark, index)) df
+    else {
+      val fs = new org.apache.hadoop.fs.Path(tombstonesPath(index))
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // a sidecar with no committed data file (only _temporary from a
+      // killed delete job, or one cleared since the presence probe)
+      // hides nothing
+      val fp = tombstoneFp(fs, index)
+      if (fp.isEmpty) df
+      else df.where(graft.functions.NotTombstoned.col(col(idCol),
+        tombstoneSet(spark, index, fp).shipped))
+    }
+
+  /** [[tombstonePresence]] lookup, re-probing the filesystem once the
+    * entry has expired.
+    */
+  private def tombstonesPresent(spark: SparkSession, index: Index): Boolean = {
     val now = System.nanoTime()
     val memo = tombstonePresence.get(index.vectorsPath)
-    val present =
-      if (memo != null && now < memo.expiresAtNanos) memo.present
-      else {
-        val path = new org.apache.hadoop.fs.Path(tombstonesPath(index))
-        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // a directory with no committed data file (e.g. only _temporary
-        // from a killed delete job) must read as "no tombstones", not
-        // crash schema inference and brick every search
-        val probed = fs.exists(path) && fs.listStatus(path).exists { st =>
-          val n = st.getPath.getName
-          st.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }
-        tombstonePresence.put(index.vectorsPath,
-          TombMemo(probed, now + memoTtlNanos))
-        probed
-      }
-    if (!present) df
+    if (memo != null && now < memo.expiresAtNanos) memo.present
     else {
-      val tomb = spark.read
-        .schema("__deleted_id LONG")
-        .parquet(tombstonesPath(index))
-      df.join(broadcast(tomb), df(idCol) === tomb("__deleted_id"),
-        "left_anti")
+      val path = new org.apache.hadoop.fs.Path(tombstonesPath(index))
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // a directory with no committed data file (e.g. only _temporary
+      // from a killed delete job) must read as "no tombstones"
+      val probed = fs.exists(path) && fs.listStatus(path).exists { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+      tombstonePresence.put(index.vectorsPath,
+        TombMemo(probed, now + memoTtlNanos))
+      probed
     }
   }
 
@@ -859,7 +876,7 @@ object Ivf {
     */
   def liveVectors(spark: SparkSession, index: Index,
       idCol: String = null): DataFrame =
-    liveRows(spark, index, spark.read.parquet(index.vectorsPath),
+    liveRows(spark, index, graft.Tables.loadArtifact(spark, index.vectorsPath),
       effectiveIdCol(index, idCol))
 
   /** Compact an append-fragmented index: every `append` adds files per
@@ -900,13 +917,14 @@ object Ivf {
     // sibling datasets built before the compact still contain the
     // deleted rows — clearTombstones ends the lifecycle once those are
     // rebuilt. The carried filter is a no-op against the rewritten
-    // float files (the ids are gone), so it costs only the broadcast.
+    // float files (the ids are gone), so it costs only the per-row
+    // probe of the broadcast id set.
     val srcFs = new org.apache.hadoop.fs.Path(tombstonesPath(index))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // fingerprint BEFORE the rewrite reads the live view: the
     // materialization marker below may only claim tombstones whose
-    // files the rewrite's anti-join definitely read — a delete racing
-    // the rewrite leaves the marker unwritten, compactRecommended
+    // files the rewrite's tombstone filter definitely read — a delete
+    // racing the rewrite leaves the marker unwritten, compactRecommended
     // stays true, and the next maintenance cycle converges it
     val fpBefore = tombstoneFp(srcFs, index)
     writeVectors(
@@ -1385,14 +1403,15 @@ object Ivf {
       * schedule). The default of 8 sits well inside the measured 11×
       * fragmentation that cost 2.3× warm-search latency. Tombstone
       * debt recommends too, but only while UNMATERIALIZED: one
-      * compact amortizes the per-search anti-join's miss cost and
-      * drops the flag; the carried sidecar alone never re-raises it.
+      * compact removes the dead rows every search still scans and
+      * filters, and drops the flag; the carried sidecar alone never
+      * re-raises it.
       * `maxUnmaterializedTombstones` bounds HOW MUCH unmaterialized
       * debt is tolerated before recommending: the default 0 converges
       * every delete into the next maintenance cycle (the r13 contract),
       * while a delete-heavy deployment at large index scale raises it
       * so each small delete batch does not trigger its own O(index)
-      * rewrite — the anti-join tax is proportional to the UNCOMPACTED
+      * rewrite — the merge-on-read tax grows with the UNCOMPACTED
       * delete volume (measured in SCALE.md round 14), so the knob
       * trades exactly that tax against rewrite frequency.
       */
@@ -1402,33 +1421,82 @@ object Ivf {
         unmaterializedTombstones > maxUnmaterializedTombstones
   }
 
-  /** Tombstone-count memo keyed by index path, with the sidecar's
-    * [[tombstoneFp]] as the fingerprint: the count job reruns only when
-    * the sidecar's files actually changed (delete appends a file;
-    * clearTombstones removes the dir), so a polling ingest loop pays
-    * one tiny job per DELETE, not per batch.
+  /** The tombstone sidecar as one read saw it: `rows` counts every row
+    * read (duplicates and NULLs included — the delete volume
+    * [[MaintenanceStats]] reports), `ids` is the sorted, distinct,
+    * non-NULL id set the search filter probes. The broadcast is made on
+    * first use, so a count-only consumer ships nothing.
     */
-  private val tombCountMemo = new graft.Tables.DataKeyedMemo[Long]()
+  private final class TombstoneSet(val rows: Long,
+      val ids: Array[Long], sc: org.apache.spark.SparkContext) {
+    lazy val shipped: org.apache.spark.broadcast.Broadcast[Array[Long]] =
+      sc.broadcast(ids)
+  }
 
-  /** Tombstone id count for the sidecar state fingerprinted by `fp` —
-    * memoized per fingerprint, so the count job runs once per sidecar
-    * CHANGE, not per poll. Counts EXACTLY the files the fingerprint
-    * lists, not the directory (ADVICE r14: a delete batch landing
-    * between the caller's fingerprint check and this job must not
-    * inflate the count recorded under `fp` — that under-reported the
-    * NEXT batch's debt as `tombs - mcount` went negative-ish and a
-    * compact could be deferred one extra delete). A file vanishing
+  /** One entry per (SparkContext, index path), fingerprinted by the
+    * sidecar's [[tombstoneFp]]: the read job reruns only when the
+    * sidecar's files actually changed (delete appends a file;
+    * clearTombstones removes the dir), so searches and a polling
+    * ingest loop pay one tiny job per DELETE, not per call. Keyed by
+    * the context (identity and application id) because the entry
+    * holds that context's broadcast.
+    */
+  private val tombstoneSets = new graft.Tables.DataKeyedMemo[TombstoneSet]()
+
+  /** The [[TombstoneSet]] of the sidecar state fingerprinted by the
+    * non-empty `fp`. Reads EXACTLY the files the fingerprint lists, not
+    * the directory (ADVICE r14: a delete batch landing between the
+    * caller's fingerprint check and this job must not inflate the count
+    * recorded under `fp` — that under-reported the NEXT batch's debt as
+    * `tombs - mcount` went negative-ish and a compact could be deferred
+    * one extra delete). One job, no shuffle: each task sorts and
+    * deduplicates its own ids, the driver merges. A file vanishing
     * mid-read (a racing clear) throws; marker-writing callers treat
-    * that as "marker moot" and skip.
+    * that as "marker moot" and skip, a search fails like any scan that
+    * races a clear.
+    */
+  private def tombstoneSet(spark: SparkSession, index: Index,
+      fp: String): TombstoneSet = {
+    val sc = spark.sparkContext
+    tombstoneSets.get(
+      s"${System.identityHashCode(sc)}:${sc.applicationId}:${index.vectorsPath}",
+      Some(fp)) {
+      val dir = tombstonesPath(index)
+      val files = fp.split('|').toSeq.map(e => s"$dir/${e.split(':')(0)}")
+      val parts = spark.read.schema("__deleted_id LONG").parquet(files: _*)
+        .rdd.mapPartitions { it =>
+          val ids = new scala.collection.mutable.ArrayBuilder.ofLong
+          var rows = 0L
+          it.foreach { r =>
+            rows += 1
+            if (!r.isNullAt(0)) ids += r.getLong(0)
+          }
+          Iterator.single((rows, distinctSorted(ids.result())))
+        }.collect()
+      new TombstoneSet(parts.map(_._1).sum,
+        distinctSorted(parts.flatMap(_._2)), sc)
+    }
+  }
+
+  /** `xs` sorted ascending with duplicates dropped. */
+  private def distinctSorted(xs: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(xs)
+    var n = 0
+    var i = 0
+    while (i < xs.length) {
+      if (n == 0 || xs(i) != xs(n - 1)) { xs(n) = xs(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(xs, n)
+  }
+
+  /** Tombstone rows in the sidecar state fingerprinted by `fp`,
+    * duplicates and NULLs included — served from [[tombstoneSet]], so
+    * the maintenance probe and the search filter share one read.
     */
   private def tombstoneCountFor(spark: SparkSession, index: Index,
       fp: String): Long =
-    if (fp.isEmpty) 0L
-    else tombCountMemo.get(index.vectorsPath, Some(fp)) {
-      val dir = tombstonesPath(index)
-      val files = fp.split('|').toSeq.map(e => s"$dir/${e.split(':')(0)}")
-      spark.read.schema("__deleted_id LONG").parquet(files: _*).count()
-    }
+    if (fp.isEmpty) 0L else tombstoneSet(spark, index, fp).rows
 
   def maintenanceStats(spark: SparkSession, index: Index): MaintenanceStats = {
     // never inspect a crashed-swap layout: the listing would describe a
@@ -1604,8 +1672,8 @@ object Ivf {
     *     inverts the probes into per-cell query lists (CSR arrays plus
     *     the query vectors as one `float[]`), shipped in ONE broadcast;
     *   - the vectors dataset is scanned once, directory-pruned to the
-    *     union of probed shards, tombstones anti-joined and `filter`
-    *     applied inside the scan;
+    *     union of probed shards, with the tombstone id-set predicate
+    *     ([[liveRows]]) and `filter` applied inside the scan;
     *   - the [[ListScan]] kernel decodes each index row into a primitive
     *     `float[]` once, loops over the queries probing its cell, and
     *     keeps a bounded best-first buffer per query, so a scan task
@@ -1655,7 +1723,7 @@ object Ivf {
     val block = spark.sparkContext.broadcast(
       ListScan.queryBlock(queries, probes, index.k, dim))
     val pruned = liveRows(spark, index,
-      spark.read.parquet(index.vectorsPath)
+      graft.Tables.loadArtifact(spark, index.vectorsPath)
         .where(col("shard_id").isin(shards: _*)),
       id)
     val rows = filter.map(pruned.where).getOrElse(pruned)
@@ -1718,6 +1786,9 @@ object Ivf {
     val id = effectiveIdCol(index, idCol)
     require(k > 0, "k must be > 0")
     require(nProbe > 0, "n_probe must be > 0")
+    // clamped like search/searchBatch, so a capped index returns the
+    // same rows per query on every batch path
+    val topK = math.min(k, index.config.maxK)
     val spark = queries.sparkSession
     // The query side is PROJECTED to (qidCol, qembCol) plus only the
     // columns pairFilter references — unreferenced extras (which may
@@ -1738,8 +1809,8 @@ object Ivf {
       .distinct
     val qCols = (Seq(qidCol, qembCol) ++
       filterRefs.filter(queries.columns.contains)).distinct
-    val idxCols =
-      spark.read.parquet(index.vectorsPath).columns.toSet + "centroid_id"
+    val vectors = graft.Tables.loadArtifact(spark, index.vectorsPath)
+    val idxCols = vectors.columns.toSet + "centroid_id"
     val clash = qCols.filter(idxCols.contains)
     require(clash.isEmpty,
       s"annJoin: query-side column(s) ${clash.mkString(", ")} collide with " +
@@ -1781,13 +1852,12 @@ object Ivf {
     // exchange on the query id carries ≤ k·P rows per query, which is
     // what keeps a hot query (or a hot probed cell fanning out to many
     // queries) from becoming one reducer sorting its whole candidate set
-    val joined =
-      liveRows(spark, index, spark.read.parquet(index.vectorsPath), id)
-        .join(probed, Seq("centroid_id"))
+    val joined = liveRows(spark, index, vectors, id)
+      .join(probed, Seq("centroid_id"))
     val candidates = pairFilter.map(joined.where).getOrElse(joined)
       .withColumn("distance",
         graft.functions.Vec.squaredL2(col(embCol), col(qembCol)))
-    TopNByKey.topN(candidates, Seq(qidCol), col("distance"), col(id), k)
+    TopNByKey.topN(candidates, Seq(qidCol), col("distance"), col(id), topK)
       .select(col(qidCol), col("rk").as("rank"),
         col("id").as("external_id"), col("ord").as("distance"))
   }

@@ -93,7 +93,7 @@ object IndexQueries {
 
   /** Delete lifecycle search (`ivf_search_deleted`): the one engine
     * surface VERDICT r13 flagged as DuckDB-uncovered — `Ivf.delete` +
-    * `liveRows`' broadcast tombstone anti-join, oracled end to end in
+    * `liveRows`' in-scan tombstone filter, oracled end to end in
     * BOTH lifecycle phases. A fresh index is built on `vec_id < 300`,
     * a deterministic id set (`vec_id % 7 = 3`, ~43 ids spread across
     * clusters) is deleted — the even half via the id-list [[Ivf.delete]],
@@ -106,7 +106,7 @@ object IndexQueries {
     * phase hash-mismatches at rank 1 — is taken twice:
     *
     *  - `merge_on_read`: tombstones filtered at scan time by the
-    *    broadcast anti-join (data files still hold all 300 rows);
+    *    broadcast id-set predicate (data files still hold all 300 rows);
     *  - `compacted`: after [[Ivf.compactInPlace]] materializes the
     *    deletes into rewritten files (recording the materialization
     *    marker + fencing the swap under the writer lease — the oracled
@@ -200,14 +200,14 @@ object IndexQueries {
     * search-rewrite fix, then the r15 coded-sibling/poller extension)
     * and was ScalaTest-only — put under the DuckDB oracle. The index is
     * built with its id column named `doc_id`, so EVERY plumbing step
-    * that wrongly assumes `vec_id` (the tombstone anti-join, the
+    * that wrongly assumes `vec_id` (the tombstone scan filter, the
     * deleteWhere live-view filter, compaction's re-densify rewrite, the
     * search projection) either fails analysis on the missing column or
     * resurrects deleted id 10 at rank 1 / distance 0 and
     * hash-mismatches. Same survivor set and query vector as
     * [[searchDeleted]] (`id < 300`, delete `id % 7 = 3`, query id 10 —
-    * itself deleted), taken in two phases: merge-on-read (broadcast
-    * anti-join on the RECORDED id column) and compacted
+    * itself deleted), taken in two phases: merge-on-read (tombstone
+    * filter on the RECORDED id column) and compacted
     * ([[Ivf.compactInPlace]]'s rewrite + marker under the custom
     * column). Phase 1 is materialized before the swap deletes the file
     * names its lazy plan pins.

@@ -309,7 +309,7 @@ object VectorsStreaming {
     * the distributed [[Ivf.delete]] DataFrame form; the same marker
     * ledger makes a replayed batch id a no-op — which matters more here
     * than for appends: a replayed delete is semantically harmless to
-    * the anti-join but would CHANGE the sidecar fingerprint, spuriously
+    * the tombstone filter but would CHANGE the sidecar fingerprint, spuriously
     * re-raising `unmaterializedTombstones` after a compact already paid
     * that debt (a phantom re-compact per replay). Same
     * crash-between-apply-and-marker caveat as the append form.

@@ -10,7 +10,7 @@ import graft.sources.VectorFormats
   * prior lease/lifecycle gate — including StressSpec's composed
   * interleaving — ran its contenders as threads of ONE JVM, where the
   * striped create-monitor and the shared `tombstonePresence` TTL memo
-  * and `tombCountMemo` soften the race. FsLease's real adversary is a
+  * and `tombstoneSets` memo soften the race. FsLease's real adversary is a
   * second JVM with its own heartbeat daemons and its own memo copies
   * that a foreign delete cannot invalidate. This spec forks that JVM
   * (java -cp <this test classpath> graft.CrossJvmStressRunner) and

@@ -209,6 +209,24 @@ class IvfSpec extends SparkSpec {
       s"pruned ANN join recall@1 too low: $hits/${qs.length}")
   }
 
+  test("annJoin clamps k to config.maxK: equals searchBatch row for row " +
+      "on a capped index") {
+    import spark.implicits._
+    val capped = index.copy(config = Ivf.Config(maxK = 3))
+    val qs = embAll.filter(_._1 < 8L)
+    val qDf = qs.toSeq.map { case (id, v) => (id, v.toSeq) }
+      .toDF("query_id", "qe")
+      .select(col("query_id"), col("qe").cast("array<float>").as("qe"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.map(r =>
+        (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .sortBy(t => (t._1, t._2))
+    val joined = rows(Ivf.annJoin(qDf, capped, k = 10, nProbe = 4))
+    assert(joined == rows(Ivf.searchBatch(spark, capped, qs, 10, 4)))
+    assert(joined.groupBy(_._1).values.forall(_.length == 3),
+      "annJoin returned more than maxK rows for a query")
+  }
+
   test("ANN join pair filter: true filtered top-k over both sides") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf0001)

@@ -162,6 +162,10 @@ class ListScanSpec extends SparkSpec {
         s"k=$k nProbe=$nProbe filter=${f.isDefined} diverges")
       assert(got.forall(t => !deleted.contains(t._3)))
     }
+    // tombstones are a predicate inside the scan, not a broadcast join
+    val plan = Ivf.searchBatch(spark, idx, queries, 3, 2)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastHashJoin"), plan)
   }
 
   test("rows do not depend on splits, AQE or shuffle partitions") {
