@@ -472,8 +472,10 @@ object Ivf {
     * per delete batch, no touch of the data files) and every search
     * path — float AND the PQ/SQ8 coded siblings — filters them inside
     * its scan: the sidecar is read once per change into a sorted id
-    * set, broadcast, and probed per row ([[liveRows]]). The tombstone
-    * set is id-sized (~8 MB per million Long ids, as parquet and as the
+    * set, broadcast, and probed per row ([[liveRows]]). Every read
+    * re-lists the sidecar, so a delete is visible to the very next
+    * read in any JVM — no TTL, the same freshness rule as
+    * [[graft.Tables.loadArtifact]]. The tombstone set is id-sized (~8 MB per million Long ids, as parquet and as the
     * broadcast `long[]`), so compaction cadence bounds how large it may
     * grow. At 100 TB this is the only viable delete: rewriting shards
     * per delete would be a full-table write for a row-sized change.
@@ -505,7 +507,9 @@ object Ivf {
     * fails it by fingerprint, refusing the clear) or after its release
     * (recreating the sidecar fresh). Three metadata ops per delete
     * batch (lease create/release + the debris-purge existence check),
-    * the same price append pays for the same guarantees.
+    * the same price append pays for the same guarantees. Nothing is
+    * published to readers beyond the committed file: the new file
+    * changes the sidecar fingerprint every read lists ([[liveRows]]).
     */
   private def writeTombstones(spark: SparkSession, index: Index,
       out: DataFrame,
@@ -522,12 +526,6 @@ object Ivf {
       // guarded commit path
       appendWithCrashGuard(out, tombstonesPath(index))(identity)
     }
-    // memo update OUTSIDE the lease is deliberate (VERDICT r14 #3): the
-    // memo is a presence-only, TTL-bounded, same-JVM hint — a reader
-    // seeing the pre-update value merely rechecks the filesystem within
-    // 30 s, never skips a tombstone that the scan filter would read
-    tombstonePresence.put(index.vectorsPath,
-      TombMemo(present = true, System.nanoTime() + memoTtlNanos))
   }
 
   /** [[delete]] over a DataFrame of ids — the streaming/bulk form: the
@@ -619,7 +617,9 @@ object Ivf {
 
   /** Drop the tombstone sidecar — the final step of the delete
     * lifecycle, once a compact + coded-sibling rebuild has materialized
-    * the deletes everywhere.
+    * the deletes everywhere. Readers need no notice: [[liveRows]]
+    * re-lists the sidecar on every call, so the next read in any JVM
+    * stops filtering.
     *
     * The precondition is VERIFIED, not trusted (VERDICT r13 #7): the
     * documented rule — clear LAST, after a compact and a rebuild of
@@ -679,12 +679,6 @@ object Ivf {
       fs.delete(path, true)
       fs.delete(materializedMarkerPath(index), false)
     }
-    // outside the lease on purpose — see writeTombstones: a stale
-    // "present" hint costs at worst one transient scan failure against
-    // the just-deleted sidecar (the documented retry-safe class),
-    // self-healing within the 30 s TTL; it can never hide a tombstone
-    tombstonePresence.put(index.vectorsPath,
-      TombMemo(present = false, System.nanoTime() + memoTtlNanos))
   }
 
   /** Sorted name:length:mtime fingerprint of the tombstone sidecar's
@@ -692,7 +686,7 @@ object Ivf {
     * names embed write-job UUIDs, so any delete batch changes the
     * fingerprint even within one mtime granule.
     */
-  private[operators] def tombstoneFp(fs: org.apache.hadoop.fs.FileSystem,
+  private def tombstoneFp(fs: org.apache.hadoop.fs.FileSystem,
       index: Index): String = {
     val tp = new org.apache.hadoop.fs.Path(tombstonesPath(index))
     if (!fs.exists(tp)) ""
@@ -746,7 +740,7 @@ object Ivf {
     * sibling postdates the newest delete. One tiny file per sibling
     * path (name = hash of the path → rebuilds overwrite in place).
     */
-  private[operators] def registerSibling(spark: SparkSession, index: Index,
+  private def registerSibling(spark: SparkSession, index: Index,
       siblingPath: String, fp: String): Unit = {
     val dir = siblingsDir(index)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -762,6 +756,31 @@ object Ivf {
     try out.write(s"$siblingPath\n$fp"
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+  }
+
+  /** The ONE coded-sibling write ([[IvfPq.buildCodes]],
+    * [[IvfPq.buildResidualCodes]], [[IvfSq.buildCodes]]): `encode` maps
+    * the LIVE float view (tombstones filtered, so a rebuild anywhere in
+    * the delete lifecycle never resurrects a deleted row) to frames
+    * carrying `codeCols`, written in the float layout. The order is the
+    * safety property [[clearTombstones]] relies on: the tombstone
+    * fingerprint is captured BEFORE the encode reads the live view and
+    * registered AFTER the write commits, so a delete racing the build
+    * leaves the registration stale — read as "this sibling predates the
+    * newest tombstone", the safe direction.
+    */
+  private[operators] def writeSibling(spark: SparkSession, index: Index,
+      outPath: String, idCol: String, codeCols: Seq[String])(
+      encode: DataFrame => DataFrame): Unit = {
+    val id = effectiveIdCol(index, idCol)
+    val fs = new org.apache.hadoop.fs.Path(index.vectorsPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fp = tombstoneFp(fs, index)
+    writeVectors(
+      encode(liveVectors(spark, index, id))
+        .select((Seq("shard_id", "centroid_id", id) ++ codeCols).map(col): _*),
+      id, index.numShards, outPath, "overwrite")
+    registerSibling(spark, index, outPath, fp)
   }
 
   private def siblingsDir(index: Index): org.apache.hadoop.fs.Path = {
@@ -790,20 +809,6 @@ object Ivf {
     }
   }
 
-  /** Per-JVM memo of "does this index have tombstones" so the hot
-    * search path does not pay a filesystem existence check per query
-    * (on an object store that is an RPC each). Entries EXPIRE after
-    * [[memoTtlNanos]] (30 s): deletes or clears issued from another
-    * process are picked up within that window, not ignored for the
-    * life of the JVM. `delete`/`clear` in THIS JVM refresh the memo
-    * immediately, so same-process callers never see staleness. A table
-    * format's snapshot metadata would own this in production.
-    */
-  private final case class TombMemo(present: Boolean, expiresAtNanos: Long)
-  private[graft] val memoTtlNanos = 30L * 1000 * 1000 * 1000
-  private val tombstonePresence =
-    new java.util.concurrent.ConcurrentHashMap[String, TombMemo]()
-
   /** The probe-pruned scan shared by every single-query search path
     * (float vectors and coded siblings alike): shard directory pruning
     * + chunked centroid row-group predicates ([[Pushdown]]) over the
@@ -828,46 +833,26 @@ object Ivf {
     * sorted distinct ids of exactly the sidecar files [[tombstoneFp]]
     * lists, read once per fingerprint ([[tombstoneSet]]) and shipped as
     * one broadcast; a NULL id is never hidden, and NULL or duplicate
-    * tombstone rows hide nothing extra. `private[operators]` so the
-    * coded sibling datasets (IvfPq, IvfSq) honor deletes too — a
-    * tombstone must hide the id on EVERY search path, not just the
-    * float one.
+    * tombstone rows hide nothing extra. The coded siblings (IvfPq,
+    * IvfSq) read through it too, via [[Prelude.scan]] and
+    * [[BatchPrelude.scan]] — a tombstone must hide the id on EVERY
+    * search path, not just the float one.
+    *
+    * Freshness is the fingerprint alone: it is listed on every call,
+    * with no TTL, so a delete or clear committed by any JVM is seen by
+    * the next call — the rule [[graft.Tables.loadArtifact]] applies to
+    * the relation. A sidecar with no committed data file (absent,
+    * cleared, or only a killed delete's `_temporary`) lists as "" and
+    * hides nothing.
     */
-  private[operators] def liveRows(spark: SparkSession, index: Index,
-      df: DataFrame, idCol: String): DataFrame =
-    if (!tombstonesPresent(spark, index)) df
-    else {
-      val fs = new org.apache.hadoop.fs.Path(tombstonesPath(index))
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // a sidecar with no committed data file (only _temporary from a
-      // killed delete job, or one cleared since the presence probe)
-      // hides nothing
-      val fp = tombstoneFp(fs, index)
-      if (fp.isEmpty) df
-      else df.where(graft.functions.NotTombstoned.col(col(idCol),
-        tombstoneSet(spark, index, fp).shipped))
-    }
-
-  /** [[tombstonePresence]] lookup, re-probing the filesystem once the
-    * entry has expired.
-    */
-  private def tombstonesPresent(spark: SparkSession, index: Index): Boolean = {
-    val now = System.nanoTime()
-    val memo = tombstonePresence.get(index.vectorsPath)
-    if (memo != null && now < memo.expiresAtNanos) memo.present
-    else {
-      val path = new org.apache.hadoop.fs.Path(tombstonesPath(index))
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // a directory with no committed data file (e.g. only _temporary
-      // from a killed delete job) must read as "no tombstones"
-      val probed = fs.exists(path) && fs.listStatus(path).exists { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      tombstonePresence.put(index.vectorsPath,
-        TombMemo(probed, now + memoTtlNanos))
-      probed
-    }
+  private def liveRows(spark: SparkSession, index: Index,
+      df: DataFrame, idCol: String): DataFrame = {
+    val fs = new org.apache.hadoop.fs.Path(tombstonesPath(index))
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fp = tombstoneFp(fs, index)
+    if (fp.isEmpty) df
+    else df.where(graft.functions.NotTombstoned.col(col(idCol),
+      tombstoneSet(spark, index, fp).shipped))
   }
 
   /** Live (non-tombstoned) rows of the index's float dataset — the
@@ -918,7 +903,9 @@ object Ivf {
     // deleted rows — clearTombstones ends the lifecycle once those are
     // rebuilt. The carried filter is a no-op against the rewritten
     // float files (the ids are gone), so it costs only the per-row
-    // probe of the broadcast id set.
+    // probe of the broadcast id set. Readers of the out index find the
+    // copied sidecar by its fingerprint on their first call; nothing is
+    // announced to them.
     val srcFs = new org.apache.hadoop.fs.Path(tombstonesPath(index))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // fingerprint BEFORE the rewrite reads the live view: the
@@ -951,8 +938,6 @@ object Ivf {
         try writeMaterializedMarker(fs, out, outFp,
           tombstoneCountFor(spark, index, fpBefore))
         catch { case scala.util.control.NonFatal(_) => () }
-      tombstonePresence.put(out.vectorsPath,
-        TombMemo(present = true, System.nanoTime() + memoTtlNanos))
       if (fpStable) Some(fpBefore -> outFp) else None
     } else None
     // carry the coded-sibling registry (ADVICE r14 medium: without
@@ -1583,6 +1568,102 @@ object Ivf {
     (probes, probes.map(index.centroidToShard).distinct)
   }
 
+  /** `k0` clamped to `maxK` (`src/api.rs:189`), then required positive
+    * (`src/ivf_index.rs:197-202`) — the k policy of every search entry
+    * point, float, coded and join.
+    */
+  private[operators] def clampK(index: Index, k0: Int): Int = {
+    val k = math.min(k0, index.config.maxK)
+    require(k > 0, "k must be > 0")
+    k
+  }
+
+  /** `nProbe0` clamped to `maxNProbe`, then required positive — the
+    * n_probe twin of [[clampK]].
+    */
+  private[operators] def clampNProbe(index: Index, nProbe0: Int): Int = {
+    val nProbe = math.min(nProbe0, index.config.maxNProbe)
+    require(nProbe > 0, "n_probe must be > 0")
+    nProbe
+  }
+
+  /** One query, checked and routed: the id column it reads, and its
+    * probed cells and their shards.
+    */
+  private[operators] final case class Prelude(index: Index, id: String,
+      probes: Seq[Int], shards: Seq[Int]) {
+    /** Live rows of the probed cells of the dataset at `path` — the
+      * float vectors or a coded sibling in the same layout.
+      */
+    def scan(spark: SparkSession, path: String): DataFrame =
+      liveRows(spark, index,
+        probePrunedScan(spark, path, probes, shards, index.k), id)
+  }
+
+  /** The read prelude of every single-query entry point (float `search`
+    * and `rangeSearch`, the IvfPq and IvfSq paths): the id-column
+    * default, the n_probe clamp and check, the dimension check BEFORE
+    * any routing (the router reads `query.length` centroid components,
+    * so a long query would otherwise fail out of bounds in it), then
+    * [[probeSelection]]. Callers with a k run [[clampK]] first.
+    */
+  private[operators] def prelude(index: Index, query: Array[Float],
+      nProbe0: Int, idCol: String): Prelude = {
+    val nProbe = clampNProbe(index, nProbe0)
+    val dim = index.centroids(0).length
+    require(query.length == dim,
+      s"query dimension ${query.length} != index dimension $dim")
+    val (probes, shards) = probeSelection(index, query, nProbe)
+    Prelude(index, effectiveIdCol(index, idCol), probes, shards)
+  }
+
+  /** A query batch, checked and routed: per-query probes (in query
+    * order) and the distinct shards they touch.
+    */
+  private[operators] final case class BatchPrelude(index: Index, id: String,
+      probes: Array[Array[Int]], shards: Seq[Int]) {
+    /** Live rows of the union of probed cells of the dataset at `path`. */
+    def scan(spark: SparkSession, path: String): DataFrame =
+      liveRows(spark, index, probePrunedScan(spark, path,
+        probes.flatten.distinct.toSeq, shards, index.k), id)
+  }
+
+  /** [[prelude]] for a driver-side query batch: the same clamp and
+    * dimension check on every query, duplicate-id rejection (batch
+    * paths rank per query id, so two queries sharing one would merge
+    * into one top-k), then per-query routing through the shared router.
+    */
+  private[operators] def batchPrelude(index: Index,
+      queries: Array[(Long, Array[Float])], nProbe0: Int,
+      idCol: String): BatchPrelude = {
+    val nProbe = clampNProbe(index, nProbe0)
+    val dim = index.centroids(0).length
+    queries.find(_._2.length != dim).foreach { q =>
+      throw new IllegalArgumentException(
+        s"query ${q._1} has dimension ${q._2.length}, index has $dim")
+    }
+    val seen = new java.util.HashSet[Long]()
+    queries.foreach { case (qid, _) =>
+      if (!seen.add(qid)) throw new IllegalArgumentException(
+        s"duplicate query id $qid: batch query ids must be distinct")
+    }
+    val probes = queries.map { case (_, q) => index.router.topN(q, nProbe) }
+    BatchPrelude(index, effectiveIdCol(index, idCol), probes,
+      probes.flatten.map(index.centroidToShard).distinct.toSeq)
+  }
+
+  /** The ranking tail of every single-query top-k: ascending distance
+    * with NULLs last (a ragged or null-element embedding has a NULL
+    * distance, which the default nulls-first order would rank above
+    * real neighbors), ties by id, `k` rows as `(external_id, distance)`
+    * plus `extra` — one TakeOrderedAndProject.
+    */
+  private[operators] def rankTopK(df: DataFrame, id: String, k: Int,
+      extra: org.apache.spark.sql.Column*): DataFrame =
+    df.orderBy(col("distance").asc_nulls_last, col(id))
+      .limit(k)
+      .select(Seq(col(id).as("external_id"), col("distance")) ++ extra: _*)
+
   /** Top-k search. Returns `(external_id, distance[, embedding])` ascending
     * by (distance, external_id).
     *
@@ -1600,33 +1681,17 @@ object Ivf {
       nProbe0: Int, idCol: String = null, embCol: String = "embedding",
       includeVectors: Boolean = false,
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val id = effectiveIdCol(index, idCol)
-    val k = math.min(k0, index.config.maxK)           // src/api.rs:189
-    val nProbe = math.min(nProbe0, index.config.maxNProbe)
-    require(k > 0, "k must be > 0")                   // src/ivf_index.rs:197-202
-    require(nProbe > 0, "n_probe must be > 0")
-    require(query.length == index.centroids(0).length,
-      s"query dimension ${query.length} != index dimension ${index.centroids(0).length}")
-
+    val k = clampK(index, k0)
     // probe selection on the driver over the routing table (J5/T1)
-    val (probes, shards) = probeSelection(index, query, nProbe)
-
+    val p = prelude(index, query, nProbe0, idCol)
     // pruned scan: directory pruning on shard_id + row-group skipping on
     // centroid_id (replaces S8 selective reads), then distance + top-k
     // via TakeOrderedAndProject (J6/T2) — see [[probePrunedScan]] for
     // the chunking/probe-all contract
-    val qLit = lit(query)
-    val pruned = liveRows(spark, index,
-      probePrunedScan(spark, index.vectorsPath, probes, shards, index.k),
-      id)
-    val base = filter.map(pruned.where).getOrElse(pruned)
-      .withColumn("distance", Vec.squaredL2(col(embCol), qLit))
-      // nulls last: a ragged/null-element embedding yields NULL distance,
-      // which default nulls-first ordering would rank above real neighbors
-      .orderBy(col("distance").asc_nulls_last, col(id))
-      .limit(k)
-    val out = base.select(col(id).as("external_id"), col("distance"),
-      col(embCol).as("vector"))
+    val pruned = p.scan(spark, index.vectorsPath)
+    val out = rankTopK(filter.map(pruned.where).getOrElse(pruned)
+      .withColumn("distance", Vec.squaredL2(col(embCol), lit(query))),
+      p.id, k, col(embCol).as("vector"))
     if (includeVectors) out else out.drop("vector") // P3
   }
 
@@ -1645,21 +1710,13 @@ object Ivf {
       radius: Double, nProbe0: Int, idCol: String = null,
       embCol: String = "embedding",
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val id = effectiveIdCol(index, idCol)
-    val nProbe = math.min(nProbe0, index.config.maxNProbe)
-    require(nProbe > 0, "n_probe must be > 0")
-    require(query.length == index.centroids(0).length,
-      s"query dimension ${query.length} != index dimension ${index.centroids(0).length}")
-    val (probes, shards) = probeSelection(index, query, nProbe)
-    val qLit = lit(query)
-    val pruned = liveRows(spark, index,
-      probePrunedScan(spark, index.vectorsPath, probes, shards, index.k),
-      id)
+    val p = prelude(index, query, nProbe0, idCol)
+    val pruned = p.scan(spark, index.vectorsPath)
     filter.map(pruned.where).getOrElse(pruned)
-      .withColumn("distance", Vec.squaredL2(col(embCol), qLit))
+      .withColumn("distance", Vec.squaredL2(col(embCol), lit(query)))
       .where(col("distance") < radius)
-      .orderBy(col("distance"), col(id))
-      .select(col(id).as("external_id"), col("distance"))
+      .orderBy(col("distance"), col(p.id))
+      .select(col(p.id).as("external_id"), col("distance"))
   }
 
   /** Batch ANN: top-k for a whole query set in ONE pruned scan.
@@ -1701,49 +1758,21 @@ object Ivf {
       queries: Array[(Long, Array[Float])], k0: Int, nProbe0: Int,
       idCol: String = null, embCol: String = "embedding",
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val id = effectiveIdCol(index, idCol)
-    val k = math.min(k0, index.config.maxK)
-    val nProbe = math.min(nProbe0, index.config.maxNProbe)
-    require(k > 0, "k must be > 0")
-    require(nProbe > 0, "n_probe must be > 0")
-    // same P1 dimension contract as single search — without it a long
-    // query reads past the centroid arrays (driver AIOOBE) and a short
-    // one routes by prefix distance then NULLs every candidate distance
-    val dim = index.centroids(0).length
-    queries.find(_._2.length != dim).foreach { q =>
-      throw new IllegalArgumentException(
-        s"query ${q._1} has dimension ${q._2.length}, index has $dim")
-    }
-    requireDistinctQueryIds(queries)
-
-    // per-query routing via the shared router — O(√k) per query for
-    // large k instead of a full centroid sort (see Index.router)
-    val probes = queries.map { case (_, q) => index.router.topN(q, nProbe) }
-    val shards = probes.flatten.map(index.centroidToShard).distinct.toSeq
-    val block = spark.sparkContext.broadcast(
-      ListScan.queryBlock(queries, probes, index.k, dim))
+    val k = clampK(index, k0)
+    val b = batchPrelude(index, queries, nProbe0, idCol)
+    val block = spark.sparkContext.broadcast(ListScan.queryBlock(
+      queries, b.probes, index.k, index.centroids(0).length))
+    // shard pruning only: the kernel itself skips unprobed cells
     val pruned = liveRows(spark, index,
       graft.Tables.loadArtifact(spark, index.vectorsPath)
-        .where(col("shard_id").isin(shards: _*)),
-      id)
+        .where(col("shard_id").isin(b.shards: _*)),
+      b.id)
     val rows = filter.map(pruned.where).getOrElse(pruned)
-      .select(col("centroid_id"), col(id).cast("long"), col(embCol))
+      .select(col("centroid_id"), col(b.id).cast("long"), col(embCol))
     TopNByKey.topN(ListScan.scan(rows, block, k), Seq("query_id"),
         col("distance"), col("cand_id"), k)
       .select(col("query_id"), col("rk").as("rank"),
         col("id").as("external_id"), col("ord").as("distance"))
-  }
-
-  /** Batch searches rank per query id, so two queries sharing an id
-    * would merge into one top-k (repeating ids inside it) — rejected.
-    */
-  private[operators] def requireDistinctQueryIds(
-      queries: Array[(Long, Array[Float])]): Unit = {
-    val seen = new java.util.HashSet[Long]()
-    queries.foreach { case (qid, _) =>
-      if (!seen.add(qid)) throw new IllegalArgumentException(
-        s"duplicate query id $qid: batch query ids must be distinct")
-    }
   }
 
   /** Distributed ANN JOIN: top-k nearest indexed vectors for EVERY row
@@ -1784,11 +1813,11 @@ object Ivf {
       idCol: String = null, embCol: String = "embedding",
       pairFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val id = effectiveIdCol(index, idCol)
-    require(k > 0, "k must be > 0")
-    require(nProbe > 0, "n_probe must be > 0")
-    // clamped like search/searchBatch, so a capped index returns the
-    // same rows per query on every batch path
-    val topK = math.min(k, index.config.maxK)
+    // clamped and checked like search/searchBatch, so a capped index
+    // returns the same rows per query on every batch path; n_probe is
+    // further capped at the centroid count for the map-side router
+    val topK = clampK(index, k)
+    val np = math.min(clampNProbe(index, nProbe), index.centroids.length)
     val spark = queries.sparkSession
     // The query side is PROJECTED to (qidCol, qembCol) plus only the
     // columns pairFilter references — unreferenced extras (which may
@@ -1824,11 +1853,6 @@ object Ivf {
     // meta-hierarchy once per executor and routing drops to
     // O(√k + 16n) with the measured pool margin (SCALE.md round-6).
     val routerB = spark.sparkContext.broadcast(index.router)
-    // clamp like search/searchBatch (maxNProbe first, then centroid
-    // count) — annJoin must stay probe-parity with searchBatch on every
-    // config, including a binding maxNProbe cap
-    val np = math.min(math.min(nProbe, index.config.maxNProbe),
-      index.centroids.length)
     // P1 on the distributed query side too, enforced map-side in the
     // same pass (the append-guard pattern): a NULL query embedding
     // would silently drop at the explode with no context, and a

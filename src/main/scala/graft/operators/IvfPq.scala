@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * that is a few hundred GB actually scanned, per thousand queries,
   * fully parallel.
   *
-  * Search composes the two operators as-is: `Ivf.probeSelection` on the
-  * driver routing table → directory/row-group pruned scan → `Pq.adc`
-  * LUT-fold (pure codegen) → `TakeOrderedAndProject`.
+  * Search composes the two operators as-is: `Ivf.prelude` (the checks
+  * and clamps every IVF search shares, then routing on the driver
+  * routing table) → directory/row-group pruned scan → `Pq.adc` LUT-fold
+  * (pure codegen) → `TakeOrderedAndProject`.
   */
 object IvfPq {
 
@@ -29,26 +30,12 @@ object IvfPq {
     */
   def buildCodes(spark: SparkSession, ivf: Ivf.Index, model: Pq.Model,
       outPath: String, idCol: String = null,
-      embCol: String = "embedding"): Unit = {
-    // null default resolves to the id column the index records it was
+      embCol: String = "embedding"): Unit =
+    // a null idCol resolves to the id column the index records it was
     // built with (ADVICE r14: a literal "vec_id" default here failed a
-    // custom-id index inside the encode) — same contract as every
-    // Ivf maintenance/search entry point
-    val id = Ivf.effectiveIdCol(ivf, idCol)
-    // fingerprint BEFORE the encode reads the live view, registered
-    // AFTER the write commits: a delete racing the build leaves the
-    // registration stale (old fp), which clearTombstones reads as
-    // "this sibling predates the newest tombstone" — the safe direction
-    val fs = new org.apache.hadoop.fs.Path(ivf.vectorsPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fp = Ivf.tombstoneFp(fs, ivf)
-    Ivf.writeVectors(
-      Pq.encode(Ivf.liveVectors(spark, ivf, id), embCol, model)
-        .select(col("shard_id"), col("centroid_id"), col(id),
-          col("pq_code")),
-      id, ivf.numShards, outPath, "overwrite")
-    Ivf.registerSibling(spark, ivf, outPath, fp)
-  }
+    // custom-id index inside the encode)
+    Ivf.writeSibling(spark, ivf, outPath, idCol, Seq("pq_code"))(
+      Pq.encode(_, embCol, model))
 
   /** Residual vector x − centroid[centroid_id] as a column — the
     * quantity faiss IndexIVFPQ actually encodes. Residuals have much
@@ -77,7 +64,7 @@ object IvfPq {
   def trainResidual(spark: SparkSession, ivf: Ivf.Index, m: Int = 8,
       ksub: Int = 256, iters: Int = 10, seed: Long = 42L,
       idCol: String = null, embCol: String = "embedding"): Pq.Model = {
-    val id = Ivf.effectiveIdCol(ivf, idCol) // see buildCodes
+    val id = Ivf.effectiveIdCol(ivf, idCol)
     val dim = ivf.centroids(0).length
     val res = residualCol(spark, ivf.centroids)
     val df = Ivf.liveVectors(spark, ivf, id)
@@ -92,20 +79,12 @@ object IvfPq {
   def buildResidualCodes(spark: SparkSession, ivf: Ivf.Index,
       model: Pq.Model, outPath: String, idCol: String = null,
       embCol: String = "embedding"): Unit = {
-    val id = Ivf.effectiveIdCol(ivf, idCol) // see buildCodes
-    val fs = new org.apache.hadoop.fs.Path(ivf.vectorsPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fp = Ivf.tombstoneFp(fs, ivf) // see buildCodes — capture-then-write
     val res = residualCol(spark, ivf.centroids)
-    Ivf.writeVectors(
+    Ivf.writeSibling(spark, ivf, outPath, idCol, Seq("pq_code")) { live =>
       Pq.encode(
-        Ivf.liveVectors(spark, ivf, id)
-          .withColumn("residual", res(col(embCol), col("centroid_id"))),
+        live.withColumn("residual", res(col(embCol), col("centroid_id"))),
         "residual", model)
-        .select(col("shard_id"), col("centroid_id"), col(id),
-          col("pq_code")),
-      id, ivf.numShards, outPath, "overwrite")
-    Ivf.registerSibling(spark, ivf, outPath, fp)
+    }
   }
 
   /** Top-k over the residual-coded dataset. The ADC table now depends
@@ -118,32 +97,23 @@ object IvfPq {
       codesPath: String, query: Array[Float], k0: Int, nProbe0: Int,
       idCol: String = null): DataFrame = {
     import spark.implicits._
-    val id = Ivf.effectiveIdCol(ivf, idCol) // see buildCodes
-    val k = math.min(k0, ivf.config.maxK)
-    val nProbe = math.min(nProbe0, ivf.config.maxNProbe)
-    require(k > 0, "k must be > 0")
-    require(nProbe > 0, "n_probe must be > 0")
-    require(query.length == model.dim,
-      s"query dim ${query.length} != model dim ${model.dim}")
-    val (probes, shards) = Ivf.probeSelection(ivf, query, nProbe)
-    val lutDf = probes.map { c =>
-      val cent = ivf.centroids(c)
-      val qr = Array.tabulate(query.length)(i => query(i) - cent(i))
-      (c, Pq.lutSeq(qr, model))
+    val k = Ivf.clampK(ivf, k0)
+    val p = Ivf.prelude(ivf, query, nProbe0, idCol)
+    val lutDf = p.probes.map { c =>
+      (c, Pq.lutSeq(residual(query, ivf.centroids(c)), model))
     }.toDF("centroid_id", "lut")
     // centroid_id must ALSO be a scan predicate (not just the join key):
     // the join discards non-probed rows after decode, the pushed filter
     // skips their row groups at the reader — see Ivf.probePrunedScan
     // for the chunking/probe-all contract
-    Ivf.liveRows(spark, ivf,
-        Ivf.probePrunedScan(spark, codesPath, probes, shards, ivf.k),
-        id)
+    Ivf.rankTopK(p.scan(spark, codesPath)
       .join(broadcast(lutDf), Seq("centroid_id"))
-      .withColumn("distance", Pq.adc(col("pq_code"), col("lut")))
-      .orderBy(col("distance").asc_nulls_last, col(id))
-      .limit(k)
-      .select(col(id).as("external_id"), col("distance"))
+      .withColumn("distance", Pq.adc(col("pq_code"), col("lut"))), p.id, k)
   }
+
+  /** The query's residual against one probed centroid. */
+  private def residual(q: Array[Float], cent: Array[Float]): Array[Float] =
+    Array.tabulate(q.length)(i => q(i) - cent(i))
 
   /** Batch residual ANN: one pruned scan for the whole query set; the
     * broadcast probe table carries a per-(query, probed-centroid) LUT.
@@ -153,35 +123,22 @@ object IvfPq {
       queries: Array[(Long, Array[Float])], k0: Int, nProbe0: Int,
       idCol: String = null): DataFrame = {
     import spark.implicits._
-    val id = Ivf.effectiveIdCol(ivf, idCol) // see buildCodes
-    val k = math.min(k0, ivf.config.maxK)
-    val nProbe = math.min(nProbe0, ivf.config.maxNProbe)
-    require(k > 0, "k must be > 0")
-    require(nProbe > 0, "n_probe must be > 0")
-    Ivf.requireDistinctQueryIds(queries)
-    val probeLut = queries.toSeq.flatMap { case (qid, q) =>
-      require(q.length == model.dim,
-        s"query dim ${q.length} != model dim ${model.dim}")
-      Ivf.probeSelection(ivf, q, nProbe)._1.map { c =>
-        val cent = ivf.centroids(c)
-        val qr = Array.tabulate(q.length)(i => q(i) - cent(i))
-        (qid, c, Pq.lutSeq(qr, model))
+    val k = Ivf.clampK(ivf, k0)
+    val b = Ivf.batchPrelude(ivf, queries, nProbe0, idCol)
+    val lutDf = queries.indices.flatMap { i =>
+      val (qid, q) = queries(i)
+      b.probes(i).map { c =>
+        (qid, c, Pq.lutSeq(residual(q, ivf.centroids(c)), model))
       }
-    }
-    val shards = probeLut.map(p => ivf.centroidToShard(p._2)).distinct
-    val probedCentroids = probeLut.map(_._2).distinct
-    val lutDf = probeLut.toDF("query_id", "centroid_id", "lut")
+    }.toDF("query_id", "centroid_id", "lut")
     // same contract as the single-query path: the union of probed cells
     // is a pushed scan predicate, the join only fans rows out per query.
     // Per-query top-k is the bounded-state aggregate (TopNByKey), so
     // each map task emits ≤ k rows per query before the exchange.
-    val candidates = Ivf.liveRows(spark, ivf,
-        Ivf.probePrunedScan(spark, codesPath, probedCentroids.toSeq,
-          shards.toSeq, ivf.k),
-        id)
+    val candidates = b.scan(spark, codesPath)
       .join(broadcast(lutDf), Seq("centroid_id"))
       .withColumn("distance", Pq.adc(col("pq_code"), col("lut")))
-    TopNByKey.topN(candidates, Seq("query_id"), col("distance"), col(id), k)
+    TopNByKey.topN(candidates, Seq("query_id"), col("distance"), col(b.id), k)
       .select(col("query_id"), col("rk").as("rank"),
         col("id").as("external_id"), col("ord").as("distance"))
   }
@@ -195,30 +152,27 @@ object IvfPq {
     * refine·k rows, not the corpus, and the coded scan still prunes by
     * probes. Recall approaches exact as `refine` grows (gated in
     * IvfPqSpec); ordering ties resolve by id like every other path.
+    * The query is checked and routed once; both scans use that probe.
     */
   def searchRefine(spark: SparkSession, ivf: Ivf.Index, model: Pq.Model,
       codesPath: String, query: Array[Float], k0: Int, nProbe0: Int,
       refine: Int = 4, idCol: String = null,
       embCol: String = "embedding"): DataFrame = {
-    val id = Ivf.effectiveIdCol(ivf, idCol) // see buildCodes
     require(refine >= 1, s"refine must be >= 1: $refine")
-    val k = math.min(k0, ivf.config.maxK)
-    val shortlist = search(spark, ivf, model, codesPath, query,
-      math.min(k.toLong * refine, ivf.config.maxK.toLong).toInt, nProbe0,
-      id)
-      .select(col("external_id").as(id))
+    val k = Ivf.clampK(ivf, k0)
+    val p = Ivf.prelude(ivf, query, nProbe0, idCol)
+    val shortlist = adcTopK(spark, model, codesPath, query,
+      Ivf.clampK(ivf, math.min(k.toLong * refine, Int.MaxValue).toInt), p)
+      .select(col("external_id").as(p.id))
     // the float fetch prunes by the SAME probed cells as the coded scan
     // (the shortlist can only contain rows from them), so the exact math
     // reads probed bytes ∩ shortlist — never the whole float dataset
-    val nProbe = math.min(nProbe0, ivf.config.maxNProbe)
-    val (probes, shards) = Ivf.probeSelection(ivf, query, nProbe)
-    Ivf.probePrunedScan(spark, ivf.vectorsPath, probes, shards, ivf.k)
-      .join(broadcast(shortlist), Seq(id), "left_semi")
-      .withColumn("distance",
-        graft.functions.Vec.squaredL2(col(embCol), lit(query)))
-      .orderBy(col("distance").asc_nulls_last, col(id))
-      .limit(k)
-      .select(col(id).as("external_id"), col("distance"))
+    Ivf.rankTopK(
+      Ivf.probePrunedScan(spark, ivf.vectorsPath, p.probes, p.shards, ivf.k)
+        .join(broadcast(shortlist), Seq(p.id), "left_semi")
+        .withColumn("distance",
+          graft.functions.Vec.squaredL2(col(embCol), lit(query))),
+      p.id, k)
   }
 
   /** Batch ANN over the coded dataset: ONE pruned scan serves the whole
@@ -232,25 +186,11 @@ object IvfPq {
       codesPath: String, queries: Array[(Long, Array[Float])], k0: Int,
       nProbe0: Int, idCol: String = null): DataFrame = {
     import spark.implicits._
-    val id = Ivf.effectiveIdCol(ivf, idCol) // see buildCodes
-    val k = math.min(k0, ivf.config.maxK)
-    val nProbe = math.min(nProbe0, ivf.config.maxNProbe)
-    require(k > 0, "k must be > 0")
-    require(nProbe > 0, "n_probe must be > 0")
-    // validate BEFORE routing: probe selection walks q.length centroid
-    // components, so an over-long query would AIOOBE in the router with
-    // no context instead of raising the dimension contract error
-    queries.find(_._2.length != model.dim).foreach { q =>
-      throw new IllegalArgumentException(
-        s"query ${q._1} has dimension ${q._2.length}, model has ${model.dim}")
-    }
-    Ivf.requireDistinctQueryIds(queries)
-    val probePairs = queries.flatMap { case (qid, q) =>
-      Ivf.probeSelection(ivf, q, nProbe)._1.map(c => (qid, c))
-    }
-    val shards = probePairs.map(p => ivf.centroidToShard(p._2)).distinct.toSeq
-    val probedCentroids = probePairs.map(_._2).distinct.toSeq
-    val probeDf = probePairs.toSeq.toDF("query_id", "centroid_id")
+    val k = Ivf.clampK(ivf, k0)
+    val b = Ivf.batchPrelude(ivf, queries, nProbe0, idCol)
+    val probeDf = queries.indices
+      .flatMap(i => b.probes(i).map(c => (queries(i)._1, c)))
+      .toDF("query_id", "centroid_id")
     // ONE shared LUT builder (Pq.lutSeq) — searchBatchResidual and the
     // single-query lutFor use the same body, so LUT math cannot drift
     val lutDf = queries.toSeq
@@ -261,13 +201,11 @@ object IvfPq {
     // skip), same as every sibling path — a shard-only filter would
     // read every cell of every probed shard (~sqrt(k) cells each) and
     // discard the excess after decode in the join
-    val candidates = Ivf.liveRows(spark, ivf,
-        Ivf.probePrunedScan(spark, codesPath, probedCentroids, shards, ivf.k),
-        id)
+    val candidates = b.scan(spark, codesPath)
       .join(broadcast(probeDf), Seq("centroid_id"))
       .join(broadcast(lutDf), Seq("query_id"))
       .withColumn("distance", Pq.adc(col("pq_code"), col("lut")))
-    TopNByKey.topN(candidates, Seq("query_id"), col("distance"), col(id), k)
+    TopNByKey.topN(candidates, Seq("query_id"), col("distance"), col(b.id), k)
       .select(col("query_id"), col("rk").as("rank"),
         col("id").as("external_id"), col("ord").as("distance"))
   }
@@ -275,19 +213,17 @@ object IvfPq {
   /** Top-k by ADC over the probe-pruned coded dataset. */
   def search(spark: SparkSession, ivf: Ivf.Index, model: Pq.Model,
       codesPath: String, query: Array[Float], k0: Int, nProbe0: Int,
-      idCol: String = null): DataFrame = {
-    val id = Ivf.effectiveIdCol(ivf, idCol) // see buildCodes
-    val k = math.min(k0, ivf.config.maxK)
-    val nProbe = math.min(nProbe0, ivf.config.maxNProbe)
-    require(k > 0, "k must be > 0")
-    require(nProbe > 0, "n_probe must be > 0")
-    val (probes, shards) = Ivf.probeSelection(ivf, query, nProbe)
-    Ivf.liveRows(spark, ivf,
-        Ivf.probePrunedScan(spark, codesPath, probes, shards, ivf.k),
-        id)
-      .withColumn("distance", Pq.adc(col("pq_code"), Pq.lutFor(query, model)))
-      .orderBy(col("distance").asc_nulls_last, col(id))
-      .limit(k)
-      .select(col(id).as("external_id"), col("distance"))
-  }
+      idCol: String = null): DataFrame =
+    adcTopK(spark, model, codesPath, query, Ivf.clampK(ivf, k0),
+      Ivf.prelude(ivf, query, nProbe0, idCol))
+
+  /** [[search]] after its prelude: the ADC top-k over the probed cells
+    * of the coded dataset — shared with [[searchRefine]]'s shortlist.
+    */
+  private def adcTopK(spark: SparkSession, model: Pq.Model,
+      codesPath: String, query: Array[Float], k: Int,
+      p: Ivf.Prelude): DataFrame =
+    Ivf.rankTopK(p.scan(spark, codesPath)
+      .withColumn("distance", Pq.adc(col("pq_code"), Pq.lutFor(query, model))),
+      p.id, k)
 }

@@ -25,22 +25,9 @@ object IvfSq {
     * deleted rows regardless of where in the delete lifecycle it runs.
     */
   def buildCodes(spark: SparkSession, ivf: Ivf.Index, outPath: String,
-      idCol: String = null, embCol: String = "embedding"): Unit = {
-    // null default resolves to the index's recorded id column — see
-    // IvfPq.buildCodes (ADVICE r14)
-    val id = Ivf.effectiveIdCol(ivf, idCol)
-    val fs = new org.apache.hadoop.fs.Path(ivf.vectorsPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // see IvfPq.buildCodes — capture-then-write keeps a racing delete
-    // on the safe (stale-registration) side
-    val fp = Ivf.tombstoneFp(fs, ivf)
-    Ivf.writeVectors(
-      Quantize.withInt8(Ivf.liveVectors(spark, ivf, id), embCol)
-        .select(col("shard_id"), col("centroid_id"), col(id),
-          col("q_scale"), col("q_emb")),
-      id, ivf.numShards, outPath, "overwrite")
-    Ivf.registerSibling(spark, ivf, outPath, fp)
-  }
+      idCol: String = null, embCol: String = "embedding"): Unit =
+    Ivf.writeSibling(spark, ivf, outPath, idCol, Seq("q_scale", "q_emb"))(
+      Quantize.withInt8(_, embCol))
 
   /** Top-k over the int8-coded dataset: probe-pruned scan → dequantize →
     * squared-L2 → TakeOrderedAndProject.
@@ -48,26 +35,16 @@ object IvfSq {
   def search(spark: SparkSession, ivf: Ivf.Index, codesPath: String,
       query: Array[Float], k0: Int, nProbe0: Int,
       idCol: String = null): DataFrame = {
-    val id = Ivf.effectiveIdCol(ivf, idCol) // see buildCodes
-    val k = math.min(k0, ivf.config.maxK)
-    val nProbe = math.min(nProbe0, ivf.config.maxNProbe)
-    require(k > 0, "k must be > 0")
-    require(nProbe > 0, "n_probe must be > 0")
-    require(query.length == ivf.centroids(0).length,
-      s"query dimension ${query.length} != index dimension ${ivf.centroids(0).length}")
-    val (probes, shards) = Ivf.probeSelection(ivf, query, nProbe)
-    Ivf.liveRows(spark, ivf,
-        Ivf.probePrunedScan(spark, codesPath, probes, shards, ivf.k),
-        id)
+    val k = Ivf.clampK(ivf, k0)
+    val p = Ivf.prelude(ivf, query, nProbe0, idCol)
+    Ivf.rankTopK(p.scan(spark, codesPath)
       // fused dequantize+distance (SqCodesL2, codegen) — bitwise equal
       // to Vec.squaredL2(Quantize.dequantize(q_emb, q_scale), query)
       // but one compiled pass per candidate instead of an interpreted
       // HOF transform (QuantizeSpec parity gate; the D=768 cell
       // measured the HOF form at 5.9× the floor)
       .withColumn("distance",
-        Quantize.codesL2(col("q_emb"), col("q_scale"), lit(query)))
-      .orderBy(col("distance").asc_nulls_last, col(id))
-      .limit(k)
-      .select(col(id).as("external_id"), col("distance"))
+        Quantize.codesL2(col("q_emb"), col("q_scale"), lit(query))),
+      p.id, k)
   }
 }

@@ -173,15 +173,14 @@ class CacheHygieneSpec extends SparkSpec {
       "an in-place overwrite served the superseded listing")
   }
 
-  test("no ConcurrentHashMap under src/main outside DataKeyedMemo and " +
-      "Ivf.tombstonePresence: every other cache is a DataKeyedMemo") {
+  test("no ConcurrentHashMap under src/main outside DataKeyedMemo: " +
+      "every cache is a DataKeyedMemo") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val main = Paths.get("src/main")
     assert(Files.isDirectory(main), s"run from the project root: $main")
     val allowed = Set(
-      "Tables.scala" -> "ConcurrentHashMap[String, (String, V)]",
-      "Ivf.scala" -> "ConcurrentHashMap[String, TombMemo]")
+      "Tables.scala" -> "ConcurrentHashMap[String, (String, V)]")
     val offenders = Files.walk(main).iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
       .flatMap { p =>

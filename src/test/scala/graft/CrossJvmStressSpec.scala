@@ -9,15 +9,15 @@ import graft.sources.VectorFormats
 /** Cross-PROCESS lifecycle stress (VERDICT r15 next-round #2): every
   * prior lease/lifecycle gate — including StressSpec's composed
   * interleaving — ran its contenders as threads of ONE JVM, where the
-  * striped create-monitor and the shared `tombstonePresence` TTL memo
-  * and `tombstoneSets` memo soften the race. FsLease's real adversary is a
-  * second JVM with its own heartbeat daemons and its own memo copies
-  * that a foreign delete cannot invalidate. This spec forks that JVM
-  * (java -cp <this test classpath> graft.CrossJvmStressRunner) and
-  * races the same op mix across the process boundary, then measures
-  * the one staleness window the design accepts: a foreign delete can
-  * hide behind this JVM's tombstone-absence memo for at most
-  * ~30 s (Ivf.memoTtlNanos).
+  * striped create-monitor and the shared `tombstoneSets` memo soften
+  * the race. FsLease's real adversary is a second JVM with its own
+  * heartbeat daemons and its own memo copies that a foreign delete
+  * cannot invalidate. This spec forks that JVM (java -cp <this test
+  * classpath> graft.CrossJvmStressRunner) and races the same op mix
+  * across the process boundary. Tombstone freshness is by fingerprint
+  * alone — every read re-lists the sidecar, with no TTL — so the gate
+  * allows no staleness window: the very next parent read after the
+  * child's delete must hide the deleted id.
   */
 class CrossJvmStressSpec extends SparkSpec {
 
@@ -46,7 +46,7 @@ class CrossJvmStressSpec extends SparkSpec {
 
   test("cross-process interleaving: a second JVM racing append + " +
       "deleteWhere + maintain + clearTombstones preserves the exact " +
-      "id set, and a foreign delete is visible within the memo TTL") {
+      "id set, and a foreign delete is visible to the very next read") {
     val dir = Files.createTempDirectory("graft_xjvm_idx").toString
     val probeDir = Files.createTempDirectory("graft_xjvm_probe").toString
     val commDir = Files.createTempDirectory("graft_xjvm_comm").toString
@@ -93,25 +93,15 @@ class CrossJvmStressSpec extends SparkSpec {
       assert(await(commDir, "child_stress_done", 300000L).isDefined,
         s"child stress phase never finished; child log: ${childLog()}")
 
-      // exact-set invariant, staleness-tolerant: the child's LAST
-      // deletes may sit behind this JVM's tombstone memo for up to
-      // 30 s (its own clears/deletes refresh the parent memo at
-      // arbitrary points of the interleaving) — poll to convergence,
-      // then assert exact equality. Lost appends / resurrected ids
-      // never self-heal, so the poll can only mask staleness, not bugs.
+      // exact-set invariant on the FIRST read once both halves are
+      // done: the relation and the tombstone set are both re-listed per
+      // call, so the child's last appends and deletes must already
+      // show — no poll, nothing for staleness to hide behind
       val deleted = (0L until 600L).filter(id => (id % 31) < 12).toSet
       val expected = (0L until 1200L).toSet -- deleted
-      val deadline = System.nanoTime() + 45L * 1000 * 1000 * 1000
-      var live = Set.empty[Long]
-      var liveSeq = Seq.empty[Long]
-      var converged = false
-      while (!converged) {
-        liveSeq = Ivf.liveVectors(spark, idx)
-          .select("vec_id").collect().map(_.getLong(0)).toSeq
-        live = liveSeq.toSet
-        converged = live == expected || System.nanoTime() > deadline
-        if (!converged) Thread.sleep(1000)
-      }
+      val liveSeq = Ivf.liveVectors(spark, idx)
+        .select("vec_id").collect().map(_.getLong(0)).toSeq
+      val live = liveSeq.toSet
       assert(liveSeq.length == liveSeq.distinct.length,
         s"duplicate live rows: ${liveSeq.length} vs " +
           s"${liveSeq.distinct.length}\nchild log: ${childLog()}")
@@ -126,43 +116,30 @@ class CrossJvmStressSpec extends SparkSpec {
       assert(top.getLong(0) == 951L && top.getDouble(1) == 0.0,
         "child-appended vector not retrievable from the parent JVM")
 
-      // directed memo-staleness probe: fresh tombstone-free index,
-      // prime THIS JVM's absence memo, then let the CHILD delete.
+      // directed foreign-delete probe: fresh tombstone-free index,
+      // warm THIS JVM's read path on it, then let the CHILD delete.
       val probeIdx = Ivf.build(all.where(col("vec_id") < 100),
         "vec_id", "embedding", probeDir)
-      val primed = Ivf.liveVectors(spark, probeIdx)
-        .select("vec_id").count() // memo now caches "no tombstones"
-      assert(primed == 100L)
+      val q13 = all.where(col("vec_id") === 13L)
+        .select("embedding").head().getSeq[Float](0).toArray
+      assert(Ivf.liveVectors(spark, probeIdx).select("vec_id").count() == 100L)
+      assert(Ivf.search(spark, probeIdx, q13, 5, 10000).head().getLong(0) == 13L)
       signal(commDir, "parent_probe_ready")
       val deletedAt = await(commDir, "child_deleted", 180000L)
         .map(_.trim.toLong)
         .getOrElse(fail(s"child never deleted; log: ${childLog()}"))
       assert(deletedAt > 0, s"child probe delete failed; ${childLog()}")
-      val stalenessDeadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      var visibleAtMs = -1L
-      while (visibleAtMs < 0 && System.nanoTime() < stalenessDeadline) {
-        val ids = Ivf.liveVectors(spark, probeIdx)
-          .select("vec_id").collect().map(_.getLong(0)).toSet
-        if (!ids.contains(13L)) visibleAtMs = System.currentTimeMillis()
-        else Thread.sleep(500)
-      }
-      val stalenessMs = visibleAtMs - deletedAt
-      assert(visibleAtMs > 0,
-        s"foreign delete still invisible after 60 s; ${childLog()}")
-      // gate = design bound + NAMED slack (VERDICT r16 #3): the memo
-      // may legitimately hide the delete for the full TTL (r16 measured
-      // 29.59 s — 98.6% of it), so the gate's headroom must come from
-      // an explicit slack term, not from hoping the TTL isn't reached.
-      // Slack covers one 500 ms poll period + scan/lease latency + GC
-      // on a loaded box; 10 s = 33% headroom over the TTL.
-      val pollAndScanSlackMs = 10000L
-      val gateMs = Ivf.memoTtlNanos / 1000000L + pollAndScanSlackMs
-      assert(stalenessMs <= gateMs,
-        s"foreign delete hidden ${stalenessMs} ms > " +
-          s"memoTtl + slack = $gateMs ms")
-      info(s"foreign-delete staleness window: ${stalenessMs} ms " +
-        s"(gate: ${Ivf.memoTtlNanos / 1000000L} ms TTL + " +
-        s"$pollAndScanSlackMs ms named slack)")
+      // no poll: the next read of each kind must already hide id 13
+      val liveAfter = Ivf.liveVectors(spark, probeIdx)
+        .select("vec_id").collect().map(_.getLong(0)).toSet
+      assert(liveAfter == (0L until 100L).toSet - 13L,
+        s"foreign delete not visible to the next liveVectors: " +
+          s"${(0L until 100L).toSet -- liveAfter}; ${childLog()}")
+      val searched = Ivf.search(spark, probeIdx, q13, 5, 10000)
+        .collect().map(_.getLong(0))
+      assert(searched.length == 5 && !searched.contains(13L),
+        s"foreign delete not visible to the next search: " +
+          s"${searched.toSeq}; ${childLog()}")
 
       assert(child.waitFor(120L, java.util.concurrent.TimeUnit.SECONDS),
         s"child JVM did not exit; log: ${childLog()}")
@@ -404,24 +381,15 @@ class CrossJvmStressSpec extends SparkSpec {
       assert(result.startsWith("OK"),
         s"child stream result: $result\n${childLog()}")
 
-      // exact final set, staleness-tolerant (same poll-to-convergence
-      // protocol as the interleaving gate: the memo can hide the last
-      // foreign-visible state for up to ~30 s; the poll can only mask
-      // staleness, never a lost or duplicated row)
+      // exact final set on the FIRST read, as in the interleaving
+      // gate: both halves are done and every read re-lists the layout
+      // and the tombstone sidecar, so there is no staleness to wait out
       val deleted = (0L until 500L).filter(id => (id % 31) < 6).toSet
       val expected =
         ((0L until 500L).toSet -- deleted) ++ (1000L until 1200L).toSet
-      val deadline = System.nanoTime() + 45L * 1000 * 1000 * 1000
-      var live = Set.empty[Long]
-      var liveSeq = Seq.empty[Long]
-      var converged = false
-      while (!converged) {
-        liveSeq = Ivf.liveVectors(spark, idx)
-          .select("vec_id").collect().map(_.getLong(0)).toSeq
-        live = liveSeq.toSet
-        converged = live == expected || System.nanoTime() > deadline
-        if (!converged) Thread.sleep(1000)
-      }
+      val liveSeq = Ivf.liveVectors(spark, idx)
+        .select("vec_id").collect().map(_.getLong(0)).toSeq
+      val live = liveSeq.toSet
       // exactly-once effect: no duplicate rows even if the stream
       // restarted and replayed a batch (marker-dir idempotence)
       assert(liveSeq.length == liveSeq.distinct.length,

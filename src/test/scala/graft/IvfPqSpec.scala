@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.IvfPq
+import graft.operators.{Ivf, IvfPq, IvfSq}
 import graft.queries.{IndexQueries, VectorQueries}
 
 class IvfPqSpec extends SparkSpec {
@@ -161,5 +162,64 @@ class IvfPqSpec extends SparkSpec {
       .flatMap(_.metrics.get("numFiles").map(_.value)).sum
     assert(fewFiles < allFiles,
       s"pruning ineffective: $fewFiles vs $allFiles files")
+  }
+
+  test("one read contract on all ten IVF entry points: k = 0, n_probe = 0, " +
+      "short and over-long queries are rejected; k and n_probe clamp to " +
+      "a capped Config") {
+    val sq = IndexQueries.sqCodesPath(spark, sf0001)
+    val q = query(7L)
+    val radius = Ivf.search(spark, idx, q, 5, 20).collect().last.getDouble(1)
+    // (entry point, takes a k, dimension checked on the driver, run):
+    // rangeSearch has no k; annJoin's query side is distributed, so its
+    // dimension check runs map-side and fails the job instead
+    type Run = (Ivf.Index, Array[Float], Int, Int) => DataFrame
+    val entries: Seq[(String, Boolean, Boolean, Run)] = Seq(
+      ("Ivf.search", true, true,
+        (i, v, k, n) => Ivf.search(spark, i, v, k, n)),
+      ("Ivf.rangeSearch", false, true,
+        (i, v, _, n) => Ivf.rangeSearch(spark, i, v, radius, n)),
+      ("Ivf.searchBatch", true, true,
+        (i, v, k, n) => Ivf.searchBatch(spark, i, Array(1L -> v), k, n)),
+      ("Ivf.annJoin", true, false,
+        (i, v, k, n) => Ivf.annJoin(
+          Seq((1L, v.toSeq)).toDF("query_id", "qe"), i, k, n)),
+      ("IvfSq.search", true, true,
+        (i, v, k, n) => IvfSq.search(spark, i, sq, v, k, n)),
+      ("IvfPq.search", true, true,
+        (i, v, k, n) => IvfPq.search(spark, i, model, codes, v, k, n)),
+      ("IvfPq.searchResidual", true, true,
+        (i, v, k, n) =>
+          IvfPq.searchResidual(spark, i, resModel, resCodes, v, k, n)),
+      ("IvfPq.searchBatchResidual", true, true,
+        (i, v, k, n) => IvfPq.searchBatchResidual(spark, i, resModel,
+          resCodes, Array(1L -> v), k, n)),
+      ("IvfPq.searchRefine", true, true,
+        (i, v, k, n) => IvfPq.searchRefine(spark, i, model, codes, v, k, n)),
+      ("IvfPq.searchBatch", true, true,
+        (i, v, k, n) => IvfPq.searchBatch(spark, i, model, codes,
+          Array(1L -> v), k, n)))
+    val capped = idx.copy(config = Ivf.Config(maxK = 3, maxNProbe = 2))
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString(",")).toSeq.sorted
+    entries.foreach { case (name, hasK, driverDim, run) =>
+      if (hasK) intercept[IllegalArgumentException](run(idx, q, 0, 20).collect())
+      intercept[IllegalArgumentException](run(idx, q, 10, 0).collect())
+      Seq(q :+ 0.5f, q.dropRight(1)).foreach { bad =>
+        if (driverDim) {
+          val e = intercept[IllegalArgumentException](
+            run(idx, bad, 10, 20).collect())
+          assert(e.getMessage.contains("dimension"), s"$name: ${e.getMessage}")
+        } else {
+          val e = intercept[Exception](run(idx, bad, 10, 20).collect())
+          assert(e.getMessage.contains("dimension"), s"$name: ${e.getMessage}")
+        }
+      }
+      val atCaps = rows(run(capped, q, 3, 2))
+      assert(atCaps.nonEmpty && (!hasK || atCaps.length <= 3),
+        s"$name at the caps: $atCaps")
+      assert(rows(run(capped, q, 1000, 1000)) == atCaps,
+        s"$name: k / n_probe above the caps did not clamp")
+    }
   }
 }
