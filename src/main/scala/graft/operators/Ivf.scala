@@ -74,17 +74,6 @@ object Ivf {
       new KMeans.ProbeRouter(centroids, seed, approxRouting, metaProbe)
   }
 
-  /** The ONE clustered-write shape, shared by build/append/compact AND
-    * every coded sibling dataset (IvfPq raw/residual, IvfSq): salted
-    * repartition (each shard spreads over ~shuffleParts/numShards
-    * tasks — write parallelism must NOT be capped at ⌈√k⌉ shards, which
-    * at 100 TB means ~n/√k rows per task, a straggler and an OOM-shaped
-    * sort), (centroid_id, id) sort for row-group clustering, and
-    * `partitionBy(shard_id)` directory layout — the contract
-    * probePrunedScan's directory pruning and row-group skipping assume,
-    * enforced by a single body rather than four hand-copies that could
-    * drift.
-    */
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Last auto-raise note writeVectors recorded, exposed so SkewSpec
@@ -95,10 +84,34 @@ object Ivf {
   @volatile private[graft] var lastWriteParallelismWarning: Option[String] =
     None
 
+  /** The ONE clustered-write shape, shared by build/append/compact AND
+    * every coded sibling dataset (IvfPq raw/residual, IvfSq): an
+    * exchange on (shard_id, salt) — each shard spreads over
+    * ~shuffleParts/numShards tasks, so write parallelism is NOT capped
+    * at ⌈√k⌉ shards, which at 100 TB means ~n/√k rows per task, a
+    * straggler and an OOM-shaped sort — then a (centroid_id, id) sort
+    * for row-group clustering, and `partitionBy(shard_id)` directory
+    * layout: the contract probePrunedScan's directory pruning and
+    * row-group skipping assume, enforced by a single body rather than
+    * four hand-copies that could drift. The exchange has two shapes:
+    *   - build, compact and the coded siblings (`mode` "overwrite"): a
+    *     fixed salted repartition into [[writePartitions]] partitions,
+    *     the layout SkewSpec's mapper-granularity gate is about;
+    *   - append: a REBALANCE over the same keys with the same count as
+    *     its INITIAL partition number. Under AQE the exchange coalesces
+    *     a small batch into a few tasks (about one file per touched
+    *     shard instead of one per salt per shard), and still splits a
+    *     large one to the advisory partition size — the salt plus
+    *     `OptimizeSkewInRebalancePartitions` keep a hot shard from
+    *     becoming one straggler task. Spark ignores the hint with AQE
+    *     off, so there the append takes the fixed repartition itself
+    *     and writes the same files as before.
+    */
   private[graft] def writeVectors(df: DataFrame, idCol: String,
       numShards: Int, path: String, mode: String): Unit = {
     val spark = df.sparkSession
-    val shuffleParts = spark.sessionState.conf.numShufflePartitions
+    val conf = spark.sessionState.conf
+    val shuffleParts = conf.numShufflePartitions
     // SCALE.md §r11-skew mapper-granularity finding: with one salt,
     // each shard partition is written by a single task as ONE file, so
     // a hot centroid cell becomes a single scan split that AQE's
@@ -114,7 +127,14 @@ object Ivf {
     // shard still lands as a single file is (1/writeParts)³ ≈ never.
     val salts = writeSalts(shuffleParts, numShards)
     val writeParts = writePartitions(shuffleParts, numShards)
-    if (shuffleParts <= numShards) {
+    val salt = pmod(xxhash64(col(idCol)), lit(salts))
+    // Spark drops the REBALANCE hint when AQE is off, so only an append
+    // under AQE takes it; every other write is the fixed repartition
+    val rebalanced = mode == "append" && conf.adaptiveExecutionEnabled
+    // the note describes a write that really runs writeParts tasks: a
+    // rebalanced append under AQE coalescing only STARTS from that count
+    if (shuffleParts <= numShards &&
+        !(rebalanced && conf.coalesceShufflePartitionsEnabled)) {
       val msg = s"writeVectors: spark.sql.shuffle.partitions=" +
         s"$shuffleParts <= numShards=$numShards — auto-raised the " +
         s"shard write to $writeParts partitions ($salts salts/shard) " +
@@ -128,9 +148,16 @@ object Ivf {
       // cost.
       log.warn(msg)
     }
-    val prepared = df.repartition(writeParts, col("shard_id"),
-        pmod(xxhash64(col(idCol)), lit(salts)))
-      .sortWithinPartitions(col("centroid_id"), col(idCol))
+    val exchanged =
+      if (rebalanced)
+        // the hint takes plain columns only: the salt rides as a column
+        // through the exchange and is dropped after it, so appended
+        // files keep the layout schema
+        df.withColumn("__write_salt", salt)
+          .hint("rebalance", writeParts, col("shard_id"), col("__write_salt"))
+          .drop("__write_salt")
+      else df.repartition(writeParts, col("shard_id"), salt)
+    val prepared = exchanged.sortWithinPartitions(col("centroid_id"), col(idCol))
     if (mode == "append")
       // the crash-guarded commit path: purge + v1 pin in one body, so
       // an append-mode clustered write can never take one half of the
@@ -297,13 +324,16 @@ object Ivf {
   /** Incrementally add vectors to an EXISTING index without retraining:
     * assign each new row to its nearest existing centroid (map-side,
     * broadcast routing table — the same assignment kernel as build),
-    * then append into the same `partitionBy(shard_id)` layout with the
-    * same salted write parallelism. Routing table and clustering are
-    * unchanged, so search code — probe selection, pruning, top-k — works
-    * on the union transparently. This is the daily-increment path at
-    * 100 TB: one map-side pass over the new data, zero touch of the
-    * existing files (parquet append adds files per partition directory;
-    * compaction can re-sort row groups offline if needed).
+    * then append into the same `partitionBy(shard_id)` layout through
+    * [[writeVectors]]' rebalanced append exchange, which AQE sizes to
+    * the batch (a small batch writes about one file per touched shard,
+    * a large one splits to the advisory partition size). Routing table
+    * and clustering are unchanged, so search code — probe selection,
+    * pruning, top-k — works on the union transparently. This is the
+    * daily-increment path at 100 TB: one map-side pass over the new
+    * data, zero touch of the existing files (parquet append adds files
+    * per partition directory; compaction can re-sort row groups offline
+    * if needed).
     *
     * Centroids drift as data grows — the quality contract is the same
     * as faiss's add-after-train: recall stays good while increments

@@ -52,12 +52,13 @@ class SkewSpec extends SparkSpec {
       .createTempDirectory("graft_skew_ann").toString
     val built = graft.operators.Ivf.build(emb, "vec_id", "embedding", dir)
     // append under production-like write parallelism: writeVectors salts
-    // the shuffle by (shard_id, hash(id) % ceil(parts/shards)), so with
-    // parts ≫ shards the hot cell lands in MULTIPLE files — which is
-    // what later gives AQE map-output granularity to split the hot
-    // partition (skew split cannot cut below one mapper's output). At 8
-    // test partitions salts=1 and the whole ball would be one file/one
-    // mapper — a test-scale artifact, not the 100 TB layout.
+    // the append's rebalance by (shard_id, hash(id) % ceil(parts/shards))
+    // and AQE sizes it to the batch, so at this test scale the ~0.4 MB
+    // ball coalesces into very few files (a batch past the advisory
+    // partition size splits into several — the mapper granularity AQE
+    // needs to split the hot partition, since skew split cannot cut
+    // below one mapper's output). The maxPartitionBytes conf below
+    // models the 100 TB layout's many scan splits over the hot cell.
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "64")
     try graft.operators.Ivf.append(built,
@@ -221,6 +222,217 @@ class SkewSpec extends SparkSpec {
     finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert(Ivf.lastWriteParallelismWarning.isEmpty,
       "healthy write parallelism must not record an auto-raise")
+  }
+
+  /** Runs `body` with `confs` set on the shared session, restoring the
+    * previous values (or unsetting) afterwards.
+    */
+  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Committed parquet files per `shard_id=` directory under `dir`. */
+  private def shardFiles(dir: String): Map[String, Seq[String]] =
+    new java.io.File(dir).listFiles().toSeq
+      .filter(_.getName.startsWith("shard_id="))
+      .map(d => d.getName -> d.listFiles().toSeq.map(_.getName)
+        .filter(n => n.endsWith(".parquet") && !n.startsWith(".")))
+      .toMap
+
+  /** Files `after` holds per shard that `before` did not. */
+  private def addedFiles(before: Map[String, Seq[String]],
+      after: Map[String, Seq[String]]): Map[String, Int] =
+    after.map { case (s, fs) =>
+      s -> fs.count(f => !before.getOrElse(s, Nil).contains(f))
+    }.filter(_._2 > 0)
+
+  /** Result (write) tasks `body` runs on this thread; jobs are matched
+    * by a job group, since suites share the session.
+    */
+  private def writeTasksOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-append-write-${System.nanoTime()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (s.properties != null &&
+          group == s.properties.getProperty("spark.jobGroup.id"))
+          stages.add(s.stageInfo.stageId)
+      override def onTaskEnd(
+          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (t.taskType == "ResultTask" && stages.contains(t.stageId))
+          tasks.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "append write-task gate")
+    try {
+      body
+      Thread.sleep(1000) // listener bus drain
+      tasks.get()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("append under AQE is sized to its batch: a small batch adds at " +
+      "most one file per touched shard in no more write tasks than " +
+      "cores, and searchBatch matches a fresh read") {
+    import graft.operators.Ivf
+    val emb = Tables.embeddings(spark, sf0001).select("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft_append_aqe")
+      .toString
+    val idx = Ivf.build(emb.where(col("vec_id") < 300), "vec_id",
+      "embedding", dir)
+    val cores = spark.sparkContext.defaultParallelism
+    // fewer shuffle partitions than shards (a 4-core session's regime),
+    // so the fixed salted write would auto-raise to numShards × 4 tasks
+    withConfs("spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.shuffle.partitions" -> "4") {
+      assert(Ivf.writePartitions(4, idx.numShards) > cores,
+        s"fixture too small to tell the shapes apart: ${idx.numShards} shards")
+      val before = shardFiles(idx.vectorsPath)
+      Ivf.lastWriteParallelismWarning = None
+      val tasks = writeTasksOf(Ivf.append(idx,
+        emb.where(col("vec_id") >= 300 && col("vec_id") < 400),
+        "vec_id", "embedding"))
+      val added = addedFiles(before, shardFiles(idx.vectorsPath))
+      val touched = spark.read.parquet(idx.vectorsPath)
+        .where(col("vec_id") >= 300).select("shard_id").distinct()
+        .collect().map(r => s"shard_id=${r.getInt(0)}").toSet
+      assert(added.keySet == touched && added.values.forall(_ == 1),
+        s"expected one new file per touched shard $touched, got $added")
+      assert(tasks >= 1 && tasks <= cores,
+        s"append ran $tasks write tasks on $cores cores")
+      assert(Ivf.lastWriteParallelismWarning.isEmpty,
+        "a coalesced append must not report an auto-raised write: " +
+          Ivf.lastWriteParallelismWarning)
+    }
+    val qs = Seq(3L, 150L, 310L, 355L, 450L).map { i =>
+      i -> emb.where(col("vec_id") === i).head().getSeq[Float](1).toArray
+    }.toArray
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.map(r =>
+        (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .sortBy(t => (t._1, t._2))
+    val got = ranked(Ivf.searchBatch(spark, idx, qs, 10, idx.k))
+    val qdf = spark.createDataFrame(qs.toSeq.map { case (q, v) => (q, v.toSeq) })
+      .toDF("query_id", "qe")
+    val byRank = org.apache.spark.sql.expressions.Window
+      .partitionBy("query_id").orderBy(col("distance").asc_nulls_last,
+        col("vec_id"))
+    val expected = ranked(spark.read.parquet(idx.vectorsPath).crossJoin(qdf)
+      .withColumn("distance",
+        graft.functions.Vec.squaredL2(col("embedding"), col("qe")))
+      .withColumn("rank", row_number().over(byRank))
+      .where(col("rank") <= 10)
+      .select("query_id", "rank", "vec_id", "distance"))
+    assert(expected.size == 50 && got == expected,
+      s"searchBatch after the append diverges from a fresh read")
+  }
+
+  test("append of an empty batch adds no data file in at most one write " +
+      "task, releases the writer lease and changes no answer") {
+    import graft.operators.{FsLease, Ivf}
+    val emb = Tables.embeddings(spark, sf0001).select("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft_append_empty")
+      .toString
+    val idx = Ivf.build(emb.where(col("vec_id") < 300), "vec_id",
+      "embedding", dir)
+    val q = emb.where(col("vec_id") === 5L).head().getSeq[Float](1).toArray
+    def answers() =
+      Ivf.search(spark, idx, q, 10, 10000).collect().map(_.toSeq).toSeq
+    val before = answers()
+    val s0 = Ivf.maintenanceStats(spark, idx)
+    val files0 = shardFiles(idx.vectorsPath)
+    withConfs("spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.shuffle.partitions" -> "4") {
+      val tasks = writeTasksOf(Ivf.append(idx, emb.where(col("vec_id") < 0),
+        "vec_id", "embedding"))
+      assert(tasks <= 1, s"an empty append ran $tasks write tasks")
+    }
+    assert(shardFiles(idx.vectorsPath) == files0,
+      "an empty append added data files")
+    assert(Ivf.maintenanceStats(spark, idx).dataFiles == s0.dataFiles)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    val lease = Ivf.writerLeasePath(idx)
+    assert(!fs.exists(lease), "an empty append left the writer lease held")
+    FsLease.acquire(fs, lease, "after-empty-append", timeoutMs = 0L)
+    FsLease.release(fs, lease, "after-empty-append")
+    assert(answers() == before)
+  }
+
+  test("append under AQE still splits a batch that outgrows the advisory " +
+      "partition size: its hot shard gets >= 2 files") {
+    import spark.implicits._
+    import graft.operators.Ivf
+    val emb = Tables.embeddings(spark, sf0001).select("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft_append_big")
+      .toString
+    val idx = Ivf.build(emb.where(col("vec_id") < 300), "vec_id",
+      "embedding", dir)
+    // 4000 near-copies of one corpus vector: all route to one cell, so
+    // one shard receives the whole ~1 MB batch. One input partition, so
+    // one mapper: OptimizeSkewInRebalancePartitions cannot cut below a
+    // mapper's output, and only the salt can split the hot shard
+    val seed = emb.where(col("vec_id") === 7L).head().getSeq[Float](1)
+    val rnd = new scala.util.Random(7)
+    val ball = (0 until 4000).map { i =>
+      (10000L + i, seed.map(_ + rnd.nextFloat() * 1e-4f).toArray)
+    }
+    val batch = spark.createDataset(ball).toDF("vec_id", "embedding")
+      .coalesce(1)
+    withConfs("spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.shuffle.partitions" -> "4",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16384") {
+      val before = shardFiles(idx.vectorsPath)
+      Ivf.append(idx, batch, "vec_id", "embedding")
+      val added = addedFiles(before, shardFiles(idx.vectorsPath))
+      assert(added.size == 1 && added.values.head >= 2,
+        s"the hot shard's batch must split into >= 2 files, got $added")
+    }
+    assert(spark.read.parquet(idx.vectorsPath)
+      .where(col("vec_id") >= 10000L).count() == 4000L)
+  }
+
+  test("append with AQE off plans the fixed salted write: the same " +
+      "files, partition for partition, as the overwrite shape") {
+    import spark.implicits._
+    import graft.operators.Ivf
+    val df = (0L until 4000L).map(i => (i, (i % 8).toInt, (i % 4).toInt))
+      .toDF("vec_id", "centroid_id", "shard_id")
+    val out = java.nio.file.Files.createTempDirectory("graft_append_noaqe")
+      .toString
+    /** (shard dir, task partition number of the file) -> rows */
+    def layout(dir: String): Map[(String, String), Long] =
+      spark.read.parquet(dir).groupBy(input_file_name()).count().collect()
+        .map { r =>
+          val p = new org.apache.hadoop.fs.Path(r.getString(0))
+          (p.getParent.getName, p.getName.split("-")(1)) -> r.getLong(1)
+        }.toMap
+    withConfs("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "4") {
+      Ivf.writeVectors(df, "vec_id", 4, s"$out/fixed", "overwrite")
+      Ivf.lastWriteParallelismWarning = None
+      Ivf.writeVectors(df, "vec_id", 4, s"$out/append", "append")
+      assert(Ivf.lastWriteParallelismWarning.exists(_.contains("auto-raised")),
+        "an append at the fixed partition count must record the auto-raise")
+    }
+    val fixed = layout(s"$out/fixed")
+    assert(fixed.keySet.map(_._1).size == 4 &&
+      fixed.keySet.groupBy(_._1).values.forall(_.size >= 2))
+    assert(layout(s"$out/append") == fixed,
+      "with AQE off the append must write the fixed shape's files")
   }
 
   test("two-phase count-distinct equals countDistinct") {
