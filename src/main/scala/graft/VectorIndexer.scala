@@ -107,7 +107,7 @@ final class VectorIndexer private (
   }
 
   /** Engine extension: delete vectors by external id (merge-on-read
-    * tombstones — see `Ivf.delete`; `Ivf.compact` materializes them).
+    * tombstones — see `Ivf.delete`; `Ivf.maintain` materializes them).
     */
   def deleteIds(ids: Seq[Long]): this.type = {
     Ivf.delete(spark, index, ids)

@@ -84,7 +84,7 @@ object Ivf {
   @volatile private[graft] var lastWriteParallelismWarning: Option[String] =
     None
 
-  /** The ONE clustered-write shape, shared by build/append/compact AND
+  /** The ONE clustered-write shape, shared by build/append/maintain AND
     * every coded sibling dataset (IvfPq raw/residual, IvfSq): an
     * exchange on (shard_id, salt) — each shard spreads over
     * ~shuffleParts/numShards tasks, so write parallelism is NOT capped
@@ -94,7 +94,7 @@ object Ivf {
     * layout: the contract probePrunedScan's directory pruning and
     * row-group skipping assume, enforced by a single body rather than
     * four hand-copies that could drift. The exchange has two shapes:
-    *   - build, compact and the coded siblings (`mode` "overwrite"): a
+    *   - build, maintain and the coded siblings (`mode` "overwrite"): a
     *     fixed salted repartition into [[writePartitions]] partitions,
     *     the layout SkewSpec's mapper-granularity gate is about;
     *   - append: a REBALANCE over the same keys with the same count as
@@ -166,7 +166,7 @@ object Ivf {
     else
       prepared.write.mode(mode)
         // v1 pinned on overwrite too: not for crash recovery (overwrite
-        // replaces the dir wholesale) but so build/compact and append
+        // replaces the dir wholesale) but so build/maintain and append
         // produce files under one committer algorithm — mixed-algorithm
         // dirs complicate any future debris forensics for zero benefit
         .option(CommitterV1Key, "1")
@@ -215,7 +215,7 @@ object Ivf {
       .map(i => (i, centroidToShard(i), centroids(i).toSeq))
       .toDF("centroid_id", "shard_id", "centroid")
       .withColumn("build_seed", lit(seed)) // metadata append() needs back
-      .withColumn("id_col", lit(idCol))   // ...and maintain()/compact()
+      .withColumn("id_col", lit(idCol))   // ...and maintain()
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$indexDir/centroids")
   }
@@ -474,10 +474,9 @@ object Ivf {
       index.vectorsPath.stripSuffix("/vectors") + "/__writer_lease")
   }
 
-  /** Lease serializing the rewrite-and-swap maintainers themselves
-    * ([[maintain]] and the inline [[compactInPlace]]): two concurrent
-    * directory swappers would race the renames, so the second fails
-    * FAST by name instead.
+  /** Lease serializing [[maintain]], the one rewrite-and-swap: two
+    * concurrent directory swappers would race the renames, so the
+    * second fails FAST by name instead.
     */
   private[graft] def maintainerLeasePath(index: Index): org.apache.hadoop.fs.Path = {
     require(index.vectorsPath.endsWith("/vectors"),
@@ -512,13 +511,14 @@ object Ivf {
     *
     * Contract: a tombstone hides the id on every path — including a
     * subsequent `append` of the same id — until the sidecar is
-    * CLEARED. [[compact]] materializes deletes into the rewritten
-    * float files but carries the sidecar forward, because coded
+    * CLEARED. [[maintain]] materializes deletes into the rewritten
+    * float files but leaves the sidecar in place, because coded
     * sibling datasets built BEFORE the deletes still contain the
     * deleted rows. Sibling builds read the live view themselves, so
-    * the order of compact vs sibling rebuilds is free; the one rule is
-    * that [[clearTombstones]] comes LAST — after a compact AND a
-    * rebuild of every coded sibling that predates the deletes.
+    * the order of compaction vs sibling rebuilds is free; the one rule
+    * is that [[clearTombstones]] comes LAST — after a compacting
+    * [[maintain]] AND a rebuild of every coded sibling that predates
+    * the deletes.
     */
   def delete(spark: SparkSession, index: Index, ids: Seq[Long],
       leaseStaleTtlMs: Long = FsLease.DefaultStaleTtlMs,
@@ -646,19 +646,19 @@ object Ivf {
   }
 
   /** Drop the tombstone sidecar — the final step of the delete
-    * lifecycle, once a compact + coded-sibling rebuild has materialized
-    * the deletes everywhere. Readers need no notice: [[liveRows]]
-    * re-lists the sidecar on every call, so the next read in any JVM
-    * stops filtering.
+    * lifecycle, once a compacting [[maintain]] + coded-sibling rebuild
+    * has materialized the deletes everywhere. Readers need no notice:
+    * [[liveRows]] re-lists the sidecar on every call, so the next read
+    * in any JVM stops filtering.
     *
     * The precondition is VERIFIED, not trusted (VERDICT r13 #7): the
-    * documented rule — clear LAST, after a compact and a rebuild of
+    * documented rule — clear LAST, after a compaction and a rebuild of
     * every coded sibling that predates the deletes — used to rest on
     * caller ordering, and a mis-ordered clear silently RESURRECTS
     * deleted rows (often compliance-motivated deletes) on whichever
     * path still physically holds them. Now:
     *
-    *  - compact/maintain record the tombstone-sidecar fingerprint they
+    *  - [[maintain]] records the tombstone-sidecar fingerprint it
     *    materialized ([[writeMaterializedMarker]]); a clear whose
     *    current fingerprint has no matching marker means the newest
     *    delete was never compacted into the float files — refused by
@@ -692,8 +692,8 @@ object Ivf {
             s"clearTombstones: no compact postdates the newest tombstone " +
               s"of ${tombstonesPath(index)} — clearing now would resurrect " +
               "deleted ids on the float search path (the rewritten files " +
-              "do not yet exclude them). Run compact/compactInPlace/" +
-              "maintain first, or pass force = true if the float layout " +
+              "do not yet exclude them). Run maintain first, or pass " +
+              "force = true if the float layout " +
               "was rebuilt out of band.")
         val stale = listSiblings(fs, index).filter { case (p, sfp) =>
           sfp != fp && fs.exists(new org.apache.hadoop.fs.Path(p))
@@ -894,23 +894,6 @@ object Ivf {
     liveRows(spark, index, graft.Tables.loadArtifact(spark, index.vectorsPath),
       effectiveIdCol(index, idCol))
 
-  /** Compact an append-fragmented index: every `append` adds files per
-    * shard directory and interleaves centroid_id ranges across them,
-    * degrading row-group pruning; compaction rewrites the vectors
-    * dataset with EXACTLY the build's write shape (salted parallelism,
-    * `partitionBy(shard_id)`, `centroid_id` clustering) into a fresh
-    * directory and returns an index pointing at it. The routing table
-    * is unchanged — only the file layout is rebuilt — so search results
-    * are identical before and after (asserted in IvfSpec). Swapping the
-    * new directory over the old is the caller's job, consistent with
-    * [[Compaction]].
-    */
-  def compact(spark: SparkSession, index: Index, outDir: String,
-      idCol: String = null): Index =
-    compactSource(spark, index,
-      spark.read.parquet(index.vectorsPath), outDir,
-      effectiveIdCol(index, idCol))
-
   /** The layout id column a maintenance/search entry point should use:
     * the caller's explicit choice, else the column the index records it
     * was built with (`null` default — a same-parameter-list default
@@ -919,203 +902,6 @@ object Ivf {
     */
   private[operators] def effectiveIdCol(index: Index, idCol: String): String =
     if (idCol == null) index.idCol else idCol
-
-  /** [[compact]] body over an explicit source view of the vectors
-    * dataset — [[maintain]] feeds a SNAPSHOT file list here so rows
-    * appended after its snapshot are merged as files at swap time, not
-    * silently double-read by the rewrite.
-    */
-  private def compactSource(spark: SparkSession, index: Index,
-      source: DataFrame, outDir: String, idCol: String): Index = {
-    // deletes materialize in the float rewrite; the tombstone sidecar
-    // is CARRIED FORWARD (see the delete docstring) because coded
-    // sibling datasets built before the compact still contain the
-    // deleted rows — clearTombstones ends the lifecycle once those are
-    // rebuilt. The carried filter is a no-op against the rewritten
-    // float files (the ids are gone), so it costs only the per-row
-    // probe of the broadcast id set. Readers of the out index find the
-    // copied sidecar by its fingerprint on their first call; nothing is
-    // announced to them.
-    val srcFs = new org.apache.hadoop.fs.Path(tombstonesPath(index))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // fingerprint BEFORE the rewrite reads the live view: the
-    // materialization marker below may only claim tombstones whose
-    // files the rewrite's tombstone filter definitely read — a delete
-    // racing the rewrite leaves the marker unwritten, compactRecommended
-    // stays true, and the next maintenance cycle converges it
-    val fpBefore = tombstoneFp(srcFs, index)
-    writeVectors(
-      liveRows(spark, index, source, idCol),
-      idCol, index.numShards, s"$outDir/vectors", "overwrite")
-    writeSidecar(spark, index.centroids, index.centroidToShard,
-      index.seed, index.idCol, outDir)
-    val out = index.copy(vectorsPath = s"$outDir/vectors")
-    val src = new org.apache.hadoop.fs.Path(tombstonesPath(index))
-    val fs = srcFs
-    // repoint = Some(sourceFp -> outFp) iff the sidecar was copied and
-    // no delete raced the copy — the condition under which a sibling
-    // CURRENT against the source sidecar may follow it to the copy
-    val repoint: Option[(String, String)] = if (fs.exists(src)) {
-      spark.read.schema("__deleted_id LONG").parquet(tombstonesPath(index))
-        .coalesce(1).write.mode("overwrite").parquet(tombstonesPath(out))
-      // the OUT index's marker fingerprints its own copied sidecar —
-      // valid only if no delete landed after the rewrite's snapshot
-      val fpStable = fpBefore.nonEmpty && tombstoneFp(fs, index) == fpBefore
-      val outFp = tombstoneFp(fs, out)
-      if (fpStable)
-        // a clear racing the count makes the marker moot — skip, never
-        // abort a finished rewrite (see recordMaterialized)
-        try writeMaterializedMarker(fs, out, outFp,
-          tombstoneCountFor(spark, index, fpBefore))
-        catch { case scala.util.control.NonFatal(_) => () }
-      if (fpStable) Some(fpBefore -> outFp) else None
-    } else None
-    // carry the coded-sibling registry (ADVICE r14 medium: without
-    // it, clearTombstones on a compact(outDir)-produced index passed
-    // the sibling check VACUOUSLY and could resurrect deleted ids on
-    // PQ/SQ paths built before the deletes). The copied sidecar has
-    // fresh file names, so a sibling that was CURRENT against the
-    // source sidecar is re-registered against the out fingerprint — it
-    // covers the same id set; any other sibling (stale, tombstone-free
-    // compact, or a delete raced the copy) keeps its recorded
-    // fingerprint: stale ones stay refusable by mismatch, and the out
-    // index still knows which coded siblings exist so deletes issued
-    // AFTER the compact refuse a clear until those rebuild.
-    listSiblings(fs, index).foreach { case (p, sfp) =>
-      registerSibling(spark, out, p, repoint match {
-        case Some((from, to)) if sfp == from => to
-        case _ => sfp
-      })
-    }
-    out
-  }
-
-  /** [[compact]] for a LIVE handle: rewrite into a scratch sibling of
-    * the index directory, then swap the compacted `vectors/` over the
-    * fragmented one — the existing [[Index]] (whose `vectorsPath` is
-    * unchanged) keeps serving, which is what an ingest loop holding the
-    * handle inside a foreachBatch closure needs. The tombstone sidecar
-    * is untouched in place (compact's carry-forward contract — the
-    * scratch copy compact makes is deleted with the scratch dir).
-    *
-    * Single-writer contract: the caller owns exclusive write access for
-    * the duration (a micro-batch loop is serial, so this holds there by
-    * construction) — and the contract is GUARDED, not just documented:
-    * the live layout is fingerprinted (name/length/mtime listing)
-    * before the rewrite reads it and re-checked before the swap, so a
-    * concurrent append that would otherwise be silently dropped by the
-    * directory replacement aborts the compact by name with the index
-    * untouched (IvfSpec gates this with a writer injected at the worst
-    * instant). A concurrent reader can still catch the instant between
-    * the two renames and fail one scan — retry-safe, but true
-    * concurrent-swap isolation needs a transactional table format, the
-    * same boundary [[graft.streaming.VectorsStreaming.appendVectorBatch]]
-    * documents for exactly-once. Crash windows: before the first rename
-    * — only scratch garbage, cleaned on the next call; between the
-    * renames — the live dir is missing but intact at `__compact_trash`
-    * (the old `vectors/` directory itself, renamed — its shard
-    * subdirectories sit directly inside), and
-    * [[recoverFromCrashedCompact]] renames it back as CODE, not a
-    * manual procedure: every entry point that could otherwise observe
-    * or destroy the crashed state — this method, [[append]],
-    * [[maintenanceStats]] — runs it first, so the window is
-    * self-healing and the trash copy is never deleted while it is the
-    * only copy (IvfSpec crash-window gates); after the second rename —
-    * only trash/scratch garbage.
-    *
-    * @param betweenRenames test seam invoked between the two swap
-    *   renames — the crash window above. Tests throw here to simulate
-    *   a process death at the worst instant and then assert recovery.
-    */
-  def compactInPlace(spark: SparkSession, index: Index,
-      idCol: String = null,
-      beforeSwap: () => Unit = () => (),
-      betweenRenames: () => Unit = () => (),
-      leaseStaleTtlMs: Long = FsLease.DefaultStaleTtlMs,
-      fenceTimeoutMs: Long = FsLease.DefaultTimeoutMs): Unit = {
-    val base = index.vectorsPath.stripSuffix("/vectors")
-    require(base != index.vectorsPath,
-      s"compactInPlace: vectorsPath must end in /vectors (got " +
-        s"${index.vectorsPath}) — the scratch/trash siblings live beside it")
-    val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // fail FAST if an out-of-band maintain (or another inline compact)
-    // is mid-flight: two directory swappers racing the renames is the
-    // one interleaving the fingerprint guard below cannot make safe.
-    // The ingest loop treats this as "maintenance already running —
-    // defer" (appendVectorBatchMaintained catches LeaseHeldException).
-    FsLease.withLease(fs, maintainerLeasePath(index),
-      s"compactInPlace@${java.util.UUID.randomUUID()}",
-      timeoutMs = 0L) {
-      compactInPlaceBody(spark, index, effectiveIdCol(index, idCol), fs,
-        base, beforeSwap, betweenRenames, leaseStaleTtlMs, fenceTimeoutMs)
-    }
-  }
-
-  private def compactInPlaceBody(spark: SparkSession, index: Index,
-      idCol: String, fs: org.apache.hadoop.fs.FileSystem, base: String,
-      beforeSwap: () => Unit, betweenRenames: () => Unit,
-      leaseStaleTtlMs: Long, fenceTimeoutMs: Long): Unit = {
-    val scratch = s"$base/__compact_scratch"
-    val trash = new org.apache.hadoop.fs.Path(s"$base/__compact_trash")
-    // a prior call that crashed between its two renames left the ONLY
-    // copy of the data at trash — restore it BEFORE any delete below,
-    // or the cleanup would destroy it (VERDICT r12 what's-wrong #1)
-    recoverOwningLease(spark, index)
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true) // crashed prior run
-    fs.delete(trash, true)
-    // fingerprint of the live layout BEFORE the rewrite reads it: the
-    // swap below replaces the whole directory, so any file appended
-    // while the rewrite ran would be silently DROPPED — the one
-    // data-loss shape a violated single-writer contract produces here.
-    // Re-checking the fingerprint right before the swap turns that from
-    // silent loss into a named abort (metadata-only, one listing), and
-    // shrinks the unguarded window from the whole O(index) rewrite to
-    // the instant between the check and the rename.
-    def layoutFingerprint(): Seq[(String, Long, Long)] =
-      FsList.files(fs, new org.apache.hadoop.fs.Path(index.vectorsPath))
-        .collect { case f if f.getPath.getName.endsWith(".parquet") =>
-          (f.getPath.toString, f.getLen, f.getModificationTime)
-        }.sortBy(_._1)
-    val before = layoutFingerprint()
-    val tombFpBefore = tombstoneFp(fs, index)
-    val out = compact(spark, index, scratch, idCol)
-    beforeSwap() // test seam: simulate a concurrent writer at the worst instant
-    // the re-check + swap hold the WRITER lease (ADVICE r13): without
-    // it, a lease-holding append that commits between the fingerprint
-    // re-check and the live→trash rename would ride into trash and be
-    // deleted — the exact silent-loss shape the fingerprint guard
-    // exists to prevent (it only catches appends committing BEFORE the
-    // re-check). The fence is metadata-only; an in-flight append is
-    // waited out, then its files fail the re-check into a named abort.
-    FsLease.withLease(fs, writerLeasePath(index),
-      s"compact-swap@${java.util.UUID.randomUUID()}", leaseStaleTtlMs,
-      fenceTimeoutMs) {
-      val after = layoutFingerprint()
-      if (after != before) {
-        fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-        throw new IllegalStateException(
-          "compactInPlace: the live vectors layout changed while the " +
-            "compacted rewrite was running (single-writer contract " +
-            "violated — a concurrent append's rows would have been " +
-            "dropped by the swap). The index is untouched; retry once " +
-            "the competing writer is quiesced.")
-      }
-      val live = new org.apache.hadoop.fs.Path(index.vectorsPath)
-      require(fs.rename(live, trash),
-        s"compactInPlace: could not move $live aside")
-      betweenRenames() // test seam: simulate a crash in the swap window
-      require(fs.rename(new org.apache.hadoop.fs.Path(out.vectorsPath), live),
-        s"compactInPlace: could not install compacted vectors at $live — " +
-          s"the previous layout is intact at $trash (the old vectors " +
-          "directory itself; recoverFromCrashedCompact restores it)")
-    }
-    fs.delete(trash, true)
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-    // record the tombstone set this rewrite materialized (skipped if a
-    // delete raced the rewrite — the next cycle pays the debt)
-    recordMaterialized(spark, fs, index, tombFpBefore)
-  }
 
   /** Write the materialization marker for `index` iff the sidecar still
     * fingerprints `fpBefore`. Skipped — safe-conservative, the flag
@@ -1134,8 +920,8 @@ object Ivf {
         tombstoneCountFor(spark, index, fpBefore))
       catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Crash recovery for [[compactInPlace]]'s swap window: if a prior
-    * call died between its two renames, the live `vectors/` directory
+  /** Crash recovery for [[maintain]]'s swap window: if a prior call
+    * died between its two renames, the live `vectors/` directory
     * is missing and the ONLY copy of the data is the old directory at
     * `__compact_trash` (the first rename moves `vectors/` there
     * wholesale — shard subdirectories sit directly inside it, there is
@@ -1147,9 +933,9 @@ object Ivf {
     *
     * Idempotent and cheap (two metadata probes when healthy), so every
     * entry point that writes or inspects the layout runs it first:
-    * [[compactInPlace]] (before its trash cleanup — the previous code
-    * DELETED the trash copy on entry, destroying the recovery data),
-    * [[append]] and [[maintenanceStats]] (before their missing-dir
+    * [[maintain]] (before its trash cleanup — deleting the trash copy
+    * on entry would destroy the recovery data), [[append]] and
+    * [[maintenanceStats]] (before their missing-dir
     * guards — without this, append's parquet `mode("append")` would
     * silently recreate an EMPTY vectors dir, the next maintenance
     * would see a healthy tiny index, and searches would return
@@ -1168,9 +954,9 @@ object Ivf {
       leaseStaleTtlMs: Long = FsLease.DefaultStaleTtlMs): Boolean =
     recoverImpl(spark, index, ownLease = false, leaseStaleTtlMs)
 
-  /** [[recoverFromCrashedCompact]] for callers already HOLDING the
-    * maintainer lease ([[compactInPlace]], [[maintain]]): their own
-    * fresh lease must not read as "another maintainer is mid-swap".
+  /** [[recoverFromCrashedCompact]] for [[maintain]], which already
+    * HOLDS the maintainer lease: its own fresh lease must not read as
+    * "another maintainer is mid-swap".
     */
   private def recoverOwningLease(spark: SparkSession, index: Index): Boolean =
     recoverImpl(spark, index, ownLease = true, FsLease.DefaultStaleTtlMs)
@@ -1216,8 +1002,7 @@ object Ivf {
         fs.delete(new org.apache.hadoop.fs.Path(s"$base/__compact_scratch"),
           true)
         log.warn(s"recoverFromCrashedCompact: restored $live from $trash " +
-          "(a prior compactInPlace/maintain crashed between its swap " +
-          "renames)")
+          "(a prior maintain crashed between its swap renames)")
         true
       }
     }
@@ -1254,18 +1039,26 @@ object Ivf {
   final case class MaintainCompacted(deltaFilesMerged: Int)
     extends MaintainOutcome
 
-  /** Out-of-band index maintenance — [[compactInPlace]] promoted to an
-    * ASYNC entrypoint that ingest does not have to stop for. The inline
-    * form is O(index) inside the ingest loop, which is only acceptable
-    * while the index is young (SCALE.md round 12 named this boundary);
-    * this form runs the O(index) rewrite CONCURRENTLY with appends and
-    * fences only the swap:
+  /** Index maintenance — the ONE compaction of a live index. Every
+    * `append` adds files per shard directory and interleaves
+    * centroid_id ranges across them, degrading row-group pruning; when
+    * [[MaintenanceStats.compactRecommended]] says so, the vectors
+    * dataset is rewritten with EXACTLY the build's write shape (salted
+    * parallelism, `partitionBy(shard_id)`, `centroid_id` clustering)
+    * and swapped over the live one. The routing table is unchanged —
+    * only the file layout is rebuilt — so search results are identical
+    * before and after, and the caller's [[Index]] (whose `vectorsPath`
+    * is unchanged) keeps serving. The O(index) rewrite runs
+    * CONCURRENTLY with appends; only the swap is fenced:
     *
     *  1. takes the maintainer lease for the whole run (fail-fast — one
-    *     maintainer at a time, and the inline compact defers to it);
-    *  2. snapshots the live file listing and rewrites ONLY those files
-    *     (`basePath` read keeps the partition column) into a scratch
-    *     sibling — appends keep landing in the live dir meanwhile;
+    *     maintainer at a time; the maintained ingest sink defers to a
+    *     running one);
+    *  2. snapshots the live file listing and rewrites ONLY those live
+    *     rows (`basePath` read keeps the partition column; tombstoned
+    *     ids are dropped, so deletes materialize) into
+    *     `__compact_scratch/vectors` — appends keep landing in the live
+    *     dir meanwhile;
     *  3. takes the WRITER lease (waiting out at most one in-flight
     *     append — appends hold it for their write), then MERGES the
     *     delta (files committed after the snapshot) into the scratch
@@ -1276,15 +1069,37 @@ object Ivf {
     *     the inline comment), and the snapshot ⊆ current check turns
     *     any lease-less rewrite into a named abort rather than row
     *     duplication;
-    *  4. swaps scratch over live (same two-rename window as the inline
-    *     form — [[recoverFromCrashedCompact]] owns the crash recovery)
-    *     and releases both leases.
+    *  4. swaps scratch over live with two renames (live →
+    *     `__compact_trash`, scratch → live) and releases both leases.
     *
-    * The ingest loop's steady-batch latency is perturbed only by the
-    * fence in step 3 — a listing, O(delta) renames and two directory
-    * renames, independent of index size (measured in SCALE.md r13 via
-    * DebugStreamAppend's out-of-band cell). Tombstones are carried
-    * forward unchanged (the [[compact]] contract).
+    * Crash windows: before the first rename — only scratch garbage,
+    * cleaned on the next call; between the renames — the live dir is
+    * missing but intact at `__compact_trash`, and
+    * [[recoverFromCrashedCompact]] renames it back as CODE: every entry
+    * point that could otherwise observe or destroy the crashed state
+    * (this method, [[append]], [[maintenanceStats]]) runs it first;
+    * after the second rename — only trash/scratch garbage. Readers get
+    * no snapshot: a concurrent reader can catch the instant between the
+    * two renames and fail one scan — retry-safe, but true
+    * concurrent-swap isolation needs a transactional table format, the
+    * same boundary [[graft.streaming.VectorsStreaming.appendVectorBatch]]
+    * documents for exactly-once.
+    *
+    * The tombstone sidecar, the materialization marker and the
+    * coded-sibling registry stay where they are: coded sibling datasets
+    * built before the deletes still contain the deleted rows, so the
+    * sidecar is carried until [[clearTombstones]] ends the lifecycle.
+    * The rewrite records the tombstone fingerprint it materialized
+    * ([[recordMaterialized]]), which drops the tombstone arm of
+    * `compactRecommended`.
+    *
+    * An ingest loop's steady-batch latency is perturbed only by the
+    * fence in step 3 — a listing, O(delta) copies and two directory
+    * renames, independent of index size (measured in SCALE.md r13).
+    *
+    * @param betweenRenames test seam invoked between the two swap
+    *   renames — the crash window above. Tests throw here to simulate
+    *   a process death at the worst instant and then assert recovery.
     */
   def maintain(spark: SparkSession, index: Index,
       idCol: String = null, maxFilesPerShard: Int = 8,
@@ -1326,8 +1141,14 @@ object Ivf {
         val snapshotDf = spark.read
           .option("basePath", index.vectorsPath)
           .parquet(snapshot.toSeq.sorted: _*)
+        // fingerprint BEFORE the rewrite reads the live view: the marker
+        // may only claim tombstones whose files the rewrite's filter
+        // definitely read — a delete racing the rewrite leaves it
+        // unwritten and the next cycle pays the remaining debt
         val tombFpBefore = tombstoneFp(fs, index)
-        val out = compactSource(spark, index, snapshotDf, scratch, id)
+        val scratchVectors = s"$scratch/vectors"
+        writeVectors(liveRows(spark, index, snapshotDf, id),
+          id, index.numShards, scratchVectors, "overwrite")
         beforeFence() // test seam: appends racing the rewrite land here
         val merged = FsLease.withLease(fs, writerLeasePath(index),
           s"maintain-swap@${java.util.UUID.randomUUID()}", leaseStaleTtlMs,
@@ -1351,8 +1172,7 @@ object Ivf {
             val rel = f.stripPrefix(prefix)
             require(rel != f, s"maintain: delta file $f is not under " +
               s"${index.vectorsPath}")
-            val dest = new org.apache.hadoop.fs.Path(
-              s"${out.vectorsPath}/$rel")
+            val dest = new org.apache.hadoop.fs.Path(s"$scratchVectors/$rel")
             fs.mkdirs(dest.getParent)
             // COPY, not rename: the originals ride into trash with the
             // old directory and die only after a successful swap, so a
@@ -1369,7 +1189,7 @@ object Ivf {
           require(fs.rename(livePath, trash),
             s"maintain: could not move $livePath aside")
           betweenRenames() // test seam: the crash window
-          require(fs.rename(new org.apache.hadoop.fs.Path(out.vectorsPath),
+          require(fs.rename(new org.apache.hadoop.fs.Path(scratchVectors),
             livePath),
             s"maintain: could not install compacted vectors at $livePath — " +
               s"the previous layout is intact at $trash (the old vectors " +
@@ -1378,8 +1198,6 @@ object Ivf {
         }
         fs.delete(trash, true)
         fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-        // record the tombstone set the rewrite materialized (skipped if
-        // a delete raced it — the next cycle pays the remaining debt)
         recordMaterialized(spark, fs, index, tombFpBefore)
         MaintainCompacted(merged)
       }
@@ -1400,7 +1218,7 @@ object Ivf {
   case class MaintenanceStats(dataFiles: Int, numShards: Int,
       filesPerShardMax: Int, dataBytes: Long, tombstones: Long,
       /** Tombstones no compact has yet materialized into the float
-        * files. Zero once one compact/maintain pays the debt, even
+        * files. Zero once one compacting maintain pays the debt, even
         * though `tombstones` stays nonzero while the sidecar is
         * carried for coded siblings — the distinction that lets the
         * poll→maintain loop converge (VERDICT r13 #1). Counted

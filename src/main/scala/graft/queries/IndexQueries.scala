@@ -107,7 +107,7 @@ object IndexQueries {
     *
     *  - `merge_on_read`: tombstones filtered at scan time by the
     *    broadcast id-set predicate (data files still hold all 300 rows);
-    *  - `compacted`: after [[Ivf.compactInPlace]] materializes the
+    *  - `compacted`: after a forced [[Ivf.maintain]] materializes the
     *    deletes into rewritten files (recording the materialization
     *    marker + fencing the swap under the writer lease — the oracled
     *    path exercises both);
@@ -157,7 +157,7 @@ object IndexQueries {
         java.util.Arrays.asList(rows.collect(): _*), rows.schema)
     }
     val before = phase("merge_on_read")
-    Ivf.compactInPlace(spark, idx)
+    forceMaintain(spark, idx)
     val compacted = phase("compacted")
     Ivf.clearTombstones(spark, idx)
     before.union(compacted)
@@ -165,6 +165,17 @@ object IndexQueries {
         .withColumn("phase", lit("cleared")))
       .orderBy(col("phase"), col("distance"), col("external_id"))
   }
+
+  /** Forced [[Ivf.maintain]] (threshold 0): the lifecycle step the
+    * `compacted` phases oracle, so anything but a compaction fails the
+    * query by name instead of hashing an uncompacted answer.
+    */
+  private def forceMaintain(spark: SparkSession, idx: Ivf.Index): Unit =
+    Ivf.maintain(spark, idx, maxFilesPerShard = 0) match {
+      case Ivf.MaintainCompacted(_) => ()
+      case other => throw new IllegalStateException(
+        s"expected a compacting maintain, got $other")
+    }
 
   /** Exact top-10 over the delete survivors (`vec_id < 300 AND
     * vec_id % 7 <> 3`) for the embedding of vec_id 10 — the oracle of
@@ -208,7 +219,7 @@ object IndexQueries {
     * [[searchDeleted]] (`id < 300`, delete `id % 7 = 3`, query id 10 —
     * itself deleted), taken in two phases: merge-on-read (tombstone
     * filter on the RECORDED id column) and compacted
-    * ([[Ivf.compactInPlace]]'s rewrite + marker under the custom
+    * ([[Ivf.maintain]]'s rewrite + marker under the custom
     * column). Phase 1 is materialized before the swap deletes the file
     * names its lazy plan pins.
     */
@@ -232,7 +243,7 @@ object IndexQueries {
         java.util.Arrays.asList(rows.collect(): _*), rows.schema)
     }
     val before = phase("merge_on_read")
-    Ivf.compactInPlace(spark, idx)
+    forceMaintain(spark, idx)
     before.union(Ivf.search(spark, idx, q, k0 = 10, nProbe0 = 10000)
         .withColumn("phase", lit("compacted")))
       .orderBy(col("phase"), col("distance"), col("external_id"))

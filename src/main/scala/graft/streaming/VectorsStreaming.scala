@@ -389,25 +389,25 @@ object VectorsStreaming {
     * are O(batch) but each leaves ~one file per shard, and it is search
     * that pays the accumulated debt (2.3× warmer latency after ten
     * appends, reset by one compact). After a batch that actually
-    * applied, the metadata-only [[Ivf.maintenanceStats]] listing runs;
-    * past `maxFilesPerShard` the index is compacted IN PLACE
-    * ([[Ivf.compactInPlace]] — directory swap, the held handle keeps
-    * serving).
+    * applied, [[Ivf.maintain]] runs: its metadata-only
+    * [[Ivf.maintenanceStats]] listing decides, and past
+    * `maxFilesPerShard` the index is compacted IN PLACE (directory
+    * swap, the held handle keeps serving).
     *
     * The trigger IS [[Ivf.MaintenanceStats.compactRecommended]] — the
-    * same predicate a standalone scheduler polls (VERDICT r13 #6: the
-    * two sites must not diverge). That is safe to key a loop on since
-    * its tombstone arm counts only UNMATERIALIZED tombstones: one
-    * compact records the materialization marker and drops the flag,
-    * while the sidecar itself is still carried forward for coded
-    * siblings — so a delete triggers exactly one compact here, not one
-    * per subsequent batch forever. Retry semantics compose with the
-    * marker: a replayed batch id applies nothing and therefore compacts
-    * nothing; a crash after the marker but before the compact just
-    * defers it — the next applied batch re-reads the same
-    * over-threshold state and compacts then (the rule is self-healing
-    * because it reads current state, not an increment). Returns true
-    * iff the batch was applied.
+    * same predicate a standalone scheduler polls, evaluated inside
+    * `maintain`, so the two sites cannot diverge. That is safe to key a
+    * loop on since its tombstone arm counts only UNMATERIALIZED
+    * tombstones: one compact records the materialization marker and
+    * drops the flag, while the sidecar itself is still carried forward
+    * for coded siblings — so a delete triggers exactly one compact
+    * here, not one per subsequent batch forever. Retry semantics
+    * compose with the marker: a replayed batch id applies nothing and
+    * therefore compacts nothing; a crash after the marker but before
+    * the compact just defers it — the next applied batch re-reads the
+    * same over-threshold state and compacts then (the rule is
+    * self-healing because it reads current state, not an increment).
+    * Returns true iff the batch was applied.
     */
   def appendVectorBatchMaintained(index: Ivf.Index, batch: DataFrame,
       idCol: String, embCol: String, batchId: Long, markerDir: String,
@@ -418,22 +418,18 @@ object VectorsStreaming {
       leaseTimeoutMs: Long = graft.operators.FsLease.DefaultTimeoutMs): Boolean = {
     val applied = appendVectorBatch(index, batch, idCol, embCol, batchId,
       markerDir, markerRetention, leaseStaleTtlMs, leaseTimeoutMs)
-    if (applied) {
-      val spark = batch.sparkSession
-      val stats = Ivf.maintenanceStats(spark, index)
-      if (stats.compactRecommended(maxFilesPerShard,
-        maxUnmaterializedTombstones))
-        try Ivf.compactInPlace(spark, index, idCol,
-          leaseStaleTtlMs = leaseStaleTtlMs, fenceTimeoutMs = leaseTimeoutMs)
-        catch {
-          // an out-of-band Ivf.maintain is mid-flight: it will compact
-          // this debt itself — defer, don't fail the batch (the rule is
-          // self-healing: the next applied batch re-reads current state)
-          case e: graft.operators.FsLease.LeaseHeldException =>
-            log.info(s"appendVectorBatchMaintained: compact deferred — " +
-              s"maintenance already running (${e.getMessage})")
-        }
-    }
+    if (applied)
+      try Ivf.maintain(batch.sparkSession, index, idCol, maxFilesPerShard,
+        maxUnmaterializedTombstones, leaseStaleTtlMs,
+        fenceTimeoutMs = leaseTimeoutMs)
+      catch {
+        // another maintain is mid-flight: it will compact this debt
+        // itself — defer, don't fail the batch (the rule is
+        // self-healing: the next applied batch re-reads current state)
+        case e: graft.operators.FsLease.LeaseHeldException =>
+          log.info(s"appendVectorBatchMaintained: compact deferred — " +
+            s"maintenance already running (${e.getMessage})")
+      }
     applied
   }
 

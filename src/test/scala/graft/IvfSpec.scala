@@ -622,34 +622,32 @@ class IvfSpec extends SparkSpec {
       .collect().map(_.getLong(0)).contains(42L))
     // merge-on-read: data files untouched until compaction
     assert(spark.read.parquet(idx.vectorsPath).count() == 500L)
-    val outDir = JFiles.createTempDirectory("graft_delete_out").toString
-    val compacted = Ivf.compact(spark, idx, outDir)
-    assert(spark.read.parquet(compacted.vectorsPath).count() == 498L)
-    val after = Ivf.search(spark, compacted, q, 10, 10000)
+    // the lifecycle guard refuses a clear before compaction: idx's
+    // FLOAT files still hold 42/7, which would resurrect on that path
+    intercept[IllegalStateException] { Ivf.clearTombstones(spark, idx) }
+    val merged = Ivf.search(spark, idx, q, 10, 10000)
       .collect().map(_.getLong(0)).toSeq
-    assert(after == Ivf.search(spark, idx, q, 10, 10000)
-      .collect().map(_.getLong(0)).toSeq)
-    // compact CARRIES the sidecar: coded siblings built pre-compact
-    // still contain the deleted rows and must stay filtered until
+    assert(Ivf.maintain(spark, idx, maxFilesPerShard = 0)
+      .isInstanceOf[Ivf.MaintainCompacted])
+    assert(spark.read.parquet(idx.vectorsPath).count() == 498L)
+    val after = Ivf.search(spark, idx, q, 10, 10000)
+      .collect().map(_.getLong(0)).toSeq
+    assert(after == merged)
+    // maintain CARRIES the sidecar: coded siblings built pre-compact
+    // would still contain the deleted rows and must stay filtered until
     // rebuilt (the documented lifecycle)
-    assert(!graft.operators.IvfPq.search(spark, compacted, model, pqDir,
+    assert(new java.io.File(s"$dir/tombstones").exists())
+    assert(!graft.operators.IvfPq.search(spark, idx, model, pqDir,
       q, 10, 10000).collect().map(_.getLong(0)).contains(42L))
     // after the rebuild step the sidecar is cleared; float results are
     // unchanged because the rows are physically gone
-    Ivf.clearTombstones(spark, compacted)
-    assert(Ivf.search(spark, compacted, q, 10, 10000)
+    Ivf.clearTombstones(spark, idx)
+    assert(Ivf.search(spark, idx, q, 10, 10000)
       .collect().map(_.getLong(0)).toSeq == after)
     // sibling builds read the LIVE view: pqDir/sqDir were built while
     // the tombstones were active, so the deleted rows are PHYSICALLY
-    // absent from the coded datasets — clearing the sidecar (even
-    // without a compact, the rebuild-first lifecycle order) cannot
-    // resurrect them on any coded search path. The lifecycle guard
-    // rightly refuses this clear (idx's FLOAT files were never
-    // compacted, so 42/7 would resurrect on the float path) — force is
-    // the operational escape, and the assertions below are exactly the
-    // out-of-band verification it demands for the coded paths
-    intercept[IllegalStateException] { Ivf.clearTombstones(spark, idx) }
-    Ivf.clearTombstones(spark, idx, force = true)
+    // absent from the coded datasets — clearing the sidecar cannot
+    // resurrect them on any coded search path
     assert(!graft.operators.IvfPq.search(spark, idx, model, pqDir,
       q, 10, 10000).collect().map(_.getLong(0)).contains(42L))
     assert(!graft.operators.IvfSq.search(spark, idx, sqDir,
@@ -676,19 +674,18 @@ class IvfSpec extends SparkSpec {
         .count(_.getFileName.toString.endsWith(".parquet"))
     }
     val before = fileCount(idx.vectorsPath)
-    val outDir = JFiles.createTempDirectory("graft_compact_ivf_out").toString
-    val compacted = Ivf.compact(spark, idx, outDir)
-    val after = fileCount(compacted.vectorsPath)
-    assert(after < before, s"no file reduction: $before -> $after")
-    // identical answers through the compacted layout, original untouched
     val q = embAll(5)._2
     val a = Ivf.search(spark, idx, q, 10, 10000).collect().map(_.toSeq).toSeq
-    val b = Ivf.search(spark, compacted, q, 10, 10000).collect().map(_.toSeq).toSeq
+    assert(Ivf.maintain(spark, idx, maxFilesPerShard = 0)
+      .isInstanceOf[Ivf.MaintainCompacted])
+    val after = fileCount(idx.vectorsPath)
+    assert(after < before, s"no file reduction: $before -> $after")
+    // identical answers through the compacted layout, every input row kept
+    val b = Ivf.search(spark, idx, q, 10, 10000).collect().map(_.toSeq).toSeq
     assert(a == b)
-    assert(fileCount(idx.vectorsPath) == before)
-    // the compacted index also survives a load() roundtrip
-    val loaded = Ivf.load(spark, outDir)
-    assert(loaded.centroidToShard.toSeq == idx.centroidToShard.toSeq)
+    val vecs = spark.read.parquet(idx.vectorsPath)
+    assert(vecs.count() == 500L &&
+      vecs.select("vec_id").distinct().count() == 500L)
   }
 
   test("append: incremental vectors are searchable, complete, duplicate-free") {
@@ -736,45 +733,16 @@ class IvfSpec extends SparkSpec {
     val s2 = Ivf.maintenanceStats(spark, idx)
     assert(s2.tombstones == 1L && s2.compactRecommended(maxFilesPerShard = 1000))
     // compact materializes the delete and resets the file debt
-    val compacted = Ivf.compact(spark, idx, s"$dir/compacted")
-    val s3 = Ivf.maintenanceStats(spark, compacted)
+    assert(Ivf.maintain(spark, idx, maxFilesPerShard = 0)
+      .isInstanceOf[Ivf.MaintainCompacted])
+    val s3 = Ivf.maintenanceStats(spark, idx)
     assert(s3.dataFiles < s1.dataFiles &&
       s3.filesPerShardMax <= base,
       s"compact did not reset file debt: $s1 -> $s3")
-    assert(spark.read.parquet(compacted.vectorsPath).count() == 499L)
+    assert(spark.read.parquet(idx.vectorsPath).count() == 499L)
   }
 
-  test("compactInPlace: a writer racing the rewrite aborts the swap by " +
-      "name with every row (including the racer's) intact") {
-    import java.nio.file.{Files => JFiles}
-    val dir = JFiles.createTempDirectory("graft_swapguard").toString
-    val emb = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding"))
-    val idx = Ivf.build(emb.where(col("vec_id") < 300),
-      "vec_id", "embedding", dir)
-    Ivf.append(idx, emb.where(col("vec_id") >= 300 && col("vec_id") < 400),
-      "vec_id", "embedding")
-    // inject the contract violation at the worst instant: after the
-    // scratch rewrite (which read the 400-row layout), before the swap
-    val e = intercept[IllegalStateException] {
-      Ivf.compactInPlace(spark, idx, beforeSwap = () =>
-        Ivf.append(idx, emb.where(col("vec_id") >= 400),
-          "vec_id", "embedding"))
-    }
-    assert(e.getMessage.contains("single-writer contract"), e.getMessage)
-    // the index is untouched: all 500 rows present — had the swap gone
-    // through, the racer's 100 rows would have been silently dropped
-    assert(spark.read.parquet(idx.vectorsPath).count() == 500L,
-      "aborted compact lost rows")
-    // and no scratch/trash garbage survives the abort
-    assert(!new java.io.File(s"$dir/__compact_scratch").exists())
-    assert(!new java.io.File(s"$dir/__compact_trash").exists())
-    // a quiesced retry then succeeds and keeps all 500
-    Ivf.compactInPlace(spark, idx)
-    assert(spark.read.parquet(idx.vectorsPath).count() == 500L)
-  }
-
-  test("compactInPlace crash window: every entry point restores the " +
+  test("maintain crash window: every entry point restores the " +
       "trashed copy instead of destroying or silently recreating it") {
     import java.nio.file.{Files => JFiles}
     val dir = JFiles.createTempDirectory("graft_crashwin").toString
@@ -786,7 +754,7 @@ class IvfSpec extends SparkSpec {
       "vec_id", "embedding")
     def crash(): Unit = {
       val e = intercept[RuntimeException] {
-        Ivf.compactInPlace(spark, idx, betweenRenames =
+        Ivf.maintain(spark, idx, maxFilesPerShard = 0, betweenRenames =
           () => throw new RuntimeException("simulated crash"))
       }
       assert(e.getMessage == "simulated crash")
@@ -811,10 +779,11 @@ class IvfSpec extends SparkSpec {
     assert(spark.read.parquet(idx.vectorsPath)
       .select("vec_id").distinct().count() == 500L,
       "append after a crashed swap lost the pre-crash rows")
-    // (3) the next compactInPlace restores first, then compacts — the
-    // old code's first act was deleting the trash copy
+    // (3) the next maintain restores first, then compacts — the old
+    // code's first act was deleting the trash copy
     crash()
-    Ivf.compactInPlace(spark, idx)
+    assert(Ivf.maintain(spark, idx, maxFilesPerShard = 0)
+      .isInstanceOf[Ivf.MaintainCompacted])
     assert(spark.read.parquet(idx.vectorsPath)
       .select("vec_id").distinct().count() == 500L)
     assert(!new java.io.File(s"$dir/__compact_trash").exists())
@@ -861,7 +830,7 @@ class IvfSpec extends SparkSpec {
         "vec_id", "embedding")
     val debtBefore = Ivf.maintenanceStats(spark, idx).filesPerShardMax
     // the racing append lands AFTER the rewrite snapshot, BEFORE the
-    // fence — the window the inline compactInPlace can only abort on
+    // fence
     val out = Ivf.maintain(spark, idx, maxFilesPerShard = 0,
       beforeFence = () =>
         Ivf.append(idx, emb.where(col("vec_id") >= 430),
@@ -907,7 +876,6 @@ class IvfSpec extends SparkSpec {
     val mLease = Ivf.maintainerLeasePath(idx)
     FsLease.acquire(fs, mLease, "test-maintainer", timeoutMs = 0L)
     try {
-      intercept[FsLease.LeaseHeldException] { Ivf.compactInPlace(spark, idx) }
       intercept[FsLease.LeaseHeldException] {
         Ivf.maintain(spark, idx, maxFilesPerShard = 0)
       }
@@ -1017,7 +985,7 @@ class IvfSpec extends SparkSpec {
     assert(Ivf.maintenanceStats(spark, idx).tombstones == 2L)
   }
 
-  test("compactInPlace with tombstones: deletes materialize in the " +
+  test("maintain with tombstones: deletes materialize in the " +
       "swapped files, the sidecar is carried in place, clear ends it") {
     import java.nio.file.{Files => JFiles}
     val dir = JFiles.createTempDirectory("graft_inplace_tomb").toString
@@ -1026,7 +994,8 @@ class IvfSpec extends SparkSpec {
     val idx = Ivf.build(emb.where(col("vec_id") < 400),
       "vec_id", "embedding", dir)
     Ivf.delete(spark, idx, Seq(7L, 11L))
-    Ivf.compactInPlace(spark, idx)
+    assert(Ivf.maintain(spark, idx, maxFilesPerShard = 0)
+      .isInstanceOf[Ivf.MaintainCompacted])
     // deletes are materialized: the rewritten float files no longer
     // hold the ids at all (not merely filtered at read time)
     val raw = spark.read.parquet(idx.vectorsPath)
@@ -1043,6 +1012,93 @@ class IvfSpec extends SparkSpec {
     Ivf.clearTombstones(spark, idx)
     assert(Ivf.maintenanceStats(spark, idx).tombstones == 0L)
     assert(Ivf.liveVectors(spark, idx).count() == 398L)
+  }
+
+  test("maintain writes only vectors/ into its scratch dir and leaves the " +
+      "live tombstone sidecar and sibling registry byte-identical") {
+    import java.nio.file.{Files => JFiles, Path => JPath}
+    import scala.jdk.CollectionConverters._
+    val dir = JFiles.createTempDirectory("graft_maint_scratch").toString
+    val emb = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), col("embedding"))
+    val idx = Ivf.build(emb.where(col("vec_id") < 300),
+      "vec_id", "embedding", dir)
+    // a registered coded sibling that predates the deletes, then a
+    // tombstone sidecar: every lifecycle file a rewrite could copy
+    val sqDir = s"$dir/sq8_codes"
+    graft.operators.IvfSq.buildCodes(spark, idx, sqDir)
+    Ivf.delete(spark, idx, Seq(5L, 9L))
+    def files(sub: String): Map[String, Seq[Byte]] = {
+      val root = java.nio.file.Paths.get(dir, sub)
+      JFiles.walk(root).iterator().asScala
+        .filter(JFiles.isRegularFile(_))
+        .map((f: JPath) => root.relativize(f).toString ->
+          JFiles.readAllBytes(f).toSeq)
+        .toMap
+    }
+    val tombsBefore = files("tombstones")
+    val siblingsBefore = files("__siblings")
+    assert(tombsBefore.keys.exists(_.endsWith(".parquet")) &&
+      siblingsBefore.nonEmpty, "fixture broken: no sidecar or registry")
+    var scratchAtSwap: Set[String] = Set.empty
+    val out = Ivf.maintain(spark, idx, maxFilesPerShard = 0,
+      betweenRenames = () => {
+        scratchAtSwap = new java.io.File(s"$dir/__compact_scratch")
+          .list().toSet
+      })
+    assert(out.isInstanceOf[Ivf.MaintainCompacted], s"$out")
+    assert(scratchAtSwap == Set("vectors"),
+      s"maintain wrote more than the rewrite into its scratch dir: " +
+        s"$scratchAtSwap")
+    assert(files("tombstones") == tombsBefore,
+      "maintain rewrote the live tombstone sidecar")
+    assert(files("__siblings") == siblingsBefore,
+      "maintain rewrote the live sibling registry")
+    // the rewrite materialized the deletes, and the untouched registry
+    // still refuses a clear while the pre-delete sibling holds row 5
+    val raw = spark.read.parquet(idx.vectorsPath)
+      .select("vec_id").collect().map(_.getLong(0)).toSet
+    assert(raw.size == 298 && !raw(5L) && !raw(9L))
+    val e = intercept[IllegalStateException] {
+      Ivf.clearTombstones(spark, idx)
+    }
+    assert(e.getMessage.contains(sqDir), e.getMessage)
+  }
+
+  test("one swap body: only Ivf.maintain and its crash recovery name the " +
+      "scratch and trash dirs under src/main") {
+    import java.nio.file.{Files => JFiles, Paths}
+    import scala.jdk.CollectionConverters._
+    val src = Paths.get("src/main/scala")
+    val ivf = src.resolve("graft/operators/Ivf.scala")
+    assert(JFiles.isRegularFile(ivf), s"run from the project root: $ivf not found")
+    val swapDirs = "/__compact_(scratch|trash)".r
+    val member = """^  \S""".r
+    val allowed = """^  (private )?def (maintain|recoverImpl)\(""".r
+    // code lines (comments dropped) that build a scratch or trash path,
+    // outside the two allowed members of Ivf
+    val offenders = JFiles.walk(src).iterator().asScala
+      .filter(p => JFiles.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .toList.flatMap { p =>
+        var inAllowed = false
+        JFiles.readAllLines(p).asScala.zipWithIndex.flatMap {
+          case (line, i) =>
+            if (member.findPrefixOf(line).isDefined)
+              inAllowed = p == ivf && allowed.findPrefixOf(line).isDefined
+            val code = line.trim
+            val comment = code.startsWith("*") || code.startsWith("/*") ||
+              code.startsWith("//")
+            if (!comment && !inAllowed && swapDirs.findFirstIn(line).isDefined)
+              Some(s"$p:${i + 1}")
+            else None
+        }
+      }
+    assert(offenders.isEmpty,
+      s"a second rewrite-and-swap body names the scratch/trash dirs: $offenders")
+    // positive control: the allowed bodies are found and do name them
+    val ivfLines = JFiles.readAllLines(ivf).asScala
+    assert(ivfLines.count(l => allowed.findPrefixOf(l).isDefined) == 2)
+    assert(ivfLines.count(l => swapDirs.findFirstIn(l).isDefined) >= 3)
   }
 
   test("build seed persists through the sidecar so append assigns consistently") {
@@ -1262,50 +1318,6 @@ class IvfSpec extends SparkSpec {
       maxUnmaterializedTombstones = 2L))
   }
 
-  test("compact(outDir) carries the coded-sibling registry: a stale " +
-      "sibling refuses clearTombstones on the compacted index too " +
-      "(ADVICE r14)") {
-    import java.nio.file.{Files => JFiles}
-    val dir = JFiles.createTempDirectory("graft_sibcarry").toString
-    val emb = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding"))
-    val idx = Ivf.build(emb.where(col("vec_id") < 300),
-      "vec_id", "embedding", dir)
-    // sibling built BEFORE any delete — it physically contains every row
-    val model = graft.operators.Pq.train(emb.where(col("vec_id") < 300),
-      "embedding", embAll.head._2.length, m = 8, ksub = 16,
-      orderCol = Some("vec_id"))
-    val pqDir = JFiles.createTempDirectory("graft_sibcarry_pq").toString
-    graft.operators.IvfPq.buildCodes(spark, idx, model, pqDir)
-    Ivf.delete(spark, idx, Seq(10L))
-    assert(spark.read.parquet(pqDir).where(col("vec_id") === 10L).count()
-      == 1L, "fixture broken: the stale sibling must physically hold id 10")
-    val outDir = JFiles.createTempDirectory("graft_sibcarry_out").toString
-    val compacted = Ivf.compact(spark, idx, outDir)
-    // the registry rides along with the tombstone sidecar: clearing the
-    // COMPACTED index while the pre-delete sibling still exists must
-    // refuse by path (previously the registry was not carried, the
-    // sibling check passed vacuously, and the clear resurrected id 10
-    // on the PQ search path)
-    val e = intercept[IllegalStateException] {
-      Ivf.clearTombstones(spark, compacted)
-    }
-    assert(e.getMessage.contains(pqDir), e.getMessage)
-    val q10 = embAll.find(_._1 == 10L).get._2
-    assert(!graft.operators.IvfPq.search(spark, compacted, model, pqDir,
-      q10, 10, 10000).collect().map(_.getLong(0)).contains(10L),
-      "the carried sidecar must keep filtering the stale sibling")
-    // a post-delete rebuild re-registers the sibling as current against
-    // the compacted index's own sidecar copy → the clear proceeds, and
-    // the id stays dead because the rebuild read the live view
-    graft.operators.IvfPq.buildCodes(spark, compacted, model, pqDir)
-    Ivf.clearTombstones(spark, compacted)
-    assert(!graft.operators.IvfPq.search(spark, compacted, model, pqDir,
-      q10, 10, 10000).collect().map(_.getLong(0)).contains(10L))
-    assert(!Ivf.search(spark, compacted, q10, 10, 10000)
-      .collect().map(_.getLong(0)).contains(10L))
-  }
-
   test("maintain: snapshot files vanishing under the rewrite (lease-less " +
       "writer) abort by name with the index untouched (VERDICT r13 #5)") {
     import java.nio.file.{Files => JFiles}
@@ -1340,7 +1352,7 @@ class IvfSpec extends SparkSpec {
     assert(!new java.io.File(s"$dir/__writer_lease").exists())
   }
 
-  test("compactInPlace swap is writer-lease fenced: a held lease times " +
+  test("maintain swap is writer-lease fenced: a held lease times " +
       "out by name instead of a swap-under-write (ADVICE r13)") {
     import java.nio.file.{Files => JFiles}
     import graft.operators.FsLease
@@ -1355,13 +1367,14 @@ class IvfSpec extends SparkSpec {
     FsLease.acquire(fs, wLease, "in-flight-append", timeoutMs = 0L)
     try {
       intercept[FsLease.LeaseHeldException] {
-        Ivf.compactInPlace(spark, idx, fenceTimeoutMs = 300L)
+        Ivf.maintain(spark, idx, maxFilesPerShard = 0, fenceTimeoutMs = 300L)
       }
       // nothing swapped under the writer: all 200 rows still served
       assert(spark.read.parquet(idx.vectorsPath).count() == 200L)
     } finally FsLease.release(fs, wLease, "in-flight-append")
     // released writer → the retry fences, re-checks, swaps
-    Ivf.compactInPlace(spark, idx)
+    assert(Ivf.maintain(spark, idx, maxFilesPerShard = 0)
+      .isInstanceOf[Ivf.MaintainCompacted])
     assert(spark.read.parquet(idx.vectorsPath).count() == 200L)
     assert(!new java.io.File(s"$dir/__compact_trash").exists())
     assert(!new java.io.File(s"$dir/__compact_scratch").exists())
@@ -1503,7 +1516,8 @@ class IvfSpec extends SparkSpec {
       Ivf.clearTombstones(spark, idx)
     }
     assert(e1.getMessage.contains("no compact postdates"), e1.getMessage)
-    Ivf.compactInPlace(spark, idx)
+    assert(Ivf.maintain(spark, idx, maxFilesPerShard = 0)
+      .isInstanceOf[Ivf.MaintainCompacted])
     // (b) the float side is clean now, but the registered sibling
     // predates the delete and still holds row 5
     val e2 = intercept[IllegalStateException] {

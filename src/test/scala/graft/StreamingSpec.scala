@@ -1145,7 +1145,7 @@ class StreamingSpec extends SparkSpec {
     // simulate the process dying between the swap's two renames — the
     // crash window whose recovery used to exist only as a comment
     intercept[RuntimeException] {
-      Ivf.compactInPlace(spark, idx, betweenRenames =
+      Ivf.maintain(spark, idx, maxFilesPerShard = 0, betweenRenames =
         () => throw new RuntimeException("simulated crash"))
     }
     assert(!new java.io.File(idx.vectorsPath).exists(),

@@ -70,7 +70,7 @@ class StressSpec extends SparkSpec {
   test("readers racing maintained compaction: every warm search is " +
       "either complete-correct or a retried transient (the scaladoc's " +
       "last unverified lifecycle claim, now a gate)") {
-    // the swap between compactInPlace's two renames can fail ONE scan —
+    // the swap between maintain's two renames can fail ONE scan —
     // the documented retry-safe boundary. This drives a reader thread
     // through many swaps and asserts the only observable outcomes are
     // (a) the exact probe-all answer or (b) a transient error whose
@@ -114,7 +114,10 @@ class StressSpec extends SparkSpec {
     }, "graft-race-reader")
     reader.start()
     try {
-      (0 until 6).foreach { _ => Ivf.compactInPlace(spark, idx) }
+      (0 until 6).foreach { _ =>
+        assert(Ivf.maintain(spark, idx, maxFilesPerShard = 0)
+          .isInstanceOf[Ivf.MaintainCompacted])
+      }
     } finally {
       stop.set(true)
       reader.join()
