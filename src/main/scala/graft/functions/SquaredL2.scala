@@ -16,8 +16,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * element (~5× slower, measured in VecSpec's micro-benchmark).
   *
   * Result parity: accumulates left-to-right in double exactly like the
-  * HOF form and the DuckDB oracle's `list_reduce` fold, so results are
-  * bitwise identical and oracle queries can use it directly.
+  * HOF form and the DuckDB oracle's fold
+  * ([[graft.queries.OracleGen.l2Sql]]), so results are bitwise
+  * identical and oracle queries can use it directly.
   *
   * Semantics: null input → null; mismatched lengths → null (the HOF
   * form yields null there too via zip_with padding); a null element

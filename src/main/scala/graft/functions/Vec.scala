@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * (`/root/reference/src/utils.rs:28-30`): squared Euclidean distance,
   * no sqrt anywhere on the query path. All arithmetic is promoted to
   * double *before* the subtraction so results are identical to the
-  * DuckDB oracle's `CAST(x AS DOUBLE)` fold (float->double is exact,
-  * and both engines fold the element list sequentially left-to-right,
-  * so results are bitwise-reproducible regardless of partitioning).
+  * DuckDB oracle's folds ([[graft.queries.OracleGen.l2Sql]], `dotSql`,
+  * `normSql`): float->double is exact, and both engines fold the
+  * element list sequentially left-to-right, so results are
+  * bitwise-reproducible regardless of partitioning.
   *
   * These are pure Catalyst higher-order-function expressions: they stay
   * inside whole-stage codegen (no UDF boxing), never explode the array,

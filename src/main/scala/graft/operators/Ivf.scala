@@ -464,37 +464,32 @@ object Ivf {
       .parquet(path)
   }
 
-  /** Lease fencing appends against [[maintain]]'s swap (sibling of the
-    * vectors dir, like the tombstone sidecar).
+  /** The index directory: the parent of `vectors/`, where the leases,
+    * the tombstone sidecar, the materialized marker, the sibling
+    * registry and the swap dirs live beside it. The layout invariant is
+    * guarded because a mis-derived path would write those INSIDE the
+    * partitioned dataset and corrupt scans.
     */
-  private[graft] def writerLeasePath(index: Index): org.apache.hadoop.fs.Path = {
+  private def indexDir(index: Index): String = {
     require(index.vectorsPath.endsWith("/vectors"),
       s"index vectorsPath must end in /vectors (got ${index.vectorsPath})")
-    new org.apache.hadoop.fs.Path(
-      index.vectorsPath.stripSuffix("/vectors") + "/__writer_lease")
+    index.vectorsPath.stripSuffix("/vectors")
   }
+
+  /** Lease fencing appends against [[maintain]]'s swap. */
+  private[graft] def writerLeasePath(index: Index): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(s"${indexDir(index)}/__writer_lease")
 
   /** Lease serializing [[maintain]], the one rewrite-and-swap: two
     * concurrent directory swappers would race the renames, so the
     * second fails FAST by name instead.
     */
-  private[graft] def maintainerLeasePath(index: Index): org.apache.hadoop.fs.Path = {
-    require(index.vectorsPath.endsWith("/vectors"),
-      s"index vectorsPath must end in /vectors (got ${index.vectorsPath})")
-    new org.apache.hadoop.fs.Path(
-      index.vectorsPath.stripSuffix("/vectors") + "/__maintain_lease")
-  }
+  private[graft] def maintainerLeasePath(index: Index): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(s"${indexDir(index)}/__maintain_lease")
 
-  /** Tombstone sidecar location (sibling of `vectors/`). The layout
-    * invariant is guarded because a mis-derived path would write the
-    * sidecar INSIDE the partitioned dataset and corrupt scans.
-    */
-  private def tombstonesPath(index: Index): String = {
-    require(index.vectorsPath.endsWith("/vectors"),
-      s"index vectorsPath must end in /vectors (got ${index.vectorsPath}) — " +
-        "the tombstone sidecar lives beside that directory")
-    index.vectorsPath.stripSuffix("/vectors") + "/tombstones"
-  }
+  /** Tombstone sidecar location (sibling of `vectors/`). */
+  private def tombstonesPath(index: Index): String =
+    s"${indexDir(index)}/tombstones"
 
   /** Delete vectors by external id — the faiss `remove_ids` analog, in
     * merge-on-read form: ids append to a tombstone sidecar (one file
@@ -733,12 +728,8 @@ object Ivf {
     * is flagged until ONE compact pays it, not forever) and what
     * [[clearTombstones]] verifies.
     */
-  private def materializedMarkerPath(index: Index): org.apache.hadoop.fs.Path = {
-    require(index.vectorsPath.endsWith("/vectors"),
-      s"index vectorsPath must end in /vectors (got ${index.vectorsPath})")
-    new org.apache.hadoop.fs.Path(
-      index.vectorsPath.stripSuffix("/vectors") + "/__tombstones_materialized")
-  }
+  private def materializedMarkerPath(index: Index): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(s"${indexDir(index)}/__tombstones_materialized")
 
   private def writeMaterializedMarker(fs: org.apache.hadoop.fs.FileSystem,
       index: Index, fp: String, count: Long): Unit = {
@@ -813,12 +804,8 @@ object Ivf {
     registerSibling(spark, index, outPath, fp)
   }
 
-  private def siblingsDir(index: Index): org.apache.hadoop.fs.Path = {
-    require(index.vectorsPath.endsWith("/vectors"),
-      s"index vectorsPath must end in /vectors (got ${index.vectorsPath})")
-    new org.apache.hadoop.fs.Path(
-      index.vectorsPath.stripSuffix("/vectors") + "/__siblings")
-  }
+  private def siblingsDir(index: Index): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(s"${indexDir(index)}/__siblings")
 
   private def listSiblings(fs: org.apache.hadoop.fs.FileSystem,
       index: Index): Seq[(String, String)] = {
@@ -963,10 +950,7 @@ object Ivf {
 
   private def recoverImpl(spark: SparkSession, index: Index,
       ownLease: Boolean, leaseStaleTtlMs: Long): Boolean = {
-    val base = index.vectorsPath.stripSuffix("/vectors")
-    require(base != index.vectorsPath,
-      s"recoverFromCrashedCompact: vectorsPath must end in /vectors " +
-        s"(got ${index.vectorsPath})")
+    val base = indexDir(index)
     val live = new org.apache.hadoop.fs.Path(index.vectorsPath)
     val trash = new org.apache.hadoop.fs.Path(s"$base/__compact_trash")
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1109,9 +1093,7 @@ object Ivf {
       beforeFence: () => Unit = () => (),
       betweenRenames: () => Unit = () => ()): MaintainOutcome = {
     val id = effectiveIdCol(index, idCol)
-    val base = index.vectorsPath.stripSuffix("/vectors")
-    require(base != index.vectorsPath,
-      s"maintain: vectorsPath must end in /vectors (got ${index.vectorsPath})")
+    val base = indexDir(index)
     val livePath = new org.apache.hadoop.fs.Path(index.vectorsPath)
     val fs = livePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     FsLease.withLease(fs, maintainerLeasePath(index),
@@ -1589,10 +1571,11 @@ object Ivf {
     * the difference between nq scans and one.
     *
     * Distances are bitwise those of [[graft.functions.SquaredL2]] (and so
-    * of the DuckDB oracle): `(double) x_i − (double) q_i`, squared,
-    * summed left to right. A NULL or ragged embedding, or a NULL
-    * element, gives a NULL distance, ranked after every number; NaN
-    * ranks after every other number; ties break by smaller id.
+    * of the DuckDB oracle's [[graft.queries.OracleGen.l2Sql]]):
+    * `(double) x_i − (double) q_i`, squared, summed left to right. A
+    * NULL or ragged embedding, or a NULL element, gives a NULL
+    * distance, ranked after every number; NaN ranks after every other
+    * number; ties break by smaller id.
     *
     * @param queries (query_id: Long, embedding: Array[Float]) pairs with
     *                distinct ids; must be driver-sized (it is broadcast)

@@ -5,7 +5,8 @@ import scala.util.Random
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Mini-batch k-means with k-means++ init — the reference engine's trainer
+/** k-means++ init + exact Lloyd — the stand-in for the reference engine's
+  * mini-batch trainer
   * (`/root/reference/src/kmeans.rs`), re-architected for Spark.
   *
   * Algorithm semantics preserved (public knowledge: Lloyd 1982; Arthur &
@@ -13,10 +14,7 @@ import org.apache.spark.sql.functions._
   * 2010), with the reference's exact heuristics:
   *   - cluster count `√n | 2⌈√n⌉ | 4⌈√n⌉` by n (`src/utils.rs:9-16`)
   *   - iteration budget 300/100/50/20 by n (`src/utils.rs:18-26`)
-  *   - mini-batch size clamp(⌊√n⌋, 10, 256) (`src/kmeans.rs:83`)
   *   - k-means++ init over a ≤50k sample (`src/kmeans.rs:154-164`)
-  *   - per-cluster learning rate eta = 1/(count+1) (`src/kmeans.rs:729-787`)
-  *   - empty-cluster reseed from random points (`src/kmeans.rs:313-331`)
   *   - RMS centroid-delta early stop < 1e-4 (`src/kmeans.rs:22,133-141`)
   *   - hierarchical 2-level assignment when k > 100: meta_k =
   *     clamp(√k, 2, k/2), probe top-3 meta-centroids (`src/kmeans.rs:474-581`)
@@ -26,12 +24,12 @@ import org.apache.spark.sql.functions._
   * 100 TB table that is one full scan per iteration — 50+ scans to read
   * 12 KB of useful data. Instead we take ONE seeded distributed sample
   * (cap `poolCap` = 50k rows, the same cap the reference applies to its
-  * k-means++ init) and run the entire mini-batch loop driver-side over
-  * that pool. Training cost becomes independent of table size; only the
-  * single sampling scan and the final assignment pass touch all data.
-  * Statistically this is uniform sub-sampling — mini-batch k-means is
-  * itself a stochastic approximation, and the reference's own quality
-  * gates (inertia ratios, recall floors) are what we re-assert in tests.
+  * k-means++ init) and train driver-side over that pool with exact
+  * Lloyd in place of the mini-batch loop (why: [[trainDriver]]).
+  * Training cost becomes independent of table size; only the single
+  * sampling scan and the final assignment pass touch all data. The
+  * reference's own quality gates (inertia ratios, recall floors) are
+  * what we re-assert in tests.
   */
 object KMeans {
 
@@ -437,21 +435,6 @@ object KMeans {
     out
   }
 
-  /** Default trainer over an in-memory pool: k-means++ init + exact
-    * parallel Lloyd with starved-cluster splitting. Used for the main
-    * trainer (over the distributed sample) and the tiny super-centroid /
-    * meta-centroid clusterings.
-    *
-    * Deliberate divergence from the reference's mini-batch loop: on a
-    * driver-held pool (≤50k rows) exact Lloyd costs the same per pass as
-    * one mini-batch epoch, converges to visibly better optima, and avoids
-    * mini-batch's outlier-pinning (measured on the sf0.01 embeddings:
-    * mini-batch+Lloyd-refine stalls at inertia ≈447 with 8 singleton
-    * clusters; kpp+Lloyd reaches ≈432 with sizes 15-29). Balanced cells
-    * are what make IVF probe pruning effective at scale. The reference's
-    * mini-batch semantics live on in [[trainMiniBatch]] and its quality
-    * gate (mini-vs-full inertia < 1.5×, kmeans_tests.rs:541-579).
-    */
   /** Every pool row must share one dimension. Training runs BEFORE
     * Ivf.build's map-side raise_error guard, so a ragged row here used
     * to AIOOBE mid-training inside a parallel stream (or, with the
@@ -473,6 +456,19 @@ object KMeans {
     }
   }
 
+  /** Default trainer over an in-memory pool: k-means++ init + exact
+    * parallel Lloyd with starved-cluster splitting. Used for the main
+    * trainer (over the distributed sample) and the tiny super-centroid /
+    * meta-centroid clusterings.
+    *
+    * Deliberate divergence from the reference's mini-batch loop: on a
+    * driver-held pool (≤50k rows) exact Lloyd costs the same per pass as
+    * one mini-batch epoch, converges to visibly better optima, and avoids
+    * mini-batch's outlier-pinning (measured on the sf0.01 embeddings:
+    * mini-batch+Lloyd-refine stalls at inertia ≈447 with 8 singleton
+    * clusters; kpp+Lloyd reaches ≈432 with sizes 15-29). Balanced cells
+    * are what make IVF probe pruning effective at scale.
+    */
   def trainDriver(pool: Array[Array[Float]], k0: Int, iters: Int, seed: Long): Model = {
     require(pool.nonEmpty, "k-means: empty input")
     requireUniformDim(pool)
@@ -488,94 +484,6 @@ object KMeans {
     val rng = new Random(seed)
     val centroids = kppInit(pool, k, rng)
     refineLloyd(pool, centroids, iters, rng, seed)
-    Model(centroids)
-  }
-
-  /** Reference-faithful mini-batch k-means (`src/kmeans.rs:64-150`):
-    * seeded batches drawn WITHOUT replacement (shuffle-and-take,
-    * `src/kmeans.rs:722-726`), per-cluster learning rate applied ONCE
-    * per batch as a blend toward the cluster's batch MEAN with
-    * eta = 1/(count+1) where count advances once per batch hit
-    * (`src/kmeans.rs:729-787`), empty-cluster reseed, RMS delta early
-    * stop. The per-batch shape matters: a per-point update with a
-    * per-point count decays eta batch-size times faster and pins
-    * centroids near their k-means++ init, and a with-replacement draw
-    * double-weights duplicate points as the batch size approaches the
-    * pool (r15 review — both were silent divergences from the
-    * reference this docstring claims parity with).
-    */
-  def trainMiniBatch(pool: Array[Array[Float]], k0: Int, iters: Int, seed: Long): Model = {
-    require(pool.nonEmpty, "k-means: empty input")
-    requireUniformDim(pool)
-    val n = pool.length
-    val k = math.min(k0, n)
-    val rng = new Random(seed)
-    val centroids = kppInit(pool, k, rng)
-    val counts = new Array[Long](k)
-    val bs = batchSize(n.toLong)
-    val dim = pool(0).length
-    var iter = 0
-    var converged = false
-    while (iter < iters && !converged) {
-      val prev = centroids.map(_.clone())
-      // seeded batch sample without replacement (T4, src/kmeans.rs:722)
-      val batch = rng.shuffle((0 until n).toVector).take(bs)
-        .map(pool(_)).toArray
-      // assign batch (brute force — batch is tiny)
-      val labels = batch.map(p => nearest(p, centroids)._1)
-      // one blend per hit cluster toward its batch mean
-      // (src/kmeans.rs:729-787): first hit jumps fully to the mean
-      // (eta = 1), later batches decay as 1/batches-seen
-      val sums = Array.fill(k)(new Array[Double](dim))
-      val hits = new Array[Int](k)
-      var b = 0
-      while (b < batch.length) {
-        val l = labels(b)
-        hits(l) += 1
-        val pvec = batch(b)
-        val s = sums(l)
-        var j = 0
-        while (j < dim) { s(j) += pvec(j); j += 1 }
-        b += 1
-      }
-      var cu = 0
-      while (cu < k) {
-        if (hits(cu) > 0) {
-          counts(cu) += 1
-          val eta = 1.0 / counts(cu)
-          val cvec = centroids(cu)
-          val s = sums(cu)
-          var j = 0
-          while (j < dim) {
-            cvec(j) =
-              ((1.0 - eta) * cvec(j) + eta * (s(j) / hits(cu))).toFloat
-            j += 1
-          }
-        }
-        cu += 1
-      }
-      // empty-cluster reseed (src/kmeans.rs:313-331): clusters never hit
-      // by any batch so far get re-centered on a random pool point
-      var c = 0
-      while (c < k) {
-        if (counts(c) == 0L) centroids(c) = pool(rng.nextInt(n)).clone()
-        c += 1
-      }
-      // RMS delta early stop (src/kmeans.rs:334-351)
-      var sum = 0.0
-      c = 0
-      while (c < k) {
-        var j = 0
-        while (j < dim) {
-          val d = centroids(c)(j).toDouble - prev(c)(j).toDouble
-          sum += d * d
-          j += 1
-        }
-        c += 1
-      }
-      if (math.sqrt(sum / (k.toLong * dim)) < ConvergenceThreshold) converged = true
-      iter += 1
-    }
     Model(centroids)
   }
 

@@ -13,7 +13,8 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
   *
   * Distance contract: `(double) x_i − (double) q_i`, squared, summed
   * left to right — the fold [[graft.functions.SquaredL2]]'s codegen runs,
-  * so every distance is bitwise the DuckDB oracle's. A NULL or ragged
+  * so every distance is bitwise the DuckDB oracle's
+  * ([[graft.queries.OracleGen.l2Sql]]). A NULL or ragged
   * embedding, or one with a NULL element, has a NULL distance, exactly
   * as `SquaredL2` yields. Rank order is [[TopNByKey]]'s:
   * `java.lang.Double.compare` on distance (NaN after every number),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Vec
 import graft.queries.TextQueries.tokens
+import graft.queries.OracleGen.{dotSql, normSql}
 
 /** Deduplication operators over `documents.parquet` / `embeddings.parquet`:
   * exact (fingerprint group-by), MinHash+LSH banding, SimHash, n-gram
@@ -1124,12 +1125,9 @@ FROM comp"""
        |    ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id),
        |cs AS (
        |  SELECT
-       |    list_reduce(list_transform(list_zip(ea.embedding, eb.embedding),
-       |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (x, y) -> x + y) AS dp,
-       |    sqrt(list_reduce(list_transform(ea.embedding,
-       |      v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)) AS na,
-       |    sqrt(list_reduce(list_transform(eb.embedding,
-       |      v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)) AS nb
+       |    ${dotSql("ea.embedding", "eb.embedding")} AS dp,
+       |    ${normSql("ea.embedding")} AS na,
+       |    ${normSql("eb.embedding")} AS nb
        |  FROM pairs p
        |  JOIN embeddings ea ON ea.vec_id = p.a_id
        |  JOIN embeddings eb ON eb.vec_id = p.b_id)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.Ivf
+import graft.queries.OracleGen.{dotSql, l2Sql, normSql}
 
 /** IVF index build + search wired into the driver gate.
   *
@@ -39,11 +40,9 @@ object IndexQueries {
   }
 
   private val searchProbeAllSql: String =
-    """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
+    s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
       |SELECT e.vec_id AS external_id,
-      |  list_reduce(list_transform(list_zip(e.embedding, q.qe),
-      |    p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-      |    (a, b) -> a + b) AS distance
+      |  ${l2Sql("e.embedding", "q.qe")} AS distance
       |FROM embeddings e CROSS JOIN q
       |ORDER BY distance, e.vec_id LIMIT 10""".stripMargin
 
@@ -60,11 +59,9 @@ object IndexQueries {
   }
 
   private val searchFilteredAllSql: String =
-    """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
+    s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
       |SELECT e.vec_id AS external_id,
-      |  list_reduce(list_transform(list_zip(e.embedding, q.qe),
-      |    p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-      |    (a, b) -> a + b) AS distance
+      |  ${l2Sql("e.embedding", "q.qe")} AS distance
       |FROM embeddings e CROSS JOIN q
       |WHERE e.label = 3
       |ORDER BY distance, e.vec_id LIMIT 10""".stripMargin
@@ -81,12 +78,10 @@ object IndexQueries {
   }
 
   private val rangeSearchAllSql: String =
-    """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
+    s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
       |SELECT * FROM (
       |  SELECT e.vec_id AS external_id,
-      |    list_reduce(list_transform(list_zip(e.embedding, q.qe),
-      |      p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-      |      (a, b) -> a + b) AS distance
+      |    ${l2Sql("e.embedding", "q.qe")} AS distance
       |  FROM embeddings e CROSS JOIN q)
       |WHERE distance < 1.5
       |ORDER BY distance, external_id""".stripMargin
@@ -183,22 +178,18 @@ object IndexQueries {
     * per-phase body of [[searchDeletedSql]].
     */
   private[queries] val deletedSurvivorTop10Sql: String =
-    """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 10)
+    s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 10)
       |SELECT e.vec_id AS external_id,
-      |  list_reduce(list_transform(list_zip(e.embedding, q.qe),
-      |    p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-      |    (a, b) -> a + b) AS distance
+      |  ${l2Sql("e.embedding", "q.qe")} AS distance
       |FROM embeddings e CROSS JOIN q
       |WHERE e.vec_id < 300 AND e.vec_id % 7 <> 3
       |ORDER BY distance, e.vec_id LIMIT 10""".stripMargin
 
   private val searchDeletedSql: String =
-    """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 10),
+    s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 10),
       |s AS (
       |  SELECT e.vec_id AS external_id,
-      |    list_reduce(list_transform(list_zip(e.embedding, q.qe),
-      |      p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-      |      (a, b) -> a + b) AS distance
+      |    ${l2Sql("e.embedding", "q.qe")} AS distance
       |  FROM embeddings e CROSS JOIN q
       |  WHERE e.vec_id < 300 AND e.vec_id % 7 <> 3
       |  ORDER BY distance, e.vec_id LIMIT 10)
@@ -250,12 +241,10 @@ object IndexQueries {
   }
 
   private val searchCustomIdSql: String =
-    """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 10),
+    s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 10),
       |s AS (
       |  SELECT e.vec_id AS external_id,
-      |    list_reduce(list_transform(list_zip(e.embedding, q.qe),
-      |      p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-      |      (a, b) -> a + b) AS distance
+      |    ${l2Sql("e.embedding", "q.qe")} AS distance
       |  FROM embeddings e CROSS JOIN q
       |  WHERE e.vec_id < 300 AND e.vec_id % 7 <> 3
       |  ORDER BY distance, e.vec_id LIMIT 10)
@@ -278,14 +267,12 @@ object IndexQueries {
   }
 
   private[queries] val annJoinTopKSql: String =
-    """WITH q AS (
+    s"""WITH q AS (
       |  SELECT vec_id AS query_id, embedding AS qe FROM embeddings
       |  WHERE vec_id >= 480 AND vec_id < 500),
       |d AS (
       |  SELECT q.query_id, e.vec_id,
-      |    list_reduce(list_transform(list_zip(e.embedding, q.qe),
-      |      p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-      |      (a, b) -> a + b) AS distance
+      |    ${l2Sql("e.embedding", "q.qe")} AS distance
       |  FROM embeddings e CROSS JOIN q),
       |r AS (
       |  SELECT query_id, vec_id, distance,
@@ -313,14 +300,12 @@ object IndexQueries {
   }
 
   private val hardNegativesSql: String =
-    """WITH q AS (
+    s"""WITH q AS (
       |  SELECT vec_id AS query_id, embedding AS qe, label AS q_label
       |  FROM embeddings WHERE vec_id >= 480 AND vec_id < 500),
       |d AS (
       |  SELECT q.query_id, e.vec_id,
-      |    list_reduce(list_transform(list_zip(e.embedding, q.qe),
-      |      p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-      |      (a, b) -> a + b) AS distance
+      |    ${l2Sql("e.embedding", "q.qe")} AS distance
       |  FROM embeddings e CROSS JOIN q
       |  WHERE e.label <> q.q_label),
       |r AS (
@@ -367,14 +352,12 @@ object IndexQueries {
   }
 
   private val knnLabelPredictSql: String =
-    """WITH q AS (
+    s"""WITH q AS (
       |  SELECT vec_id AS query_id, embedding AS qe, label AS true_label
       |  FROM embeddings WHERE vec_id >= 480 AND vec_id < 500),
       |d AS (
       |  SELECT q.query_id, e.vec_id, e.label AS n_label,
-      |    list_reduce(list_transform(list_zip(e.embedding, q.qe),
-      |      p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-      |      (a, b) -> a + b) AS distance
+      |    ${l2Sql("e.embedding", "q.qe")} AS distance
       |  FROM embeddings e CROSS JOIN q
       |  WHERE e.vec_id <> q.query_id),
       |nn AS (
@@ -420,9 +403,7 @@ object IndexQueries {
     val ids = probedCandidateIds(spark, dir, queryVec(spark, dir, 1L), 20)
     s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 1)
        |SELECT e.vec_id AS external_id,
-       |  list_reduce(list_transform(list_zip(e.embedding, q.qe),
-       |    p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-       |    (a, b) -> a + b) AS distance
+       |  ${l2Sql("e.embedding", "q.qe")} AS distance
        |FROM embeddings e CROSS JOIN q
        |WHERE e.vec_id IN (${OracleGen.lits(ids.toIndexedSeq.map(_.toString))})
        |ORDER BY distance, e.vec_id LIMIT 10""".stripMargin
@@ -453,9 +434,7 @@ object IndexQueries {
        |assign(vec_id, centroid_id) AS (VALUES $assignVals),
        |d AS (
        |  SELECT p.query_id, a.vec_id,
-       |    list_reduce(list_transform(list_zip(e.embedding, q.qe),
-       |      p2 -> (CAST(p2[1] AS DOUBLE) - CAST(p2[2] AS DOUBLE)) * (CAST(p2[1] AS DOUBLE) - CAST(p2[2] AS DOUBLE))),
-       |      (a2, b2) -> a2 + b2) AS distance
+       |    ${l2Sql("e.embedding", "q.qe")} AS distance
        |  FROM probe p
        |  JOIN assign a ON a.centroid_id = p.centroid_id
        |  JOIN embeddings e ON e.vec_id = a.vec_id
@@ -530,12 +509,10 @@ object IndexQueries {
   }
 
   private val searchBatchProbeAllSql =
-    """WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 8),
+    s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 8),
       |d AS (
       |  SELECT q.query_id, e.vec_id,
-      |    list_reduce(list_transform(list_zip(e.embedding, q.qe),
-      |      p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-      |      (a, b) -> a + b) AS distance
+      |    ${l2Sql("e.embedding", "q.qe")} AS distance
       |  FROM embeddings e CROSS JOIN q),
       |r AS (SELECT query_id, vec_id, distance,
       |        ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY distance, vec_id) AS rank
@@ -774,17 +751,12 @@ object IndexQueries {
        |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
        |l2 AS (
        |  SELECT e.vec_id FROM embeddings e CROSS JOIN q
-       |  ORDER BY list_reduce(list_transform(list_zip(e.embedding, q.qe),
-       |    p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-       |    (a, b) -> a + b), e.vec_id LIMIT 10),
+       |  ORDER BY ${l2Sql("e.embedding", "q.qe")}, e.vec_id LIMIT 10),
        |cs AS (
        |  SELECT e.vec_id,
-       |    list_reduce(list_transform(list_zip(e.embedding, q.qe),
-       |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS dp,
-       |    sqrt(list_reduce(list_transform(e.embedding,
-       |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b)) AS na,
-       |    sqrt(list_reduce(list_transform(q.qe,
-       |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b)) AS nb
+       |    ${dotSql("e.embedding", "q.qe")} AS dp,
+       |    ${normSql("e.embedding")} AS na,
+       |    ${normSql("q.qe")} AS nb
        |  FROM embeddings e CROSS JOIN q),
        |cos AS (
        |  SELECT vec_id FROM cs
@@ -967,9 +939,7 @@ object IndexQueries {
        |short AS (SELECT vec_id FROM adc ORDER BY adist, vec_id LIMIT 40),
        |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
        |SELECT e.vec_id AS external_id,
-       |  list_reduce(list_transform(list_zip(e.embedding, q.qe),
-       |    p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-       |    (a, b) -> a + b) AS distance
+       |  ${l2Sql("e.embedding", "q.qe")} AS distance
        |FROM embeddings e JOIN short s ON s.vec_id = e.vec_id CROSS JOIN q
        |ORDER BY distance, e.vec_id LIMIT 10""".stripMargin
   }
@@ -993,11 +963,9 @@ object IndexQueries {
     s"""WITH q AS (SELECT ${OracleGen.dblList(q.map(_.toDouble).toSeq)} AS qe),
        |p AS (
        |  SELECT e.vec_id,
-       |    list_reduce(list_transform(list_zip(e.embedding, q.qe),
-       |      z -> CAST(z[1] AS DOUBLE) * z[2]), (a, b) -> a + b) AS dp,
-       |    sqrt(list_reduce(list_transform(e.embedding,
-       |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b)) AS na,
-       |    sqrt(list_reduce(list_transform(q.qe, x -> x * x), (a, b) -> a + b)) AS nb
+       |    ${dotSql("e.embedding", "q.qe")} AS dp,
+       |    ${normSql("e.embedding")} AS na,
+       |    ${normSql("q.qe")} AS nb
        |  FROM embeddings e CROSS JOIN q
        |  WHERE e.vec_id IN (${OracleGen.lits(ids.toIndexedSeq.map(_.toString))}))
        |SELECT vec_id,
@@ -1051,9 +1019,7 @@ object IndexQueries {
        |  SELECT query_id, vec_id AS gt_id FROM (
        |    SELECT p.query_id, a.vec_id,
        |      ROW_NUMBER() OVER (PARTITION BY p.query_id ORDER BY
-       |        list_reduce(list_transform(list_zip(e.embedding, q.qe),
-       |          p2 -> (CAST(p2[1] AS DOUBLE) - p2[2]) * (CAST(p2[1] AS DOUBLE) - p2[2])),
-       |          (a2, b2) -> a2 + b2), a.vec_id) AS rn
+       |        ${l2Sql("e.embedding", "q.qe")}, a.vec_id) AS rn
        |    FROM probe p
        |    JOIN assign a ON a.centroid_id = p.centroid_id
        |    JOIN embeddings e ON e.vec_id = a.vec_id
@@ -1063,9 +1029,7 @@ object IndexQueries {
        |cand AS (
        |  SELECT p.n_probe, p.query_id, a.vec_id,
        |    ROW_NUMBER() OVER (PARTITION BY p.n_probe, p.query_id ORDER BY
-       |      list_reduce(list_transform(list_zip(e.embedding, q.qe),
-       |        p2 -> (CAST(p2[1] AS DOUBLE) - p2[2]) * (CAST(p2[1] AS DOUBLE) - p2[2])),
-       |        (a2, b2) -> a2 + b2), a.vec_id) AS rn
+       |      ${l2Sql("e.embedding", "q.qe")}, a.vec_id) AS rn
        |  FROM probe p
        |  JOIN assign a ON a.centroid_id = p.centroid_id
        |  JOIN embeddings e ON e.vec_id = a.vec_id

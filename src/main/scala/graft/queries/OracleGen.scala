@@ -87,6 +87,27 @@ object OracleGen {
   /** Single-quoted SQL string literal. */
   def str(s: String): String = "'" + s.replace("'", "''") + "'"
 
+  /* The oracle's vector math, defined once. Every element is CAST to
+   * DOUBLE before any arithmetic (float -> double is exact; a DOUBLE
+   * side makes the cast a no-op) and the terms are summed by
+   * `list_reduce`, left to right — the order of the engine's
+   * [[graft.functions.SquaredL2]] and [[graft.functions.Vec]] folds, so
+   * the two sides agree bit for bit. Arguments are SQL list
+   * expressions; the lambda names shadow any column of the same name.
+   */
+
+  /** Squared L2 distance `Σ (x_i − y_i)²` of two list expressions. */
+  def l2Sql(x: String, y: String): String =
+    s"list_reduce(list_transform(list_zip($x, $y), p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))), (a, b) -> a + b)"
+
+  /** Dot product `Σ x_i · y_i` of two list expressions. */
+  def dotSql(x: String, y: String): String =
+    s"list_reduce(list_transform(list_zip($x, $y), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (a, b) -> a + b)"
+
+  /** Euclidean norm `sqrt(Σ x_i²)` of a list expression. */
+  def normSql(x: String): String =
+    s"sqrt(list_reduce(list_transform($x, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b))"
+
   /** The ADC top-k oracle shared by the PQ family: codes inlined as
     * VALUES, the per-query LUT as one array literal, distance =
     * left-to-right fold of lut[j][code_j + 129] (1-based, codes stored

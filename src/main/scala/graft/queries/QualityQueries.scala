@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.queries.TextQueries.tokens
+import graft.queries.OracleGen.l2Sql
 
 /** Training-data quality filters over `documents.parquet`:
   * Gopher-style repetition ratios and benchmark-decontamination n-gram
@@ -430,15 +431,12 @@ object QualityQueries {
   }
 
   private val semanticDecontamSql =
-    """WITH q AS (
+    s"""WITH q AS (
       |  SELECT vec_id AS test_id, embedding AS qe
       |  FROM embeddings WHERE vec_id < 32),
       |d AS (
       |  SELECT e.vec_id, e.label,
-      |    list_reduce(list_transform(list_zip(e.embedding, q.qe),
-      |      p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-      |         * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-      |      (a, b) -> a + b) AS d2
+      |    ${l2Sql("e.embedding", "q.qe")} AS d2
       |  FROM embeddings e CROSS JOIN q WHERE e.vec_id >= 32)
       |SELECT vec_id, label, min(d2) AS best_d2,
       |  CAST(sum(CASE WHEN d2 <= 1.35 THEN 1 ELSE 0 END) AS BIGINT) AS n_close

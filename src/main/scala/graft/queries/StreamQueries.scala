@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.sources.Multimodal
 import graft.streaming.EventsStreaming
+import graft.queries.OracleGen.{dotSql, normSql}
 
 /** Streaming + multimodal operators in the driver gate. The streaming
   * queries are oracle-checked against the SAME DuckDB SQL as their batch
@@ -307,7 +308,7 @@ object StreamQueries {
       |FROM d GROUP BY modality ORDER BY modality""".stripMargin
 
   private val multimodalFeaturePairsSql =
-    """WITH a AS (
+    s"""WITH a AS (
       |  SELECT doc_id AS asset_id, text FROM documents WHERE doc_id < 60),
       |f AS (
       |  SELECT asset_id,
@@ -317,12 +318,9 @@ object StreamQueries {
       |  FROM a),
       |p AS (
       |  SELECT l.asset_id AS a_id, r.asset_id AS b_id,
-      |    list_reduce(list_transform(list_zip(l.feat, r.feat),
-      |      q -> CAST(q[1] AS DOUBLE) * CAST(q[2] AS DOUBLE)), (x, y) -> x + y) AS dp,
-      |    sqrt(list_reduce(list_transform(l.feat,
-      |      v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)) AS na,
-      |    sqrt(list_reduce(list_transform(r.feat,
-      |      v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)) AS nb
+      |    ${dotSql("l.feat", "r.feat")} AS dp,
+      |    ${normSql("l.feat")} AS na,
+      |    ${normSql("r.feat")} AS nb
       |  FROM f l JOIN f r ON l.asset_id < r.asset_id)
       |SELECT a_id, b_id,
       |  round(CASE WHEN na = 0 OR nb = 0 THEN 0.0 ELSE dp / (na * nb) END, 4) AS cos_sim

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.queries.OracleGen.{dotSql, normSql}
 
 /** Text-analysis operators over `documents.parquet` — the LLM-data-pipeline
   * surface (token counting, quality scoring, language-ID heuristic,
@@ -1150,12 +1151,9 @@ object TextQueries {
     s"""WITH ${chunkFeatureCtes()},
       |p AS (
       |  SELECT q.doc_id AS query_id, q.cidx AS qidx, d.doc_id,
-      |    list_reduce(list_transform(list_zip(q.feat, d.feat),
-      |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y) AS dp,
-      |    sqrt(list_reduce(list_transform(q.feat,
-      |      v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)) AS nq,
-      |    sqrt(list_reduce(list_transform(d.feat,
-      |      v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)) AS nd
+      |    ${dotSql("q.feat", "d.feat")} AS dp,
+      |    ${normSql("q.feat")} AS nq,
+      |    ${normSql("d.feat")} AS nd
       |  FROM f q JOIN f d ON q.doc_id < 8 AND d.doc_id >= 8),
       |mx AS (
       |  SELECT query_id, qidx, doc_id,
@@ -1259,12 +1257,9 @@ object TextQueries {
        |${chunkFeatureCtes()},
        |p AS (
        |  SELECT cd.query_id, q.cidx AS qidx, cd.doc_id,
-       |    list_reduce(list_transform(list_zip(q.feat, d.feat),
-       |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y) AS dp,
-       |    sqrt(list_reduce(list_transform(q.feat,
-       |      v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)) AS nq,
-       |    sqrt(list_reduce(list_transform(d.feat,
-       |      v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)) AS nd
+       |    ${dotSql("q.feat", "d.feat")} AS dp,
+       |    ${normSql("q.feat")} AS nq,
+       |    ${normSql("d.feat")} AS nd
        |  FROM cand cd
        |  JOIN f q ON q.doc_id = cd.query_id
        |  JOIN f d ON d.doc_id = cd.doc_id),
@@ -1397,12 +1392,9 @@ object TextQueries {
        |               ELSE dp / (nq * nd) END, 6) AS pc
        |  FROM (
        |    SELECT cd.query_id, cd.doc_id,
-       |      list_reduce(list_transform(list_zip(q.p, d.p),
-       |        z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y) AS dp,
-       |      sqrt(list_reduce(list_transform(q.p,
-       |        v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)) AS nq,
-       |      sqrt(list_reduce(list_transform(d.p,
-       |        v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)) AS nd
+       |      ${dotSql("q.p", "d.p")} AS dp,
+       |      ${normSql("q.p")} AS nq,
+       |      ${normSql("d.p")} AS nd
        |    FROM cand cd
        |    JOIN pooled q ON q.doc_id = cd.query_id
        |    JOIN pooled d ON d.doc_id = cd.doc_id) x),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.Vec
+import graft.queries.OracleGen.{dotSql, l2Sql, normSql}
 
 /** Exact (brute-force) vector-search operators over `embeddings.parquet`.
   *
@@ -35,9 +36,7 @@ object VectorQueries {
   private def knnExactSql(qid: Long, k: Int): String =
     s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = $qid)
        |SELECT e.vec_id,
-       |  list_reduce(list_transform(list_zip(e.embedding, q.qe),
-       |    p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-       |    (a, b) -> a + b) AS distance
+       |  ${l2Sql("e.embedding", "q.qe")} AS distance
        |FROM embeddings e CROSS JOIN q
        |ORDER BY distance, e.vec_id LIMIT $k""".stripMargin
 
@@ -64,9 +63,7 @@ object VectorQueries {
     s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < $nq),
        |d AS (
        |  SELECT q.query_id, e.vec_id,
-       |    list_reduce(list_transform(list_zip(e.embedding, q.qe),
-       |      p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-       |      (a, b) -> a + b) AS distance
+       |    ${l2Sql("e.embedding", "q.qe")} AS distance
        |  FROM embeddings e CROSS JOIN q),
        |r AS (SELECT query_id, vec_id, distance,
        |        ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY distance, vec_id) AS rank
@@ -93,12 +90,9 @@ object VectorQueries {
     s"""WITH l AS (SELECT vec_id AS a_id, embedding AS a_emb FROM embeddings WHERE vec_id < $nLeft),
        |p AS (
        |  SELECT l.a_id, r.vec_id AS b_id,
-       |    list_reduce(list_transform(list_zip(l.a_emb, r.embedding),
-       |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (a, b) -> a + b) AS dp,
-       |    sqrt(list_reduce(list_transform(l.a_emb,
-       |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b)) AS na,
-       |    sqrt(list_reduce(list_transform(r.embedding,
-       |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b)) AS nb
+       |    ${dotSql("l.a_emb", "r.embedding")} AS dp,
+       |    ${normSql("l.a_emb")} AS na,
+       |    ${normSql("r.embedding")} AS nb
        |  FROM embeddings r CROSS JOIN l WHERE l.a_id < r.vec_id)
        |SELECT a_id, b_id,
        |  CASE WHEN na = 0 OR nb = 0 THEN 0.0 ELSE dp / (na * nb) END AS cos_sim
@@ -141,10 +135,9 @@ object VectorQueries {
       .orderBy(col("vec_id"), col("pos"))
 
   private val normalizedSampleSql =
-    """WITH n AS (
+    s"""WITH n AS (
       |  SELECT vec_id, embedding,
-      |    sqrt(list_reduce(list_transform(embedding,
-      |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b)) AS nrm
+      |    ${normSql("embedding")} AS nrm
       |  FROM embeddings WHERE vec_id < 20)
       |SELECT vec_id, pos - 1 AS pos,
       |  round(CASE WHEN nrm > 0 THEN CAST(val AS DOUBLE) / nrm ELSE 0.0 END, 6) AS val
@@ -220,7 +213,7 @@ object VectorQueries {
   }
 
   private val quantizedTopKSql =
-    """WITH s AS (
+    s"""WITH s AS (
       |  SELECT vec_id, embedding,
       |    CAST(greatest(list_reduce(list_transform(embedding, x -> abs(x)),
       |           (a, b) -> greatest(a, b)),
@@ -233,9 +226,7 @@ object VectorQueries {
       |  FROM s),
       |q AS (SELECT dq AS qe FROM deq WHERE vec_id = 0)
       |SELECT d.vec_id,
-      |  list_reduce(list_transform(list_zip(d.dq, q.qe),
-      |    p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-      |    (a, b) -> a + b) AS distance
+      |  ${l2Sql("d.dq", "q.qe")} AS distance
       |FROM deq d CROSS JOIN q
       |ORDER BY distance, d.vec_id LIMIT 10""".stripMargin
 
@@ -411,15 +402,11 @@ object VectorQueries {
        |  FROM embeddings),
        |cand AS (
        |  SELECT vec_id, embedding,
-       |    list_reduce(list_transform(list_zip(y, ${OracleGen.dblList(qPca.map(_.toDouble))}),
-       |      p2 -> (CAST(p2[1] AS DOUBLE) - p2[2]) * (CAST(p2[1] AS DOUBLE) - p2[2])),
-       |      (a2, b2) -> a2 + b2) AS rd
+       |    ${l2Sql("y", OracleGen.dblList(qPca.map(_.toDouble)))} AS rd
        |  FROM proj ORDER BY rd, vec_id LIMIT 50),
        |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
        |SELECT c.vec_id,
-       |  list_reduce(list_transform(list_zip(c.embedding, q.qe),
-       |    p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-       |    (a, b) -> a + b) AS distance
+       |  ${l2Sql("c.embedding", "q.qe")} AS distance
        |FROM cand c CROSS JOIN q
        |ORDER BY distance, c.vec_id LIMIT 10""".stripMargin
   }

@@ -1025,6 +1025,48 @@ class StreamingSpec extends SparkSpec {
       s"stop() blocked ${stopMs} ms against a 60 s poll interval")
   }
 
+  test("maintenance loop: an idle loop at a 10 ms poll never creates the " +
+      "maintainer lease") {
+    import java.nio.file.{FileSystems, Paths, StandardWatchEventKinds}
+    import scala.jdk.CollectionConverters._
+    import graft.streaming.VectorsStreaming
+    import graft.operators.Ivf
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_maint_idle").toString
+    val emb = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), col("embedding"))
+    val idx = Ivf.build(emb.where(col("vec_id") < 100),
+      "vec_id", "embedding", s"$root/a")
+    val lease = Ivf.maintainerLeasePath(idx)
+    // inotify records a create even when the file is deleted again
+    // before anyone could list it
+    val watcher = FileSystems.getDefault.newWatchService()
+    try {
+      Paths.get(lease.toUri.getPath).getParent
+        .register(watcher, StandardWatchEventKinds.ENTRY_CREATE)
+      def leaseCreates(): Int = Option(watcher.poll(2,
+          java.util.concurrent.TimeUnit.SECONDS)).toSeq.flatMap { key =>
+        val names = key.pollEvents().asScala.map(_.context().toString)
+        key.reset()
+        names
+      }.count(_ == lease.getName)
+      // an idle poll is the metadata-only stats check: it never takes
+      // the lease, so an operator's explicit maintain cannot meet it
+      val loop = VectorsStreaming.startMaintenanceLoop(spark, idx,
+        maxFilesPerShard = 1000000, pollIntervalMs = 10L)
+      try Thread.sleep(1500)
+      finally loop.stop()
+      assert(loop.recentErrors.isEmpty,
+        s"loop recorded errors: ${loop.recentErrors.map(_.getMessage)}")
+      assert(leaseCreates() == 0, "an idle poll created the maintainer lease")
+      // positive control: a maintain call takes the lease, even when it
+      // then skips, and the watch sees it
+      assert(Ivf.maintain(spark, idx, maxFilesPerShard = 1000000) ==
+        Ivf.MaintainSkipped)
+      assert(leaseCreates() == 1, "the watch did not see maintain's lease")
+    } finally watcher.close()
+  }
+
   test("streamed deletes: batches apply once; a replayed batch is a " +
       "no-op that leaves the sidecar fingerprint (and the materialized " +
       "debt) unchanged") {
