@@ -45,10 +45,6 @@ object KMeans {
   def maxIterations(n: Long): Int =
     if (n < 10000L) 300 else if (n < 100000L) 100 else if (n < 1000000L) 50 else 20
 
-  /** Mini-batch size — exact parity with `src/kmeans.rs:83`. */
-  def batchSize(n: Long): Int =
-    math.min(256, math.max(10, math.sqrt(n.toDouble).toInt))
-
   val ConvergenceThreshold = 1e-4 // src/kmeans.rs:22
   val InitSampleCap = 50000       // src/kmeans.rs:158-160
   val HierarchicalThreshold = 100 // src/kmeans.rs:454
@@ -468,6 +464,12 @@ object KMeans {
     * mini-batch+Lloyd-refine stalls at inertia ≈447 with 8 singleton
     * clusters; kpp+Lloyd reaches ≈432 with sizes 15-29). Balanced cells
     * are what make IVF probe pruning effective at scale.
+    *
+    * Stops after `iters` passes or at the reference's RMS centroid-delta
+    * early stop, whichever comes first. The starved-cluster reseed holds
+    * that stop off only while it pays: the first round that leaves at
+    * least as many starved clusters as the round before turns it off
+    * for the rest of the run (see [[refineLloyd]]).
     */
   def trainDriver(pool: Array[Array[Float]], k0: Int, iters: Int, seed: Long): Model = {
     require(pool.nonEmpty, "k-means: empty input")
@@ -491,11 +493,13 @@ object KMeans {
     * the reference's per-cluster learning rate barely moves centroids off
     * their k-means++ init at small n, leaving badly unbalanced Voronoi
     * cells — poison for IVF probe pruning at scale (a cluster holding half
-    * the data means probing it scans half the table). A few exact Lloyd
-    * iterations over the ≤50k driver pool cost milliseconds and produce
-    * balanced clusters; the reference's own quality gates (inertia ratio,
-    * recall floors) only improve. Parallelized across cores for the large-k
-    * case (k≈4√n, pool 50k → ~10^10 flops single-threaded otherwise).
+    * the data means probing it scans half the table). Exact Lloyd over
+    * the ≤50k driver pool produces balanced clusters, and the reference's
+    * own quality gates (inertia ratio, recall floors) only improve. One
+    * pass is not free: at 10k × 128, k = 200 it takes about 27 ms on 4
+    * cores, so the pass count is what the training time follows (100
+    * passes ≈ 3 s). Parallelized across cores for the large-k case
+    * (k≈4√n, pool 50k → ~10^10 flops single-threaded otherwise).
     */
   private def refineLloyd(pool: Array[Array[Float]],
       centroids: Array[Array[Float]], iters: Int, rng: Random,
@@ -513,6 +517,8 @@ object KMeans {
     val useHier = k > HierarchicalThreshold
     var it = 0
     var done = false
+    var prevStarved = Int.MaxValue
+    var reseedOn = true
     while (it < iters && !done) {
       val prev = centroids.map(_.clone())
       if (useHier) {
@@ -551,9 +557,21 @@ object KMeans {
       // Balanced cells are what make IVF probe pruning effective — at
       // 100 TB a cluster holding half the table means probing it scans
       // half the table.
+      // The reseed stays on only while it pays off: once a round leaves
+      // at least as many starved clusters as the round before, it is off
+      // for the rest of the run, so the RMS early stop below can fire.
+      // (Perfbench corpus, 10k x 128, k = 200: 11 clusters stayed
+      // starved after every round, and the reseed forced all 100 passes.)
       var reseeded = false
-      if (it < iters - 2) {
-        val minSize = math.max(1L, n.toLong / (8L * k))
+      val minSize = math.max(1L, n.toLong / (8L * k))
+      if (reseedOn) {
+        var starved = 0
+        c = 0
+        while (c < k) { if (cnts(c) < minSize) starved += 1; c += 1 }
+        if (starved >= prevStarved) reseedOn = false
+        prevStarved = starved
+      }
+      if (reseedOn && it < iters - 2) {
         var largest = 0
         c = 0
         while (c < k) { if (cnts(c) > cnts(largest)) largest = c; c += 1 }

@@ -101,17 +101,19 @@ object VectorQueries {
   /** Distributed centroid update (A1): element-wise mean embedding per
     * true label, in exploded form so the DuckDB oracle checks it. The
     * array-native form of the same operator is the VecMean Aggregator
-    * (compared against this in VecSpec).
+    * (compared against this in VecSpec). `+ 0.0` on both sides turns a
+    * mean in (-0.00005, 0), which DuckDB's `round` gives as -0.0 and
+    * Spark's as 0.0, into 0.0 for the bitwise compare.
     */
   def labelCentroids(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "val")))
       .groupBy(col("label"), col("pos"))
-      .agg(round(avg(col("val").cast("double")), 4).as("mean_val"))
+      .agg((round(avg(col("val").cast("double")), 4) + 0.0).as("mean_val"))
       .orderBy(col("label"), col("pos"))
 
   private val labelCentroidsSql =
-    """SELECT label, pos - 1 AS pos, round(avg(CAST(val AS DOUBLE)), 4) AS mean_val
+    """SELECT label, pos - 1 AS pos, round(avg(CAST(val AS DOUBLE)), 4) + 0.0 AS mean_val
       |FROM (SELECT label, unnest(embedding) AS val,
       |             generate_subscripts(embedding, 1) AS pos
       |      FROM embeddings)

@@ -37,10 +37,6 @@ class KMeansSpec extends SparkSpec {
     assert(KMeans.maxIterations(50000) == 100)
     assert(KMeans.maxIterations(500000) == 50)
     assert(KMeans.maxIterations(2000000) == 20)
-    // src/kmeans.rs:83
-    assert(KMeans.batchSize(50) == 10)
-    assert(KMeans.batchSize(10000) == 100)
-    assert(KMeans.batchSize(10000000) == 256)
   }
 
   test("labels valid and every centroid has k entries") {
@@ -79,6 +75,28 @@ class KMeansSpec extends SparkSpec {
       KMeans.inertia(data, KMeans.trainDriver(data, 5, 150, s))
     }
     assert(inertias.max / inertias.min < 1.2, s"inertias=$inertias")
+  }
+
+  test("training stops at convergence: budgets 40 and 80 give bitwise-" +
+      "identical centroids") {
+    // 20 components, centres N(0, 4^2), unit noise: at k = 200 some
+    // clusters stay below the starved-cluster floor whatever the reseed
+    // does. The reseed must switch itself off once it stops reducing
+    // that count, so the RMS early stop fires well inside either budget
+    val rng = new Random(5L)
+    val centres = Array.fill(20, 64)(rng.nextGaussian() * 4)
+    val data = Array.fill(6000) {
+      val c = centres(rng.nextInt(20))
+      Array.tabulate(64)(j => (c(j) + rng.nextGaussian()).toFloat)
+    }
+    val m40 = KMeans.trainDriver(data, 200, 40, 42L)
+    val m80 = KMeans.trainDriver(data, 200, 80, 42L)
+    assert(m40.k == 200 && m80.k == 200)
+    m40.centroids.zip(m80.centroids).zipWithIndex.foreach { case ((a, b), c) =>
+      assert(java.util.Arrays.equals(a, b),
+        s"centroid $c differs between budgets 40 and 80: training ran to " +
+          "its budget instead of converging")
+    }
   }
 
   test("k=1 and k>=n edge cases") {
