@@ -117,27 +117,29 @@ object Bench {
     }
     val spark = GraftSession.local(cpus)
     spark.conf.set(graft.functions.Hash60.FamilyConfKey, hashFamily)
-    // SPARK_GRAFT_SPILL_LOG=1: per-query spill attribution for the
-    // memory-pressure scale cell (VERDICT r17 #4) — a task-end listener
-    // accumulates memory+disk spill bytes, and each timed query snapshots
-    // the counter around its action. Off by default: the official
-    // protocol is unchanged. Attribution is approximate at the tail (the
-    // listener bus is async, so a straggler task's spill can land on the
-    // next query) — fine for "which queries spilled", not for accounting.
-    val spillLog = sys.env.get("SPARK_GRAFT_SPILL_LOG").contains("1")
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong()
-    val spillByQuery = scala.collection.mutable.Map[String, Long]()
-      .withDefaultValue(0L)
-    if (spillLog)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = te.taskMetrics
-            if (m != null)
-              spillBytes.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
-          }
-        })
+    // every timed entry runs as one meter scope: its wall time, and the
+    // jobs, tasks, bytes and planning time it caused (bench_detail.json's
+    // `vectors`; README "Reading bench_detail.json")
+    val meter = new graft.obs.Meter(spark)
+    /** One timed entry: `build` then `act` on its result, under one scope.
+      * `seconds` is -1 on failure, so a regression can never masquerade
+      * as a speedup; the cost is kept either way.
+      */
+    final case class Run(seconds: Double, builderS: Double,
+        cost: graft.obs.Cost)
+    def timed[A](name: String, label: String)(build: => A)(
+        act: A => Any): Run = {
+      var builderS = 0.0
+      val s = meter.scope {
+        val t0 = System.nanoTime()
+        val a = build
+        builderS = (System.nanoTime() - t0) / 1e9
+        act(a)
+      }
+      s.result.failed.foreach(e =>
+        System.err.println(s"[bench] $name FAILED ($label): ${e.getMessage}"))
+      Run(if (s.result.isSuccess) s.seconds else -1.0, builderS, s.cost)
+    }
     // fail fast on a typo'd family — otherwise every sketch query would
     // quietly record -1 via timedPass's catch and the multi-minute run
     // would produce a corrupt artifact
@@ -194,153 +196,60 @@ object Bench {
     // (corpus_cache) so `value` stays an honest end-to-end total, and
     // both tables are unpersisted before pass 1 so the timed catalog
     // passes measure the real uncached plans.
-    val spillBuilds0 = spillBytes.get()
-    val cacheT0 = System.nanoTime()
     val docsCached = graft.Tables.documents(spark, sfDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val embsCached = graft.Tables.embeddings(spark, sfDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val corpusCacheTime =
-      try { docsCached.count(); embsCached.count(); (System.nanoTime() - cacheT0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] corpus_cache FAILED: ${e.getMessage}")
-        -1.0
-      }
-    // time the one-per-JVM IVF index build as its own entry, so the index
-    // queries below (which reuse the cached index) measure SEARCH only
-    val buildT0 = System.nanoTime()
-    val buildTime =
-      try { graft.queries.IndexQueries.index(spark, sfDir); (System.nanoTime() - buildT0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] ivf_build FAILED: ${e.getMessage}")
-        -1.0
-      }
-    // PQ codebook training + coded-dataset write are likewise
-    // one-per-JVM build steps
-    val pqT0 = System.nanoTime()
-    val pqTrainTime =
-      try { graft.queries.VectorQueries.pqModel(spark, sfDir); (System.nanoTime() - pqT0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] pq_train FAILED: ${e.getMessage}")
-        -1.0
-      }
-    // OPQ rotation + codebooks likewise train once per JVM; without its
-    // own entry the first ann_opq_topk call absorbs the training cost
-    val opqT0 = System.nanoTime()
-    val opqTrainTime =
-      try { graft.queries.VectorQueries.opqModel(spark, sfDir); (System.nanoTime() - opqT0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] opq_train FAILED: ${e.getMessage}")
-        -1.0
-      }
-    val pqEncT0 = System.nanoTime()
-    val pqEncodeTime =
-      try { graft.queries.IndexQueries.pqCodesPath(spark, sfDir); (System.nanoTime() - pqEncT0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] ivfpq_encode FAILED: ${e.getMessage}")
-        -1.0
-      }
-    val sqT0 = System.nanoTime()
-    val sqEncodeTime =
-      try { graft.queries.IndexQueries.sqCodesPath(spark, sfDir); (System.nanoTime() - sqT0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] ivfsq_encode FAILED: ${e.getMessage}")
-        -1.0
-      }
-    val pqResT0 = System.nanoTime()
-    val pqResidualTime =
-      try { graft.queries.IndexQueries.residualModelAndCodes(spark, sfDir); (System.nanoTime() - pqResT0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] ivfpq_residual_build FAILED: ${e.getMessage}")
-        -1.0
-      }
-    // ... and so is the MinHash verified-pair materialization feeding
-    // minhash_lsh_pairs / dedup_clusters / cross_source_dups
-    val pairsT0 = System.nanoTime()
-    val pairsTime =
-      try { graft.queries.DedupQueries.verifiedPairsPath(spark, sfDir); (System.nanoTime() - pairsT0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] minhash_pairs_build FAILED: ${e.getMessage}")
-        -1.0
-      }
-    // ... and the MaxSim pooled+bucketed chunk table (the approximate
-    // retrieval path's index build)
-    val poolT0 = System.nanoTime()
-    val poolTime =
-      try { graft.queries.TextQueries.maxsimPool(spark, sfDir); (System.nanoTime() - poolT0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] maxsim_pool_build FAILED: ${e.getMessage}")
-        -1.0
-      }
-    // ... and the BM25 inverted index (posting table build)
-    val bm25T0 = System.nanoTime()
-    val bm25Time =
-      try { graft.queries.TextQueries.bm25Index(spark, sfDir); (System.nanoTime() - bm25T0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] bm25_index_build FAILED: ${e.getMessage}")
-        -1.0
-      }
-    // ... and the DSIR importance-weight LMs (corpus-wide bucket counts)
-    val dsirT0 = System.nanoTime()
-    val dsirTime =
-      try { graft.queries.CurationQueries.dsirLm(spark, sfDir); (System.nanoTime() - dsirT0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] dsir_lm_build FAILED: ${e.getMessage}")
-        -1.0
-      }
-    // ... and the remaining three first-call memo builds the r17
-    // pass1/pass2 comparison surfaced (p1/p2 ratios 9.3/4.6/3.6): the
-    // hybrid fused artifact (both retrieval arms), the BPE merge
-    // training, and the quality-classifier training. Without their own
-    // entries, pass 1 of hybrid_rrf_top_docs / bpe_merges /
-    // quality_classifier_stats absorbs these one-per-JVM costs and the
-    // bench misattributes them to those queries' plans.
-    val fuseT0 = System.nanoTime()
-    val fuseTime =
-      try { graft.queries.TextQueries.hybridRrfServed(spark, sfDir).count(); (System.nanoTime() - fuseT0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] hybrid_fuse_build FAILED: ${e.getMessage}")
-        -1.0
-      }
-    val bpeT0 = System.nanoTime()
-    val bpeTime =
-      try { graft.queries.TextQueries.bpeModel(spark, sfDir); (System.nanoTime() - bpeT0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] bpe_train FAILED: ${e.getMessage}")
-        -1.0
-      }
-    val clsT0 = System.nanoTime()
-    val clsTime =
-      try { graft.queries.CurationQueries.classifierModel(spark, sfDir); (System.nanoTime() - clsT0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] classifier_train FAILED: ${e.getMessage}")
-        -1.0
-      }
-    // ONE timing protocol for both passes: each pass rebuilds the query
+    // the one-per-JVM builds, each its own entry so the queries that
+    // reuse the artifact measure their own work only, run in this order
+    // (later builds hit earlier memos): the IVF index; PQ/OPQ training
+    // and the coded datasets; the MinHash verified pairs feeding
+    // minhash_lsh_pairs / dedup_clusters / cross_source_dups; the MaxSim
+    // pooled chunk table; the BM25 postings; the DSIR LMs; and the
+    // three first-call memos the r17 pass1/pass2 comparison surfaced
+    // (p1/p2 ratios 9.3/4.6/3.6) — the hybrid fused artifact, the BPE
+    // merges and the quality classifier
+    val buildTable: Seq[(String, () => Any)] = Seq(
+      "corpus_cache" -> (() => { docsCached.count(); embsCached.count() }),
+      "ivf_build" -> (() => graft.queries.IndexQueries.index(spark, sfDir)),
+      "pq_train" -> (() => graft.queries.VectorQueries.pqModel(spark, sfDir)),
+      "opq_train" -> (() => graft.queries.VectorQueries.opqModel(spark, sfDir)),
+      "ivfpq_encode" ->
+        (() => graft.queries.IndexQueries.pqCodesPath(spark, sfDir)),
+      "ivfsq_encode" ->
+        (() => graft.queries.IndexQueries.sqCodesPath(spark, sfDir)),
+      "ivfpq_residual_build" ->
+        (() => graft.queries.IndexQueries.residualModelAndCodes(spark, sfDir)),
+      "minhash_pairs_build" ->
+        (() => graft.queries.DedupQueries.verifiedPairsPath(spark, sfDir)),
+      "maxsim_pool_build" ->
+        (() => graft.queries.TextQueries.maxsimPool(spark, sfDir)),
+      "bm25_index_build" ->
+        (() => graft.queries.TextQueries.bm25Index(spark, sfDir)),
+      "dsir_lm_build" ->
+        (() => graft.queries.CurationQueries.dsirLm(spark, sfDir)),
+      "hybrid_fuse_build" ->
+        (() => graft.queries.TextQueries.hybridRrfServed(spark, sfDir).count()),
+      "bpe_train" -> (() => graft.queries.TextQueries.bpeModel(spark, sfDir)),
+      "classifier_train" ->
+        (() => graft.queries.CurationQueries.classifierModel(spark, sfDir)))
+    val buildRuns: Map[String, Run] = buildTable.map { case (name, f) =>
+      name -> timed(name, "builds")(f())(_ => ())
+    }.toMap
+    def seconds(runs: Map[String, Run]): Map[String, Double] =
+      runs.map { case (k, r) => k -> r.seconds }
+    // ONE timing protocol for every pass: each pass rebuilds the query
     // DataFrame (fresh lineage — a second action on the same lineage
-    // reuses shuffle files and reads artificially fast), captures
-    // elapsed BEFORE the clearCache, reports -1 on failure (a
-    // regression can never masquerade as a speedup), and logs failures
-    // identically so the passes cannot drift
-    def timedPass(label: String): Map[String, Double] =
+    // reuses shuffle files and reads artificially fast) and clears the
+    // cache after the timed scope
+    def timedPass(label: String): Map[String, Run] =
       graft.queries.Catalog.all
         .filter { case (_, d) => d.bench }
         .map { case (name, d) =>
-          val s0 = spillBytes.get()
-          val t0 = System.nanoTime()
-          val ok =
-            try { d.build(spark, sfDir).count(); true }
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] $name FAILED ($label): ${e.getMessage}")
-              false
-            }
-          val elapsed = (System.nanoTime() - t0) / 1e9
+          val run = timed(name, label)(d.build(spark, sfDir))(_.count())
           spark.catalog.clearCache() // builders' persist()s don't accumulate
-          if (spillLog) spillByQuery(name) += spillBytes.get() - s0
-          name -> (if (ok) elapsed else -1.0)
+          name -> run
         }
-    if (spillLog)
-      spillByQuery("builds_phase") = spillBytes.get() - spillBuilds0
     // drop the shared corpus cache BEFORE the timed catalog passes —
     // pass 1 must measure the uncached plans (blocking so the freed
     // memory is really back before timing starts)
@@ -354,20 +263,8 @@ object Bench {
     // contaminated print self-reports its idle-terms correction instead
     // of needing bench-series archaeology.
     val calibP1 = qualifyBoundary()
-    val pass1 = timedPass("pass1")
-    val builds = Map("ivf_build" -> buildTime, "pq_train" -> pqTrainTime,
-      "corpus_cache" -> corpusCacheTime,
-      "opq_train" -> opqTrainTime,
-      "ivfpq_encode" -> pqEncodeTime,
-      "ivfpq_residual_build" -> pqResidualTime,
-      "ivfsq_encode" -> sqEncodeTime,
-      "minhash_pairs_build" -> pairsTime,
-      "maxsim_pool_build" -> poolTime,
-      "bm25_index_build" -> bm25Time,
-      "hybrid_fuse_build" -> fuseTime,
-      "bpe_train" -> bpeTime,
-      "classifier_train" -> clsTime,
-      "dsir_lm_build" -> dsirTime)
+    val pass1 = seconds(timedPass("pass1"))
+    val builds = seconds(buildRuns)
     val results = builds ++ pass1
     // build-phase subtotal, emitted separately (ADVICE r17: r17 moved
     // three first-call builds out of pass-1 query timings into their own
@@ -385,7 +282,9 @@ object Bench {
     // the next pass re-qualifies to an idle window
     val calibP1End = calibMs()
     val calibMid = qualifyBoundary()
-    val secondPass = timedPass("pass2")
+    // pass 2's costs are the steady-state vectors bench_detail.json keeps
+    val pass2Runs = timedPass("pass2")
+    val secondPass = seconds(pass2Runs)
     val calibP2End = calibMs()
     // THIRD catalog pass + per-query min across all three (VERDICT r16
     // #1): five rounds of driver benches landed in contended windows,
@@ -398,7 +297,7 @@ object Bench {
     // t2_min = Σ_q min(p1,p2,p3) is the contention-robust headline;
     // t2 stays beside it for series continuity.
     val calibP23 = qualifyBoundary()
-    val thirdPass = timedPass("pass3")
+    val thirdPass = seconds(timedPass("pass3"))
     val calibEnd = calibMs()
     val minPass: Map[String, Double] = pass1.map { case (k, v1) =>
       val samples = Seq(v1, secondPass.getOrElse(k, -1.0),
@@ -455,31 +354,21 @@ object Bench {
     // keeps only the last ~2000 chars of output, and an 80-query map at
     // full double precision pushed the line head out of that window in
     // rounds 1-2, leaving the driver with nothing parseable.
-    val fullJson = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + ms(v) }
-      .mkString("{", ",", "}")
-    val pass2Json = secondPass.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + ms(v) }
-      .mkString("{", ",", "}")
-    val pass3Json = thirdPass.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + ms(v) }
-      .mkString("{", ",", "}")
-    val minJson = minPass.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + ms(v) }
-      .mkString("{", ",", "}")
-    // per-query spill map goes to the DETAIL artifact only (the stdout
-    // line has a hard length budget); zero-spill queries are omitted
-    val spillJson =
-      if (!spillLog) ""
-      else s""","spill_mb":${
-        spillByQuery.toSeq.filter(_._2 > 0).sortBy(-_._2)
-          .map { case (k, v) => "\"" + k + "\":" + f"${v / 1e6}%.1f" }
-          .mkString("{", ",", "}")}"""
+    def jsonMap[V](m: Map[String, V])(f: V => String): String =
+      m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + f(v) }
+        .mkString("{", ",", "}")
+    // one cost vector per entry: its build scope, or its pass-2 scope
+    def mb(v: Double): String = f"$v%.3f"
+    val vectorsJson = jsonMap(buildRuns ++ pass2Runs) { r =>
+      val c = r.cost
+      val execS = if (r.seconds < 0) -1.0 else r.seconds - r.builderS
+      s"""{"builder_s":${ms(r.builderS)},"plan_ms":${c.planMs},"exec_s":${ms(execS)},"jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks.size},"cpu_s":${ms(c.cpuS)},"gc_s":${ms(c.gcS)},"input_mb":${mb(c.inputMb)},"shuffle_read_mb":${mb(c.shuffleReadMb)},"shuffle_write_mb":${mb(c.shuffleWriteMb)},"spill_mb":${mb(c.spillMb)},"task_ms_max":${c.taskMsMax},"task_ms_p50":${c.taskMsP50},"reused":${c.reusedExchanges}}"""
+    }
     try java.nio.file.Files.write(
       { val d = java.nio.file.Paths.get("bench-series")
         java.nio.file.Files.createDirectories(d)
         d.resolve("bench_detail.json") },
-      (s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$fullJson,"queries2":$pass2Json,"queries3":$pass3Json,"queries_min":$minJson,"value1":${ms(total1)},"value2":${ms(total2)},"value3":${ms(total3)},"t2_min":${ms(totalMin)},"load_start":$loadStart,"load_end":${loadAvg()},$calibFields$spillJson,"hash_family":"$hashFamily","sf":"$sfDir"}""" + "\n")
+      (s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${jsonMap(results)(ms)},"queries2":${jsonMap(secondPass)(ms)},"queries3":${jsonMap(thirdPass)(ms)},"queries_min":${jsonMap(minPass)(ms)},"value1":${ms(total1)},"value2":${ms(total2)},"value3":${ms(total3)},"t2_min":${ms(totalMin)},"load_start":$loadStart,"load_end":${loadAvg()},$calibFields,"vectors":$vectorsJson,"hash_family":"$hashFamily","sf":"$sfDir"}""" + "\n")
         .getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
     // compact line: failed queries always included, then most-expensive
@@ -515,6 +404,7 @@ object Bench {
       }
     }
     val nFail = results.values.count(_ < 0)
+    meter.close()
     spark.stop()
     println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${kept.mkString("{", ",", "}")},"queries2":${kept2.mkString("{", ",", "}")},"nq":${results.size},"nfail":$nFail,"t1":${ms(total1)},"t2":${ms(total2)},"t3":${ms(total3)},"t2_min":${ms(totalMin)},"load_start":$loadStart,"load_end":${loadAvg()},$calibFields,"hash_family":"$hashFamily","sf":"$sfDir"}""")
   }

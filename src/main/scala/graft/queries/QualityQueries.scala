@@ -327,7 +327,8 @@ object QualityQueries {
     // ONE corpus read, no persist, no anti join (r19): the r18 form
     // read `deduped` twice (gram-explode side + anti-join left side);
     // the two branches' pruned projections differ, so physical
-    // exchange reuse can NOT fire (DebugReuseCheck: reused=0) and
+    // exchange reuse can NOT fire (executed plan: 0 reused, the
+    // `reused` field of bench_detail.json's vectors) and
     // dropping the persist alone would recompute the corpus pass.
     // Instead the contamination flag rides the SAME rows: explode each
     // kept doc's distinct grams (explode_outer so a gram-less doc

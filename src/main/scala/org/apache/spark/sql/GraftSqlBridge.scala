@@ -11,6 +11,21 @@ object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Wait until every queued listener event has been delivered, so
+    * `graft.obs.Meter` reads a scope's counts only once its jobs, tasks
+    * and SQL executions have all been seen.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  /** The QueryExecution an SQL execution's end event carries: the one a
+    * `QueryExecutionListener` is called with, next to the execution id
+    * whose start event names the job tags it ran under.
+    */
+  def queryExecution(e: org.apache.spark.sql.execution.ui
+      .SparkListenerSQLExecutionEnd)
+      : Option[org.apache.spark.sql.execution.QueryExecution] = Option(e.qe)
+
   /** Column names a Column references. The classic Column wraps a
     * lazily-converted ColumnNode tree (NOT catalyst expressions —
     * `expression(c)` returns an opaque ColumnNodeExpression leaf), so

@@ -22,10 +22,11 @@ import org.apache.spark.sql.functions._
   * The timed call is the CATALOG query (`DedupQueries.dedupClusters`),
   * not a direct run() invocation — the cell certifies the dispatch
   * itself. Reports rounds-to-convergence, per-round edge counts and
-  * shuffle-write volume (stage completions bucketed into round windows
-  * via ConnectedComponents.lastRunStats timestamps), and verifies the
-  * labeling against the input pairs: every verified pair must land in
-  * one cluster (the CC invariant), checked distributed, zero tolerance.
+  * shuffle-write volume (a meter scope's tasks bucketed into round
+  * windows via ConnectedComponents.lastRunStats timestamps), and
+  * verifies the labeling against the input pairs: every verified pair
+  * must land in one cluster (the CC invariant), checked distributed,
+  * zero tolerance.
   *
   * Usage: Test/runMain graft.DebugCcDistrib [srcDir] [outDir] [N]
   */
@@ -47,51 +48,38 @@ object DebugCcDistrib {
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
     val nDocs = spark.read.parquet(s"$out/documents.parquet").count()
 
-    // stage-level shuffle-write log: (completion nanoTime, bytes) —
-    // bucketed into rounds below via lastRunStats round timestamps
-    val stageLog =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null)
-            stageLog.add((System.nanoTime(),
-              m.shuffleWriteMetrics.bytesWritten))
-        }
-      })
-
     val tp0 = System.nanoTime()
     val pairsPath = graft.queries.DedupQueries.verifiedPairsPath(spark, out)
     val pairs = spark.read.parquet(pairsPath)
     val nPairs = pairs.count()
     val pairsS = (System.nanoTime() - tp0) / 1e9
 
-    stageLog.clear()
-    val t0 = System.nanoTime()
-    val clusters = graft.queries.DedupQueries.dedupClusters(spark, out)
-      .persist()
-    val nRows = clusters.count()
-    val clusterS = (System.nanoTime() - t0) / 1e9
+    // task-level shuffle-write log of the catalog call, bucketed into
+    // rounds below by task finish time against lastRunStats' round
+    // timestamps (nanoTime, mapped onto the tasks' epoch milliseconds)
+    val wall0 = System.currentTimeMillis()
+    val nano0 = System.nanoTime()
+    def epochMs(nanos: Long): Long = wall0 + (nanos - nano0) / 1000000L
+    val meter = new graft.obs.Meter(spark)
+    val run = meter.scope {
+      val c = graft.queries.DedupQueries.dedupClusters(spark, out).persist()
+      (c, c.count())
+    }
+    meter.close()
+    val (clusters, nRows) = run.result.get
+    val clusterS = run.seconds
 
     val stats = graft.operators.ConnectedComponents.lastRunStats
     require(stats.nonEmpty,
       s"distributed branch NOT taken: $nPairs pairs <= 4.19M cap — " +
         "raise N")
-    // per-round shuffle volume: stages completing in (t_{r-1}, t_r]
-    val stages = {
-      val a = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-      val it = stageLog.iterator()
-      while (it.hasNext) a += it.next()
-      a.toSeq
-    }
+    // per-round shuffle volume: tasks finishing in (t_{r-1}, t_r]
     val roundsJs = stats.sliding(2).collect {
       case Seq(prev, curRound) =>
-        val mb = stages
-          .filter(s => s._1 > prev.atNanos && s._1 <= curRound.atNanos)
-          .map(_._2).sum / 1e6
+        val mb = run.cost.tasks.filter(t =>
+            t.finishMs > epochMs(prev.atNanos) &&
+              t.finishMs <= epochMs(curRound.atNanos))
+          .map(_.shuffleWriteBytes).sum / 1e6
         f"""{"round":${curRound.round},"edges":${curRound.edges},"shuffle_write_mb":$mb%.1f}"""
     }.mkString("[", ",", "]")
 
@@ -107,7 +95,7 @@ object DebugCcDistrib {
         .withColumnRenamed("cluster_id", "cb"), "b_id")
       .where(col("ca") =!= col("cb")).count()
     val nClusters = clusters.select("cluster_id").distinct().count()
-    val totalShuffleMb = stages.map(_._2).sum / 1e6
+    val totalShuffleMb = run.cost.shuffleWriteMb
 
     println(
       f"""{"metric":"cc_distrib","n_copies":$n,"docs":$nDocs,"verified_pairs":$nPairs,"pairs_build_s":$pairsS%.1f,"branch":"distributed_star","rounds":${stats.last.round},"initial_edges":${stats.head.edges},"dedup_clusters_s":$clusterS%.1f,"clustered_docs":$nRows,"clusters":$nClusters,"broken_pairs":$broken,"total_shuffle_write_mb":$totalShuffleMb%.1f,"rounds_detail":$roundsJs}""")

@@ -39,21 +39,13 @@ object DebugDeleteWhereBulk {
     val idx = Ivf.build(tbl, "vec_id", "embedding", s"$dir/index")
     val buildS = (System.nanoTime() - t0b) / 1e9
 
-    val maxTasks = new java.util.concurrent.atomic.AtomicInteger(0)
-    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageSubmitted(
-          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
-        stages.incrementAndGet()
-        maxTasks.getAndUpdate(m => math.max(m, s.stageInfo.numTasks))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime()
-    val deleted = Ivf.deleteWhere(spark, idx, col("vec_id") % 4 === 1)
-    val wallS = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(2000) // listener bus is async; drain before reading
-    spark.sparkContext.removeSparkListener(listener)
+    val meter = new graft.obs.Meter(spark)
+    val del = meter.scope(Ivf.deleteWhere(spark, idx, col("vec_id") % 4 === 1))
+    meter.close()
+    val deleted = del.result.get
+    val wallS = del.seconds
+    val maxTasks =
+      del.cost.tasks.groupBy(_.stageId).values.map(_.size).maxOption.getOrElse(0)
 
     require(deleted == n / 4, s"expected ${n / 4} tombstoned, got $deleted")
     val sidecarFiles = new java.io.File(s"$dir/index/tombstones")
@@ -61,13 +53,13 @@ object DebugDeleteWhereBulk {
     require(sidecarFiles <= 64, s"sidecar bound violated: $sidecarFiles")
     // the parallelism proof: the filter/count stage ran wider than the
     // output bound (i.e. the coalesce did NOT propagate upstream)
-    require(maxTasks.get > sidecarFiles,
-      s"filter stage tasks ${maxTasks.get} <= sidecar files $sidecarFiles " +
+    require(maxTasks > sidecarFiles,
+      s"filter stage tasks $maxTasks <= sidecar files $sidecarFiles " +
         "— the coalesce trap is back")
     val live = Ivf.liveVectors(spark, idx).count()
     require(live == n - deleted, s"live $live != ${n - deleted}")
 
-    println(f"""{"metric":"deletewhere_bulk","n":$n,"dim":$dim,"cpus":$cpus,"build_s":$buildS%.1f,"deleted":$deleted,"deletewhere_wall_s":$wallS%.2f,"filter_stage_max_tasks":${maxTasks.get},"stages":${stages.get},"sidecar_files":$sidecarFiles}""")
+    println(f"""{"metric":"deletewhere_bulk","n":$n,"dim":$dim,"cpus":$cpus,"build_s":$buildS%.1f,"deleted":$deleted,"deletewhere_wall_s":$wallS%.2f,"filter_stage_max_tasks":$maxTasks,"stages":${del.cost.stages},"sidecar_files":$sidecarFiles}""")
     spark.stop()
   }
 }

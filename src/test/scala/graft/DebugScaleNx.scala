@@ -2,14 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** N-way generalization of [[DebugScale2x]] (VERDICT r16 #6): every
-  * table unioned with (N−1) key-shifted copies of itself, each copy's
-  * keys offset by i·10^8 consistently across key/foreign-key columns,
-  * so each copy joins only within itself and every join/agg carries
-  * exactly N× the work — linear scaling, never quadratic join blow-up.
-  * The offset is 10^8 (not DebugScale2x's 10^9) so four shifted copies
-  * still fit the testdata's 32-bit key columns; sf0.1 keys top out
-  * ~10^6, far below one stride. Copied document text gets a per-row
+/** Builds an N× copy of an sf dir for bench-scaling cells (VERDICT r15
+  * #8, r16 #6; N = 2 is the 2× sanity cell): every table unioned with
+  * (N−1) key-shifted copies of itself, each copy's keys offset by i·10^8
+  * consistently across key/foreign-key columns, so each copy joins only
+  * within itself and every join/agg carries exactly N× the work — linear
+  * scaling, never quadratic join blow-up. The 10^8 stride lets four
+  * shifted copies fit the testdata's 32-bit key columns; sf0.1 keys top
+  * out ~10^6, far below one stride. Copied document text gets a per-row
   * suffix token so the dedup family sees a realistic near-dup corpus
   * instead of a degenerate exact-duplicate one.
   *

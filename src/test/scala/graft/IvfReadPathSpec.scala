@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -46,31 +45,11 @@ class IvfReadPathSpec extends SparkSpec {
         StructField("qe", ArrayType(FloatType)))))
 
   /** Jobs `body` launches on this thread (suites share the session and
-    * may run in parallel, so jobs are matched by a job group).
+    * may run in parallel, so only the meter scope's own jobs count).
     */
   private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"graft-read-path-${System.nanoTime()}"
-    val jobs = new AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (j.properties != null &&
-          group == j.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-        ()
-      }
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "read-path job gate")
-    try {
-      val out = body
-      Thread.sleep(1000) // listener bus drain
-      (out, jobs.get())
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (out, cost) = graft.obs.Meter.measure(spark)(body)
+    (out, cost.jobs)
   }
 
   /** Committed parquet files under `root`, recursively. */

@@ -948,38 +948,21 @@ class IvfSpec extends SparkSpec {
     Ivf.delete(spark, idx, Seq(5L))
     // count only THIS thread's jobs (suites share the session and may
     // run in parallel — a foreign job must not fail the gate)
-    val group = s"graft-maintprobe-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (j.properties != null &&
-          group == j.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "maintenance probe gate")
-    try {
-      // positive control: the FIRST probe after a sidecar change runs
-      // the one tiny count job — proves the listener sees our jobs
-      assert(Ivf.maintenanceStats(spark, idx).tombstones == 1L)
-      Thread.sleep(1000) // listener bus drain
-      assert(jobs.get() > 0,
-        "control failed: the cold probe's count job was not observed")
-      jobs.set(0)
+    // positive control: the FIRST probe after a sidecar change runs
+    // the one tiny count job — proves the meter sees our jobs
+    val (cold, coldCost) = graft.obs.Meter.measure(spark)(
+      Ivf.maintenanceStats(spark, idx).tombstones)
+    assert(cold == 1L)
+    assert(coldCost.jobs > 0,
+      "control failed: the cold probe's count job was not observed")
+    val (_, warm) = graft.obs.Meter.measure(spark) {
       (0 until 5).foreach { _ =>
         assert(Ivf.maintenanceStats(spark, idx).tombstones == 1L)
       }
-      Thread.sleep(1000) // listener bus drain
-      assert(jobs.get() == 0,
-        s"steady-state maintenance probe launched ${jobs.get()} Spark " +
-          "jobs — the poll-from-ingest-loop contract says zero")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
     }
+    assert(warm.jobs == 0,
+      s"steady-state maintenance probe launched ${warm.jobs} Spark " +
+        "jobs — the poll-from-ingest-loop contract says zero")
     // a sidecar change invalidates the memo — the count updates
     Ivf.delete(spark, idx, Seq(7L))
     assert(Ivf.maintenanceStats(spark, idx).tombstones == 2L)

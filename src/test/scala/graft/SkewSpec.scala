@@ -106,40 +106,19 @@ class SkewSpec extends SparkSpec {
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
 
     /** Run the shuffled (non-broadcast) annJoin and return (results,
-      * max task runtime ms, max task shuffle-read bytes, final plan).
+      * max task wall ms, max task shuffle-read bytes, final plan).
       */
     def measured(skewEnabled: Boolean)
         : (Seq[(Long, Int, Long)], Long, Long, String) = {
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled",
         skewEnabled.toString)
-      val tasks =
-        new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) tasks.add(
-            (m.executorRunTime, m.shuffleReadMetrics.totalBytesRead))
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
+      val ((df, res), cost) = graft.obs.Meter.measure(spark) {
         val df = graft.operators.Ivf.annJoin(queries, idx, k = 5, nProbe = 20)
-        val res = df.collect()
-          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
-        var last = -1
-        var stable = 0
-        var iters = 0
-        while (stable < 3 && iters < 50) { // wait for metrics to drain
-          Thread.sleep(100)
-          iters += 1
-          if (tasks.size == last) stable += 1
-          else { stable = 0; last = tasks.size }
-        }
-        import scala.jdk.CollectionConverters._
-        (res, tasks.asScala.map(_._1).max, tasks.asScala.map(_._2).max,
-          df.queryExecution.executedPlan.toString)
-      } finally spark.sparkContext.removeSparkListener(listener)
+        (df, df.collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted)
+      }
+      (res, cost.taskMsMax, cost.tasks.map(_.shuffleReadBytes).max,
+        df.queryExecution.executedPlan.toString)
     }
 
     try {
@@ -252,36 +231,11 @@ class SkewSpec extends SparkSpec {
       s -> fs.count(f => !before.getOrElse(s, Nil).contains(f))
     }.filter(_._2 > 0)
 
-  /** Result (write) tasks `body` runs on this thread; jobs are matched
-    * by a job group, since suites share the session.
+  /** Result (write) tasks `body` runs on this thread; only the meter
+    * scope's own tasks count, since suites share the session.
     */
-  private def writeTasksOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"graft-append-write-${System.nanoTime()}"
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageSubmitted(
-          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        if (s.properties != null &&
-          group == s.properties.getProperty("spark.jobGroup.id"))
-          stages.add(s.stageInfo.stageId)
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskType == "ResultTask" && stages.contains(t.stageId))
-          tasks.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "append write-task gate")
-    try {
-      body
-      Thread.sleep(1000) // listener bus drain
-      tasks.get()
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def writeTasksOf(body: => Unit): Int =
+    graft.obs.Meter.measure(spark)(body)._2.tasks.count(_.result)
 
   test("append under AQE is sized to its batch: a small batch adds at " +
       "most one file per touched shard in no more write tasks than " +
