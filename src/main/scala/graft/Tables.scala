@@ -235,42 +235,10 @@ object Tables {
     }
   }
 
-  /** Fingerprint of a local directory tree's committed files: relative
-    * path, length and nanosecond mtime of every file, sorted by path,
-    * recursing into subdirectories. Entries whose name starts with `_`
-    * or `.` are skipped at every level, as [[graft.operators.FsList]]
-    * skips them (`_temporary` attempt dirs, `_SUCCESS`, `.crc`). Every
-    * in-place rewrite of an engine-written dir changes it (fresh part
-    * names, new mtimes), and so does a file added inside an existing
-    * partition dir (`shard_id=N/`) — directory mtimes play no part. An
-    * entry that vanishes mid-walk is skipped, or makes the listing
-    * unreadable. An empty or unreadable listing — a missing path, or a
-    * filesystem the local File API cannot see — is `None`, which
-    * [[DataKeyedMemo]] treats as "build, don't cache".
-    */
-  def listingFingerprint(path: String): Option[String] =
-    try {
-      val files = scala.collection.mutable.ArrayBuffer.empty[String]
-      def walk(dir: java.io.File, rel: String): Unit =
-        Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filterNot(f =>
-            f.getName.startsWith("_") || f.getName.startsWith("."))
-          .foreach { f =>
-            val attrs = java.nio.file.Files.readAttributes(f.toPath,
-              classOf[java.nio.file.attribute.BasicFileAttributes])
-            if (attrs.isDirectory) walk(f, s"$rel${f.getName}/")
-            else files += s"$rel${f.getName}:${attrs.size}:" +
-              attrs.lastModifiedTime
-                .to(java.util.concurrent.TimeUnit.NANOSECONDS)
-          }
-      walk(new java.io.File(path), "")
-      if (files.isEmpty) None else Some(files.sorted.mkString(","))
-    } catch { case _: java.io.IOException => None }
-
   /** [[load]]'s sibling for ENGINE-WRITTEN artifact dirs (posting
     * tables, signed docs, IVF vectors and their coded siblings, pooled
     * buckets): the same lazy-DataFrame metadata memo, fingerprinted by
-    * the artifact directory's own recursive [[listingFingerprint]],
+    * the artifact directory's own [[graft.operators.FsList.fingerprint]],
     * because rebuilds, appends and maintenance swaps change these paths
     * in place. The fingerprint is re-listed on EVERY call — no TTL — so
     * a caller always plans against the current file set: an append, a
@@ -280,8 +248,14 @@ object Tables {
   private val artifactMemo = new DataKeyedMemo[DataFrame]()
 
   def loadArtifact(spark: SparkSession, path: String): DataFrame =
+    loadArtifact(spark, path, graft.operators.FsList.fingerprint(
+      spark.sparkContext.hadoopConfiguration, path))
+
+  /** [[loadArtifact]] under a fingerprint the caller already listed. */
+  private[graft] def loadArtifact(spark: SparkSession, path: String,
+      fingerprint: Option[String]): DataFrame =
     artifactMemo.get(s"${System.identityHashCode(spark)}:$path",
-      listingFingerprint(path))(spark.read.parquet(path))
+      fingerprint)(spark.read.parquet(path))
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")

@@ -44,10 +44,9 @@ object Bm25 {
 
   // keyed by the df / stats dir with its listing fingerprint in the
   // value: a streaming-append driver rebuilds per batch (r15 review),
-  // and each rebuild at the same base replaces the entry. An unreadable
-  // listing (non-local filesystem) recomputes instead of caching past
-  // an in-place rebuild — a stale vocabulary size would flip the
-  // seek-vs-scan rule
+  // and each rebuild at the same base replaces the entry. A missing or
+  // unreadable listing recomputes instead of caching past an in-place
+  // rebuild — a stale vocabulary size would flip the seek-vs-scan rule
   private val vocabMemo = new graft.Tables.DataKeyedMemo[Long]()
   private val statsMemo =
     new graft.Tables.DataKeyedMemo[(Long, java.lang.Double)]()
@@ -57,7 +56,8 @@ object Bm25 {
     */
   private def vocabSize(spark: SparkSession, index: Index): Long =
     vocabMemo.get(index.dfPath,
-        graft.Tables.listingFingerprint(index.dfPath)) {
+        FsList.fingerprint(spark.sparkContext.hadoopConfiguration,
+          index.dfPath)) {
       spark.read.parquet(index.dfPath).count()
     }
 
@@ -71,7 +71,8 @@ object Bm25 {
     */
   private def indexStats(spark: SparkSession, index: Index): (Long, java.lang.Double) =
     statsMemo.get(index.statsPath,
-        graft.Tables.listingFingerprint(index.statsPath)) {
+        FsList.fingerprint(spark.sparkContext.hadoopConfiguration,
+          index.statsPath)) {
       val r = spark.read.parquet(index.statsPath).collect()(0)
       val ai = r.fieldIndex("avgdl")
       // an EMPTY corpus builds a stats row of (0, null) — avgdl is

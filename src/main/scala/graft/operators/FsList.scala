@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** Non-located recursive file listing for metadata probes.
@@ -31,7 +32,8 @@ object FsList {
     * VANISHES mid-walk (a concurrent task commit renaming its attempt
     * dir away) is likewise skipped rather than thrown: the walk's
     * contract is "committed files at some instant during the listing",
-    * which a vanished uncommitted subtree never contains.
+    * which a vanished uncommitted subtree never contains. A missing
+    * `root` holds no committed file: the walk returns none.
     */
   def files(fs: FileSystem, root: Path): Seq[FileStatus] = {
     val out = scala.collection.mutable.ArrayBuffer[FileStatus]()
@@ -43,8 +45,7 @@ object FsList {
       val entries =
         try fs.listStatus(p)
         catch {
-          case _: java.io.FileNotFoundException if p != root =>
-            Array.empty[FileStatus]
+          case _: java.io.FileNotFoundException => Array.empty[FileStatus]
         }
       entries.foreach { s =>
         if (!hidden(s.getPath)) {
@@ -55,4 +56,24 @@ object FsList {
     walk(root)
     out.toSeq
   }
+
+  /** Sorted `path-under-root:length:mtime` of `files`, joined by `|` —
+    * "" for none. Engine writes name part files by write-job UUID, so an
+    * append, delete, overwrite or swap changes it within one mtime tick.
+    */
+  def fingerprint(fs: FileSystem, root: Path, files: Seq[FileStatus]): String = {
+    val prefix = fs.makeQualified(root).toString.stripSuffix("/") + "/"
+    files.map(f => s"${f.getPath.toString.stripPrefix(prefix)}:${f.getLen}:" +
+      f.getModificationTime).sorted.mkString("|")
+  }
+
+  /** [[fingerprint]] of the committed [[files]] under `path`; `None` when
+    * it is missing, empty or unlistable ("build, don't cache").
+    */
+  def fingerprint(conf: Configuration, path: String): Option[String] =
+    try {
+      val root = new Path(path)
+      val fs = root.getFileSystem(conf)
+      Some(fingerprint(fs, root, files(fs, root))).filter(_.nonEmpty)
+    } catch { case _: java.io.IOException => None }
 }

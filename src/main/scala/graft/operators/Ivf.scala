@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Vec
@@ -496,13 +497,15 @@ object Ivf {
     * per delete batch, no touch of the data files) and every search
     * path — float AND the PQ/SQ8 coded siblings — filters them inside
     * its scan: the sidecar is read once per change into a sorted id
-    * set, broadcast, and probed per row ([[liveRows]]). Every read
-    * re-lists the sidecar, so a delete is visible to the very next
+    * set, broadcast, and probed per row ([[Snapshot.liveRows]]). Every
+    * read re-lists the sidecar, so a delete is visible to the very next
     * read in any JVM — no TTL, the same freshness rule as
-    * [[graft.Tables.loadArtifact]]. The tombstone set is id-sized (~8 MB per million Long ids, as parquet and as the
-    * broadcast `long[]`), so compaction cadence bounds how large it may
-    * grow. At 100 TB this is the only viable delete: rewriting shards
-    * per delete would be a full-table write for a row-sized change.
+    * [[graft.Tables.loadArtifact]]. The tombstone set is id-sized (~8 MB
+    * per million Long ids, as parquet and as the broadcast `long[]`);
+    * only [[clearTombstones]] shrinks it — [[maintain]] keeps the sidecar
+    * — so it holds every delete since the last clear. At 100 TB this is
+    * the only viable delete: rewriting shards per delete would be a
+    * full-table write for a row-sized change.
     *
     * Contract: a tombstone hides the id on every path — including a
     * subsequent `append` of the same id — until the sidecar is
@@ -534,7 +537,7 @@ object Ivf {
     * batch (lease create/release + the debris-purge existence check),
     * the same price append pays for the same guarantees. Nothing is
     * published to readers beyond the committed file: the new file
-    * changes the sidecar fingerprint every read lists ([[liveRows]]).
+    * changes the sidecar fingerprint every read lists ([[Snapshot]]).
     */
   private def writeTombstones(spark: SparkSession, index: Index,
       out: DataFrame,
@@ -643,8 +646,8 @@ object Ivf {
   /** Drop the tombstone sidecar — the final step of the delete
     * lifecycle, once a compacting [[maintain]] + coded-sibling rebuild
     * has materialized the deletes everywhere. Readers need no notice:
-    * [[liveRows]] re-lists the sidecar on every call, so the next read
-    * in any JVM stops filtering.
+    * every read's [[Snapshot]] re-lists the sidecar, so the next read in
+    * any JVM stops filtering.
     *
     * The precondition is VERIFIED, not trusted (VERDICT r13 #7): the
     * documented rule — clear LAST, after a compaction and a rebuild of
@@ -680,7 +683,7 @@ object Ivf {
     FsLease.withLease(fs, writerLeasePath(index),
       s"clear@${java.util.UUID.randomUUID()}", leaseStaleTtlMs,
       leaseTimeoutMs) {
-      val fp = tombstoneFp(fs, index)
+      val fp = snapshot(spark, index).tombFp
       if (fp.nonEmpty && !force) {
         if (!materializedMarker(fs, index).exists(_._1 == fp))
           throw new IllegalStateException(
@@ -706,20 +709,56 @@ object Ivf {
     }
   }
 
-  /** Sorted name:length:mtime fingerprint of the tombstone sidecar's
-    * committed data files — "" when there are none. Parquet part-file
-    * names embed write-job UUIDs, so any delete batch changes the
-    * fingerprint even within one mtime granule.
+  /** One listing of an index, taken once per call: the committed files
+    * of the dataset the call reads (the float `vectors/`, or a coded
+    * sibling in its layout at `path`) and of the tombstone sidecar, each
+    * with its [[FsList.fingerprint]]. The relation memo is keyed on
+    * [[dataFp]] and [[tombstoneSets]] on [[tombFp]], so a delete never
+    * rebuilds the relation, and a call's scan and its tombstone filter
+    * agree. Each half is listed once, on first use: a search lists each
+    * directory once and opens no file. One consistent listing per call,
+    * not isolation from a [[maintain]] swap.
     */
-  private def tombstoneFp(fs: org.apache.hadoop.fs.FileSystem,
-      index: Index): String = {
-    val tp = new org.apache.hadoop.fs.Path(tombstonesPath(index))
-    if (!fs.exists(tp)) ""
-    else FsList.files(fs, tp)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
-      .sorted.mkString("|")
+  private[operators] final class Snapshot(val spark: SparkSession,
+      val index: Index, path: String) {
+    private def committed(dir: String, keep: FileStatus => Boolean) = {
+      val root = new Path(dir)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val files = FsList.files(fs, root).filter(keep)
+      (files, FsList.fingerprint(fs, root, files), fs)
+    }
+    lazy val (dataFiles, dataFp, _) = committed(path, _ => true)
+    /** The sidecar's parquet files, their fingerprint ("" for none; the
+      * marker and registry record it) and the index directory's FS.
+      */
+    lazy val (tombFiles, tombFp, fs) = committed(tombstonesPath(index),
+      _.getPath.getName.endsWith(".parquet"))
+
+    /** The dataset's memoized lazy relation. */
+    def relation: DataFrame = graft.Tables.loadArtifact(spark, path,
+      Some(dataFp).filter(_.nonEmpty))
+
+    /** Live-row filter: drops every row whose id (cast to bigint) is in
+      * the tombstone set, as a predicate inside the scan — no join, no
+      * exchange, and no job beyond the scan itself. The set is the
+      * sorted distinct ids of exactly [[tombFiles]], read once per
+      * fingerprint ([[tombstoneSet]]) and shipped as one broadcast; a
+      * NULL id is never hidden, and NULL or duplicate tombstone rows
+      * hide nothing extra. Every search path reads through it — float
+      * and the IvfPq/IvfSq coded siblings alike. Each call lists anew,
+      * with no TTL, so a delete or clear committed by any JVM is seen by
+      * the next call. A sidecar with no committed data file (absent,
+      * cleared, or only a killed delete's `_temporary`) hides nothing.
+      */
+    def liveRows(df: DataFrame, idCol: String): DataFrame =
+      if (tombFp.isEmpty) df
+      else df.where(graft.functions.NotTombstoned.col(col(idCol),
+        tombstoneSet(this).shipped))
   }
+
+  /** A [[Snapshot]] of the index's float dataset. */
+  private[operators] def snapshot(spark: SparkSession, index: Index): Snapshot =
+    new Snapshot(spark, index, index.vectorsPath)
 
   /** Marker recording the tombstone fingerprint the last compact
     * materialized into the float files — sibling of `vectors/`, like
@@ -794,14 +833,12 @@ object Ivf {
       outPath: String, idCol: String, codeCols: Seq[String])(
       encode: DataFrame => DataFrame): Unit = {
     val id = effectiveIdCol(index, idCol)
-    val fs = new org.apache.hadoop.fs.Path(index.vectorsPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fp = tombstoneFp(fs, index)
+    val s = snapshot(spark, index)
     writeVectors(
-      encode(liveVectors(spark, index, id))
+      encode(s.liveRows(s.relation, id)) // lists the sidecar first
         .select((Seq("shard_id", "centroid_id", id) ++ codeCols).map(col): _*),
       id, index.numShards, outPath, "overwrite")
-    registerSibling(spark, index, outPath, fp)
+    registerSibling(spark, index, outPath, s.tombFp)
   }
 
   private def siblingsDir(index: Index): org.apache.hadoop.fs.Path =
@@ -829,57 +866,28 @@ object Ivf {
   /** The probe-pruned scan shared by every single-query search path
     * (float vectors and coded siblings alike): shard directory pruning
     * + chunked centroid row-group predicates ([[Pushdown]]) over the
-    * dataset's memoized lazy relation ([[graft.Tables.loadArtifact]] —
-    * no per-call file listing or footer schema inference). Probe-all
+    * dataset's memoized lazy relation ([[Snapshot.relation]] — no footer
+    * schema inference while its files are unchanged). Probe-all
     * (probes = every centroid) drops the centroid predicate entirely —
     * it is a tautology there, and at corpus-scale k the ⌈k/256⌉ chunk
     * arms would each re-scan what the shard pruning already admits.
     */
-  private[operators] def probePrunedScan(spark: SparkSession, path: String,
-      probes: Seq[Int], shards: Seq[Int], k: Int): DataFrame = {
-    val rel = graft.Tables.loadArtifact(spark, path)
+  private[operators] def probePrunedScan(spark: SparkSession, rel: DataFrame,
+      probes: Seq[Int], shards: Seq[Int], k: Int): DataFrame =
     if (probes.length >= k) rel.where(col("shard_id").isin(shards: _*))
     else Pushdown.inChunks(spark, probes)(ps =>
       rel.where(col("shard_id").isin(shards: _*) &&
         col("centroid_id").isin(ps: _*)))
-  }
-
-  /** Live-row filter: drops every row whose id (cast to bigint) is in
-    * the tombstone set, as a predicate inside the scan — no join, no
-    * exchange, and no job beyond the scan itself. The set is the
-    * sorted distinct ids of exactly the sidecar files [[tombstoneFp]]
-    * lists, read once per fingerprint ([[tombstoneSet]]) and shipped as
-    * one broadcast; a NULL id is never hidden, and NULL or duplicate
-    * tombstone rows hide nothing extra. The coded siblings (IvfPq,
-    * IvfSq) read through it too, via [[Prelude.scan]] and
-    * [[BatchPrelude.scan]] — a tombstone must hide the id on EVERY
-    * search path, not just the float one.
-    *
-    * Freshness is the fingerprint alone: it is listed on every call,
-    * with no TTL, so a delete or clear committed by any JVM is seen by
-    * the next call — the rule [[graft.Tables.loadArtifact]] applies to
-    * the relation. A sidecar with no committed data file (absent,
-    * cleared, or only a killed delete's `_temporary`) lists as "" and
-    * hides nothing.
-    */
-  private def liveRows(spark: SparkSession, index: Index,
-      df: DataFrame, idCol: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(tombstonesPath(index))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fp = tombstoneFp(fs, index)
-    if (fp.isEmpty) df
-    else df.where(graft.functions.NotTombstoned.col(col(idCol),
-      tombstoneSet(spark, index, fp).shipped))
-  }
 
   /** Live (non-tombstoned) rows of the index's float dataset — the
     * view NON-search consumers (index stats, dedup bucketing) should
     * read, so deleted vectors don't leak through side surfaces either.
     */
   def liveVectors(spark: SparkSession, index: Index,
-      idCol: String = null): DataFrame =
-    liveRows(spark, index, graft.Tables.loadArtifact(spark, index.vectorsPath),
-      effectiveIdCol(index, idCol))
+      idCol: String = null): DataFrame = {
+    val s = snapshot(spark, index)
+    s.liveRows(s.relation, effectiveIdCol(index, idCol))
+  }
 
   /** The layout id column a maintenance/search entry point should use:
     * the caller's explicit choice, else the column the index records it
@@ -890,21 +898,21 @@ object Ivf {
   private[operators] def effectiveIdCol(index: Index, idCol: String): String =
     if (idCol == null) index.idCol else idCol
 
-  /** Write the materialization marker for `index` iff the sidecar still
-    * fingerprints `fpBefore`. Skipped — safe-conservative, the flag
-    * stays raised and the next cycle re-pays — when a delete raced the
-    * rewrite (fingerprint moved) or a clear raced the count job (the
-    * fingerprint's files vanished mid-read; the marker would be moot,
-    * clear deletes it anyway). Marker absence can only cost an extra
-    * compact, never a wrong clear, so failures here never abort a
-    * compaction that already swapped successfully.
+  /** Write the materialization marker for `before.index` iff a fresh
+    * listing of the sidecar still fingerprints `before.tombFp`. Skipped
+    * — safe-conservative, the flag stays raised and the next cycle
+    * re-pays — when a delete raced the rewrite (fingerprint moved) or a
+    * clear raced the count job (the fingerprint's files vanished
+    * mid-read; the marker would be moot, clear deletes it anyway).
+    * Marker absence can only cost an extra compact, never a wrong
+    * clear, so failures here never abort a compaction that already
+    * swapped successfully.
     */
-  private def recordMaterialized(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, index: Index,
-      fpBefore: String): Unit =
-    if (fpBefore.nonEmpty && tombstoneFp(fs, index) == fpBefore)
-      try writeMaterializedMarker(fs, index, fpBefore,
-        tombstoneCountFor(spark, index, fpBefore))
+  private def recordMaterialized(before: Snapshot): Unit =
+    if (before.tombFp.nonEmpty &&
+        snapshot(before.spark, before.index).tombFp == before.tombFp)
+      try writeMaterializedMarker(before.fs, before.index, before.tombFp,
+        tombstoneSet(before).rows)
       catch { case scala.util.control.NonFatal(_) => () }
 
   /** Crash recovery for [[maintain]]'s swap window: if a prior call
@@ -1038,9 +1046,10 @@ object Ivf {
     *  1. takes the maintainer lease for the whole run (fail-fast — one
     *     maintainer at a time; the maintained ingest sink defers to a
     *     running one);
-    *  2. snapshots the live file listing and rewrites ONLY those live
-    *     rows (`basePath` read keeps the partition column; tombstoned
-    *     ids are dropped, so deletes materialize) into
+    *  2. takes one [[Snapshot]] (the trigger, the rewrite input and its
+    *     tombstone filter all read it) and rewrites ONLY its live rows
+    *     (`basePath` read keeps the partition column; tombstoned ids are
+    *     dropped, so deletes materialize) into
     *     `__compact_scratch/vectors` — appends keep landing in the live
     *     dir meanwhile;
     *  3. takes the WRITER lease (waiting out at most one in-flight
@@ -1062,11 +1071,13 @@ object Ivf {
     * [[recoverFromCrashedCompact]] renames it back as CODE: every entry
     * point that could otherwise observe or destroy the crashed state
     * (this method, [[append]], [[maintenanceStats]]) runs it first;
-    * after the second rename — only trash/scratch garbage. Readers get
-    * no snapshot: a concurrent reader can catch the instant between the
-    * two renames and fail one scan — retry-safe, but true
-    * concurrent-swap isolation needs a transactional table format, the
-    * same boundary [[graft.streaming.VectorsStreaming.appendVectorBatch]]
+    * after the second rename — only trash/scratch garbage. Each read
+    * takes one [[Snapshot]]: one consistent listing per call, not
+    * isolation from this swap — a concurrent reader can still catch the
+    * instant between the two renames and fail one scan. Retry-safe, but
+    * true concurrent-swap isolation needs a versioned index manifest or
+    * a transactional table format, the same boundary
+    * [[graft.streaming.VectorsStreaming.appendVectorBatch]]
     * documents for exactly-once.
     *
     * The tombstone sidecar, the materialization marker and the
@@ -1100,13 +1111,18 @@ object Ivf {
       s"maintain@${java.util.UUID.randomUUID()}", leaseStaleTtlMs,
       timeoutMs = 0L) {
       recoverOwningLease(spark, index) // a crashed predecessor's state
-      val stats = maintenanceStats(spark, index)
+      requireLiveLayout(spark, index, "maintain")
+      // ONE snapshot serves the trigger, the rewrite input and its
+      // tombstone filter: the marker may only claim tombstones whose
+      // files the rewrite's filter definitely read — a delete racing the
+      // rewrite leaves it unwritten and the next cycle pays the debt
+      val before = snapshot(spark, index)
       // trigger MATCHES compactRecommended (VERDICT r13 #1): the
       // documented poll-recommend→maintain loop must converge, so
       // tombstone debt compacts here too — and because the compact
       // writes the materialization marker, recommended then goes false
       // instead of re-flagging the same (carried) sidecar forever
-      if (!stats.compactRecommended(maxFilesPerShard,
+      if (!statsOf(before).compactRecommended(maxFilesPerShard,
         maxUnmaterializedTombstones)) MaintainSkipped
       else {
         val scratch = s"$base/__compact_scratch"
@@ -1114,29 +1130,21 @@ object Ivf {
         fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
         fs.delete(trash, true) // healthy here: recovery above would have
                                // restored a crashed swap before this point
-        def listing(): Set[String] =
-          FsList.files(fs, livePath)
-            .collect { case f if f.getPath.getName.endsWith(".parquet") =>
-              f.getPath.toString
-            }.toSet
-        val snapshot = listing()
+        def parquetPaths(s: Snapshot): Set[String] = s.dataFiles.map(_.getPath)
+          .filter(_.getName.endsWith(".parquet")).map(_.toString).toSet
+        val listed = parquetPaths(before)
         val snapshotDf = spark.read
           .option("basePath", index.vectorsPath)
-          .parquet(snapshot.toSeq.sorted: _*)
-        // fingerprint BEFORE the rewrite reads the live view: the marker
-        // may only claim tombstones whose files the rewrite's filter
-        // definitely read — a delete racing the rewrite leaves it
-        // unwritten and the next cycle pays the remaining debt
-        val tombFpBefore = tombstoneFp(fs, index)
+          .parquet(listed.toSeq.sorted: _*)
         val scratchVectors = s"$scratch/vectors"
-        writeVectors(liveRows(spark, index, snapshotDf, id),
+        writeVectors(before.liveRows(snapshotDf, id),
           id, index.numShards, scratchVectors, "overwrite")
         beforeFence() // test seam: appends racing the rewrite land here
         val merged = FsLease.withLease(fs, writerLeasePath(index),
           s"maintain-swap@${java.util.UUID.randomUUID()}", leaseStaleTtlMs,
           fenceTimeoutMs) {
-          val current = listing()
-          if (!snapshot.subsetOf(current)) {
+          val current = parquetPaths(snapshot(spark, index))
+          if (!listed.subsetOf(current)) {
             fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
             throw new IllegalStateException(
               "maintain: files from the rewrite snapshot vanished from " +
@@ -1145,7 +1153,7 @@ object Ivf {
                 "index is untouched; quiesce the competing writer and " +
                 "retry.")
           }
-          val delta = (current -- snapshot).toSeq.sorted
+          val delta = (current -- listed).toSeq.sorted
           // listings return fully-qualified URIs (file:/…); qualify the
           // live path the same way before computing relative paths
           val prefix =
@@ -1180,7 +1188,7 @@ object Ivf {
         }
         fs.delete(trash, true)
         fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-        recordMaterialized(spark, fs, index, tombFpBefore)
+        recordMaterialized(before)
         MaintainCompacted(merged)
       }
     }
@@ -1190,8 +1198,8 @@ object Ivf {
     * compact-on-file-count rule SCALE.md round 12 measured (each
     * append adds ~one file per shard; ten appends made warm search
     * 2.3× slower until one compact reset it). Metadata-only: one
-    * recursive FS listing for the data files plus one listing of the
-    * tombstone sidecar — the tombstone COUNT is memoized per sidecar
+    * [[Snapshot]] (a recursive FS listing of the data files and one of
+    * the tombstone sidecar) — the tombstone COUNT is memoized per sidecar
     * fingerprint (name/length/mtime of its files), so the steady-state
     * probe launches ZERO Spark jobs (the count job runs once per
     * sidecar change, not per poll — VERDICT r12 what's-wrong #2) and
@@ -1249,7 +1257,7 @@ object Ivf {
   }
 
   /** One entry per (SparkContext, index path), fingerprinted by the
-    * sidecar's [[tombstoneFp]]: the read job reruns only when the
+    * sidecar's [[Snapshot.tombFp]]: the read job reruns only when the
     * sidecar's files actually changed (delete appends a file;
     * clearTombstones removes the dir), so searches and a polling
     * ingest loop pay one tiny job per DELETE, not per call. Keyed by
@@ -1258,11 +1266,11 @@ object Ivf {
     */
   private val tombstoneSets = new graft.Tables.DataKeyedMemo[TombstoneSet]()
 
-  /** The [[TombstoneSet]] of the sidecar state fingerprinted by the
-    * non-empty `fp`. Reads EXACTLY the files the fingerprint lists, not
-    * the directory (ADVICE r14: a delete batch landing between the
-    * caller's fingerprint check and this job must not inflate the count
-    * recorded under `fp` — that under-reported the NEXT batch's debt as
+  /** The [[TombstoneSet]] of the sidecar state `s` listed, whose
+    * [[Snapshot.tombFp]] is non-empty. Reads EXACTLY the listed files,
+    * not the directory (ADVICE r14: a delete batch landing between the
+    * listing and this job must not inflate the count recorded under the
+    * fingerprint — that under-reported the NEXT batch's debt as
     * `tombs - mcount` went negative-ish and a compact could be deferred
     * one extra delete). One job, no shuffle: each task sorts and
     * deduplicates its own ids, the driver merges. A file vanishing
@@ -1270,15 +1278,13 @@ object Ivf {
     * that as "marker moot" and skip, a search fails like any scan that
     * races a clear.
     */
-  private def tombstoneSet(spark: SparkSession, index: Index,
-      fp: String): TombstoneSet = {
-    val sc = spark.sparkContext
+  private def tombstoneSet(s: Snapshot): TombstoneSet = {
+    val sc = s.spark.sparkContext
     tombstoneSets.get(
-      s"${System.identityHashCode(sc)}:${sc.applicationId}:${index.vectorsPath}",
-      Some(fp)) {
-      val dir = tombstonesPath(index)
-      val files = fp.split('|').toSeq.map(e => s"$dir/${e.split(':')(0)}")
-      val parts = spark.read.schema("__deleted_id LONG").parquet(files: _*)
+      s"${System.identityHashCode(sc)}:${sc.applicationId}:${s.index.vectorsPath}",
+      Some(s.tombFp)) {
+      val parts = s.spark.read.schema("__deleted_id LONG")
+        .parquet(s.tombFiles.map(_.getPath.toString): _*)
         .rdd.mapPartitions { it =>
           val ids = new scala.collection.mutable.ArrayBuilder.ofLong
           var rows = 0L
@@ -1305,41 +1311,26 @@ object Ivf {
     java.util.Arrays.copyOf(xs, n)
   }
 
-  /** Tombstone rows in the sidecar state fingerprinted by `fp`,
-    * duplicates and NULLs included — served from [[tombstoneSet]], so
-    * the maintenance probe and the search filter share one read.
-    */
-  private def tombstoneCountFor(spark: SparkSession, index: Index,
-      fp: String): Long =
-    if (fp.isEmpty) 0L else tombstoneSet(spark, index, fp).rows
-
   def maintenanceStats(spark: SparkSession, index: Index): MaintenanceStats = {
     // never inspect a crashed-swap layout: the listing would describe a
     // missing (or restored-pending) index as empty-and-healthy
     requireLiveLayout(spark, index, "maintenanceStats")
-    val root = new org.apache.hadoop.fs.Path(index.vectorsPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val perShard = scala.collection.mutable.Map.empty[String, Int]
-    var files = 0
-    var bytes = 0L
-    // non-located listing (FsList): the located recursive form made
-    // this probe O(index)·~5 ms/file — a growing stall per ingest
-    // micro-batch, the opposite of its poll-safely contract
-    FsList.files(fs, root).foreach { f =>
-      if (f.getPath.getName.endsWith(".parquet")) {
-        files += 1
-        bytes += f.getLen
-        val shard = f.getPath.getParent.getName // shard_id=N partition dir
-        perShard(shard) = perShard.getOrElse(shard, 0) + 1
-      }
-    }
-    val fp = tombstoneFp(fs, index)
-    val tombs = tombstoneCountFor(spark, index, fp)
+    statsOf(snapshot(spark, index))
+  }
+
+  /** [[maintenanceStats]] of the index state `s` listed. */
+  private def statsOf(s: Snapshot): MaintenanceStats = {
+    val data = s.dataFiles.filter(_.getPath.getName.endsWith(".parquet"))
+    val perShard = // files per shard_id=N partition dir
+      data.groupBy(_.getPath.getParent.getName).values.map(_.size)
+    val fp = s.tombFp
+    // sidecar rows, duplicates and NULLs included: the search filter's read
+    val tombs = if (fp.isEmpty) 0L else tombstoneSet(s).rows
     // metadata-only like the rest of the probe: one marker read per
     // poll (no Spark job), against the same listing fingerprint
     val unmat =
       if (tombs == 0L) 0L
-      else materializedMarker(fs, index) match {
+      else materializedMarker(s.fs, s.index) match {
         case Some((mfp, _)) if mfp == fp => 0L
         case Some((mfp, mcount)) =>
           // materialized files all still present + new delete files on
@@ -1351,8 +1342,9 @@ object Ivf {
           else tombs
         case None => tombs
       }
-    MaintenanceStats(files, index.numShards,
-      if (perShard.isEmpty) 0 else perShard.values.max, bytes, tombs, unmat)
+    MaintenanceStats(data.length, s.index.numShards,
+      if (perShard.isEmpty) 0 else perShard.max, data.map(_.getLen).sum,
+      tombs, unmat)
   }
 
   /** Load the routing table back (S6). */
@@ -1425,9 +1417,11 @@ object Ivf {
     /** Live rows of the probed cells of the dataset at `path` — the
       * float vectors or a coded sibling in the same layout.
       */
-    def scan(spark: SparkSession, path: String): DataFrame =
-      liveRows(spark, index,
-        probePrunedScan(spark, path, probes, shards, index.k), id)
+    def scan(spark: SparkSession, path: String): DataFrame = {
+      val s = new Snapshot(spark, index, path)
+      s.liveRows(probePrunedScan(spark, s.relation, probes, shards, index.k),
+        id)
+    }
   }
 
   /** The read prelude of every single-query entry point (float `search`
@@ -1453,9 +1447,11 @@ object Ivf {
   private[operators] final case class BatchPrelude(index: Index, id: String,
       probes: Array[Array[Int]], shards: Seq[Int]) {
     /** Live rows of the union of probed cells of the dataset at `path`. */
-    def scan(spark: SparkSession, path: String): DataFrame =
-      liveRows(spark, index, probePrunedScan(spark, path,
+    def scan(spark: SparkSession, path: String): DataFrame = {
+      val s = new Snapshot(spark, index, path)
+      s.liveRows(probePrunedScan(spark, s.relation,
         probes.flatten.distinct.toSeq, shards, index.k), id)
+    }
   }
 
   /** [[prelude]] for a driver-side query batch: the same clamp and
@@ -1560,7 +1556,7 @@ object Ivf {
     *     the query vectors as one `float[]`), shipped in ONE broadcast;
     *   - the vectors dataset is scanned once, directory-pruned to the
     *     union of probed shards, with the tombstone id-set predicate
-    *     ([[liveRows]]) and `filter` applied inside the scan;
+    *     ([[Snapshot.liveRows]]) and `filter` applied inside the scan;
     *   - the [[ListScan]] kernel decodes each index row into a primitive
     *     `float[]` once, loops over the queries probing its cell, and
     *     keeps a bounded best-first buffer per query, so a scan task
@@ -1594,10 +1590,9 @@ object Ivf {
     val block = spark.sparkContext.broadcast(ListScan.queryBlock(
       queries, b.probes, index.k, index.centroids(0).length))
     // shard pruning only: the kernel itself skips unprobed cells
-    val pruned = liveRows(spark, index,
-      graft.Tables.loadArtifact(spark, index.vectorsPath)
-        .where(col("shard_id").isin(b.shards: _*)),
-      b.id)
+    val s = snapshot(spark, index)
+    val pruned = s.liveRows(
+      s.relation.where(col("shard_id").isin(b.shards: _*)), b.id)
     val rows = filter.map(pruned.where).getOrElse(pruned)
       .select(col("centroid_id"), col(b.id).cast("long"), col(embCol))
     TopNByKey.topN(ListScan.scan(rows, block, k), Seq("query_id"),
@@ -1669,7 +1664,8 @@ object Ivf {
       .distinct
     val qCols = (Seq(qidCol, qembCol) ++
       filterRefs.filter(queries.columns.contains)).distinct
-    val vectors = graft.Tables.loadArtifact(spark, index.vectorsPath)
+    val s = snapshot(spark, index)
+    val vectors = s.relation
     val idxCols = vectors.columns.toSet + "centroid_id"
     val clash = qCols.filter(idxCols.contains)
     require(clash.isEmpty,
@@ -1707,7 +1703,7 @@ object Ivf {
     // exchange on the query id carries ≤ k·P rows per query, which is
     // what keeps a hot query (or a hot probed cell fanning out to many
     // queries) from becoming one reducer sorting its whole candidate set
-    val joined = liveRows(spark, index, vectors, id)
+    val joined = s.liveRows(vectors, id)
       .join(probed, Seq("centroid_id"))
     val candidates = pairFilter.map(joined.where).getOrElse(joined)
       .withColumn("distance",

@@ -168,7 +168,8 @@ object IvfPq {
     // (the shortlist can only contain rows from them), so the exact math
     // reads probed bytes ∩ shortlist — never the whole float dataset
     Ivf.rankTopK(
-      Ivf.probePrunedScan(spark, ivf.vectorsPath, p.probes, p.shards, ivf.k)
+      Ivf.probePrunedScan(spark, Ivf.snapshot(spark, ivf).relation,
+        p.probes, p.shards, ivf.k)
         .join(broadcast(shortlist), Seq(p.id), "left_semi")
         .withColumn("distance",
           graft.functions.Vec.squaredL2(col(embCol), lit(query))),

@@ -27,11 +27,15 @@ object IndexQueries {
       Ivf.build(emb, "vec_id", "embedding", indexDir)
     }
 
+  /** Embedding of `vec_id = qid`, memoized like [[queryFixtures]]. */
+  private val queryVecCache = new Tables.DataKeyedMemo[Array[Float]]()
   private def queryVec(spark: SparkSession, dir: String, qid: Long): Array[Float] =
-    Tables.embeddings(spark, dir)
-      .where(col("vec_id") === qid)
-      .select("embedding")
-      .head().getSeq[Float](0).toArray
+    queryVecCache.get(dir, s"q$qid") {
+      Tables.embeddings(spark, dir)
+        .where(col("vec_id") === qid)
+        .select("embedding")
+        .head().getSeq[Float](0).toArray
+    }
 
   /** Search with n_probe = maxNProbe → probes everything → exact. */
   def searchProbeAll(spark: SparkSession, dir: String): DataFrame = {

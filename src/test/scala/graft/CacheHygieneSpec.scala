@@ -6,7 +6,11 @@ package graft
   * Verify and Bench both — calls `spark.catalog.clearCache()` after
   * each query completes. This spec pins that pattern: after running
   * persisting builders to completion and applying the harness
-  * clearCache, no cached RDDs remain registered in the context.
+  * clearCache, no cached RDDs remain registered in the context. It also
+  * gates the memos: `DataKeyedMemo`'s rebuild rule, and
+  * `Tables.loadArtifact`, whose fingerprint is a Hadoop-FS listing
+  * (`FsList.fingerprint`) — an in-place overwrite serves the new rows
+  * and a missing path caches nothing.
   */
 class CacheHygieneSpec extends SparkSpec {
 

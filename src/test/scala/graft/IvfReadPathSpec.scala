@@ -9,14 +9,17 @@ import org.apache.spark.sql.types._
 import graft.functions.Vec
 import graft.operators.Ivf
 
-/** The IVF read paths plan against memoized per-index state: the
-  * vectors relation comes from `Tables.loadArtifact` (re-fingerprinted on
-  * every call), and tombstones are a broadcast id set probed inside the
-  * scan. Checked here: the jobs a warm search launches, that no state
-  * goes stale across appends, deletes, maintenance swaps, clears and a
-  * second handle's writes, that sessions never share a relation, and
-  * the anti-join semantics of the filter on NULL ids and NULL or
-  * duplicate tombstone rows.
+/** The IVF read paths plan against memoized per-index state: each call
+  * takes one `Ivf.Snapshot` (one Hadoop-FS listing of the vectors and
+  * the tombstone sidecar), the vectors relation is memoized on its data
+  * fingerprint and the tombstones are a broadcast id set, memoized on
+  * the sidecar fingerprint and probed inside the scan. Checked here: the
+  * jobs a warm search launches, that no state goes stale across appends,
+  * deletes, maintenance swaps, clears and a second handle's writes, that
+  * sessions never share a relation, the anti-join semantics of the
+  * filter on NULL ids and NULL or duplicate tombstone rows, and — on an
+  * index under a non-local scheme ([[CountingFs]]) — the same rows as a
+  * plain path and the filesystem calls a read or a maintain makes.
   */
 class IvfReadPathSpec extends SparkSpec {
   import spark.implicits._
@@ -25,9 +28,12 @@ class IvfReadPathSpec extends SparkSpec {
     Tables.embeddings(spark, sf0001).select("vec_id", "embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
 
-  /** A fresh index over `vec_id < 300` of the sf0.001 embeddings. */
-  private def freshIndex(): (String, Ivf.Index) = {
-    val dir = Files.createTempDirectory("graft_read_path").toString
+  /** A fresh index over `vec_id < 300` of the sf0.001 embeddings, in a
+    * new local directory addressed through `at`.
+    */
+  private def freshIndex(at: String => String = identity)
+      : (String, Ivf.Index) = {
+    val dir = at(Files.createTempDirectory("graft_read_path").toString)
     val emb = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding"))
     (dir, Ivf.build(emb.where(col("vec_id") < 300), "vec_id", "embedding", dir))
@@ -35,6 +41,16 @@ class IvfReadPathSpec extends SparkSpec {
 
   private def queries(ids: Long*): Array[(Long, Array[Float])] =
     ids.map(i => (i, embAll.find(_._1 == i).get._2)).toArray
+
+  /** Near-copies of `qs` under ids `base + qid`: each ranks right behind
+    * its query's own vector, so appending them moves every top-k.
+    */
+  private def nearCopies(qs: Array[(Long, Array[Float])],
+      base: Long): DataFrame =
+    qs.toSeq.map { case (qid, q) =>
+      (base + qid, q.updated(0, q(0) + 0.001f).toSeq)
+    }.toDF("vec_id", "embedding")
+      .select(col("vec_id"), col("embedding").cast("array<float>"))
 
   private def queryDf(qs: Array[(Long, Array[Float])],
       session: SparkSession = spark): DataFrame =
@@ -150,13 +166,6 @@ class IvfReadPathSpec extends SparkSpec {
       "maintain, a forced clear and a second handle's append") {
     val (dir, idx) = freshIndex()
     val qs = queries(3L, 50L, 120L, 250L)
-    // near-copies of the queries under fresh ids: each ranks right
-    // behind its query's own vector, so appends move every top-k
-    def nearCopies(base: Long): DataFrame =
-      qs.toSeq.map { case (qid, q) =>
-        (base + qid, q.updated(0, q(0) + 0.001f).toSeq)
-      }.toDF("vec_id", "embedding")
-        .select(col("vec_id"), col("embedding").cast("array<float>"))
     Ivf.delete(spark, idx, Seq(120L))
     var prev = reference(idx, qs, 5)
     def check(step: String, moves: Boolean): Unit = {
@@ -170,7 +179,7 @@ class IvfReadPathSpec extends SparkSpec {
     }
     check("build + delete", moves = false)
     val files = parquetFiles(idx.vectorsPath)
-    Ivf.append(idx, nearCopies(10000L), "vec_id", "embedding")
+    Ivf.append(idx, nearCopies(qs, 10000L), "vec_id", "embedding")
     assert(parquetFiles(idx.vectorsPath) > files)
     check("append", moves = true)
     Ivf.delete(spark, idx, Seq(3L, 10050L))
@@ -184,7 +193,7 @@ class IvfReadPathSpec extends SparkSpec {
     Ivf.clearTombstones(spark, idx, force = true)
     check("clearTombstones(force = true)", moves = true)
     val second = Ivf.load(spark, dir)
-    Ivf.append(second, nearCopies(20000L), "vec_id", "embedding")
+    Ivf.append(second, nearCopies(qs, 20000L), "vec_id", "embedding")
     check("an append through a second handle", moves = true)
   }
 
@@ -202,6 +211,79 @@ class IvfReadPathSpec extends SparkSpec {
     assert(Ivf.annJoin(queryDf(qs, other), idx, k = 5, nProbe = 10000)
       .sparkSession eq other)
     assert(allPaths(idx, qs, 5, other).forall(_._2 == want))
+  }
+
+  test("an index under a non-local scheme returns the rows of the same " +
+      "index at a plain path through build, append, delete and maintain") {
+    CountingFs.register(spark)
+    val (_, plain) = freshIndex()
+    val (_, other) = freshIndex(CountingFs.uri)
+    val qs = queries(3L, 50L, 120L, 250L)
+    def same(step: String): Unit = {
+      val want = allPaths(plain, qs, 5)
+      allPaths(other, qs, 5).zip(want).foreach { case ((path, got), (_, w)) =>
+        assert(got == w, s"after $step, $path diverges from the plain path")
+      }
+      val (a, b) = (Ivf.maintenanceStats(spark, other),
+        Ivf.maintenanceStats(spark, plain))
+      assert((a.tombstones, a.unmaterializedTombstones) ==
+        (b.tombstones, b.unmaterializedTombstones), s"after $step")
+    }
+    same("build")
+    Seq(plain, other).foreach(
+      Ivf.append(_, nearCopies(qs, 10000L), "vec_id", "embedding"))
+    same("append")
+    Seq(plain, other).foreach(Ivf.delete(spark, _, Seq(3L, 120L, 10050L)))
+    same("delete")
+    Seq(plain, other).foreach(idx =>
+      assert(Ivf.maintain(spark, idx).isInstanceOf[Ivf.MaintainCompacted]))
+    same("maintain")
+  }
+
+  test("under a non-local scheme a warm search runs one job, a warm read " +
+      "lists each index directory at most once and opens no file, and " +
+      "maintain lists vectors/ and tombstones/ twice each") {
+    CountingFs.register(spark)
+    val (dir, idx) = freshIndex(CountingFs.uri)
+    val root = dir.stripPrefix(s"${CountingFs.Scheme}://")
+    val qs = queries(3L, 7L, 120L)
+    Ivf.delete(spark, idx, Seq(3L, 50L))
+    val reads = Seq[(String, () => Any)](
+      "search" -> (() => Ivf.search(spark, idx, qs.head._2, 10, 20).collect()),
+      "searchBatch" -> (() => Ivf.searchBatch(spark, idx, qs, 10, 20).collect()),
+      "annJoin" -> (() =>
+        Ivf.annJoin(queryDf(qs), idx, k = 10, nProbe = 20).collect()))
+    reads.foreach(_._2()) // warm
+    def lists(calls: Map[(String, String), Int], sub: String): Int =
+      calls.getOrElse(("list", s"$root/$sub"), 0)
+    def summary(calls: Map[(String, String), Int]): String =
+      Seq("list", "status", "open").map { op =>
+        s"$op ${calls.collect { case ((`op`, _), n) => n }.sum}"
+      }.mkString(", ") +
+        s"; vectors/ listed ${lists(calls, "vectors")}, tombstones/ " +
+        s"listed ${lists(calls, "tombstones")}, most listings of one dir " +
+        calls.collect { case (("list", _), n) => n }.maxOption.getOrElse(0)
+    val (_, searchJobs) = jobsOf(reads.head._2())
+    info(s"warm search: $searchJobs job(s)")
+    val warm = reads.map { case (name, run) =>
+      val calls = CountingFs.counting(run())._2
+      info(s"warm $name: ${summary(calls)}")
+      name -> calls
+    }
+    val (outcome, maint) = CountingFs.counting(Ivf.maintain(spark, idx))
+    info(s"maintain: ${summary(maint)}")
+    assert(searchJobs == 1, s"warm search ran $searchJobs jobs")
+    warm.foreach { case (name, calls) =>
+      val relisted = calls.collect { case (("list", p), n) if n > 1 => p -> n }
+      assert(relisted.isEmpty, s"warm $name re-listed $relisted")
+      val opened = calls.collect { case (("open", p), n) => p -> n }
+      assert(opened.isEmpty, s"warm $name opened $opened")
+      assert(lists(calls, "vectors") == 1 && lists(calls, "tombstones") == 1,
+        s"warm $name: ${summary(calls)}")
+    }
+    assert(outcome.isInstanceOf[Ivf.MaintainCompacted])
+    assert(lists(maint, "vectors") == 2 && lists(maint, "tombstones") == 2,
+      s"maintain: ${summary(maint)}")
   }
 
   test("the tombstone filter keeps NULL ids; NULL and duplicate tombstone " +
