@@ -3,11 +3,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    // SPARK_GRAFT_HASH_FAMILY=xx benches the batch sketch entries (HLL,
-    // CMS) under the production hash family; default md5 = the oracled
-    // family. Bench-only: Verify never sets the session conf, so oracle
-    // runs are always md5 (Hash60.FamilyConfKey scaladoc).
-    val hashFamily = sys.env.getOrElse("SPARK_GRAFT_HASH_FAMILY", "md5")
     // NOTE on logging: the artifact-tail hygiene (no stray INFO lines in
     // the driver's ~2000-char output window) is owned by the classpath
     // log4j2.properties in src/main/resources — a programmatic
@@ -116,7 +111,6 @@ object Bench {
       s
     }
     val spark = GraftSession.local(cpus)
-    spark.conf.set(graft.functions.Hash60.FamilyConfKey, hashFamily)
     // every timed entry runs as one meter scope: its wall time, and the
     // jobs, tasks, bytes and planning time it caused (bench_detail.json's
     // `vectors`; README "Reading bench_detail.json")
@@ -140,10 +134,6 @@ object Bench {
         System.err.println(s"[bench] $name FAILED ($label): ${e.getMessage}"))
       Run(if (s.result.isSuccess) s.seconds else -1.0, builderS, s.cost)
     }
-    // fail fast on a typo'd family — otherwise every sketch query would
-    // quietly record -1 via timedPass's catch and the multi-minute run
-    // would produce a corrupt artifact
-    graft.functions.Hash60.catalog(spark)
     // JVM/codegen/committer warm-up BEFORE any timed entry: ivf_build
     // runs first and would otherwise absorb ~5 s of one-time costs that
     // no other (warm-JVM) entry pays
@@ -368,7 +358,7 @@ object Bench {
       { val d = java.nio.file.Paths.get("bench-series")
         java.nio.file.Files.createDirectories(d)
         d.resolve("bench_detail.json") },
-      (s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${jsonMap(results)(ms)},"queries2":${jsonMap(secondPass)(ms)},"queries3":${jsonMap(thirdPass)(ms)},"queries_min":${jsonMap(minPass)(ms)},"value1":${ms(total1)},"value2":${ms(total2)},"value3":${ms(total3)},"t2_min":${ms(totalMin)},"load_start":$loadStart,"load_end":${loadAvg()},$calibFields,"vectors":$vectorsJson,"hash_family":"$hashFamily","sf":"$sfDir"}""" + "\n")
+      (s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${jsonMap(results)(ms)},"queries2":${jsonMap(secondPass)(ms)},"queries3":${jsonMap(thirdPass)(ms)},"queries_min":${jsonMap(minPass)(ms)},"value1":${ms(total1)},"value2":${ms(total2)},"value3":${ms(total3)},"t2_min":${ms(totalMin)},"load_start":$loadStart,"load_end":${loadAvg()},$calibFields,"vectors":$vectorsJson,"sf":"$sfDir"}""" + "\n")
         .getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
     // compact line: failed queries always included, then most-expensive
@@ -406,6 +396,6 @@ object Bench {
     val nFail = results.values.count(_ < 0)
     meter.close()
     spark.stop()
-    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${kept.mkString("{", ",", "}")},"queries2":${kept2.mkString("{", ",", "}")},"nq":${results.size},"nfail":$nFail,"t1":${ms(total1)},"t2":${ms(total2)},"t3":${ms(total3)},"t2_min":${ms(totalMin)},"load_start":$loadStart,"load_end":${loadAvg()},$calibFields,"hash_family":"$hashFamily","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${kept.mkString("{", ",", "}")},"queries2":${kept2.mkString("{", ",", "}")},"nq":${results.size},"nfail":$nFail,"t1":${ms(total1)},"t2":${ms(total2)},"t3":${ms(total3)},"t2_min":${ms(totalMin)},"load_start":$loadStart,"load_end":${loadAvg()},$calibFields,"sf":"$sfDir"}""")
   }
 }

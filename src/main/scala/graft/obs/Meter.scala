@@ -20,10 +20,12 @@ final case class TaskCost(stageId: Int, result: Boolean, finishMs: Long,
 /** Spark work one scope ran: the jobs started under it, the stages of
   * those jobs that completed and their tasks, the Catalyst planning time
   * (analysis + optimization + physical planning) of its SQL executions,
-  * and the exchanges and subqueries their executed plans reused.
+  * and their executed plans.
   */
 final case class Cost(jobs: Int, stages: Int, planMs: Long,
-    reusedExchanges: Int, tasks: Vector[TaskCost]) {
+    plans: Vector[String], tasks: Vector[TaskCost]) {
+  /** Exchanges and subqueries the executed plans reused. */
+  def reusedExchanges: Int = plans.map(Cost.Reused.findAllIn(_).length).sum
   def cpuS: Double = tasks.map(_.cpuNs).sum / 1e9
   def gcS: Double = tasks.map(_.gcMs).sum / 1e3
   def inputMb: Double = tasks.map(_.inputBytes).sum / 1e6
@@ -33,6 +35,10 @@ final case class Cost(jobs: Int, stages: Int, planMs: Long,
   def taskMsMax: Long = if (tasks.isEmpty) 0L else tasks.map(_.ms).max
   def taskMsP50: Long =
     if (tasks.isEmpty) 0L else tasks.map(_.ms).sorted.apply(tasks.size / 2)
+}
+
+object Cost {
+  private val Reused = "ReusedExchange|ReusedQueryStage|ReusedSubquery".r
 }
 
 /** A scope's outcome: the body's result (a failure keeps its counts),
@@ -53,8 +59,9 @@ final class Meter(spark: SparkSession) extends AutoCloseable {
   private val sc = spark.sparkContext
 
   private final class Acc {
-    var jobs, stages, reused = 0
+    var jobs, stages = 0
     var planMs = 0L
+    val plans = Vector.newBuilder[String]
     val tasks = Vector.newBuilder[TaskCost]
   }
   private val open = mutable.Map.empty[Long, Acc]
@@ -111,11 +118,10 @@ final class Meter(spark: SparkSession) extends AutoCloseable {
             val ph = qe.tracker.phases
             val planMs = PlanPhases.flatMap(ph.get).map(_.durationMs).sum
             // an execution that failed before planning has no plan to read
-            val reused = Try(qe.executedPlan.toString)
-              .fold(_ => 0, Reused.findAllIn(_).length)
+            val plan = Try(qe.executedPlan.toString).toOption
             Meter.this.synchronized {
               ids.flatMap(open.get).foreach { a =>
-                a.planMs += planMs; a.reused += reused
+                a.planMs += planMs; a.plans ++= plan
               }
             }
         }
@@ -146,7 +152,7 @@ final class Meter(spark: SparkSession) extends AutoCloseable {
       stageScopes.filterInPlace((_, ids) => ids.exists(open.contains))
       execScopes.filterInPlace((_, ids) => ids.exists(open.contains))
       Scoped(result, seconds,
-        Cost(a.jobs, a.stages, a.planMs, a.reused, a.tasks.result()))
+        Cost(a.jobs, a.stages, a.planMs, a.plans.result(), a.tasks.result()))
     }
   }
 
@@ -157,7 +163,6 @@ object Meter {
   private val TagPrefix = "graft-obs-"
   private val nextId = new AtomicLong()
   private val PlanPhases = Seq("analysis", "optimization", "planning")
-  private val Reused = "ReusedExchange|ReusedQueryStage|ReusedSubquery".r
 
   /** `body`'s result and cost, from a meter of its own; a failure of the
     * body is rethrown.

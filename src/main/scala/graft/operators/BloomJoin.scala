@@ -81,8 +81,9 @@ object BloomJoin {
     }
   }
 
-  /** The pre-round-12 ScalaUDF probe, kept private for the A/B
-    * measurement (DebugBloomProbe) and the BloomJoinSpec parity gate —
+  /** The pre-round-12 ScalaUDF probe, kept private for the
+    * BloomJoinSpec parity gate (the A/B is SCALE.md round 12, "Bloom
+    * probe moved to a codegen expression") —
     * semantically identical to [[mightContain]] including
     * null-never-matches.
     */

@@ -31,7 +31,7 @@ object Bm25 {
 
   /** Batch-term-set-to-vocabulary ratio above which scoring skips the
     * isin seek and reads the plain posting scan. The seek wins only
-    * while most row groups contain NO batch term. DebugBm25Scale swept
+    * while most row groups contain NO batch term. SCALE.md round 8 swept
     * the crossover on a 20M-posting / 20k-vocab index (seek vs full
     * scan): 2.6× faster at 2% coverage, 1.9× at 4–8%, parity at ~15%,
     * 1.9× SLOWER at 28%. 0.10 sits comfortably inside the measured win
@@ -179,7 +179,7 @@ object Bm25 {
     // something in ~every row group, so the pushed set skips nothing
     // and the chunked scans are pure overhead (measured at 20M
     // postings: 28%-of-vocab batch reads 1.7× SLOWER chunked than a
-    // full scan + broadcast join; DebugBm25Scale, SCALE.md round 8).
+    // full scan + broadcast join; SCALE.md round 8).
     // Vocabulary size = one cached metadata-only count of the df table.
     val seek = qtermSorted.size <= math.max(1L,
       (vocabSize(spark, index) * seekCeiling).toLong)

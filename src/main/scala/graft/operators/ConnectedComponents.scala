@@ -19,20 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** One distributed round's footprint: edge-set size after the round
-    * and the wall-clock instant it finished (nanoTime). */
-  private[graft] case class RoundStat(round: Int, edges: Long,
-      atNanos: Long)
-
-  /** Per-round stats of the most recent [[run]] in this JVM, exposed so
-    * the scale harness (DebugCcDistrib) can report rounds-to-convergence
-    * and bucket stage-level shuffle volume into rounds without the
-    * production path carrying a callback. Same test-seam pattern as
-    * Ivf.lastWriteParallelismWarning. Empty ⇒ the last resolve() took
-    * the driver union-find branch.
-    */
-  @volatile private[graft] var lastRunStats: Seq[RoundStat] = Nil
-
   /** Components over an undirected edge list — size-adaptive dispatch.
     * A verified near-dup pair graph is a small fraction of the corpus;
     * below `localEdgeCap` edges (default 4M ≈ 64 MB of longs) driver
@@ -55,7 +41,7 @@ object ConnectedComponents {
         col("src") =!= col("dst"))
       .persist()
     val out =
-      if (e.count() <= localEdgeCap) { lastRunStats = Nil; runLocal(e) }
+      if (e.count() <= localEdgeCap) runLocal(e)
       else run(e, "src", "dst")
     e.unpersist(blocking = false)
     out
@@ -126,9 +112,6 @@ object ConnectedComponents {
     var curSum = checksum(cur)
     var converged = curCount == 0L
     var iter = 0
-    val roundStats = scala.collection.mutable.ArrayBuffer(
-      RoundStat(0, curCount, System.nanoTime()))
-    lastRunStats = roundStats.toSeq
     while (!converged && iter < maxIter) {
       // large-star: every node v strictly greater than a neighbor u
       // attaches to m(u) = min(Γ(u) ∪ {u})
@@ -168,8 +151,6 @@ object ConnectedComponents {
       // edge-set copies ever coexist instead of one per round
       prev.unpersist(blocking = false)
       iter += 1
-      roundStats += RoundStat(iter, nCount, System.nanoTime())
-      lastRunStats = roundStats.toSeq
     }
     if (!converged) throw new IllegalStateException(
       s"connected components did not converge in $maxIter star rounds")

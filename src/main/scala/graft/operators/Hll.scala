@@ -45,9 +45,6 @@ object Hll {
   val P = 8
   val M: Int = 1 << P
 
-  /** Bits remaining after the bucket prefix of the 60-bit hash. */
-  val WBits: Int = 60 - P
-
   private[operators] def m(p: Int): Int = { require(p >= 4 && p <= 16); 1 << p }
   private[operators] def wBits(p: Int): Int = 60 - p
 
@@ -128,12 +125,23 @@ object Hll {
     * (E ≤ 2.5m with empty registers → m·ln(m/V)). Emits the estimate
     * rounded to a long plus the occupied-register count.
     */
-  def estimate(regs: DataFrame, keyCol: String, outName: String): DataFrame =
-    estimate(regs, Seq(keyCol), outName, P)
-
   def estimate(regs: DataFrame, keyCol: String, outName: String,
-      p: Int): DataFrame =
-    estimate(regs, Seq(keyCol), outName, p)
+      p: Int = P): DataFrame = {
+    val wb = wBits(p); val mm = m(p)
+    val agg = regs
+      .groupBy(col(keyCol))
+      .agg(
+        count(lit(1)).as("present_buckets"),
+        sum(expr(s"shiftleft(CAST(1 AS BIGINT), ${wb + 1} - r)")).as("sumscaled"))
+    val zeros = (lit(mm) - col("present_buckets")).cast("long")
+    val denom = (col("sumscaled") + zeros * lit(1L << (wb + 1))).cast("double")
+    val eRaw = lit(alphaNumer(p)) / denom
+    val est = when(zeros > lit(0L) && eRaw <= lit(2.5 * mm),
+        lit(mm.toDouble) * log(lit(mm.toDouble) / zeros.cast("double")))
+      .otherwise(eRaw)
+    agg.select(col(keyCol), col("present_buckets"),
+      round(est).cast("long").as(outName))
+  }
 
   /** Pairwise distinct-overlap estimates between every pair of keys by
     * inclusion–exclusion over merged sketches: |A∩B| ≈ est(A) + est(B)
@@ -150,19 +158,19 @@ object Hll {
     * sane output size. Returns (key_a, key_b, distinct_a, distinct_b,
     * union_distinct, overlap_est) for all key_a < key_b.
     *
-    * EAGER: the register frame is persisted across its two reads and
-    * must be released before returning (a public operator cannot rely
-    * on a harness clearCache — ADVICE r9), so the result — already
-    * bounded by the |keys|²-sane-output contract above — materializes
-    * to a local relation inside the persist/unpersist pair. Callers
-    * needing lazy composition use sketch/merge/estimate directly.
+    * EAGER: the register frame is collected after one input pass and
+    * the pairs are computed on the driver, so the result — bounded by the
+    * |keys|²-sane-output contract above — is a local relation and no
+    * cache outlives the call. Callers needing lazy composition use
+    * sketch/merge/estimate directly.
     */
   def pairwiseOverlap(df: DataFrame, keyCol: String,
       value: Column, p: Int = P,
       hashFn: Column => Column = graft.functions.Hash60.md5): DataFrame = {
-    // ONE Spark job: the input pass that builds the register frame
-    // (collected at its ≤ |keys|·m bound — routing-table-sized by the
-    // operator's own contract). The pairwise union/estimate algebra
+    // ONE input pass builds the register frame (under AQE its shuffle
+    // map stage is a job of its own before the collect's job), which is
+    // collected at its ≤ |keys|·m bound — routing-table-sized by the
+    // operator's own contract. The pairwise union/estimate algebra
     // then runs driver-side over those integers: the r17 DF form spent
     // ~10 tiny driver-blocking stages (persist, distinct, two pair
     // joins, union groupBy, three estimate aggregates, final joins) on
@@ -171,10 +179,9 @@ object Hll {
     // ~1.0–1.5 s of a 1.5 s query at sf0.1). Every arithmetic step
     // below mirrors [[estimate]]'s expressions operation-for-operation
     // (long shifts/sums, one double division, math.log, HALF_UP round)
-    // so the output is bitwise the DF algebra's; [[pairwiseOverlapPlan]]
-    // keeps the lazy broadcast-register form for composing callers and
-    // the PlanSpec gate, and SketchSpec pins this path against exact
-    // intersections.
+    // so the output is bitwise the DF algebra's; SketchSpec pins this
+    // path against [[estimate]] over per-key and per-pair-union
+    // sketches, and against exact intersections.
     val spark = df.sparkSession
     // null keys are dropped BEFORE pairing: the DF form's
     // `key_a < key_b` (null-safe-false) and its equi-joins silently
@@ -254,62 +261,5 @@ object Hll {
         org.apache.spark.sql.types.LongType)))
     spark.createDataFrame(
       java.util.Arrays.asList(out: _*), schema)
-  }
-
-  /** The LAZY form of [[pairwiseOverlap]]: (persisted register frame,
-    * result plan). Exposed for plan-shape inspection (PlanSpec gates
-    * the broadcast-only register algebra on this) and for callers that
-    * compose further before acting — they own unpersisting the
-    * returned regs after their action.
-    */
-  private[graft] def pairwiseOverlapPlan(df: DataFrame, keyCol: String,
-      value: Column, p: Int = P,
-      hashFn: Column => Column = graft.functions.Hash60.md5)
-      : (DataFrame, DataFrame) = {
-    val regs = sketch(df, keyCol, value, p, hashFn).persist()
-    val singles = estimate(regs, keyCol, "d", p)
-    val types = regs.select(col(keyCol)).distinct()
-    val pairs = types.select(col(keyCol).as("key_a"))
-      .crossJoin(types.select(col(keyCol).as("key_b")))
-      .where(col("key_a") < col("key_b"))
-    val unionRegs = pairs
-      .join(regs.withColumnRenamed(keyCol, "key_a"), Seq("key_a"))
-      .select(col("key_a"), col("key_b"), col("bucket"), col("r"))
-      .unionByName(pairs
-        .join(regs.withColumnRenamed(keyCol, "key_b"), Seq("key_b"))
-        .select(col("key_a"), col("key_b"), col("bucket"), col("r")))
-      .groupBy(col("key_a"), col("key_b"), col("bucket"))
-      .agg(max(col("r")).as("r"))
-    val out = estimate(unionRegs, Seq("key_a", "key_b"), "union_distinct", p)
-      .join(singles.select(col(keyCol).as("key_a"),
-        col("d").as("distinct_a")), Seq("key_a"))
-      .join(singles.select(col(keyCol).as("key_b"),
-        col("d").as("distinct_b")), Seq("key_b"))
-      .select(col("key_a"), col("key_b"), col("distinct_a"),
-        col("distinct_b"), col("union_distinct"),
-        (col("distinct_a") + col("distinct_b") - col("union_distinct"))
-          .as("overlap_est"))
-    (regs, out)
-  }
-
-  /** Composite-key form — register frames keyed by several columns
-    * (e.g. the pairwise union sketches of the set-algebra queries).
-    */
-  def estimate(regs: DataFrame, keyCols: Seq[String],
-      outName: String, p: Int = P): DataFrame = {
-    val wb = wBits(p); val mm = m(p)
-    val agg = regs
-      .groupBy(keyCols.map(col): _*)
-      .agg(
-        count(lit(1)).as("present_buckets"),
-        sum(expr(s"shiftleft(CAST(1 AS BIGINT), ${wb + 1} - r)")).as("sumscaled"))
-    val zeros = (lit(mm) - col("present_buckets")).cast("long")
-    val denom = (col("sumscaled") + zeros * lit(1L << (wb + 1))).cast("double")
-    val eRaw = lit(alphaNumer(p)) / denom
-    val est = when(zeros > lit(0L) && eRaw <= lit(2.5 * mm),
-        lit(mm.toDouble) * log(lit(mm.toDouble) / zeros.cast("double")))
-      .otherwise(eRaw)
-    agg.select(keyCols.map(col) ++ Seq(col("present_buckets"),
-      round(est).cast("long").as(outName)): _*)
   }
 }

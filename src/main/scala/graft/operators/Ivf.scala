@@ -50,13 +50,10 @@ object Ivf {
       seed: Long = 42L,
       // Centroid count above which probe routing goes hierarchical
       // (approximate). The default is the measured crossover
-      // ([[KMeans.ApproxRoutingThreshold]]); tests and recall harnesses
-      // force it low via copy() to drive REAL searches through the
-      // approximate path at test-scale k.
+      // ([[KMeans.ApproxRoutingThreshold]]); tests force it low via
+      // copy() to drive REAL searches through the approximate path at
+      // test-scale k.
       approxRouting: Int = KMeans.ApproxRoutingThreshold,
-      // Meta-cell expansion floor on the approximate path — the sweep
-      // hook behind the [[KMeans.DefaultMetaProbe]] default.
-      metaProbe: Int = KMeans.DefaultMetaProbe,
       // Id column the index was BUILT with, persisted in the sidecar —
       // maintenance entry points reached through a handle (the facade's
       // maintain(), a generic scheduler) must rewrite with the SAME id
@@ -72,7 +69,7 @@ object Ivf {
       * never serialized with the case class.
       */
     @transient lazy val router: KMeans.ProbeRouter =
-      new KMeans.ProbeRouter(centroids, seed, approxRouting, metaProbe)
+      new KMeans.ProbeRouter(centroids, seed, approxRouting)
   }
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -229,8 +226,8 @@ object Ivf {
     * @param onStage stage-attribution hook (VERDICT r10 #5): called with
     *                (stage, seconds) after each build stage completes —
     *                count, pool_train, assign_count, shard_model,
-    *                shard_write, sidecar. Default no-op; measurement
-    *                harnesses (DebugDemoScale) pass a recorder so the
+    *                shard_write, sidecar. Default no-op; perfbench's
+    *                `--trace 1` passes a recorder so the
     *                100×-scale story names WHICH stage a cluster
     *                parallelizes instead of one opaque build number.
     */

@@ -214,8 +214,8 @@ object KMeans {
       * the brute-force probe sort. Per-call work is O(√k + 16n)
       * distances instead of the O(k) scan.
       *
-      * The 16× pool margin is MEASURED, not guessed (DebugProbePool on
-      * the reference 100k/D=128 workload — uniform data, the
+      * The 16× pool margin is MEASURED, not guessed (SCALE.md round 6,
+      * on the reference 100k/D=128 workload — uniform data, the
       * adversarial case for meta-cell locality): capture of the exact
       * top-64 probe cells is 0.44 with a 2n pool, 0.78 at 8n, 0.99 at
       * 16n. A 2n pool capped end-to-end recall@64 at 0.745 vs 1.0
@@ -227,8 +227,7 @@ object KMeans {
       *         pool size is the number of exact centroid distances
       *         computed, the test hook for the O(√k) work contract.
       */
-    def topNProbe(p: Array[Float], n0: Int,
-        poolFactor: Int = HierarchicalAssigner.ProbePoolFactor): (Array[Int], Int) = {
+    def topNProbe(p: Array[Float], n0: Int): (Array[Int], Int) = {
       val n = math.min(n0, k)
       if (n <= 0) return (Array.emptyIntArray, 0)
       val md = new Array[Double](meta.k)
@@ -238,7 +237,7 @@ object KMeans {
       val pool = scala.collection.mutable.ArrayBuffer.empty[Int]
       var mi = 0
       while (mi < cellOrder.length &&
-          (mi < metaProbe || pool.length < poolFactor * n)) {
+          (mi < metaProbe || pool.length < HierarchicalAssigner.ProbePoolFactor * n)) {
         pool ++= members(cellOrder(mi))
         mi += 1
       }
@@ -251,8 +250,8 @@ object KMeans {
 
   object HierarchicalAssigner {
     /** Member-pool target, as a multiple of n, for approximate top-n
-      * probe selection — the MEASURED margin (DebugProbePool, which
-      * sweeps this very parameter through the production code path).
+      * probe selection — the MEASURED margin (SCALE.md round 6: the
+      * pool-factor sweep through the production code path).
       */
     val ProbePoolFactor = 16
   }
@@ -308,12 +307,11 @@ object KMeans {
     * (searchBatch, probe-literal oracles).
     */
   final class ProbeRouter(val centroids: Array[Array[Float]], val seed: Long,
-      val approxThreshold: Int = ApproxRoutingThreshold,
-      val metaProbe: Int = DefaultMetaProbe)
+      val approxThreshold: Int = ApproxRoutingThreshold)
       extends Serializable {
     def k: Int = centroids.length
     @transient private lazy val hier =
-      new HierarchicalAssigner(centroids, seed, metaProbe)
+      new HierarchicalAssigner(centroids, seed, DefaultMetaProbe)
 
     /** Exact top-n by (distance, id): allocation-light bounded
       * insertion (the [[HierarchicalAssigner.assign]] selection loop,

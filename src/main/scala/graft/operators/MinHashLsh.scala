@@ -66,7 +66,7 @@ object MinHashLsh {
     *                      oracles recompute it; a production run that
     *                      doesn't need that swaps in
     *                      [[graft.functions.Hash60.xx]] (see
-    *                      the scale note and the DebugLshScale
+    *                      the scale note and the round-8 LSH
     *                      measurement in SCALE.md)
     */
   final case class Params(

@@ -310,7 +310,7 @@ object EventQueries {
           Tables.events(spark, dir).select(col("event_type"), col("user_id")),
           col("user_id")),
         "event_type", col("user_id"),
-        hashFn = graft.functions.Hash60.catalog(spark))
+        hashFn = graft.functions.Hash60.md5)
       .select(col("key_a").as("type_a"), col("key_b").as("type_b"),
         col("distinct_a").as("users_a"), col("distinct_b").as("users_b"),
         col("union_distinct").as("union_users"), col("overlap_est"))

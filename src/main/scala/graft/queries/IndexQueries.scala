@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.Ivf
-import graft.queries.OracleGen.{dotSql, l2Sql, normSql}
+import graft.queries.OracleGen.{adcSql, dotSql, l2Sql, normSql}
 
 /** IVF index build + search wired into the driver gate.
   *
@@ -862,10 +862,7 @@ object IndexQueries {
     s"""WITH lut(centroid_id, l) AS (VALUES $lutVals),
        |codes(vec_id, centroid_id, code) AS (VALUES $codeVals),
        |d AS (
-       |  SELECT c.vec_id,
-       |    list_reduce(list_transform(list_zip(c.code, l.l),
-       |      p2 -> p2[2][CAST(p2[1] AS INTEGER) + 129]),
-       |      (a2, b2) -> a2 + b2) AS distance
+       |  SELECT c.vec_id, ${adcSql("c.code", "l.l")} AS distance
        |  FROM codes c JOIN lut l ON l.centroid_id = c.centroid_id)
        |SELECT vec_id AS external_id, distance
        |FROM d ORDER BY distance, vec_id LIMIT 10""".stripMargin
@@ -900,10 +897,7 @@ object IndexQueries {
        |probe(query_id, centroid_id) AS (VALUES $probeVals),
        |codes(vec_id, centroid_id, code) AS (VALUES $codeVals),
        |d AS (
-       |  SELECT p.query_id, c.vec_id,
-       |    list_reduce(list_transform(list_zip(c.code, l.l),
-       |      p2 -> p2[2][CAST(p2[1] AS INTEGER) + 129]),
-       |      (a2, b2) -> a2 + b2) AS distance
+       |  SELECT p.query_id, c.vec_id, ${adcSql("c.code", "l.l")} AS distance
        |  FROM probe p
        |  JOIN codes c ON c.centroid_id = p.centroid_id
        |  JOIN lut l ON l.query_id = p.query_id),
@@ -935,10 +929,7 @@ object IndexQueries {
     s"""WITH lut AS (SELECT ${OracleGen.dblListList(graft.operators.Pq.lutSeq(q, model))} AS l),
        |codes(vec_id, code) AS (VALUES $codeVals),
        |adc AS (
-       |  SELECT c.vec_id,
-       |    list_reduce(list_transform(list_zip(c.code, l.l),
-       |      p2 -> p2[2][CAST(p2[1] AS INTEGER) + 129]),
-       |      (a2, b2) -> a2 + b2) AS adist
+       |  SELECT c.vec_id, ${adcSql("c.code", "l.l")} AS adist
        |  FROM codes c CROSS JOIN lut l),
        |short AS (SELECT vec_id FROM adc ORDER BY adist, vec_id LIMIT 40),
        |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)

@@ -108,11 +108,17 @@ object OracleGen {
   def normSql(x: String): String =
     s"sqrt(list_reduce(list_transform($x, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b))"
 
+  /** ADC distance `Σ lut[j][code_j + 129]` of a PQ code list against its
+    * LUT (a list of per-subspace lists; 1-based, codes stored offset
+    * −128), folded left to right — the exact math of
+    * [[graft.operators.Pq.adc]].
+    */
+  def adcSql(code: String, lut: String): String =
+    s"list_reduce(list_transform(list_zip($code, $lut), p -> p[2][CAST(p[1] AS INTEGER) + 129]), (a, b) -> a + b)"
+
   /** The ADC top-k oracle shared by the PQ family: codes inlined as
     * VALUES, the per-query LUT as one array literal, distance =
-    * left-to-right fold of lut[j][code_j + 129] (1-based, codes stored
-    * offset −128) — the exact math of [[graft.operators.Pq.adc]],
-    * recomputed with DuckDB list functions.
+    * [[adcSql]].
     */
   def adcTopKSql(codes: Seq[(Long, Seq[Byte])], lut: Seq[Seq[Double]],
       k: Int, idAlias: String): String = {
@@ -122,10 +128,7 @@ object OracleGen {
     s"""WITH lut AS (SELECT ${dblListList(lut)} AS l),
        |codes(vec_id, code) AS (VALUES $vals),
        |d AS (
-       |  SELECT c.vec_id,
-       |    list_reduce(list_transform(list_zip(c.code, l.l),
-       |      p -> p[2][CAST(p[1] AS INTEGER) + 129]),
-       |      (a, b) -> a + b) AS distance
+       |  SELECT c.vec_id, ${adcSql("c.code", "l.l")} AS distance
        |  FROM codes c CROSS JOIN lut l)
        |SELECT vec_id AS $idAlias, distance
        |FROM d ORDER BY distance, vec_id LIMIT $k""".stripMargin

@@ -323,7 +323,7 @@ object RelationalQueries {
     graft.operators.Hll.estimate(
         graft.operators.Hll.sketch(
           Tables.lineitem(spark, dir), "l_returnflag", col("l_partkey"),
-          hashFn = graft.functions.Hash60.catalog(spark)),
+          hashFn = graft.functions.Hash60.md5),
         "l_returnflag", "approx_parts")
       .orderBy(col("l_returnflag"))
 

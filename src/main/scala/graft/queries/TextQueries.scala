@@ -91,35 +91,34 @@ object TextQueries {
     * the oracle comparing `overestimate` too.
     */
   /** The corpus token CMS (depth 4 × width 1024), collected ONCE per
-    * (data version, hash family) and served to every consumer
+    * data version and served to every consumer
     * thereafter — the sketch-is-the-artifact production shape the
     * Round-9 merge gate exists for (sketch(A ⊎ B) == merge(sketches)
     * is exactly what lets a deployment maintain this artifact
     * incrementally instead of rebuilding it per query). Bounded at
     * depth·width cells by construction, so the driver copy is ≤4096
-    * rows. The hash family keys the memo: an xx-family bench run and
-    * the md5-oracled default can never serve each other's cells.
+    * rows.
     */
   private val CmsDepth = 4
   private val CmsWidth = 1024
-  // keyed by (dir, family) with the data fingerprint in the value: a
+  // keyed by dir with the data fingerprint in the value: a
   // regenerated data version REPLACES its entry instead of adding a
   // new forever-live one (ADVICE r12), so the cache is bounded at
-  // #dirs × #families entries of ≤ depth·width cells each.
+  // #dirs entries of ≤ depth·width cells each.
   // `private[graft]` so SketchSpec can read its snapshot
   private[graft] val cmsSketchMemo =
     new Tables.DataKeyedMemo[graft.operators.CountMin.SketchArtifact]()
 
   private[graft] def corpusTokenSketch(spark: SparkSession,
       dir: String): graft.operators.CountMin.SketchArtifact =
-    cmsSketchMemo.get(dir, graft.functions.Hash60.family(spark)) {
+    cmsSketchMemo.get(dir) {
       graft.operators.CountMin.collectSketch(
         // spread: tokenize + 4 md5 digests per token is the heavy map
         // stage over a one-split local scan (identity at cluster scale)
         Tables.spread(Tables.documents(spark, dir), col("doc_id"))
           .select(explode(tokens(col("text"))).as("token")),
         "token", CmsDepth, CmsWidth,
-        hashFn = graft.functions.Hash60.catalogSalted(spark))
+        hashFn = graft.functions.Hash60.md5Salted)
     }
 
   def cmsTokenCounts(spark: SparkSession, dir: String): DataFrame = {
@@ -133,7 +132,7 @@ object TextQueries {
       .orderBy(col("exact_c").desc, col("token"))
       .limit(20)
     CountMin.estimate(sketch, top, "token", CmsDepth, CmsWidth,
-        hashFn = graft.functions.Hash60.catalogSalted(spark))
+        hashFn = graft.functions.Hash60.md5Salted)
       .withColumn("overestimate", (col("cms_c") - col("exact_c")).cast("long"))
       .select(col("token"), col("exact_c"), col("cms_c"), col("overestimate"))
       .orderBy(col("exact_c").desc, col("token"))
@@ -186,7 +185,7 @@ object TextQueries {
       graft.operators.CountMin
         .heavyHitters(toks, "token", phiInverse = 200L, depth = CmsDepth,
           width = CmsWidth,
-          hashFn = graft.functions.Hash60.catalogSalted(spark),
+          hashFn = graft.functions.Hash60.md5Salted,
           prebuiltCells = Some(corpusTokenSketch(spark, dir)))
         .orderBy(col("exact_c").desc, col("token")))
   }
@@ -1053,8 +1052,8 @@ object TextQueries {
     */
   /** The maxsim chunk table: (doc_id, cidx, feat) — 16-token chunks,
     * 16-dim md5-derived stub embeddings. The ONE definition of the
-    * chunk/feature scheme, shared by the catalog query and the
-    * DebugMaxsim stage-timing harness so their plans cannot diverge.
+    * chunk/feature scheme, shared by every MaxSim query and artifact
+    * so their plans cannot diverge (SCALE.md, "Known costs").
     * Spread before chunking: locally the corpus is one scan split and
     * the chunk + 16-digest feature stage is the expensive map work
     * (identity at cluster scale — Tables.spread); the query-side

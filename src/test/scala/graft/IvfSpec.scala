@@ -307,7 +307,7 @@ class IvfSpec extends SparkSpec {
   test("approximate routing regime: end-to-end recall pinned vs exact") {
     // the k > ApproxRoutingThreshold hierarchical router, driven by a
     // REAL search path (recallsOneScan routes through the same router
-    // as searchBatch) on the DebugApproxRoute workload: N=50k, dim=32,
+    // as searchBatch) on SCALE.md round 7's workload: N=50k, dim=32,
     // seed 42 → k=448, forced approximate via approxRouting=2. Floors
     // are the committed measurement (SCALE.md round-7 table) minus a
     // 0.03 margin; every stage of the pipeline is seed-deterministic,
@@ -339,7 +339,7 @@ class IvfSpec extends SparkSpec {
     val ap = graft.operators.RecallEval.recallsOneScan(
         spark, approxIdx, qs, k = 10, nProbes = nps, ranks = Seq(1, 10))
       .map(s => s.nProbe -> s.recalls(10)).toMap
-    // measured floors at the metaProbe=8 default (round-8 sweep:
+    // measured floors at DefaultMetaProbe = 8 (round-8 sweep:
     // 0.82 / 0.9267 / 0.98 / 1.0 − 0.03 margin)
     assert(ap(4) >= 0.79 && ap(8) >= 0.89 && ap(16) >= 0.95 &&
       ap(32) >= 0.97, s"approx recall fell: $ap")
@@ -1251,7 +1251,7 @@ class IvfSpec extends SparkSpec {
 
   test("tombstone sidecar partitioning: ~3M ids per file, hard 64-file " +
       "cap at any delete volume") {
-    // the arm DebugDeleteWhereBulk cannot reach with feasible data
+    // the arm SCALE.md's round-15 deleteWhere cell cannot reach at feasible
     // volumes (the cap binds at 192M+ ids) — gated as pure math
     assert(Ivf.tombstonePartitions(1L) == 1)
     assert(Ivf.tombstonePartitions(2999999L) == 1)

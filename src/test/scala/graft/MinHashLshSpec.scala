@@ -52,7 +52,7 @@ class MinHashLshSpec extends SparkSpec {
     val df = Seq((1L, base), (2L, nearDup), (3L, unrelated))
       .toDF("id", "toks")
     // swap the md5 parity default for xxhash64 (the production fast
-    // path, DebugLshScale's measured ~2x saving on the sign pass) —
+    // path, SCALE.md round 8's measured ~2x saving on the sign pass) —
     // banding/verify are hash-agnostic, so the planted pair survives
     val p = Params(numHashes = 16, bands = 8, threshold = 0.5,
       hashFn = c => xxhash64(c))

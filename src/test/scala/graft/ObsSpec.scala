@@ -101,4 +101,18 @@ class ObsSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"measure with graft.obs.Meter instead: $offenders")
   }
+
+  test("no test-scope main besides the scale shifter and the crash-gate child") {
+    val test = Paths.get("src/test")
+    assert(Files.isDirectory(test), s"run from the project root: $test not found")
+    val kept = Set("DebugScaleNx.scala", "CrossJvmStressRunner.scala")
+    val main = ("\\bdef\\s+" + "main\\s*\\(").r
+    val offenders = Files.walk(test).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .filterNot(p => kept(p.getFileName.toString))
+      .filter(p => main.findFirstIn(Files.readString(p)).isDefined)
+      .toList
+    assert(offenders.isEmpty,
+      s"measure through graft.obs.Meter, graft.Bench or perfbench: $offenders")
+  }
 }

@@ -196,15 +196,20 @@ class PlanSpec extends SparkSpec {
   }
 
   test("HLL overlap: register algebra is broadcast-only, corpus scanned once") {
-    // inspected on the operator's LAZY plan (pairwiseOverlapPlan): the
-    // public form collects the pair table to a local relation so it can
-    // release its register cache (round 10)
+    // inspected on the executed plans of the serving call, as the
+    // meter's listener captured them: the register frame is built in
+    // one pass and the pairwise unions run on the driver (round 10)
     import org.apache.spark.sql.functions.col
-    val (regs, out) = graft.operators.Hll.pairwiseOverlapPlan(
-      Tables.events(spark, sf001).select(col("event_type"), col("user_id")),
-      "event_type", col("user_id"))
-    val p = out.queryExecution.executedPlan.toString
-    regs.unpersist()
+    val (_, cost) = graft.obs.Meter.measure(spark)(
+      graft.operators.Hll.pairwiseOverlap(
+        Tables.events(spark, sf001).select(col("event_type"), col("user_id")),
+        "event_type", col("user_id")))
+    // one stage reads the corpus; under AQE its shuffle map stage runs
+    // as a job of its own before the collect's job
+    val scans = cost.tasks.filter(_.inputBytes > 0).map(_.stageId).distinct
+    assert(scans.size == 1 && cost.jobs <= 2,
+      s"corpus read by stages $scans in ${cost.jobs} jobs")
+    val p = cost.plans.mkString("\n")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
       "pairwise union must stay on broadcast-sized register frames")
     assert(p.contains("partial_max"),
@@ -318,7 +323,7 @@ class PlanSpec extends SparkSpec {
     // vocabulary terms — far above SeekSelectivityCeiling), so the
     // adaptive seek-vs-scan rule must pick the plain posting scan: no
     // In(term)/INSET anywhere (pushing a ~whole-vocabulary set skips
-    // no row group and is pure overhead — DebugBm25Scale). The seek
+    // no row group and is pure overhead — SCALE.md round 8). The seek
     // regime's pushed-chunk shape is gated in RetrievalSpec on a
     // selective batch.
     val tfScanLines = p.split("\n")

@@ -250,66 +250,6 @@ class SketchSpec extends SparkSpec {
       viaExplicitMd5.exceptAll(viaDefault).isEmpty)
   }
 
-  test("catalog family conf: default md5 is the oracled output, xx " +
-      "genuinely re-routes the catalog sketch queries, bad names are " +
-      "rejected (VERDICT r11 #5)") {
-    import graft.functions.Hash60
-    assert(Hash60.family(spark) == "md5",
-      "oracle default regressed - Verify would run the wrong family")
-    val md5Hll = graft.queries.RelationalQueries
-      .approxDistinctParts(spark, sf0001).collect().map(_.toSeq).toSeq
-    val md5Cms = graft.queries.TextQueries
-      .cmsTokenCounts(spark, sf0001).collect().map(_.toSeq).toSeq
-    try {
-      spark.conf.set(Hash60.FamilyConfKey, "xx")
-      val xxHll = graft.queries.RelationalQueries
-        .approxDistinctParts(spark, sf0001).collect().map(_.toSeq).toSeq
-      val xxCms = graft.queries.TextQueries
-        .cmsTokenCounts(spark, sf0001).collect().map(_.toSeq).toSeq
-      // same shape (the bench measures the same plan), and the HLL
-      // estimates diverge (the switch is not a no-op end-to-end)
-      assert(xxHll.length == md5Hll.length && xxCms.length == md5Cms.length)
-      assert(xxHll != md5Hll, "xx family produced md5's exact estimates?")
-      // CMS top-20 counts legitimately COINCIDE at this SF (zero
-      // collisions under either family → cms_c == exact_c both ways),
-      // so the salted re-route is proven at the hash layer instead:
-      // catalogSalted must resolve to a different placement than md5
-      val probe = spark.range(1).select(
-        Hash60.md5Salted(lit("tok"), 1).as("m"),
-        Hash60.catalogSalted(spark)(lit("tok"), 1).as("c")).head()
-      assert(probe.getLong(0) != probe.getLong(1),
-        "catalogSalted did not re-route to xxSalted under family=xx")
-      spark.conf.set(Hash60.FamilyConfKey, "bogus")
-      intercept[IllegalArgumentException](Hash60.catalog(spark))
-      intercept[IllegalArgumentException](Hash60.catalogSalted(spark))
-    } finally spark.conf.unset(Hash60.FamilyConfKey)
-    // and after restore the oracled output is bit-unchanged
-    val again = graft.queries.RelationalQueries
-      .approxDistinctParts(spark, sf0001).collect().map(_.toSeq).toSeq
-    assert(again == md5Hll)
-  }
-
-  test("corpusTokenSketch memo is family-keyed: an xx run never serves " +
-      "the md5-oracled cells, and the md5 entry survives the round-trip") {
-    // the catalog-output test above cannot catch memo poisoning at this
-    // SF (CMS top-20 counts coincide under both families), so gate the
-    // CELLS directly: placements always differ across hash families
-    import graft.functions.Hash60
-    assert(Hash60.family(spark) == "md5", "test must start at the default")
-    val md5Cells = graft.queries.TextQueries.corpusTokenSketch(spark, sf0001)
-    val xxCells =
-      try {
-        spark.conf.set(Hash60.FamilyConfKey, "xx")
-        graft.queries.TextQueries.corpusTokenSketch(spark, sf0001)
-      } finally spark.conf.unset(Hash60.FamilyConfKey)
-    assert(xxCells.cells != md5Cells.cells,
-      "xx-family call served the md5 memo entry — the key ignores family")
-    assert(xxCells.familyTag == "xx" && md5Cells.familyTag == "md5",
-      "artifact family tags do not record the building family")
-    assert(graft.queries.TextQueries.corpusTokenSketch(spark, sf0001)
-      == md5Cells, "family round-trip corrupted the md5 memo entry")
-  }
-
   test("cms sketch memo evicts stale data versions: a regenerated dir " +
       "REPLACES its entry instead of accumulating one per fingerprint " +
       "(ADVICE r12)") {
@@ -321,7 +261,7 @@ class SketchSpec extends SparkSpec {
     val a = graft.queries.TextQueries.corpusTokenSketch(spark, tmp)
     def entriesFor(d: String): Map[String, String] =
       graft.queries.TextQueries.cmsSketchMemo.snapshot
-        .filter(_._1.endsWith(s"@$d"))
+        .filter(_._1.endsWith(d))
     val snap0 = entriesFor(tmp)
     assert(snap0.size == 1, s"expected one memo entry: $snap0")
     // regenerate the data version: same bytes, new mtime → new dataKey
@@ -336,46 +276,6 @@ class SketchSpec extends SparkSpec {
       "the entry was not refreshed for the new data version")
     // same bytes → same cells: the refresh re-built, not served stale
     assert(b.cells == a.cells && b.familyTag == a.familyTag)
-  }
-
-  test("hash family is PER-SESSION, not process-global: an xx session " +
-      "and the md5 default coexist in one JVM, both bit-correct, memos " +
-      "unpoisoned (VERDICT r12 #5)") {
-    import graft.functions.Hash60
-    val xxs = spark.newSession()
-    xxs.conf.set(Hash60.FamilyConfKey, "xx")
-    // resolution is call-time per-session — the xx session never leaks
-    // into the default (oracled) session's family, in either order
-    assert(Hash60.family(spark) == "md5" && Hash60.family(xxs) == "xx")
-    val viaDefault = spark.range(1)
-      .select(Hash60.catalogSalted(spark)(lit("tok"), 1).as("h"))
-      .head().getLong(0)
-    val viaXx = xxs.range(1)
-      .select(Hash60.catalogSalted(xxs)(lit("tok"), 1).as("h"))
-      .head().getLong(0)
-    val md5Ref = spark.range(1)
-      .select(Hash60.md5Salted(lit("tok"), 1).as("h")).head().getLong(0)
-    val xxRef = spark.range(1)
-      .select(Hash60.xxSalted(lit("tok"), 1).as("h")).head().getLong(0)
-    assert(viaDefault == md5Ref, "md5 session resolved the wrong family")
-    assert(viaXx == xxRef, "xx session resolved the wrong family")
-    assert(viaDefault != viaXx)
-    // interleaved memo use: an xx-session bench running BESIDE an
-    // md5-oracled Verify in one JVM cannot poison its memo — this is
-    // exactly the mixed-use race the process-global mutable had
-    val md5Cells = graft.queries.TextQueries.corpusTokenSketch(spark, sf0001)
-    val xxCells = graft.queries.TextQueries.corpusTokenSketch(xxs, sf0001)
-    assert(xxCells.cells != md5Cells.cells)
-    assert(graft.queries.TextQueries.corpusTokenSketch(spark, sf0001)
-      == md5Cells, "xx session poisoned the md5 memo entry")
-    // and an oracled catalog consumer in the md5 session is
-    // bit-unchanged while the xx session is live
-    val md5Counts = graft.queries.TextQueries
-      .cmsTokenCounts(spark, sf0001).collect().map(_.toSeq).toSeq
-    graft.queries.TextQueries.cmsTokenCounts(xxs, sf0001).collect()
-    assert(graft.queries.TextQueries.cmsTokenCounts(spark, sf0001)
-      .collect().map(_.toSeq).toSeq == md5Counts,
-      "an xx-session run changed the md5 session's oracled output")
   }
 
   test("HLL: estimate is bit-identical under any input partitioning") {
@@ -498,12 +398,24 @@ class SketchSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).sorted.toSeq
     val eager = snap(Hll.pairwiseOverlap(df, "k", col("v")))
-    val (regs, planOut) = Hll.pairwiseOverlapPlan(df, "k", col("v"))
-    val lazyForm =
-      try snap(planOut) finally regs.unpersist()
-    assert(eager == lazyForm,
+    // the DF algebra: the registers of a union are the max of its
+    // parts' registers, so each pair's union sketch is the sketch of
+    // the pair's rows under one key
+    def est(rows: org.apache.spark.sql.DataFrame): Long =
+      Hll.estimate(Hll.sketch(rows.withColumn("k", lit("u")), "k", col("v")),
+        "k", "d").head().getLong(2)
+    val keys = Seq("dense", "mid", "sparse")
+    val single = keys.map(k => k -> est(df.where(col("k") === k))).toMap
+    val dfForm = (for {
+      (a, i) <- keys.zipWithIndex
+      b <- keys.drop(i + 1)
+    } yield {
+      val u = est(df.where(col("k").isin(a, b)))
+      (a, b, single(a), single(b), u, single(a) + single(b) - u)
+    }).sorted
+    assert(eager == dfForm,
       s"driver-side pairwiseOverlap diverges from the DF form:\n" +
-        s"eager=$eager\nlazy =$lazyForm")
+        s"eager=$eager\ndf   =$dfForm")
     assert(eager.size == 3, s"expected 3 non-null pairs, got ${eager.size}")
     assert(eager.forall(t => t._1 != null && t._2 != null),
       "null key leaked into the pair output")
