@@ -99,10 +99,11 @@ final class VectorIndexer private (
     */
   def addRecords(records: Seq[(Long, Array[Float], Long)]): this.type = {
     val df = recordsToDf(records, "cannot add zero records")
-    // appended files must carry the layout's own id column name, or a
-    // custom-idCol index would accumulate schema-drifted files
-    Ivf.append(index, df.withColumnRenamed("vec_id", index.idCol),
-      index.idCol, "embedding")
+    // appended files must carry the layout's own column names, or a
+    // custom-column index would accumulate schema-drifted files
+    Ivf.append(index, df.withColumnRenamed("vec_id", index.idCol)
+        .withColumnRenamed("embedding", index.embCol),
+      index.idCol, index.embCol)
     this
   }
 
@@ -155,8 +156,7 @@ final class VectorIndexer private (
     // batches don't each trigger an O(index) rewrite — the tombstone-tax
     // table in SCALE.md r14 is the sizing input
     graft.streaming.VectorsStreaming.startMaintenanceLoop(spark, index,
-      index.idCol, maxFilesPerShard, pollIntervalMs,
-      maxUnmaterializedTombstones)
+      maxFilesPerShard, pollIntervalMs, maxUnmaterializedTombstones)
 
   /** Engine extension: lease-fenced out-of-band compaction — rewrites
     * the index concurrently with appends and merges files appended
@@ -166,11 +166,7 @@ final class VectorIndexer private (
     */
   def maintain(maxFilesPerShard: Int = 8,
       maxUnmaterializedTombstones: Long = 0L): Ivf.MaintainOutcome =
-    // no idCol literal: Ivf.maintain defaults to the id column the
-    // index records it was built with (a facade built with a custom
-    // idCol used to fail inside the rewrite on a missing `vec_id`)
-    Ivf.maintain(spark, index, maxFilesPerShard = maxFilesPerShard,
-      maxUnmaterializedTombstones = maxUnmaterializedTombstones)
+    Ivf.maintain(spark, index, maxFilesPerShard, maxUnmaterializedTombstones)
 
   private def ingestTimestamp(): Long = System.currentTimeMillis() / 1000L
 
@@ -284,10 +280,10 @@ object VectorIndexer {
   /** Facade clamps applied ONCE at build/load — never per search call:
     * a per-call `copy` would discard the Index's @transient lazy probe
     * router and re-run its meta-clustering on every query at large k.
+    * Only the clamps are copied; the handle's lease timing stays.
     */
   private def applyConfig(c: Config, i: Ivf.Index): Ivf.Index =
-    i.copy(config = Ivf.Config(c.defaultK, c.defaultNProbe,
-      c.maxK, c.maxNProbe))
+    i.copy(config = i.config.copy(maxK = c.maxK, maxNProbe = c.maxNProbe))
 
   /** nlist heuristic — Python `suggest_nlist` parity. */
   def suggestNlist(n: Long): Int = KMeans.numClusters(n)

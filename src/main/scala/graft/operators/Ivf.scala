@@ -29,11 +29,16 @@ import graft.functions.Vec
   */
 object Ivf {
 
+  /** Query clamps (`src/api.rs:33-43`) and the lease timing every
+    * writer, maintainer and crash recovery on the handle uses: how old a
+    * lease's mtime must be before it reads as a dead holder's, and how
+    * long a writer waits to acquire one.
+    */
   final case class Config(
-      defaultK: Int = 10,
-      defaultNProbe: Int = 20,
       maxK: Int = 10000,
-      maxNProbe: Int = 10000) // src/api.rs:33-43
+      maxNProbe: Int = 10000,
+      leaseStaleTtlMs: Long = FsLease.DefaultStaleTtlMs,
+      leaseTimeoutMs: Long = FsLease.DefaultTimeoutMs)
 
   /** Driver-held routing table: centroid vectors + centroid→shard map.
     * Size is k×dim floats (k ≈ 4√n — 4,000 at n=1M), always broadcastable.
@@ -54,11 +59,11 @@ object Ivf {
       // copy() to drive REAL searches through the approximate path at
       // test-scale k.
       approxRouting: Int = KMeans.ApproxRoutingThreshold,
-      // Id column the index was BUILT with, persisted in the sidecar —
-      // maintenance entry points reached through a handle (the facade's
-      // maintain(), a generic scheduler) must rewrite with the SAME id
-      // column or the compact job fails on a missing `vec_id` reference.
-      idCol: String = "vec_id") {
+      // Id and embedding columns the index was BUILT with, persisted in
+      // the sidecar: every read, maintenance and coded-sibling entry
+      // point reads the layout through them.
+      idCol: String = "vec_id",
+      embCol: String = "embedding") {
     def k: Int = centroids.length
     def numShards: Int = centroidToShard.distinct.length
     /** Probe router shared by every search path (single, batch, join,
@@ -207,13 +212,14 @@ object Ivf {
   /** Routing-table sidecar write (replaces bincode index.bin — S5/S6). */
   private def writeSidecar(spark: SparkSession,
       centroids: Array[Array[Float]], centroidToShard: Array[Int],
-      seed: Long, idCol: String, indexDir: String): Unit = {
+      seed: Long, idCol: String, embCol: String, indexDir: String): Unit = {
     import spark.implicits._
     centroids.indices
       .map(i => (i, centroidToShard(i), centroids(i).toSeq))
       .toDF("centroid_id", "shard_id", "centroid")
       .withColumn("build_seed", lit(seed)) // metadata append() needs back
-      .withColumn("id_col", lit(idCol))   // ...and maintain()
+      .withColumn("id_col", lit(idCol))   // ...and the layout columns
+      .withColumn("emb_col", lit(embCol))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$indexDir/centroids")
   }
@@ -313,10 +319,11 @@ object Ivf {
       } finally assigned.unpersist()
 
     staged("sidecar")(
-      writeSidecar(spark, centroids, centroidToShard, seed, idCol, indexDir))
+      writeSidecar(spark, centroids, centroidToShard, seed, idCol, embCol,
+        indexDir))
 
     Index(s"$indexDir/vectors", centroids, centroidToShard, seed = seed,
-      idCol = idCol)
+      idCol = idCol, embCol = embCol)
   }
 
   /** Incrementally add vectors to an EXISTING index without retraining:
@@ -338,22 +345,22 @@ object Ivf {
     * resemble the training distribution; retrain when they don't.
     */
   def append(index: Index, df: DataFrame, idCol: String,
-      embCol: String,
-      leaseStaleTtlMs: Long = FsLease.DefaultStaleTtlMs,
-      leaseTimeoutMs: Long = FsLease.DefaultTimeoutMs): Unit = {
+      embCol: String): Unit = {
     val spark = df.sparkSession
-    // the batch's id column must BE the layout's id column: writeVectors
-    // writes the frame as-is, so a differently-named id column would
-    // append schema-drifted files that every later scan unions into
-    // null ids — fail here by name instead
-    require(idCol == index.idCol,
-      s"append: batch id column '$idCol' != the index's id column " +
-        s"'${index.idCol}' — rename the batch column " +
-        s"(withColumnRenamed) so appended files match the layout schema")
+    // the batch's id and embedding columns must BE the layout's:
+    // writeVectors writes the frame as-is, so a differently-named column
+    // would append schema-drifted files that every later scan unions
+    // into NULLs — fail here by name instead
+    for ((what, batchCol, layoutCol) <- Seq(("id", idCol, index.idCol),
+        ("embedding", embCol, index.embCol)))
+      require(batchCol == layoutCol,
+        s"append: batch $what column '$batchCol' != the index's $what " +
+          s"column '$layoutCol' — rename the batch column " +
+          s"(withColumnRenamed) so appended files match the layout schema")
     // crash-recover / fail-fast BEFORE the write: parquet append would
     // happily recreate a missing vectors dir containing only this
     // batch — the silent near-empty-index failure shape
-    requireLiveLayout(spark, index, "append", leaseStaleTtlMs)
+    requireLiveLayout(spark, index, "append")
     val dim = index.centroids(0).length
     val model = KMeans.Model(index.centroids)
     // dimension mismatch is an ERROR (reference P1 semantics), enforced
@@ -373,7 +380,7 @@ object Ivf {
     val leasePath = writerLeasePath(index)
     val fs = leasePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     FsLease.withLease(fs, leasePath, s"append@${java.util.UUID.randomUUID()}",
-      leaseStaleTtlMs, leaseTimeoutMs) {
+      index.config.leaseStaleTtlMs, index.config.leaseTimeoutMs) {
       // debris purge + committer pin live inside writeVectors'
       // append-mode branch (appendWithCrashGuard) — this body only
       // holds the lease and shapes the batch
@@ -515,13 +522,10 @@ object Ivf {
     * [[maintain]] AND a rebuild of every coded sibling that predates
     * the deletes.
     */
-  def delete(spark: SparkSession, index: Index, ids: Seq[Long],
-      leaseStaleTtlMs: Long = FsLease.DefaultStaleTtlMs,
-      leaseTimeoutMs: Long = FsLease.DefaultTimeoutMs): Unit = {
+  def delete(spark: SparkSession, index: Index, ids: Seq[Long]): Unit = {
     import spark.implicits._
     require(ids.nonEmpty, "delete: empty id list")
-    writeTombstones(spark, index,
-      ids.toDF("__deleted_id").coalesce(1), leaseStaleTtlMs, leaseTimeoutMs)
+    writeTombstones(spark, index, ids.toDF("__deleted_id").coalesce(1))
   }
 
   /** The ONE sidecar-append body, writer-lease fenced: a tombstone file
@@ -537,14 +541,12 @@ object Ivf {
     * changes the sidecar fingerprint every read lists ([[Snapshot]]).
     */
   private def writeTombstones(spark: SparkSession, index: Index,
-      out: DataFrame,
-      leaseStaleTtlMs: Long = FsLease.DefaultStaleTtlMs,
-      leaseTimeoutMs: Long = FsLease.DefaultTimeoutMs): Unit = {
+      out: DataFrame): Unit = {
     val leasePath = writerLeasePath(index)
     val fs = leasePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     FsLease.withLease(fs, leasePath,
-      s"delete@${java.util.UUID.randomUUID()}", leaseStaleTtlMs,
-      leaseTimeoutMs) {
+      s"delete@${java.util.UUID.randomUUID()}", index.config.leaseStaleTtlMs,
+      index.config.leaseTimeoutMs) {
       // same resurrection hazard as append: a killed delete's
       // task-committed tombstone files must not be promoted by the
       // next delete batch's job commit — purge + v1 pin via the one
@@ -568,18 +570,8 @@ object Ivf {
     */
   def delete(spark: SparkSession, index: Index, ids: DataFrame,
       idCol: String): Long =
-    delete(spark, index, ids, idCol,
-      FsLease.DefaultStaleTtlMs, FsLease.DefaultTimeoutMs)
-
-  /** [[delete]] (DataFrame form) with explicit lease knobs — a separate
-    * overload because Scala allows default arguments on only one
-    * `delete` alternative (the Seq form keeps them).
-    */
-  def delete(spark: SparkSession, index: Index, ids: DataFrame,
-      idCol: String, leaseStaleTtlMs: Long, leaseTimeoutMs: Long): Long =
     writeTombstonesBounded(spark, index,
-      ids.select(col(idCol).cast("long").as("__deleted_id")),
-      leaseStaleTtlMs, leaseTimeoutMs)
+      ids.select(col(idCol).cast("long").as("__deleted_id")))
 
   /** The ONE bounded-output sidecar append shared by every DataFrame-
     * shaped tombstone writer: persist is LOAD-BEARING for parallelism,
@@ -592,7 +584,7 @@ object Ivf {
     * without a single-task funnel on huge deletes. Returns the id count.
     */
   private def writeTombstonesBounded(spark: SparkSession, index: Index,
-      out: DataFrame, leaseStaleTtlMs: Long, leaseTimeoutMs: Long): Long = {
+      out: DataFrame): Long = {
     val ids = out.persist()
     // unpersist in finally, not in-line (r15 interleaving gate): a scan
     // racing a maintain swap fails transiently, and a leaked cache entry
@@ -602,8 +594,7 @@ object Ivf {
     try {
       val n = ids.count()
       if (n > 0)
-        writeTombstones(spark, index, ids.coalesce(tombstonePartitions(n)),
-          leaseStaleTtlMs, leaseTimeoutMs)
+        writeTombstones(spark, index, ids.coalesce(tombstonePartitions(n)))
       n
     } finally ids.unpersist()
   }
@@ -628,17 +619,11 @@ object Ivf {
     * explicit bulk operation, not a hot-path probe).
     */
   def deleteWhere(spark: SparkSession, index: Index,
-      predicate: org.apache.spark.sql.Column,
-      idCol: String = null,
-      leaseStaleTtlMs: Long = FsLease.DefaultStaleTtlMs,
-      leaseTimeoutMs: Long = FsLease.DefaultTimeoutMs): Long = {
-    val id = effectiveIdCol(index, idCol)
+      predicate: org.apache.spark.sql.Column): Long =
     writeTombstonesBounded(spark, index,
-      liveVectors(spark, index, id)
+      liveVectors(spark, index)
         .where(predicate)
-        .select(col(id).cast("long").as("__deleted_id")),
-      leaseStaleTtlMs, leaseTimeoutMs)
-  }
+        .select(col(index.idCol).cast("long").as("__deleted_id")))
 
   /** Drop the tombstone sidecar — the final step of the delete
     * lifecycle, once a compacting [[maintain]] + coded-sibling rebuild
@@ -668,9 +653,7 @@ object Ivf {
     * sibling dataset intentionally retired without deleting its files).
     */
   def clearTombstones(spark: SparkSession, index: Index,
-      force: Boolean = false,
-      leaseStaleTtlMs: Long = FsLease.DefaultStaleTtlMs,
-      leaseTimeoutMs: Long = FsLease.DefaultTimeoutMs): Unit = {
+      force: Boolean = false): Unit = {
     val path = new org.apache.hadoop.fs.Path(tombstonesPath(index))
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // verification + delete under the WRITER lease: without it, a
@@ -678,8 +661,8 @@ object Ivf {
     // the recursive delete would be destroyed unverified (see
     // writeTombstones — the two fence each other)
     FsLease.withLease(fs, writerLeasePath(index),
-      s"clear@${java.util.UUID.randomUUID()}", leaseStaleTtlMs,
-      leaseTimeoutMs) {
+      s"clear@${java.util.UUID.randomUUID()}", index.config.leaseStaleTtlMs,
+      index.config.leaseTimeoutMs) {
       val fp = snapshot(spark, index).tombFp
       if (fp.nonEmpty && !force) {
         if (!materializedMarker(fs, index).exists(_._1 == fp))
@@ -827,9 +810,9 @@ object Ivf {
     * newest tombstone", the safe direction.
     */
   private[operators] def writeSibling(spark: SparkSession, index: Index,
-      outPath: String, idCol: String, codeCols: Seq[String])(
+      outPath: String, codeCols: Seq[String])(
       encode: DataFrame => DataFrame): Unit = {
-    val id = effectiveIdCol(index, idCol)
+    val id = index.idCol
     val s = snapshot(spark, index)
     writeVectors(
       encode(s.liveRows(s.relation, id)) // lists the sidecar first
@@ -880,20 +863,10 @@ object Ivf {
     * view NON-search consumers (index stats, dedup bucketing) should
     * read, so deleted vectors don't leak through side surfaces either.
     */
-  def liveVectors(spark: SparkSession, index: Index,
-      idCol: String = null): DataFrame = {
+  def liveVectors(spark: SparkSession, index: Index): DataFrame = {
     val s = snapshot(spark, index)
-    s.liveRows(s.relation, effectiveIdCol(index, idCol))
+    s.liveRows(s.relation, index.idCol)
   }
-
-  /** The layout id column a maintenance/search entry point should use:
-    * the caller's explicit choice, else the column the index records it
-    * was built with (`null` default — a same-parameter-list default
-    * cannot reference `index`). Pre-field handles default to "vec_id"
-    * through [[Index.idCol]] itself, so behavior is unchanged there.
-    */
-  private[operators] def effectiveIdCol(index: Index, idCol: String): String =
-    if (idCol == null) index.idCol else idCol
 
   /** Write the materialization marker for `before.index` iff a fresh
     * listing of the sidecar still fingerprints `before.tombFp`. Skipped
@@ -933,28 +906,23 @@ object Ivf {
     * would see a healthy tiny index, and searches would return
     * confidently wrong near-empty answers until the eventual compact
     * destroyed the real data). Returns true iff a restore happened.
-    *
-    * @param leaseStaleTtlMs how old the (dead) maintainer's lease mtime
-    *   must be before this caller treats the swap as crashed rather
-    *   than in-flight — the same crash-detection horizon every other
-    *   entry point takes. Callers that tuned their write TTLs down
-    *   (fast-recovery deployments, the cross-JVM gates) must pass the
-    *   same value here, or a swap-crash would block recovery for the
-    *   default 10 min even though their own leases break in seconds.
+    * A (dead) maintainer's lease reads as crashed rather than in-flight
+    * once its mtime is older than the handle's
+    * [[Config.leaseStaleTtlMs]], the horizon its writers use too.
     */
-  def recoverFromCrashedCompact(spark: SparkSession, index: Index,
-      leaseStaleTtlMs: Long = FsLease.DefaultStaleTtlMs): Boolean =
-    recoverImpl(spark, index, ownLease = false, leaseStaleTtlMs)
+  def recoverFromCrashedCompact(spark: SparkSession, index: Index): Boolean =
+    recoverImpl(spark, index, ownLease = false)
 
   /** [[recoverFromCrashedCompact]] for [[maintain]], which already
     * HOLDS the maintainer lease: its own fresh lease must not read as
     * "another maintainer is mid-swap".
     */
   private def recoverOwningLease(spark: SparkSession, index: Index): Boolean =
-    recoverImpl(spark, index, ownLease = true, FsLease.DefaultStaleTtlMs)
+    recoverImpl(spark, index, ownLease = true)
 
   private def recoverImpl(spark: SparkSession, index: Index,
-      ownLease: Boolean, leaseStaleTtlMs: Long): Boolean = {
+      ownLease: Boolean): Boolean = {
+    val leaseStaleTtlMs = index.config.leaseStaleTtlMs
     val base = indexDir(index)
     val live = new org.apache.hadoop.fs.Path(index.vectorsPath)
     val trash = new org.apache.hadoop.fs.Path(s"$base/__compact_trash")
@@ -1005,9 +973,8 @@ object Ivf {
     * instead of an error.
     */
   private def requireLiveLayout(spark: SparkSession, index: Index,
-      op: String,
-      leaseStaleTtlMs: Long = FsLease.DefaultStaleTtlMs): Unit = {
-    recoverFromCrashedCompact(spark, index, leaseStaleTtlMs)
+      op: String): Unit = {
+    recoverFromCrashedCompact(spark, index)
     val live = new org.apache.hadoop.fs.Path(index.vectorsPath)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(live))
@@ -1094,18 +1061,16 @@ object Ivf {
     *   a process death at the worst instant and then assert recovery.
     */
   def maintain(spark: SparkSession, index: Index,
-      idCol: String = null, maxFilesPerShard: Int = 8,
+      maxFilesPerShard: Int = 8,
       maxUnmaterializedTombstones: Long = 0L,
-      leaseStaleTtlMs: Long = FsLease.DefaultStaleTtlMs,
-      fenceTimeoutMs: Long = FsLease.DefaultTimeoutMs,
       beforeFence: () => Unit = () => (),
       betweenRenames: () => Unit = () => ()): MaintainOutcome = {
-    val id = effectiveIdCol(index, idCol)
+    val id = index.idCol
     val base = indexDir(index)
     val livePath = new org.apache.hadoop.fs.Path(index.vectorsPath)
     val fs = livePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     FsLease.withLease(fs, maintainerLeasePath(index),
-      s"maintain@${java.util.UUID.randomUUID()}", leaseStaleTtlMs,
+      s"maintain@${java.util.UUID.randomUUID()}", index.config.leaseStaleTtlMs,
       timeoutMs = 0L) {
       recoverOwningLease(spark, index) // a crashed predecessor's state
       requireLiveLayout(spark, index, "maintain")
@@ -1138,8 +1103,8 @@ object Ivf {
           id, index.numShards, scratchVectors, "overwrite")
         beforeFence() // test seam: appends racing the rewrite land here
         val merged = FsLease.withLease(fs, writerLeasePath(index),
-          s"maintain-swap@${java.util.UUID.randomUUID()}", leaseStaleTtlMs,
-          fenceTimeoutMs) {
+          s"maintain-swap@${java.util.UUID.randomUUID()}",
+          index.config.leaseStaleTtlMs, index.config.leaseTimeoutMs) {
           val current = parquetPaths(snapshot(spark, index))
           if (!listed.subsetOf(current)) {
             fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
@@ -1344,31 +1309,28 @@ object Ivf {
       tombs, unmat)
   }
 
-  /** Load the routing table back (S6). */
+  /** Load the routing table and the recorded build metadata back (S6):
+    * one job, the collect — the schema is given, so nothing is inferred.
+    * Metadata columns an older sidecar lacks read as NULL and take the
+    * build defaults: seed 42 (`src/api.rs:143`), `vec_id`, `embedding`.
+    */
   def load(spark: SparkSession, indexDir: String, config: Config = Config()): Index = {
-    val sidecar = spark.read.parquet(s"$indexDir/centroids")
-    // indexes written before build_seed existed default to the build
-    // default (42 — src/api.rs:143)
-    val seed =
-      if (sidecar.columns.contains("build_seed"))
-        sidecar.select("build_seed").head().getLong(0)
-      else 42L
-    // sidecars written before id_col existed default to the build default
-    val idCol =
-      if (sidecar.columns.contains("id_col"))
-        sidecar.select("id_col").head().getString(0)
-      else "vec_id"
-    val rows = sidecar
-      .select("centroid_id", "shard_id", "centroid")
+    val rows = spark.read
+      .schema("centroid_id INT, shard_id INT, centroid ARRAY<FLOAT>, " +
+        "build_seed BIGINT, id_col STRING, emb_col STRING")
+      .parquet(s"$indexDir/centroids")
       .collect()
       .sortBy(_.getInt(0))
+    def meta[T](i: Int, default: T): T =
+      if (rows(0).isNullAt(i)) default else rows(0).getAs[T](i)
     Index(
       s"$indexDir/vectors",
       rows.map(_.getSeq[Float](2).toArray),
       rows.map(_.getInt(1)),
       config,
-      seed,
-      idCol = idCol)
+      meta(3, 42L),
+      idCol = meta(4, "vec_id"),
+      embCol = meta(5, "embedding"))
   }
 
   /** Probe selection against the driver-held routing table: the nProbe
@@ -1406,11 +1368,10 @@ object Ivf {
     nProbe
   }
 
-  /** One query, checked and routed: the id column it reads, and its
-    * probed cells and their shards.
-    */
-  private[operators] final case class Prelude(index: Index, id: String,
+  /** One query, checked and routed: its probed cells and their shards. */
+  private[operators] final case class Prelude(index: Index,
       probes: Seq[Int], shards: Seq[Int]) {
+    def id: String = index.idCol
     /** Live rows of the probed cells of the dataset at `path` — the
       * float vectors or a coded sibling in the same layout.
       */
@@ -1422,27 +1383,28 @@ object Ivf {
   }
 
   /** The read prelude of every single-query entry point (float `search`
-    * and `rangeSearch`, the IvfPq and IvfSq paths): the id-column
-    * default, the n_probe clamp and check, the dimension check BEFORE
+    * and `rangeSearch`, the IvfPq and IvfSq paths): the n_probe clamp
+    * and check, the dimension check BEFORE
     * any routing (the router reads `query.length` centroid components,
     * so a long query would otherwise fail out of bounds in it), then
     * [[probeSelection]]. Callers with a k run [[clampK]] first.
     */
   private[operators] def prelude(index: Index, query: Array[Float],
-      nProbe0: Int, idCol: String): Prelude = {
+      nProbe0: Int): Prelude = {
     val nProbe = clampNProbe(index, nProbe0)
     val dim = index.centroids(0).length
     require(query.length == dim,
       s"query dimension ${query.length} != index dimension $dim")
     val (probes, shards) = probeSelection(index, query, nProbe)
-    Prelude(index, effectiveIdCol(index, idCol), probes, shards)
+    Prelude(index, probes, shards)
   }
 
   /** A query batch, checked and routed: per-query probes (in query
     * order) and the distinct shards they touch.
     */
-  private[operators] final case class BatchPrelude(index: Index, id: String,
+  private[operators] final case class BatchPrelude(index: Index,
       probes: Array[Array[Int]], shards: Seq[Int]) {
+    def id: String = index.idCol
     /** Live rows of the union of probed cells of the dataset at `path`. */
     def scan(spark: SparkSession, path: String): DataFrame = {
       val s = new Snapshot(spark, index, path)
@@ -1457,8 +1419,7 @@ object Ivf {
     * into one top-k), then per-query routing through the shared router.
     */
   private[operators] def batchPrelude(index: Index,
-      queries: Array[(Long, Array[Float])], nProbe0: Int,
-      idCol: String): BatchPrelude = {
+      queries: Array[(Long, Array[Float])], nProbe0: Int): BatchPrelude = {
     val nProbe = clampNProbe(index, nProbe0)
     val dim = index.centroids(0).length
     queries.find(_._2.length != dim).foreach { q =>
@@ -1471,7 +1432,7 @@ object Ivf {
         s"duplicate query id $qid: batch query ids must be distinct")
     }
     val probes = queries.map { case (_, q) => index.router.topN(q, nProbe) }
-    BatchPrelude(index, effectiveIdCol(index, idCol), probes,
+    BatchPrelude(index, probes,
       probes.flatten.map(index.centroidToShard).distinct.toSeq)
   }
 
@@ -1501,20 +1462,20 @@ object Ivf {
     *   return < k rows even when k matches exist).
     */
   def search(spark: SparkSession, index: Index, query: Array[Float], k0: Int,
-      nProbe0: Int, idCol: String = null, embCol: String = "embedding",
-      includeVectors: Boolean = false,
+      nProbe0: Int, includeVectors: Boolean = false,
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val k = clampK(index, k0)
+    val emb = col(index.embCol)
     // probe selection on the driver over the routing table (J5/T1)
-    val p = prelude(index, query, nProbe0, idCol)
+    val p = prelude(index, query, nProbe0)
     // pruned scan: directory pruning on shard_id + row-group skipping on
     // centroid_id (replaces S8 selective reads), then distance + top-k
     // via TakeOrderedAndProject (J6/T2) — see [[probePrunedScan]] for
     // the chunking/probe-all contract
     val pruned = p.scan(spark, index.vectorsPath)
     val out = rankTopK(filter.map(pruned.where).getOrElse(pruned)
-      .withColumn("distance", Vec.squaredL2(col(embCol), lit(query))),
-      p.id, k, col(embCol).as("vector"))
+      .withColumn("distance", Vec.squaredL2(emb, lit(query))),
+      p.id, k, emb.as("vector"))
     if (includeVectors) out else out.drop("vector") // P3
   }
 
@@ -1530,13 +1491,12 @@ object Ivf {
     * the top-k path.
     */
   def rangeSearch(spark: SparkSession, index: Index, query: Array[Float],
-      radius: Double, nProbe0: Int, idCol: String = null,
-      embCol: String = "embedding",
+      radius: Double, nProbe0: Int,
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val p = prelude(index, query, nProbe0, idCol)
+    val p = prelude(index, query, nProbe0)
     val pruned = p.scan(spark, index.vectorsPath)
     filter.map(pruned.where).getOrElse(pruned)
-      .withColumn("distance", Vec.squaredL2(col(embCol), lit(query)))
+      .withColumn("distance", Vec.squaredL2(col(index.embCol), lit(query)))
       .where(col("distance") < radius)
       .orderBy(col("distance"), col(p.id))
       .select(col(p.id).as("external_id"), col("distance"))
@@ -1580,10 +1540,9 @@ object Ivf {
     */
   def searchBatch(spark: SparkSession, index: Index,
       queries: Array[(Long, Array[Float])], k0: Int, nProbe0: Int,
-      idCol: String = null, embCol: String = "embedding",
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val k = clampK(index, k0)
-    val b = batchPrelude(index, queries, nProbe0, idCol)
+    val b = batchPrelude(index, queries, nProbe0)
     val block = spark.sparkContext.broadcast(ListScan.queryBlock(
       queries, b.probes, index.k, index.centroids(0).length))
     // shard pruning only: the kernel itself skips unprobed cells
@@ -1591,7 +1550,7 @@ object Ivf {
     val pruned = s.liveRows(
       s.relation.where(col("shard_id").isin(b.shards: _*)), b.id)
     val rows = filter.map(pruned.where).getOrElse(pruned)
-      .select(col("centroid_id"), col(b.id).cast("long"), col(embCol))
+      .select(col("centroid_id"), col(b.id).cast("long"), col(index.embCol))
     TopNByKey.topN(ListScan.scan(rows, block, k), Seq("query_id"),
         col("distance"), col("cand_id"), k)
       .select(col("query_id"), col("rk").as("rank"),
@@ -1633,9 +1592,8 @@ object Ivf {
     */
   def annJoin(queries: DataFrame, index: Index, k: Int, nProbe: Int,
       qidCol: String = "query_id", qembCol: String = "qe",
-      idCol: String = null, embCol: String = "embedding",
       pairFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val id = effectiveIdCol(index, idCol)
+    val id = index.idCol
     // clamped and checked like search/searchBatch, so a capped index
     // returns the same rows per query on every batch path; n_probe is
     // further capped at the centroid count for the map-side router
@@ -1704,7 +1662,7 @@ object Ivf {
       .join(probed, Seq("centroid_id"))
     val candidates = pairFilter.map(joined.where).getOrElse(joined)
       .withColumn("distance",
-        graft.functions.Vec.squaredL2(col(embCol), col(qembCol)))
+        graft.functions.Vec.squaredL2(col(index.embCol), col(qembCol)))
     TopNByKey.topN(candidates, Seq(qidCol), col("distance"), col(id), topK)
       .select(col(qidCol), col("rk").as("rank"),
         col("id").as("external_id"), col("ord").as("distance"))

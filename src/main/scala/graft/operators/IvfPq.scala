@@ -29,13 +29,9 @@ object IvfPq {
     * resurrected row is a silent violation.
     */
   def buildCodes(spark: SparkSession, ivf: Ivf.Index, model: Pq.Model,
-      outPath: String, idCol: String = null,
-      embCol: String = "embedding"): Unit =
-    // a null idCol resolves to the id column the index records it was
-    // built with (ADVICE r14: a literal "vec_id" default here failed a
-    // custom-id index inside the encode)
-    Ivf.writeSibling(spark, ivf, outPath, idCol, Seq("pq_code"))(
-      Pq.encode(_, embCol, model))
+      outPath: String): Unit =
+    Ivf.writeSibling(spark, ivf, outPath, Seq("pq_code"))(
+      Pq.encode(_, ivf.embCol, model))
 
   /** Residual vector x − centroid[centroid_id] as a column — the
     * quantity faiss IndexIVFPQ actually encodes. Residuals have much
@@ -62,14 +58,13 @@ object IvfPq {
     * deleted rows' residual distribution.
     */
   def trainResidual(spark: SparkSession, ivf: Ivf.Index, m: Int = 8,
-      ksub: Int = 256, iters: Int = 10, seed: Long = 42L,
-      idCol: String = null, embCol: String = "embedding"): Pq.Model = {
-    val id = Ivf.effectiveIdCol(ivf, idCol)
+      ksub: Int = 256, iters: Int = 10, seed: Long = 42L): Pq.Model = {
     val dim = ivf.centroids(0).length
     val res = residualCol(spark, ivf.centroids)
-    val df = Ivf.liveVectors(spark, ivf, id)
-      .withColumn("residual", res(col(embCol), col("centroid_id")))
-    Pq.train(df, "residual", dim, m, ksub, iters, seed, orderCol = Some(id))
+    val df = Ivf.liveVectors(spark, ivf)
+      .withColumn("residual", res(col(ivf.embCol), col("centroid_id")))
+    Pq.train(df, "residual", dim, m, ksub, iters, seed,
+      orderCol = Some(ivf.idCol))
   }
 
   /** Write the residual-coded sibling dataset (layout identical to
@@ -77,12 +72,11 @@ object IvfPq {
     * encoded quantity differs).
     */
   def buildResidualCodes(spark: SparkSession, ivf: Ivf.Index,
-      model: Pq.Model, outPath: String, idCol: String = null,
-      embCol: String = "embedding"): Unit = {
+      model: Pq.Model, outPath: String): Unit = {
     val res = residualCol(spark, ivf.centroids)
-    Ivf.writeSibling(spark, ivf, outPath, idCol, Seq("pq_code")) { live =>
+    Ivf.writeSibling(spark, ivf, outPath, Seq("pq_code")) { live =>
       Pq.encode(
-        live.withColumn("residual", res(col(embCol), col("centroid_id"))),
+        live.withColumn("residual", res(col(ivf.embCol), col("centroid_id"))),
         "residual", model)
     }
   }
@@ -94,11 +88,11 @@ object IvfPq {
     * pruned scan — the scan-side math is the same codegen fold.
     */
   def searchResidual(spark: SparkSession, ivf: Ivf.Index, model: Pq.Model,
-      codesPath: String, query: Array[Float], k0: Int, nProbe0: Int,
-      idCol: String = null): DataFrame = {
+      codesPath: String, query: Array[Float], k0: Int,
+      nProbe0: Int): DataFrame = {
     import spark.implicits._
     val k = Ivf.clampK(ivf, k0)
-    val p = Ivf.prelude(ivf, query, nProbe0, idCol)
+    val p = Ivf.prelude(ivf, query, nProbe0)
     val lutDf = p.probes.map { c =>
       (c, Pq.lutSeq(residual(query, ivf.centroids(c)), model))
     }.toDF("centroid_id", "lut")
@@ -115,34 +109,6 @@ object IvfPq {
   private def residual(q: Array[Float], cent: Array[Float]): Array[Float] =
     Array.tabulate(q.length)(i => q(i) - cent(i))
 
-  /** Batch residual ANN: one pruned scan for the whole query set; the
-    * broadcast probe table carries a per-(query, probed-centroid) LUT.
-    */
-  def searchBatchResidual(spark: SparkSession, ivf: Ivf.Index,
-      model: Pq.Model, codesPath: String,
-      queries: Array[(Long, Array[Float])], k0: Int, nProbe0: Int,
-      idCol: String = null): DataFrame = {
-    import spark.implicits._
-    val k = Ivf.clampK(ivf, k0)
-    val b = Ivf.batchPrelude(ivf, queries, nProbe0, idCol)
-    val lutDf = queries.indices.flatMap { i =>
-      val (qid, q) = queries(i)
-      b.probes(i).map { c =>
-        (qid, c, Pq.lutSeq(residual(q, ivf.centroids(c)), model))
-      }
-    }.toDF("query_id", "centroid_id", "lut")
-    // same contract as the single-query path: the union of probed cells
-    // is a pushed scan predicate, the join only fans rows out per query.
-    // Per-query top-k is the bounded-state aggregate (TopNByKey), so
-    // each map task emits ≤ k rows per query before the exchange.
-    val candidates = b.scan(spark, codesPath)
-      .join(broadcast(lutDf), Seq("centroid_id"))
-      .withColumn("distance", Pq.adc(col("pq_code"), col("lut")))
-    TopNByKey.topN(candidates, Seq("query_id"), col("distance"), col(b.id), k)
-      .select(col("query_id"), col("rk").as("rank"),
-        col("id").as("external_id"), col("ord").as("distance"))
-  }
-
   /** Refined search (faiss `IndexRefineFlat`): take a shortlist of
     * `refine × k` candidates by (cheap) ADC over the coded dataset,
     * then re-rank ONLY the shortlist by exact float distance. The
@@ -156,11 +122,10 @@ object IvfPq {
     */
   def searchRefine(spark: SparkSession, ivf: Ivf.Index, model: Pq.Model,
       codesPath: String, query: Array[Float], k0: Int, nProbe0: Int,
-      refine: Int = 4, idCol: String = null,
-      embCol: String = "embedding"): DataFrame = {
+      refine: Int = 4): DataFrame = {
     require(refine >= 1, s"refine must be >= 1: $refine")
     val k = Ivf.clampK(ivf, k0)
-    val p = Ivf.prelude(ivf, query, nProbe0, idCol)
+    val p = Ivf.prelude(ivf, query, nProbe0)
     val shortlist = adcTopK(spark, model, codesPath, query,
       Ivf.clampK(ivf, math.min(k.toLong * refine, Int.MaxValue).toInt), p)
       .select(col("external_id").as(p.id))
@@ -172,7 +137,7 @@ object IvfPq {
         p.probes, p.shards, ivf.k)
         .join(broadcast(shortlist), Seq(p.id), "left_semi")
         .withColumn("distance",
-          graft.functions.Vec.squaredL2(col(embCol), lit(query))),
+          graft.functions.Vec.squaredL2(col(ivf.embCol), lit(query))),
       p.id, k)
   }
 
@@ -185,23 +150,24 @@ object IvfPq {
     */
   def searchBatch(spark: SparkSession, ivf: Ivf.Index, model: Pq.Model,
       codesPath: String, queries: Array[(Long, Array[Float])], k0: Int,
-      nProbe0: Int, idCol: String = null): DataFrame = {
+      nProbe0: Int): DataFrame = {
     import spark.implicits._
     val k = Ivf.clampK(ivf, k0)
-    val b = Ivf.batchPrelude(ivf, queries, nProbe0, idCol)
+    val b = Ivf.batchPrelude(ivf, queries, nProbe0)
     val probeDf = queries.indices
       .flatMap(i => b.probes(i).map(c => (queries(i)._1, c)))
       .toDF("query_id", "centroid_id")
-    // ONE shared LUT builder (Pq.lutSeq) — searchBatchResidual and the
+    // ONE shared LUT builder (Pq.lutSeq) — searchResidual and the
     // single-query lutFor use the same body, so LUT math cannot drift
     val lutDf = queries.toSeq
       .map { case (qid, q) => (qid, Pq.lutSeq(q, model)) }
       .toDF("query_id", "lut")
-    // bounded-state per-query top-k — see searchBatchResidual. The
-    // union of probed cells is a PUSHED scan predicate (row-group
-    // skip), same as every sibling path — a shard-only filter would
-    // read every cell of every probed shard (~sqrt(k) cells each) and
-    // discard the excess after decode in the join
+    // bounded-state per-query top-k: each map task emits ≤ k rows per
+    // query before the exchange (TopNByKey). The union of probed cells
+    // is a PUSHED scan predicate (row-group skip), same as every
+    // sibling path — a shard-only filter would read every cell of every
+    // probed shard (~sqrt(k) cells each) and discard the excess after
+    // decode in the join
     val candidates = b.scan(spark, codesPath)
       .join(broadcast(probeDf), Seq("centroid_id"))
       .join(broadcast(lutDf), Seq("query_id"))
@@ -213,10 +179,10 @@ object IvfPq {
 
   /** Top-k by ADC over the probe-pruned coded dataset. */
   def search(spark: SparkSession, ivf: Ivf.Index, model: Pq.Model,
-      codesPath: String, query: Array[Float], k0: Int, nProbe0: Int,
-      idCol: String = null): DataFrame =
+      codesPath: String, query: Array[Float], k0: Int,
+      nProbe0: Int): DataFrame =
     adcTopK(spark, model, codesPath, query, Ivf.clampK(ivf, k0),
-      Ivf.prelude(ivf, query, nProbe0, idCol))
+      Ivf.prelude(ivf, query, nProbe0))
 
   /** [[search]] after its prelude: the ADC top-k over the probed cells
     * of the coded dataset — shared with [[searchRefine]]'s shortlist.

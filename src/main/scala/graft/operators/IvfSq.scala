@@ -24,19 +24,17 @@ object IvfSq {
     * LIVE view (tombstones filtered) so a rebuild never resurrects
     * deleted rows regardless of where in the delete lifecycle it runs.
     */
-  def buildCodes(spark: SparkSession, ivf: Ivf.Index, outPath: String,
-      idCol: String = null, embCol: String = "embedding"): Unit =
-    Ivf.writeSibling(spark, ivf, outPath, idCol, Seq("q_scale", "q_emb"))(
-      Quantize.withInt8(_, embCol))
+  def buildCodes(spark: SparkSession, ivf: Ivf.Index, outPath: String): Unit =
+    Ivf.writeSibling(spark, ivf, outPath, Seq("q_scale", "q_emb"))(
+      Quantize.withInt8(_, ivf.embCol))
 
   /** Top-k over the int8-coded dataset: probe-pruned scan → dequantize →
     * squared-L2 → TakeOrderedAndProject.
     */
   def search(spark: SparkSession, ivf: Ivf.Index, codesPath: String,
-      query: Array[Float], k0: Int, nProbe0: Int,
-      idCol: String = null): DataFrame = {
+      query: Array[Float], k0: Int, nProbe0: Int): DataFrame = {
     val k = Ivf.clampK(ivf, k0)
-    val p = Ivf.prelude(ivf, query, nProbe0, idCol)
+    val p = Ivf.prelude(ivf, query, nProbe0)
     Ivf.rankTopK(p.scan(spark, codesPath)
       // fused dequantize+distance (SqCodesL2, codegen) — bitwise equal
       // to Vec.squaredL2(Quantize.dequantize(q_emb, q_scale), query)

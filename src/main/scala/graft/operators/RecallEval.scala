@@ -146,10 +146,10 @@ object RecallEval {
       .join(broadcast(probeDf), Seq("centroid_id"))
       .join(broadcast(queryDf), Seq("query_id"))
       .withColumn("distance",
-        graft.functions.Vec.squaredL2(col("embedding"), col("qe")))
+        graft.functions.Vec.squaredL2(col(index.embCol), col("qe")))
       .withColumn("n_probe", explode(col("settings")))
     val top = TopNByKey.topN(candidates, Seq("query_id", "n_probe"),
-        col("distance"), col("vec_id"), k)
+        col("distance"), col(index.idCol), k)
       .select("query_id", "n_probe", "rk", "id").collect()
     // (query, setting) → ranked neighbor ids; eval-sized by contract
     val byKey = top.groupBy(r => (r.getLong(0), r.getInt(1)))

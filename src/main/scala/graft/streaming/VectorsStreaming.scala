@@ -233,13 +233,9 @@ object VectorsStreaming {
     */
   def appendVectorBatch(index: Ivf.Index, batch: DataFrame, idCol: String,
       embCol: String, batchId: Long, markerDir: String,
-      markerRetention: Int = 64,
-      leaseStaleTtlMs: Long = graft.operators.FsLease.DefaultStaleTtlMs,
-      leaseTimeoutMs: Long = graft.operators.FsLease.DefaultTimeoutMs): Boolean =
-    // lease knobs thread through like the delete sink — one signature
-    // shape across all three writer forms (append/delete/maintained)
+      markerRetention: Int = 64): Boolean =
     applyOnce(batch, batchId, markerDir, markerRetention)(
-      Ivf.append(index, batch, idCol, embCol, leaseStaleTtlMs, leaseTimeoutMs))
+      Ivf.append(index, batch, idCol, embCol))
 
   /** The marker ledger both batch sinks share: unless `batchId` is at or
     * under the watermark or already has a marker, run `apply`, THEN
@@ -326,14 +322,9 @@ object VectorsStreaming {
     */
   def deleteVectorBatch(index: Ivf.Index, batch: DataFrame, idCol: String,
       batchId: Long, markerDir: String,
-      markerRetention: Int = 64,
-      leaseStaleTtlMs: Long = graft.operators.FsLease.DefaultStaleTtlMs,
-      leaseTimeoutMs: Long = graft.operators.FsLease.DefaultTimeoutMs): Boolean =
-    // lease knobs thread through like every other tombstone writer
-    // (VERDICT r14 #3 — one signature shape across all three forms)
+      markerRetention: Int = 64): Boolean =
     applyOnce(batch, batchId, markerDir, markerRetention)(
-      Ivf.delete(batch.sparkSession, index, batch, idCol,
-        leaseStaleTtlMs, leaseTimeoutMs))
+      Ivf.delete(batch.sparkSession, index, batch, idCol))
 
   /** Catalog query `stream_index_delete`: a stream of DELETE requests
     * applied to a live index — the write-side twin of
@@ -414,15 +405,12 @@ object VectorsStreaming {
       idCol: String, embCol: String, batchId: Long, markerDir: String,
       maxFilesPerShard: Int = 8,
       maxUnmaterializedTombstones: Long = 0L,
-      markerRetention: Int = 64,
-      leaseStaleTtlMs: Long = graft.operators.FsLease.DefaultStaleTtlMs,
-      leaseTimeoutMs: Long = graft.operators.FsLease.DefaultTimeoutMs): Boolean = {
+      markerRetention: Int = 64): Boolean = {
     val applied = appendVectorBatch(index, batch, idCol, embCol, batchId,
-      markerDir, markerRetention, leaseStaleTtlMs, leaseTimeoutMs)
+      markerDir, markerRetention)
     if (applied)
-      try Ivf.maintain(batch.sparkSession, index, idCol, maxFilesPerShard,
-        maxUnmaterializedTombstones, leaseStaleTtlMs,
-        fenceTimeoutMs = leaseTimeoutMs)
+      try Ivf.maintain(batch.sparkSession, index, maxFilesPerShard,
+        maxUnmaterializedTombstones)
       catch {
         // another maintain is mid-flight: it will compact this debt
         // itself — defer, don't fail the batch (the rule is
@@ -543,13 +531,10 @@ object VectorsStreaming {
     * listing happens only on polls that go on to an O(index) rewrite.
     */
   def startMaintenanceLoop(spark: org.apache.spark.sql.SparkSession,
-      index: Ivf.Index, idCol: String = null,
+      index: Ivf.Index,
       maxFilesPerShard: Int = 8,
       pollIntervalMs: Long = 1000L,
       maxUnmaterializedTombstones: Long = 0L): MaintenanceLoop = {
-    // null idCol resolves inside Ivf.maintain to the index's recorded
-    // id column (ADVICE r14: the literal "vec_id" default here failed a
-    // custom-idCol index inside the rewrite)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val stopLatch = new java.util.concurrent.CountDownLatch(1)
     val compacts = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -560,7 +545,7 @@ object VectorsStreaming {
           val stats = Ivf.maintenanceStats(spark, index)
           if (stats.compactRecommended(maxFilesPerShard,
               maxUnmaterializedTombstones)) {
-            Ivf.maintain(spark, index, idCol,
+            Ivf.maintain(spark, index,
               maxFilesPerShard = maxFilesPerShard,
               maxUnmaterializedTombstones = maxUnmaterializedTombstones) match {
               case Ivf.MaintainCompacted(_) => compacts.incrementAndGet()

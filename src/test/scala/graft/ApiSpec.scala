@@ -416,4 +416,28 @@ class ApiSpec extends SparkSpec {
     assert(ids2.size == 258 && !ids2.contains(230L) && !ids2.contains(17L),
       s"loaded doc_id index has ${ids2.size} live ids")
   }
+
+  test("facade built with a custom embedding column: search, searchBatch, " +
+      "addRecords, maintain and load read it from the index") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.operators.Ivf
+    val cfg = freshCfg()
+    val recs = ramp(260, 4)
+    val vi = VectorIndexer.create(spark, cfg)
+    vi.build(recs.take(200).map { case (id, v, ts) => (id, v.toSeq, ts) }
+      .toDF("vec_id", "emb", "ts")
+      .select(col("vec_id"), col("emb").cast("array<float>").as("emb"),
+        col("ts")), embCol = "emb")
+    val q = recs(17)._2
+    assert(vi.search(q).head().getLong(0) == 17L)
+    assert(vi.searchBatch(Array(17L -> q), k = 1).head().getLong(2) == 17L)
+    vi.addRecords(recs.slice(200, 260))
+    assert(vi.search(recs(230)._2).head().getLong(0) == 230L,
+      "appended record not self-retrievable on an emb index")
+    assert(vi.maintain(maxFilesPerShard = 0).isInstanceOf[Ivf.MaintainCompacted])
+    val loaded = VectorIndexer.load(spark, cfg)
+    assert(loaded.search(recs(230)._2).head().getLong(0) == 230L)
+    assert(loaded.searchBatch(Array(17L -> q), k = 1).head().getLong(2) == 17L)
+  }
 }

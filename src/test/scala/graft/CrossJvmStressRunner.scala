@@ -132,15 +132,14 @@ object CrossJvmStressRunner {
   private def crashMaintainMain(indexDir: String, commDir: String,
       phase: String): Unit = {
     val spark = GraftSession.local(2)
-    val idx = Ivf.load(spark, indexDir)
+    val idx = Ivf.load(spark, indexDir, Ivf.Config(leaseStaleTtlMs = 2000L))
     CrossJvmStress.signal(commDir, "child_maintaining")
     val between: () => Unit =
       if (phase == "swap") { () =>
         CrossJvmStress.signal(commDir, "child_in_swap")
         Thread.sleep(600000L)
       } else () => ()
-    Ivf.maintain(spark, idx, maxFilesPerShard = 1,
-      leaseStaleTtlMs = 2000L, betweenRenames = between)
+    Ivf.maintain(spark, idx, maxFilesPerShard = 1, betweenRenames = between)
     // reachable only in the rewrite phase when the kill came too late —
     // tell the spec so it fails loudly instead of asserting against a
     // COMPLETED maintain
@@ -166,7 +165,8 @@ object CrossJvmStressRunner {
       staleTtlMs: Long = graft.operators.FsLease.DefaultStaleTtlMs): Unit = {
     val spark = GraftSession.local(4)
     try {
-      val idx = Ivf.load(spark, indexDir)
+      val idx = Ivf.load(spark, indexDir,
+        Ivf.Config(leaseStaleTtlMs = staleTtlMs))
       val ckpt = s"$commDir/stream_ckpt"
       val markerDir = s"$commDir/stream_markers"
       val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -188,7 +188,7 @@ object CrossJvmStressRunner {
               (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
                 graft.streaming.VectorsStreaming.appendVectorBatchMaintained(
                   idx, batch, "vec_id", "embedding", batchId, markerDir,
-                  maxFilesPerShard = 2, leaseStaleTtlMs = staleTtlMs)
+                  maxFilesPerShard = 2)
                 ()
             }
             .option("checkpointLocation", ckpt)

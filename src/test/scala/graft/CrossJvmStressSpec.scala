@@ -207,9 +207,9 @@ class CrossJvmStressSpec extends SparkSpec {
 
       // 2. the dead JVM's heartbeat-less writer lease is broken after
       //    the stale TTL and the next append succeeds...
-      Ivf.append(idx, all.where(col("vec_id") >= 500),
-        "vec_id", "embedding",
-        leaseStaleTtlMs = 2000L, leaseTimeoutMs = 120000L)
+      Ivf.append(idx.copy(config = idx.config.copy(
+          leaseStaleTtlMs = 2000L, leaseTimeoutMs = 120000L)),
+        all.where(col("vec_id") >= 500), "vec_id", "embedding")
 
       // 3. ...and that commit must NOT merge the dead job's leftover
       //    task-committed dirs into the dataset (FileOutputCommitter v1
@@ -286,7 +286,9 @@ class CrossJvmStressSpec extends SparkSpec {
       // either fully old or fully new — NEVER absent. The dead child's
       // maintainer lease is heartbeat-less; the 2 s stale TTL is the
       // crash-detection horizon the recovery waits out.
-      Ivf.recoverFromCrashedCompact(spark, idx, leaseStaleTtlMs = 2000L)
+      val fast = idx.copy(config = idx.config.copy(
+        leaseStaleTtlMs = 2000L, leaseTimeoutMs = 120000L))
+      Ivf.recoverFromCrashedCompact(spark, fast)
       assert(Files.exists(java.nio.file.Paths.get(s"$dir/vectors")),
         s"vectors dir absent after recovery; ${childLog()}")
       val ids = Ivf.liveVectors(spark, idx)
@@ -301,8 +303,7 @@ class CrossJvmStressSpec extends SparkSpec {
       def maintainRetrying(): Ivf.MaintainOutcome = {
         val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
         while (true) {
-          try return Ivf.maintain(spark, idx, maxFilesPerShard = 1,
-            leaseStaleTtlMs = 2000L, fenceTimeoutMs = 120000L)
+          try return Ivf.maintain(spark, fast, maxFilesPerShard = 1)
           catch {
             case _: graft.operators.FsLease.LeaseHeldException
                 if System.nanoTime() < deadline => Thread.sleep(500)

@@ -70,11 +70,6 @@ class IvfPqSpec extends SparkSpec {
       IvfPq.searchBatch(spark, idx, model, codes, qs, 10, 20)
     }
     assert(raw.getMessage.contains("duplicate query id 5"), raw.getMessage)
-    val residual = intercept[IllegalArgumentException] {
-      IvfPq.searchBatchResidual(spark, idx, resModel, resCodes, qs, 10, 20)
-    }
-    assert(residual.getMessage.contains("duplicate query id 5"),
-      residual.getMessage)
   }
 
   private lazy val (resModel, resCodes) =
@@ -115,21 +110,6 @@ class IvfPqSpec extends SparkSpec {
       query(0L), 10, 20).select("external_id").as[Long].collect().toSet
     val recall = (got & exact).size / 10.0
     assert(recall >= 0.5, s"residual IVF-PQ recall@10 = $recall")
-    val qs = Tables.embeddings(spark, sf0001)
-      .where(col("vec_id") < 5).select("vec_id", "embedding")
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val batch = IvfPq.searchBatchResidual(spark, idx, resModel, resCodes,
-      qs, 10, 20)
-      .collect()
-      .groupBy(_.getLong(0))
-      .map { case (qid, rows) =>
-        qid -> rows.sortBy(_.getInt(1)).map(r => (r.getLong(2), r.getDouble(3))).toSeq
-      }
-    qs.foreach { case (qid, q) =>
-      val single = IvfPq.searchResidual(spark, idx, resModel, resCodes,
-        q, 10, 20).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(batch(qid) == single, s"query $qid diverges")
-    }
   }
 
   test("refine: re-ranked recall dominates ADC; large shortlist at probe-all is exact") {
@@ -191,9 +171,6 @@ class IvfPqSpec extends SparkSpec {
       ("IvfPq.searchResidual", true, true,
         (i, v, k, n) =>
           IvfPq.searchResidual(spark, i, resModel, resCodes, v, k, n)),
-      ("IvfPq.searchBatchResidual", true, true,
-        (i, v, k, n) => IvfPq.searchBatchResidual(spark, i, resModel,
-          resCodes, Array(1L -> v), k, n)),
       ("IvfPq.searchRefine", true, true,
         (i, v, k, n) => IvfPq.searchRefine(spark, i, model, codes, v, k, n)),
       ("IvfPq.searchBatch", true, true,

@@ -881,11 +881,14 @@ class IvfSpec extends SparkSpec {
       }
     } finally FsLease.release(fs, mLease, "test-maintainer")
     val wLease = Ivf.writerLeasePath(idx)
+    // a handle whose writers give up on a held lease after 200 ms
+    val fenced = idx.copy(config = idx.config.copy(leaseTimeoutMs = 200L))
     FsLease.acquire(fs, wLease, "test-writer", timeoutMs = 0L)
     try {
       intercept[FsLease.LeaseHeldException] {
-        Ivf.append(idx, emb.where(col("vec_id") >= 200 && col("vec_id") < 250),
-          "vec_id", "embedding", leaseTimeoutMs = 200L)
+        Ivf.append(fenced,
+          emb.where(col("vec_id") >= 200 && col("vec_id") < 250),
+          "vec_id", "embedding")
       }
       assert(spark.read.parquet(idx.vectorsPath).count() == 200L,
         "append wrote despite a held writer lease")
@@ -893,26 +896,23 @@ class IvfSpec extends SparkSpec {
       // landing between clearTombstones' fingerprint verification and
       // its recursive delete would otherwise be destroyed unverified
       intercept[FsLease.LeaseHeldException] {
-        Ivf.delete(spark, idx, Seq(5L), leaseTimeoutMs = 200L)
+        Ivf.delete(spark, fenced, Seq(5L))
       }
       assert(!new java.io.File(s"$dir/tombstones").exists(),
         "delete wrote despite a held writer lease")
-      // all three tombstone writers share one signature shape (VERDICT
-      // r14 #3): the DataFrame and predicate bulk forms thread the same
-      // lease knobs and fence identically
+      // the DataFrame and predicate bulk forms read the same lease
+      // timing from the handle and fence identically
       intercept[FsLease.LeaseHeldException] {
-        Ivf.delete(spark, idx,
-          emb.where(col("vec_id") === 6L).select(col("vec_id")), "vec_id",
-          FsLease.DefaultStaleTtlMs, 200L)
+        Ivf.delete(spark, fenced,
+          emb.where(col("vec_id") === 6L).select(col("vec_id")), "vec_id")
       }
       intercept[FsLease.LeaseHeldException] {
-        Ivf.deleteWhere(spark, idx, col("vec_id") === 7L,
-          leaseTimeoutMs = 200L)
+        Ivf.deleteWhere(spark, fenced, col("vec_id") === 7L)
       }
       assert(!new java.io.File(s"$dir/tombstones").exists(),
         "a bulk delete wrote despite a held writer lease")
       intercept[FsLease.LeaseHeldException] {
-        Ivf.clearTombstones(spark, idx, leaseTimeoutMs = 200L)
+        Ivf.clearTombstones(spark, fenced)
       }
     } finally FsLease.release(fs, wLease, "test-writer")
     Ivf.append(idx, emb.where(col("vec_id") >= 200 && col("vec_id") < 250),
@@ -1099,25 +1099,35 @@ class IvfSpec extends SparkSpec {
   test("custom id column persists through the sidecar; maintain/compact " +
       "and search default to it (ADVICE r13)") {
     import java.nio.file.{Files => JFiles}
+    import spark.implicits._
     val dir = JFiles.createTempDirectory("graft_idcol").toString
     val emb = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id").as("doc_id"), col("embedding"))
+      .select(col("vec_id").as("doc_id"), col("embedding").as("emb"))
     val built = Ivf.build(emb.where(col("doc_id") < 200),
-      "doc_id", "embedding", dir)
-    assert(built.idCol == "doc_id")
+      "doc_id", "emb", dir)
+    assert(built.idCol == "doc_id" && built.embCol == "emb")
     val loaded = Ivf.load(spark, dir)
-    assert(loaded.idCol == "doc_id",
-      "load must restore the id column maintenance rewrites reference")
-    // fragment, then maintain with NO explicit idCol — the old code
-    // hardcoded vec_id here and failed inside the rewrite
+    assert(loaded.idCol == "doc_id" && loaded.embCol == "emb",
+      "load must restore the layout columns every entry point reads")
+    // every read path takes both layout columns from the handle
+    val q = embAll.find(_._1 == 42L).get._2
+    assert(Ivf.search(spark, loaded, q, 10, 10000)
+      .head().getLong(0) == 42L)
+    assert(Ivf.searchBatch(spark, loaded, Array(7L -> q), 10, 10000)
+      .where(col("rank") === 1).head().getLong(2) == 42L)
+    assert(Ivf.rangeSearch(spark, loaded, q, 1e-6, 10000)
+      .head().getLong(0) == 42L)
+    assert(Ivf.annJoin(Seq((7L, q.toSeq)).toDF("query_id", "qe"), loaded,
+      10, 10000).where(col("rank") === 1).head().getLong(2) == 42L)
+    assert(Ivf.liveVectors(spark, loaded).count() == 200L)
+    // fragment, then maintain: the rewrite reads the handle's columns
     Ivf.append(loaded, emb.where(col("doc_id") >= 200 && col("doc_id") < 300),
-      "doc_id", "embedding")
+      "doc_id", "emb")
     Ivf.maintain(spark, loaded, maxFilesPerShard = 0) match {
       case Ivf.MaintainCompacted(_) => ()
       case other => fail(s"expected a compact on the custom-id index, got $other")
     }
-    // search defaults to the recorded id column too
-    val q = embAll.find(_._1 == 42L).get._2
+    assert(Ivf.liveVectors(spark, loaded).count() == 300L)
     assert(Ivf.search(spark, loaded, q, 10, 10000)
       .head().getLong(0) == 42L)
     // and the delete lifecycle joins on it
@@ -1128,7 +1138,7 @@ class IvfSpec extends SparkSpec {
     // column too (ADVICE r14: their literal vec_id defaults failed a
     // custom-idCol index inside the encode) — and honor the tombstone
     val model = graft.operators.Pq.train(emb.where(col("doc_id") < 300),
-      "embedding", embAll.head._2.length, m = 8, ksub = 16,
+      "emb", embAll.head._2.length, m = 8, ksub = 16,
       orderCol = Some("doc_id"))
     val pqDir = JFiles.createTempDirectory("graft_idcol_pq").toString
     graft.operators.IvfPq.buildCodes(spark, loaded, model, pqDir)
@@ -1142,9 +1152,9 @@ class IvfSpec extends SparkSpec {
     val sqTop = graft.operators.IvfSq.search(spark, loaded, sqDir,
       q, 10, 10000).collect().map(_.getLong(0))
     assert(sqTop.nonEmpty && !sqTop.contains(42L))
-    // the streaming maintenance poller's null default resolves too: the
+    // the streaming maintenance poller reads the handle too: the
     // tombstone debt from the delete above triggers one compact through
-    // the loop with no explicit id column
+    // the loop
     val loop = graft.streaming.VectorsStreaming.startMaintenanceLoop(
       spark, loaded, maxFilesPerShard = 1000000, pollIntervalMs = 50L)
     try {
@@ -1162,9 +1172,104 @@ class IvfSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       Ivf.append(loaded,
         emb.where(col("doc_id") >= 300).withColumnRenamed("doc_id", "vec_id"),
-        "vec_id", "embedding")
+        "vec_id", "emb")
     }
     assert(e.getMessage.contains("id column"), e.getMessage)
+    // ...and so is one whose embedding column differs: appended rows
+    // would otherwise carry a NULL `emb` and never be found
+    val files = () => JFiles.walk(java.nio.file.Paths.get(dir))
+      .filter(JFiles.isRegularFile(_)).count()
+    val filesBefore = files()
+    val e2 = intercept[IllegalArgumentException] {
+      Ivf.append(loaded,
+        emb.where(col("doc_id") >= 300).withColumnRenamed("emb", "embedding"),
+        "doc_id", "embedding")
+    }
+    assert(e2.getMessage.contains("embedding column 'embedding'"),
+      e2.getMessage)
+    assert(files() == filesBefore, "a refused append wrote files")
+  }
+
+  test("a sidecar without emb_col, id_col or build_seed loads with the " +
+      "build defaults, and load is one Spark job") {
+    import java.nio.file.{Files => JFiles}
+    val dir = JFiles.createTempDirectory("graft_oldsidecar").toString
+    val built = Ivf.build(Tables.embeddings(spark, sf0001)
+      .where(col("vec_id") < 200), "vec_id", "embedding", dir)
+    val (fresh, freshCost) =
+      graft.obs.Meter.measure(spark)(Ivf.load(spark, dir))
+    assert(freshCost.jobs == 1, s"load ran ${freshCost.jobs} jobs")
+    assert(fresh.centroids.map(_.toSeq).toSeq ==
+      built.centroids.map(_.toSeq).toSeq)
+    // rewrite the sidecar as an older build wrote it
+    val old = s"$dir/centroids_old"
+    spark.read.parquet(s"$dir/centroids")
+      .drop("build_seed", "id_col", "emb_col").write.parquet(old)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$dir/centroids"), true))
+    assert(fs.rename(new org.apache.hadoop.fs.Path(old),
+      new org.apache.hadoop.fs.Path(s"$dir/centroids")))
+    assert(spark.read.parquet(s"$dir/centroids").columns.toSet ==
+      Set("centroid_id", "shard_id", "centroid"))
+    val (loaded, cost) = graft.obs.Meter.measure(spark)(Ivf.load(spark, dir))
+    assert(cost.jobs == 1, s"load of an older sidecar ran ${cost.jobs} jobs")
+    assert(loaded.seed == 42L && loaded.idCol == "vec_id" &&
+      loaded.embCol == "embedding")
+    assert(loaded.centroids.map(_.toSeq).toSeq ==
+      built.centroids.map(_.toSeq).toSeq &&
+      loaded.centroidToShard.toSeq == built.centroidToShard.toSeq)
+    val q = embAll.find(_._1 == 42L).get._2
+    assert(Ivf.search(spark, loaded, q, 1, 10000).head().getLong(0) == 42L)
+  }
+
+  test("lease timing comes from the handle: maintenanceStats restores a " +
+      "crashed swap once the maintainer lease outlives the handle's TTL") {
+    import java.nio.file.{Files => JFiles}
+    import graft.operators.FsLease
+    val dir = JFiles.createTempDirectory("graft_handle_ttl").toString
+    val idx = Ivf.build(Tables.embeddings(spark, sf0001)
+      .where(col("vec_id") < 200), "vec_id", "embedding", dir)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    // a maintain that died between its swap renames: vectors/ sits at
+    // __compact_trash and the dead maintainer's lease is 5 s old
+    assert(fs.rename(new org.apache.hadoop.fs.Path(idx.vectorsPath),
+      new org.apache.hadoop.fs.Path(s"$dir/__compact_trash")))
+    val mLease = Ivf.maintainerLeasePath(idx)
+    FsLease.acquire(fs, mLease, "dead-maintainer", timeoutMs = 0L)
+    assert(new java.io.File(s"$dir/__maintain_lease")
+      .setLastModified(System.currentTimeMillis() - 5000L))
+    // control: under the default 10-minute horizon the lease reads live
+    assert(FsLease.isHeldFresh(fs, mLease) &&
+      !FsLease.isHeldFresh(fs, mLease, 2000L))
+    val fast = idx.copy(config = idx.config.copy(leaseStaleTtlMs = 2000L))
+    val stats = Ivf.maintenanceStats(spark, fast)
+    assert(new java.io.File(s"$dir/vectors").isDirectory &&
+      !new java.io.File(s"$dir/__compact_trash").exists(),
+      "the crashed swap was not restored")
+    assert(stats.dataFiles > 0)
+    assert(Ivf.liveVectors(spark, fast).count() == 200L)
+  }
+
+  test("RecallEval.sweepDf reads the index's layout columns: a doc_id " +
+      "index scores the recalls of the same data under vec_id") {
+    import java.nio.file.{Files => JFiles}
+    val emb = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), col("embedding"))
+    val byVecId = Ivf.build(emb, "vec_id", "embedding",
+      JFiles.createTempDirectory("graft_recall_vec").toString)
+    val byDocId = Ivf.build(
+      emb.select(col("vec_id").as("doc_id"), col("embedding").as("emb")),
+      "doc_id", "emb",
+      JFiles.createTempDirectory("graft_recall_doc").toString)
+    val qs = graft.operators.RecallEval.perturbedQueries(embAll.take(20), 0.05f)
+    def recalls(i: Ivf.Index) = graft.operators.RecallEval
+      .sweepDf(spark, i, qs, 10, Seq(1, 4), Seq(1, 10))
+      .collect().map(_.toSeq).toSeq
+    val want = recalls(byVecId)
+    assert(want.length == 2)
+    assert(recalls(byDocId) == want)
   }
 
   test("deleteWhere: distributed bulk delete matches the id-list twin, " +
@@ -1350,7 +1455,9 @@ class IvfSpec extends SparkSpec {
     FsLease.acquire(fs, wLease, "in-flight-append", timeoutMs = 0L)
     try {
       intercept[FsLease.LeaseHeldException] {
-        Ivf.maintain(spark, idx, maxFilesPerShard = 0, fenceTimeoutMs = 300L)
+        Ivf.maintain(spark,
+          idx.copy(config = idx.config.copy(leaseTimeoutMs = 300L)),
+          maxFilesPerShard = 0)
       }
       // nothing swapped under the writer: all 200 rows still served
       assert(spark.read.parquet(idx.vectorsPath).count() == 200L)

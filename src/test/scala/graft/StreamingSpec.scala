@@ -943,12 +943,14 @@ class StreamingSpec extends SparkSpec {
     assert(debt > 2, s"setup did not accumulate debt: $debt")
     // the next MAINTAINED batch sees the over-threshold listing and
     // compacts, even though its own append contributed one file
-    // named knobs drive the full production signature (marker GC cadence
-    // + lease sizing thread through to append and the in-place compact)
-    assert(VectorsStreaming.appendVectorBatchMaintained(idx,
+    // named knobs drive the full production signature (marker GC
+    // cadence; the handle's lease timing reaches append and the
+    // in-place compact)
+    assert(VectorsStreaming.appendVectorBatchMaintained(
+      idx.copy(config = idx.config.copy(
+        leaseStaleTtlMs = 60000L, leaseTimeoutMs = 60000L)),
       emb.where(col("vec_id") >= 460), "vec_id", "embedding", 3L,
-      s"$root/m", maxFilesPerShard = 2, markerRetention = 8,
-      leaseStaleTtlMs = 60000L, leaseTimeoutMs = 60000L))
+      s"$root/m", maxFilesPerShard = 2, markerRetention = 8))
     val healed = Ivf.maintenanceStats(spark, idx)
     assert(healed.filesPerShardMax <= 2,
       s"deferred compact did not fire: $healed")
